@@ -46,105 +46,11 @@ from ic_spark.compaction.request import (
 )
 
 
-def main_ancestor_ids(table, snapshot_id: int) -> list[int]:
-    """Ancestor snapshot ids of ``snapshot_id`` (inclusive), oldest
-    first: recorded parent pointers walked where present, plain list
-    order for pre-tracking mainline commits.  Staged (WAP) snapshots
-    and unmerged branch commits that are NOT on the requested
-    snapshot's ancestry are excluded — list-order slicing wrongly
-    reported them as ancestors (r9 review find)."""
-    if hasattr(table, "current_snapshot"):  # JSON flavor
-        state = table._load()
-        by_id = {
-            s["snapshot_id"]: s
-            for s in state["snapshots"]
-            if not s.get("staged")
-        }
-        if snapshot_id not in by_id:
-            raise ValueError(f"snapshot {snapshot_id} not found")
-        order = [
-            s["snapshot_id"]
-            for s in state["snapshots"]
-            if not s.get("staged")
-        ]
-        tail: list[int] = []
-        node = snapshot_id
-        while (
-            node is not None
-            and node in by_id
-            and "parent_snapshot_id" in by_id[node]
-        ):
-            tail.append(node)
-            node = by_id[node]["parent_snapshot_id"]
-        if node is not None and node in by_id:
-            head = [
-                i
-                for i in order[: order.index(node) + 1]
-                if "parent_snapshot_id" not in by_id[i]
-            ]
-        else:
-            head = []
-        return head + list(reversed(tail))
-    meta = table.metadata()  # spec flavor: parent-snapshot-id chain
-    by_id = {s["snapshot-id"]: s for s in meta["snapshots"]}
-    if snapshot_id not in by_id:
-        raise ValueError(f"snapshot {snapshot_id} not found")
-    tail = []
-    node = snapshot_id
-    while node is not None and node in by_id:
-        tail.append(node)
-        node = by_id[node].get("parent-snapshot-id")
-    return list(reversed(tail))
-
-
 def _main_chain(table, from_snapshot_id: int, to_snapshot_id: int | None):
     """Ordered (snapshot_id, operation) list on the main timeline,
     exclusive of ``from``, inclusive of ``to``."""
-    if hasattr(table, "current_snapshot"):  # JSON flavor
-        # Main timeline reconstruction: walk parent pointers back from
-        # the current snapshot (fast-forwarded branch segments record
-        # parents), then prepend the plain mainline commits in list
-        # order.  Staged (WAP) snapshots and unmerged branch commits —
-        # parented entries not reachable from current — are excluded.
-        state = table._load()
-        by_id = {
-            s["snapshot_id"]: s
-            for s in state["snapshots"]
-            if not s.get("staged")
-        }
-        order = [
-            s["snapshot_id"]
-            for s in state["snapshots"]
-            if not s.get("staged")
-        ]
-        tail: list[int] = []
-        node = state.get("current_snapshot_id")
-        while (
-            node is not None
-            and node in by_id
-            and "parent_snapshot_id" in by_id[node]
-        ):
-            tail.append(node)
-            node = by_id[node]["parent_snapshot_id"]
-        if node is not None and node in by_id:
-            head = [
-                i
-                for i in order[: order.index(node) + 1]
-                if "parent_snapshot_id" not in by_id[i]
-            ]
-        else:
-            head = []
-        chain_ids = head + list(reversed(tail))
-        snaps = [(i, by_id[i].get("operation")) for i in chain_ids]
-        ids = chain_ids
-    else:  # spec flavor: the snapshot-log IS the main timeline
-        meta = table.metadata()
-        ops = {
-            s["snapshot-id"]: (s.get("summary") or {}).get("operation")
-            for s in meta["snapshots"]
-        }
-        ids = [e["snapshot-id"] for e in meta.get("snapshot-log", [])]
-        snaps = [(sid, ops.get(sid)) for sid in ids]
+    snaps = table.main_log()
+    ids = [sid for sid, _ in snaps]
     if from_snapshot_id not in ids:
         raise ValueError(f"snapshot {from_snapshot_id} not found")
     start = ids.index(from_snapshot_id)
@@ -227,7 +133,7 @@ def read_changelog(
             "with_lineage keys rows by identity; net_changes/"
             "compute_updates_key collapse by value — not combinable"
         )
-    if with_lineage and not getattr(table, "row_lineage", False):
+    if with_lineage and not table.row_lineage:
         raise ValueError("with_lineage requires enable_row_lineage()")
     from ic_spark.compaction.deletes import _evolved_scan_args, infer_read_schema
     from ic_spark.compaction.planner import (
@@ -249,7 +155,7 @@ def read_changelog(
     # read_table/deletes.py do.
     evo = _evolved_scan_args(table)
     evo.pop("schema", None)
-    if schema is None and hasattr(table, "schema"):
+    if schema is None:
         schema = table.schema()
     if schema is None:
         data, _, _ = table.scan_tasks()
@@ -258,7 +164,7 @@ def read_changelog(
         schema = infer_read_schema(spark, data)
     from ic_spark.compaction.request import LAST_UPDATED_SEQ_COL, ROW_ID_COL
 
-    if getattr(table, "row_lineage", False):
+    if table.row_lineage:
         # materialized lineage columns in compacted footers are
         # metadata, not user columns (same rule as read_table)
         schema = strip_lineage_fields(schema)
@@ -418,8 +324,8 @@ def read_changelog(
             # metadata-only DELETE aligned with partition bounds, as
             # real Iceberg engines write (operation="delete", no new
             # delete files).  Their previously-visible rows are DELETE
-            # events; silently skipping them lost whole partitions from
-            # CDC consumers (r9 review find).
+            # events; skipping them would lose whole partitions from
+            # CDC consumers.
             parts.append(
                 _with_meta(removed_rows(), cols, "DELETE", sid, ordinal)
             )

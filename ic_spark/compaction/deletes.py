@@ -34,19 +34,6 @@ from ic_spark.compaction.request import (
 )
 
 
-def _next_sequence_number(table: ManifestTable) -> int:
-    if not hasattr(table, "current_snapshot"):
-        # Spec-metadata IcebergTable: sequence numbers come from the
-        # table metadata, and its commit paths assign the next one
-        # themselves — derive it from the live tasks instead.
-        data, pos, eq = table.scan_tasks()
-        return max((t.sequence_number for t in data + pos + eq), default=0) + 1
-    snap = table.current_snapshot()
-    if snap is None:
-        return 1
-    return max((f.get("sequence_number", 0) for f in snap.files), default=0) + 1
-
-
 def infer_read_schema(spark: SparkSession, tasks: list) -> "StructType":
     """Schema of a task list, format-aware: prefer a parquet footer
     (one metadata read); avro falls back to the embedded writer schema,
@@ -76,22 +63,20 @@ def _evolved_scan_args(table) -> dict:
     schema-tracking tables so delete writers resolve renamed/widened/
     added/dropped columns exactly like reads do (tables without a
     registered schema scan with footer schemas)."""
-    args: dict = {}
-    if hasattr(table, "schema"):
-        s = table.schema()
-        if s is not None:
-            args["schema"] = s
-            if hasattr(table, "name_mapping"):
-                args["name_mapping"] = table.name_mapping()
-            if hasattr(table, "schema_history"):
-                args["schema_history"] = table.schema_history()
-    return args
+    s = table.schema()
+    if s is None:
+        return {}
+    return {
+        "schema": s,
+        "name_mapping": table.name_mapping(),
+        "schema_history": table.schema_history(),
+    }
 
 
 def _write_single_file(df: DataFrame, dir_path: str, mfs=None) -> str:
     """Spark writes the file (Hadoop layer, any configured store); the
     LISTING goes through the table's metadata seam when given — plain
-    os.listdir on an object-store dir spelling finds nothing (r11)."""
+    os.listdir on an object-store dir spelling finds nothing."""
     df.coalesce(1).write.mode("overwrite").parquet(dir_path)
     names = mfs.listdir(dir_path) if mfs is not None else os.listdir(dir_path)
     files = [f for f in names if f.endswith(".parquet")]
@@ -143,10 +128,10 @@ def write_position_deletes(
         # No row matched: committing a 0-row delete file would burn a
         # sequence number and make every future MoR read anti-join an
         # empty file forever — raise, matching the DV flavors'
-        # "predicate matched no rows" contract (r9 review find).
+        # "predicate matched no rows" contract.
         mfs.delete_dir(out_dir)
         raise ValueError("predicate matched no rows")
-    seq = _next_sequence_number(table)
+    seq = table.next_sequence_number()
     return table.append_snapshot(
         [
             {
@@ -216,10 +201,9 @@ def dv_fold(
     """Fold ONE framed DV blob into a per-referenced-file accumulator —
     the single implementation of the v3 one-DV-per-file merge rule
     shared by :func:`commit_deletion_vectors` and the orchestrator's
-    puffin compaction (they previously carried near-verbatim twins of
-    this logic, and the twin here silently LAST-WINS-overwrote carried
-    blobs when two superseded puffin files referenced the same
-    untouched data file — r10 fix, regression-tested).
+    puffin compaction, so two superseded puffin files that reference
+    the same untouched data file union their blobs instead of the last
+    one overwriting the first.
 
     The blob stays byte-opaque when the ref is new; two blobs for the
     same data file are decoded, position-unioned and re-framed."""
@@ -348,9 +332,9 @@ def commit_deletion_vectors(
 
     # Every puffin byte (supersede reads, the fresh-dir probe, the
     # write, the size) through the table's metadata seam: on a remote
-    # root the old local open()/os.path.exists silently wrote a LOCAL
-    # directory literally named "s3:/..." — the exact data-loss class
-    # local_write_path gates for the avro/orc writers (r11 find).
+    # root a local open()/os.path.exists would write a LOCAL directory
+    # literally named "s3:/..." — the data-loss class local_write_path
+    # gates for the avro/orc writers.
     from ic_spark.compaction.metafs import table_mfs
 
     mfs = table_mfs(table)
@@ -370,8 +354,8 @@ def commit_deletion_vectors(
         for b in existing:
             # dv_fold carries untouched refs byte-identical and unions
             # same-ref blobs — including two SUPERSEDED files both
-            # carrying a DV for one untouched data file, which the old
-            # separate carried dict last-wins-overwrote (r10 fix).
+            # carrying a DV for one untouched data file, which must
+            # union, not last-wins-overwrite.
             dv_fold(
                 merged,
                 b.properties.get("referenced-data-file", ""),
@@ -394,7 +378,7 @@ def commit_deletion_vectors(
         out_path = os.path.join(table.root, f"{base}-r{attempt}", "deletes.puffin")
     # populates blob offsets/lengths
     write_puffin(mfs.within(out_path), blobs, filesystem=mfs.fs)
-    seq = _next_sequence_number(table)
+    seq = table.next_sequence_number()
     return table.commit_rewrite(
         [dv_manifest_entry(out_path, seq, blobs, file_size=mfs.size(out_path))],
         superseded | (extra_removed or set()),
@@ -463,8 +447,8 @@ def commit_deletion_vectors_distributed(
     # Persisted: `packed` is the FULL predicate scan + bitmap packing and
     # `inv` the binaryFile expansion of every existing puffin; both are
     # consumed by two jobs (the sup_paths probe collect and the final
-    # merge/write pipeline) — without the persist the expensive work ran
-    # end-to-end twice (r9 review find).
+    # merge/write pipeline) — without the persist the expensive work runs
+    # end-to-end twice.
     packed = (
         matches.groupBy("file_path")
         .applyInPandas(pack, schema=row_schema)
@@ -566,7 +550,7 @@ def commit_deletion_vectors_distributed(
     # Replay-safe fresh output dir (same contract as the driver path),
     # probed/created through the table's metadata seam; the executors
     # get the PICKLED connector + within-FS dir so puffin bytes land on
-    # the object store, never a local dir named "s3:/..." (r11 find).
+    # the object store, never a local dir named "s3:/...".
     from ic_spark.compaction.metafs import table_mfs
 
     mfs = table_mfs(table)
@@ -649,7 +633,7 @@ def commit_deletion_vectors_distributed(
     by_file: dict[str, list] = {}
     for r in manifest_rows:
         by_file.setdefault(r.path, []).append(r)
-    seq = _next_sequence_number(table)
+    seq = table.next_sequence_number()
     entries = []
     for path in sorted(by_file):
         rows_ = by_file[path]
@@ -696,7 +680,7 @@ def write_equality_deletes(
     path = _write_single_file(
         keys.select(*equality_ids).distinct(), out_dir, mfs
     )
-    seq = _next_sequence_number(table)
+    seq = table.next_sequence_number()
     return table.append_snapshot(
         [
             {
@@ -740,7 +724,7 @@ def merge_upsert(
     missing = [c for c in key_cols if c not in source.columns]
     if missing:
         raise ValueError(f"source missing key columns: {missing}")
-    seq = _next_sequence_number(table)
+    seq = table.next_sequence_number()
     batch = batch_tag or uuid.uuid4().hex[:12]
     data_dir = os.path.join(table.root, f"upsert-data-{batch}")
     source.write.mode("overwrite").parquet(data_dir)
@@ -831,27 +815,15 @@ def read_table(
     # read wide, added columns null-fill, dropped-then-re-added columns
     # never resurrect) — file footers only describe the schema files
     # were WRITTEN with.
+    # VERSION AS OF projects under the schema the SNAPSHOT was committed
+    # with (spec time-travel rule) where the flavor records one.
     name_mapping = None
     schema_history = None
-    if schema is None and hasattr(table, "schema"):
-        # VERSION AS OF projects under the schema the SNAPSHOT was
-        # committed with (spec time-travel rule) when the flavor tracks
-        # per-snapshot schema ids; else the current schema.
-        if snapshot_id is not None and hasattr(table, "schema_at"):
-            schema = table.schema_at(snapshot_id)
-        else:
-            schema = table.schema()
+    if schema is None:
+        schema = table.schema(snapshot_id)
         if schema is not None:
-            if hasattr(table, "name_mapping"):
-                try:
-                    name_mapping = table.name_mapping(snapshot_id)
-                except TypeError:
-                    name_mapping = table.name_mapping()
-            if hasattr(table, "schema_history"):
-                try:
-                    schema_history = table.schema_history(snapshot_id)
-                except TypeError:
-                    schema_history = table.schema_history()
+            name_mapping = table.name_mapping(snapshot_id)
+            schema_history = table.schema_history(snapshot_id)
     if not data:
         if where:
             all_data, _, _ = table.scan_tasks(snapshot_id)
@@ -862,13 +834,13 @@ def read_table(
                 # as a non-empty read: lineage metadata stripped from
                 # inferred schemas, appended when with_lineage asked —
                 # a schema that flips with the filter's selectivity
-                # crashes downstream unions (r9 review find).
+                # crashes downstream unions.
                 from ic_spark.compaction.planner import (
                     lineage_scan_schema,
                     strip_lineage_fields,
                 )
 
-                if getattr(table, "row_lineage", False):
+                if table.row_lineage:
                     schema = strip_lineage_fields(schema)
                 if with_lineage:
                     schema = lineage_scan_schema(schema)
@@ -876,7 +848,7 @@ def read_table(
         raise ValueError("table has no data files")
     if schema is None:
         schema = infer_read_schema(spark, data)
-    if getattr(table, "row_lineage", False):
+    if table.row_lineage:
         # Materialized lineage columns in compacted footers are
         # METADATA, not user columns — inferred schemas must not
         # surface them (with_lineage appends them deliberately).
@@ -893,7 +865,7 @@ def read_table(
     )
     lineage = None
     if with_lineage:
-        if not getattr(table, "row_lineage", False):
+        if not table.row_lineage:
             raise ValueError("with_lineage requires enable_row_lineage()")
         lineage = {t.data_file_path: t.first_row_id for t in data}
     out = build_merge_on_read(spark, request, lineage=lineage)
@@ -937,7 +909,7 @@ def read_incremental(
         RewriteFilesRequest,
     )
 
-    if with_lineage and not getattr(table, "row_lineage", False):
+    if with_lineage and not table.row_lineage:
         raise ValueError("with_lineage requires enable_row_lineage()")
     added = table.incremental_tasks(from_snapshot_id, to_snapshot_id)
     if not added:

@@ -56,7 +56,7 @@ from ic_spark.compaction.epochs import (
 from ic_spark.compaction.request import FileContent, FileScanTask
 from ic_spark.sources.avro_io import read_container, write_container
 
-from ic_spark.compaction.manifest import CommitConflictError
+from ic_spark.compaction.manifest import CommitConflictError, _with_statistics_entry
 from ic_spark.compaction.metafs import check_remote_commit_safety
 
 # --------------------------------------------------- type serialization
@@ -529,8 +529,10 @@ _ENUM_TO_CONTENT = {v: k for k, v in _CONTENT_TO_ENUM.items()}
 class IcebergTable:
     """A Hadoop-catalog-layout Iceberg v2 table (metadata side).
 
-    Duck-types ``ManifestTable``'s planning/commit surface so the
-    compaction orchestrator runs over spec metadata unchanged.
+    Implements the table contract listed in :mod:`ic_spark.table` with
+    the same method names and signatures as the JSON ``ManifestTable``,
+    so every planner, writer and maintenance path takes either flavor
+    without asking which one it holds.
     """
 
     def __init__(
@@ -626,35 +628,49 @@ class IcebergTable:
             os.path.join(self.metadata_dir, f"v{v}.metadata.json")
         )
 
-    def schema(self) -> T.StructType:
+    def _metadata_for_commit(self) -> tuple[int | None, dict]:
+        """(version, that exact version's metadata) for an optimistic
+        commit.  The version is read first: reading metadata first lets a
+        commit that lands between the two reads pair stale metadata with
+        a fresh expected_version, and the CAS then erases that commit."""
+        version = self.version()
+        return version, self.metadata(version)
+
+    def schema(self, snapshot_id: int | None = None) -> T.StructType | None:
+        """Current schema, or with ``snapshot_id`` the schema that
+        snapshot was committed under: VERSION AS OF reads project under
+        the schema the data was written with (Iceberg's time-travel
+        rule)."""
         meta = self.metadata()
-        cur = next(
-            s for s in meta["schemas"] if s["schema-id"] == meta["current-schema-id"]
+        sid = _snapshot_schema_id(meta, snapshot_id)
+        return iceberg_to_spark_schema(
+            next(s for s in meta["schemas"] if s["schema-id"] == sid)
         )
-        return iceberg_to_spark_schema(cur)
 
-    def schema_id_at(self, snapshot_id: int | None) -> int:
-        """The schema id a snapshot was committed under (spec: every
-        snapshot records its ``schema-id``; time-travel reads use it).
-        Current schema for None / legacy snapshots without the field."""
+    def name_mapping(
+        self, snapshot_id: int | None = None
+    ) -> dict[str, list[str]] | None:
+        """Scan name-mapping (see :func:`derive_name_mapping`) relative
+        to the schema of ``snapshot_id`` (current by default)."""
         meta = self.metadata()
-        if snapshot_id is not None:
-            for s in meta["snapshots"]:
-                if s["snapshot-id"] == snapshot_id:
-                    sid = s.get("schema-id")
-                    if sid is not None:
-                        return sid
-                    break
-        return meta["current-schema-id"]
+        return derive_name_mapping(
+            meta["schemas"], _snapshot_schema_id(meta, snapshot_id)
+        )
 
-    def schema_at(self, snapshot_id: int | None) -> T.StructType:
-        """Table schema as of a snapshot — VERSION AS OF reads project
-        under the schema the data was committed with, exactly Iceberg's
-        time-travel rule."""
+    def schema_history(self, snapshot_id: int | None = None) -> dict | None:
+        """Every schema version's (field_id, name, DataType, nullable)
+        rows.  None when the table has a single schema (nothing to
+        resolve) or predates activation tracking.  With ``snapshot_id``,
+        the history's current schema is the one that snapshot was
+        committed under (time-travel reads project against it)."""
         meta = self.metadata()
-        sid = self.schema_id_at(snapshot_id)
-        s = next(x for x in meta["schemas"] if x["schema-id"] == sid)
-        return iceberg_to_spark_schema(s)
+        if len(meta["schemas"]) <= 1:
+            return None
+        if schema_activation_boundaries(meta) is None:
+            return None
+        return history_from_schemas(
+            meta["schemas"], _snapshot_schema_id(meta, snapshot_id)
+        )
 
     def _commit_metadata(self, meta: dict, expected_version: int | None) -> None:
         """Hadoop-catalog commit: O_EXCL create of v{N+1}, then hint swap.
@@ -713,8 +729,45 @@ class IcebergTable:
         sid = meta.get("current-snapshot-id", -1)
         return None if sid in (-1, None) else sid
 
+    def next_sequence_number(self, branch: str | None = None) -> int:
+        """The sequence number the next commit records.  Spec sequence
+        numbers are table-wide (``last-sequence-number``), so a branch
+        commit takes the same next number as a main commit."""
+        return self.metadata()["last-sequence-number"] + 1
+
+    def count_rows(self, snapshot_id: int | None = None) -> int | None:
+        """Always None: the spec flavor answers COUNT(*) with a scan."""
+        return None
+
     def snapshots(self) -> list[dict]:
         return self.metadata()["snapshots"]
+
+    def ancestor_ids(self, snapshot_id: int) -> list[int]:
+        """``snapshot_id`` and its ancestors, oldest first, along the
+        ``parent-snapshot-id`` chain; snapshots of other branches are not
+        on it."""
+        by_id = {s["snapshot-id"]: s for s in self.metadata()["snapshots"]}
+        if snapshot_id not in by_id:
+            raise ValueError(f"snapshot {snapshot_id} not found")
+        tail = []
+        node = snapshot_id
+        while node is not None and node in by_id:
+            tail.append(node)
+            node = by_id[node].get("parent-snapshot-id")
+        return list(reversed(tail))
+
+    def main_log(self) -> list[tuple[int, str | None]]:
+        """(snapshot id, summary operation) of every commit main pointed
+        at, oldest first: the snapshot-log is the main timeline."""
+        meta = self.metadata()
+        ops = {
+            s["snapshot-id"]: (s.get("summary") or {}).get("operation")
+            for s in meta["snapshots"]
+        }
+        return [
+            (e["snapshot-id"], ops.get(e["snapshot-id"]))
+            for e in meta.get("snapshot-log", [])
+        ]
 
     def snapshot_id_as_of(self, timestamp_ms: int) -> int:
         """TIMESTAMP AS OF over the spec snapshot-log (Iceberg time
@@ -1144,10 +1197,9 @@ class IcebergTable:
                 if st == "uuid":
                     # The logical marker transform_column and the
                     # iceberg_bucket expression dispatch on — without
-                    # it a uuid column bucketed by its 36-char TEXT
+                    # it a uuid column buckets by its 36-char TEXT
                     # instead of its 16 msb/lsb bytes, silently
-                    # non-interoperable with Iceberg-written layouts
-                    # (r10 review find).
+                    # non-interoperable with Iceberg-written layouts.
                     field["logical"] = "uuid"
             t = pf["transform"]
             if t.startswith("bucket["):
@@ -1170,12 +1222,7 @@ class IcebergTable:
         ``fields`` use the writer's shape; ``bucket``/``iceberg_bucket``
         both serialize as spec ``bucket[N]`` (and execute spec-exact).
         """
-        # version FIRST, then that exact version's metadata: the reverse
-        # order pairs stale metadata with a fresh expected_version when a
-        # commit races between the reads, and the CAS then erases the
-        # racer (r9 review find).
-        version = self.version()
-        meta = self.metadata(version)
+        version, meta = self._metadata_for_commit()
         schema = next(
             s for s in meta["schemas"] if s["schema-id"] == meta["current-schema-id"]
         )
@@ -1231,8 +1278,6 @@ class IcebergTable:
         self._commit_metadata(new_meta, expected_version=version)
         return new_id
 
-    # -- ManifestTable-compatible surface ------------------------------
-
     # ------------------------------------------------ row lineage (v3)
 
     @property
@@ -1269,12 +1314,7 @@ class IcebergTable:
         data file with an explicit ``first_row_id`` (one ``replace``
         commit rewriting the manifests — they are immutable Avro, so
         backfill is a carry-forward commit, not an edit)."""
-        # version FIRST, then that exact version's metadata: the reverse
-        # order pairs stale metadata with a fresh expected_version when a
-        # commit races between the reads, and the CAS then erases the
-        # racer (r9 review find).
-        version = self.version()
-        meta = self.metadata(version)
+        version, meta = self._metadata_for_commit()
         if meta.get("next-row-id") is not None:
             return
         meta = dict(meta)
@@ -1313,12 +1353,7 @@ class IcebergTable:
         property commit (for sinks whose final action is not a plain
         append; ``append_snapshot(stream_mark=...)`` is atomic with
         the commit and preferred)."""
-        # version FIRST, then that exact version's metadata: the reverse
-        # order pairs stale metadata with a fresh expected_version when a
-        # commit races between the reads, and the CAS then erases the
-        # racer (r9 review find).
-        version = self.version()
-        meta = self.metadata(version)
+        version, meta = self._metadata_for_commit()
         marked = self._with_stream_mark(dict(meta), (name, batch_id))
         if marked is None:
             return  # already at or past this batch id
@@ -1359,12 +1394,7 @@ class IcebergTable:
         ledger update into the SAME metadata commit (see
         ``streaming/sink.py``).
         """
-        # version FIRST, then that exact version's metadata: the reverse
-        # order pairs stale metadata with a fresh expected_version when a
-        # commit races between the reads, and the CAS then erases the
-        # racer (r9 review find).
-        version = self.version()
-        meta = self.metadata(version)
+        version, meta = self._metadata_for_commit()
         if stream_mark is not None:
             meta = self._with_stream_mark(dict(meta), stream_mark) or meta
         if meta.get("next-row-id") is not None:
@@ -1403,12 +1433,7 @@ class IcebergTable:
 
     def rollback_to_snapshot(self, snapshot_id: int) -> int:
         """Point main back at an earlier snapshot (metadata-only)."""
-        # version FIRST, then that exact version's metadata: the reverse
-        # order pairs stale metadata with a fresh expected_version when a
-        # commit races between the reads, and the CAS then erases the
-        # racer (r9 review find).
-        version = self.version()
-        meta = self.metadata(version)
+        version, meta = self._metadata_for_commit()
         if all(s["snapshot-id"] != snapshot_id for s in meta["snapshots"]):
             raise ValueError(f"snapshot {snapshot_id} not found")
         now = int(time.time() * 1000)
@@ -1424,12 +1449,7 @@ class IcebergTable:
     def fast_forward(self, branch: str, force: bool = False) -> int:
         """Advance MAIN to the branch head when main is an ancestor of
         it (spec ``parent-snapshot-id`` chain proves ancestry)."""
-        # version FIRST, then that exact version's metadata: the reverse
-        # order pairs stale metadata with a fresh expected_version when a
-        # commit races between the reads, and the CAS then erases the
-        # racer (r9 review find).
-        version = self.version()
-        meta = self.metadata(version)
+        version, meta = self._metadata_for_commit()
         ref = meta.get("refs", {}).get(branch)
         if ref is None or ref.get("type") != "branch":
             raise ValueError(f"unknown branch: {branch!r}")
@@ -1661,12 +1681,7 @@ class IcebergTable:
         ``operation`` lands in the snapshot summary (replace =
         maintenance, overwrite = COW row change, delete = delete-file
         supersede) — the changelog read keys off it."""
-        # version FIRST, then that exact version's metadata: the reverse
-        # order pairs stale metadata with a fresh expected_version when a
-        # commit races between the reads, and the CAS then erases the
-        # racer (r9 review find).
-        version = self.version()
-        meta = self.metadata(version)
+        version, meta = self._metadata_for_commit()
         cur = self._snapshot(None)
         if expected_snapshot_id is not None:
             actual = cur["snapshot-id"] if cur else None
@@ -1714,9 +1729,7 @@ class IcebergTable:
         handle."""
         if not updates:
             raise ValueError("set_properties: empty updates")
-        # version FIRST, then that exact version's metadata (r9 find)
-        version = self.version()
-        meta = self.metadata(version)
+        version, meta = self._metadata_for_commit()
         new_meta = dict(meta)
         props = dict(meta.get("properties", {}))
         props.update({str(k): str(v) for k, v in updates.items()})
@@ -1726,8 +1739,7 @@ class IcebergTable:
 
     def remove_properties(self, keys: list[str]) -> None:
         """Remove property ``keys`` (missing tolerated) as one commit."""
-        version = self.version()
-        meta = self.metadata(version)
+        version, meta = self._metadata_for_commit()
         new_meta = dict(meta)
         props = dict(meta.get("properties", {}))
         for k in keys:
@@ -1739,6 +1751,22 @@ class IcebergTable:
     def properties(self) -> dict[str, str]:
         return dict(self.metadata().get("properties", {}))
 
+    # -- statistics files ----------------------------------------------
+
+    def statistics(self) -> list[dict]:
+        """Registered statistics entries, oldest first."""
+        return self.metadata().get("statistics", [])
+
+    def register_statistics(self, entry: dict) -> None:
+        """Register a statistics entry as one metadata commit; an entry
+        for the same snapshot is replaced, not stacked."""
+        version, meta = self._metadata_for_commit()
+        meta = dict(meta)
+        meta["statistics"] = _with_statistics_entry(
+            meta.get("statistics", []), entry
+        )
+        self._commit_metadata(meta, expected_version=version)
+
     # -- snapshot refs (Iceberg metadata ``refs``: tags + branches) ----
 
     def set_ref(self, name: str, snapshot_id: int, ref_type: str = "tag") -> None:
@@ -1747,12 +1775,7 @@ class IcebergTable:
         head.  Refs survive snapshot expiration."""
         if ref_type not in ("tag", "branch"):
             raise ValueError(f"ref type must be tag|branch: {ref_type}")
-        # version FIRST, then that exact version's metadata: the reverse
-        # order pairs stale metadata with a fresh expected_version when a
-        # commit races between the reads, and the CAS then erases the
-        # racer (r9 review find).
-        version = self.version()
-        meta = self.metadata(version)
+        version, meta = self._metadata_for_commit()
         if all(s["snapshot-id"] != snapshot_id for s in meta["snapshots"]):
             raise ValueError(f"snapshot {snapshot_id} not found")
         new_meta = dict(meta)
@@ -1763,12 +1786,7 @@ class IcebergTable:
         self._commit_metadata(new_meta, expected_version=version)
 
     def remove_ref(self, name: str) -> None:
-        # version FIRST, then that exact version's metadata: the reverse
-        # order pairs stale metadata with a fresh expected_version when a
-        # commit races between the reads, and the CAS then erases the
-        # racer (r9 review find).
-        version = self.version()
-        meta = self.metadata(version)
+        version, meta = self._metadata_for_commit()
         refs = dict(meta.get("refs", {}))
         refs.pop(name, None)
         new_meta = dict(meta)
@@ -1790,12 +1808,7 @@ class IcebergTable:
         """Retain the current snapshot plus every ref target; return
         orphaned data-file paths (caller owns physical deletion, like
         Iceberg ``expireSnapshots`` honoring retained refs)."""
-        # version FIRST, then that exact version's metadata: the reverse
-        # order pairs stale metadata with a fresh expected_version when a
-        # commit races between the reads, and the CAS then erases the
-        # racer (r9 review find).
-        version = self.version()
-        meta = self.metadata(version)
+        version, meta = self._metadata_for_commit()
         cur = self._snapshot(None)
         if cur is None:
             return []
@@ -1826,260 +1839,263 @@ class IcebergTable:
         self._commit_metadata(new_meta, expected_version=version)
         return sorted(orphans)
 
+    # -- schema evolution (metadata-only commits) ----------------------
 
-# ------------------------------------------------- schema evolution ops
+    def _evolve_schema(self, mutate) -> int:
+        """Commit a metadata version whose schemas list gains one schema.
 
-def _evolve(tbl: IcebergTable, mutate) -> int:
-    """Commit a metadata version whose schemas list gains one schema.
+        ``mutate(fields, meta) -> (new_fields, last_column_id)`` transforms a
+        deep copy of the current schema's field list.  Snapshots are
+        untouched — schema updates are metadata-only commits (Iceberg spec:
+        "Schema Evolution" is free; data files are never rewritten).
+        """
+        import copy
 
-    ``mutate(fields, meta) -> (new_fields, last_column_id)`` transforms a
-    deep copy of the current schema's field list.  Snapshots are
-    untouched — schema updates are metadata-only commits (Iceberg spec:
-    "Schema Evolution" is free; data files are never rewritten).
-    """
-    import copy
-
-    meta = tbl.metadata()
-    version = tbl.version()
-    cur = next(
-        s for s in meta["schemas"] if s["schema-id"] == meta["current-schema-id"]
-    )
-    fields, last_col = mutate(copy.deepcopy(cur["fields"]), meta)
-    new_id = max(s["schema-id"] for s in meta["schemas"]) + 1
-    new_meta = dict(meta)
-    new_meta["schemas"] = list(meta["schemas"]) + [
-        {"type": "struct", "schema-id": new_id, "fields": fields}
-    ]
-    new_meta["current-schema-id"] = new_id
-    new_meta["last-column-id"] = last_col
-    new_meta["last-updated-ms"] = int(time.time() * 1000)
-    # Activation boundary: files committed at sequence numbers STRICTLY
-    # ABOVE the current last-sequence-number were written under this
-    # schema (until a newer one activates).  Carried-forward entries
-    # keep their original sequence numbers, so scan planning can derive
-    # each data file's exact write schema — the field-id resolution the
-    # Iceberg spec gets from footer field ids.
-    props = dict(new_meta.get("properties", {}))
-    act = dict(json.loads(props.get("ic.schema-activation", "{}")))
-    act[str(new_id)] = meta["last-sequence-number"]
-    props["ic.schema-activation"] = json.dumps(act)
-    new_meta["properties"] = props
-    tbl._commit_metadata(new_meta, expected_version=version)
-    return new_id
-
-
-def add_column(tbl: IcebergTable, name: str, spark_type: T.DataType) -> int:
-    """Spec add-column: new field id past last-column-id; always optional
-    (old files null-fill — required would break existing data)."""
-
-    def mutate(fields, meta):
-        if any(f["name"] == name for f in fields):
-            raise ValueError(f"column {name!r} already exists")
-        fid = meta["last-column-id"] + 1
-        fields.append(
-            {
-                "id": fid,
-                "name": name,
-                "required": False,
-                "type": spark_to_iceberg_type(spark_type),
-            }
+        version, meta = self._metadata_for_commit()
+        cur = next(
+            s for s in meta["schemas"] if s["schema-id"] == meta["current-schema-id"]
         )
-        return fields, fid
+        fields, last_col = mutate(copy.deepcopy(cur["fields"]), meta)
+        new_id = max(s["schema-id"] for s in meta["schemas"]) + 1
+        new_meta = dict(meta)
+        new_meta["schemas"] = list(meta["schemas"]) + [
+            {"type": "struct", "schema-id": new_id, "fields": fields}
+        ]
+        new_meta["current-schema-id"] = new_id
+        new_meta["last-column-id"] = last_col
+        new_meta["last-updated-ms"] = int(time.time() * 1000)
+        # Activation boundary: files committed at sequence numbers STRICTLY
+        # ABOVE the current last-sequence-number were written under this
+        # schema (until a newer one activates).  Carried-forward entries
+        # keep their original sequence numbers, so scan planning can derive
+        # each data file's exact write schema — the field-id resolution the
+        # Iceberg spec gets from footer field ids.
+        props = dict(new_meta.get("properties", {}))
+        act = dict(json.loads(props.get("ic.schema-activation", "{}")))
+        act[str(new_id)] = meta["last-sequence-number"]
+        props["ic.schema-activation"] = json.dumps(act)
+        new_meta["properties"] = props
+        self._commit_metadata(new_meta, expected_version=version)
+        return new_id
 
-    return _evolve(tbl, mutate)
+    def add_column(self, name: str, spark_type) -> int:
+        """Spec add-column: new field id past last-column-id; always optional
+        (old files null-fill — required would break existing data)."""
 
-
-def rename_column(tbl: IcebergTable, old: str, new: str) -> int:
-    """Spec rename: the field ID is the identity; only the name moves."""
-
-    def mutate(fields, meta):
-        if any(f["name"] == new for f in fields):
-            raise ValueError(f"column {new!r} already exists")
-        tgt = next((f for f in fields if f["name"] == old), None)
-        if tgt is None:
-            raise ValueError(f"no column {old!r}")
-        tgt["name"] = new
-        return fields, meta["last-column-id"]
-
-    return _evolve(tbl, mutate)
-
-
-def promote_column(tbl: IcebergTable, name: str, spark_type: T.DataType) -> int:
-    """Spec widening promotion — validated by the same rule the scan
-    enforces (evolution.is_promotable), so metadata can never declare a
-    type the reader would corrupt on."""
-    from ic_spark.compaction.evolution import is_promotable
-
-    def mutate(fields, meta):
-        tgt = next((f for f in fields if f["name"] == name), None)
-        if tgt is None:
-            raise ValueError(f"no column {name!r}")
-        src_t = iceberg_to_spark_type(tgt["type"])
-        if not is_promotable(src_t, spark_type):
-            raise ValueError(
-                f"cannot promote {name}: {src_t.simpleString()} -> "
-                f"{spark_type.simpleString()} is not an Iceberg widening"
+        def mutate(fields, meta):
+            if any(f["name"] == name for f in fields):
+                raise ValueError(f"column {name!r} already exists")
+            fid = meta["last-column-id"] + 1
+            fields.append(
+                {
+                    "id": fid,
+                    "name": name,
+                    "required": False,
+                    "type": spark_to_iceberg_type(spark_type),
+                }
             )
-        tgt["type"] = spark_to_iceberg_type(spark_type)
-        return fields, meta["last-column-id"]
+            return fields, fid
 
-    return _evolve(tbl, mutate)
+        return self._evolve_schema(mutate)
 
+    def rename_column(self, old: str, new: str) -> int:
+        """Spec rename: the field ID is the identity; only the name moves."""
 
-def update_sort_order(tbl: IcebergTable, fields: list[dict]) -> int:
-    """``ALTER TABLE ... WRITE ORDERED BY`` — register a new sort order
-    (spec shape: identity transform on the source field id, direction +
-    null-order) and make it the default for FUTURE writes.  Metadata
-    only; compaction applies it when rewriting (full_compact picks the
-    table's default order when the request doesn't name one).
+        def mutate(fields, meta):
+            if any(f["name"] == new for f in fields):
+                raise ValueError(f"column {new!r} already exists")
+            tgt = next((f for f in fields if f["name"] == old), None)
+            if tgt is None:
+                raise ValueError(f"no column {old!r}")
+            tgt["name"] = new
+            return fields, meta["last-column-id"]
 
-    ``fields``: ``[{"column": str, "desc": bool = False,
-    "nulls_first": bool = None}]`` (nulls default to the Iceberg
-    convention: first for asc, last for desc)."""
-    meta = tbl.metadata()
-    version = tbl.version()
-    schema = next(
-        s for s in meta["schemas"] if s["schema-id"] == meta["current-schema-id"]
-    )
-    name_to_id = {f["name"]: f["id"] for f in schema["fields"]}
-    ice_fields = []
-    for f in fields:
-        col = f["column"]
-        if col not in name_to_id:
-            raise ValueError(f"no column {col!r}")
-        desc = bool(f.get("desc", False))
-        nf = f.get("nulls_first")
-        if nf is None:
-            nf = not desc  # spec default: NULLS FIRST asc, LAST desc
-        ice_fields.append(
-            {
-                "transform": "identity",
-                "source-id": name_to_id[col],
-                "direction": "desc" if desc else "asc",
-                "null-order": "nulls-first" if nf else "nulls-last",
-            }
+        return self._evolve_schema(mutate)
+
+    def promote_column(self, name: str, spark_type) -> int:
+        """Spec widening promotion — validated by the same rule the scan
+        enforces (evolution.is_promotable), so metadata can never declare a
+        type the reader would corrupt on."""
+        from ic_spark.compaction.evolution import is_promotable
+
+        def mutate(fields, meta):
+            tgt = next((f for f in fields if f["name"] == name), None)
+            if tgt is None:
+                raise ValueError(f"no column {name!r}")
+            src_t = iceberg_to_spark_type(tgt["type"])
+            if not is_promotable(src_t, spark_type):
+                raise ValueError(
+                    f"cannot promote {name}: {src_t.simpleString()} -> "
+                    f"{spark_type.simpleString()} is not an Iceberg widening"
+                )
+            tgt["type"] = spark_to_iceberg_type(spark_type)
+            return fields, meta["last-column-id"]
+
+        return self._evolve_schema(mutate)
+
+    def update_sort_order(self, fields: list[dict]) -> int:
+        """``ALTER TABLE ... WRITE ORDERED BY`` — register a new sort order
+        (spec shape: identity transform on the source field id, direction +
+        null-order) and make it the default for FUTURE writes.  Metadata
+        only; compaction applies it when rewriting (full_compact picks the
+        table's default order when the request doesn't name one).
+
+        ``fields``: ``[{"column": str, "desc": bool = False,
+        "nulls_first": bool = None}]`` (nulls default to the Iceberg
+        convention: first for asc, last for desc)."""
+        version, meta = self._metadata_for_commit()
+        schema = next(
+            s for s in meta["schemas"] if s["schema-id"] == meta["current-schema-id"]
         )
-    orders = list(meta.get("sort-orders", []))
-    # Idempotent DDL: an identical existing order just becomes default.
-    for o in orders:
-        if o["fields"] == ice_fields:
-            new_meta = dict(meta)
-            new_meta["default-sort-order-id"] = o["order-id"]
-            tbl._commit_metadata(new_meta, expected_version=version)
-            return o["order-id"]
-    new_id = max((o["order-id"] for o in orders), default=0) + 1
-    new_meta = dict(meta)
-    new_meta["sort-orders"] = orders + [
-        {"order-id": new_id, "fields": ice_fields}
-    ]
-    new_meta["default-sort-order-id"] = new_id
-    tbl._commit_metadata(new_meta, expected_version=version)
-    return new_id
-
-
-def default_sort_order(tbl: IcebergTable) -> tuple[int, list[dict]]:
-    """(order_id, writer-shaped fields) of the table's default sort
-    order — ``(0, [])`` means unsorted."""
-    meta = tbl.metadata()
-    oid = meta.get("default-sort-order-id", 0)
-    order = next(
-        (o for o in meta.get("sort-orders", []) if o["order-id"] == oid),
-        None,
-    )
-    if not order or not order["fields"]:
-        return 0, []
-    schema = next(
-        s for s in meta["schemas"] if s["schema-id"] == meta["current-schema-id"]
-    )
-    id_to_name = {f["id"]: f["name"] for f in schema["fields"]}
-    out = []
-    for f in order["fields"]:
-        if f.get("transform", "identity") != "identity":
-            return 0, []  # transform orders not expressible yet
-        out.append(
-            {
-                "column": id_to_name[f["source-id"]],
-                "desc": f["direction"] == "desc",
-                "nulls_first": f["null-order"] == "nulls-first",
-            }
-        )
-    return oid, out
-
-
-def drop_column(tbl: IcebergTable, name: str) -> int:
-    """Spec drop-column: the field leaves the current schema; its id is
-    RETIRED (``last-column-id`` never decreases, so a later re-add of
-    the same name gets a fresh id and old files' data for the dropped
-    column can never resurrect).  Metadata-only — no file rewrite.
-
-    Rejected while any partition spec sources the column (Iceberg
-    requires the partition field be removed first) — dropping it would
-    orphan the spec's source-id.
-    """
-
-    def mutate(fields, meta):
-        tgt = next((f for f in fields if f["name"] == name), None)
-        if tgt is None:
-            raise ValueError(f"no column {name!r}")
-        for spec in meta["partition-specs"]:
-            for pf in spec["fields"]:
-                if pf["source-id"] == tgt["id"] and pf["transform"] != "void":
-                    raise ValueError(
-                        f"cannot drop {name!r}: partition spec "
-                        f"{spec['spec-id']} field {pf['name']!r} sources it; "
-                        "remove the partition field first"
-                    )
-        return [f for f in fields if f["name"] != name], meta["last-column-id"]
-
-    return _evolve(tbl, mutate)
-
-
-def move_column(
-    tbl: IcebergTable,
-    name: str,
-    before: str | None = None,
-    after: str | None = None,
-    first: bool = False,
-) -> int:
-    """Spec column reorder (``ALTER TABLE ... ALTER COLUMN c FIRST /
-    AFTER x``): field order in the schema changes; ids and data files
-    don't.  Reads project in the new order; old files resolve by id."""
-    if sum((before is not None, after is not None, first)) != 1:
-        raise ValueError("pass exactly one of before=, after=, first=True")
-
-    def mutate(fields, meta):
-        tgt = next((f for f in fields if f["name"] == name), None)
-        if tgt is None:
-            raise ValueError(f"no column {name!r}")
-        rest = [f for f in fields if f["name"] != name]
-        if first:
-            idx = 0
-        else:
-            anchor = before or after
-            pos = next(
-                (i for i, f in enumerate(rest) if f["name"] == anchor), None
+        name_to_id = {f["name"]: f["id"] for f in schema["fields"]}
+        ice_fields = []
+        for f in fields:
+            col = f["column"]
+            if col not in name_to_id:
+                raise ValueError(f"no column {col!r}")
+            desc = bool(f.get("desc", False))
+            nf = f.get("nulls_first")
+            if nf is None:
+                nf = not desc  # spec default: NULLS FIRST asc, LAST desc
+            ice_fields.append(
+                {
+                    "transform": "identity",
+                    "source-id": name_to_id[col],
+                    "direction": "desc" if desc else "asc",
+                    "null-order": "nulls-first" if nf else "nulls-last",
+                }
             )
-            if pos is None:
-                raise ValueError(f"no anchor column {anchor!r}")
-            idx = pos if before else pos + 1
-        return rest[:idx] + [tgt] + rest[idx:], meta["last-column-id"]
+        orders = list(meta.get("sort-orders", []))
+        # Idempotent DDL: an identical existing order just becomes default.
+        for o in orders:
+            if o["fields"] == ice_fields:
+                new_meta = dict(meta)
+                new_meta["default-sort-order-id"] = o["order-id"]
+                self._commit_metadata(new_meta, expected_version=version)
+                return o["order-id"]
+        new_id = max((o["order-id"] for o in orders), default=0) + 1
+        new_meta = dict(meta)
+        new_meta["sort-orders"] = orders + [
+            {"order-id": new_id, "fields": ice_fields}
+        ]
+        new_meta["default-sort-order-id"] = new_id
+        self._commit_metadata(new_meta, expected_version=version)
+        return new_id
 
-    return _evolve(tbl, mutate)
+    def default_sort_order(self) -> tuple[int, list[dict]]:
+        """(order_id, writer-shaped fields) of the table's default sort
+        order — ``(0, [])`` means unsorted."""
+        meta = self.metadata()
+        oid = meta.get("default-sort-order-id", 0)
+        order = next(
+            (o for o in meta.get("sort-orders", []) if o["order-id"] == oid),
+            None,
+        )
+        if not order or not order["fields"]:
+            return 0, []
+        schema = next(
+            s for s in meta["schemas"] if s["schema-id"] == meta["current-schema-id"]
+        )
+        id_to_name = {f["id"]: f["name"] for f in schema["fields"]}
+        out = []
+        for f in order["fields"]:
+            if f.get("transform", "identity") != "identity":
+                return 0, []  # transform orders not expressible yet
+            out.append(
+                {
+                    "column": id_to_name[f["source-id"]],
+                    "desc": f["direction"] == "desc",
+                    "nulls_first": f["null-order"] == "nulls-first",
+                }
+            )
+        return oid, out
+
+    def drop_column(self, name: str) -> int:
+        """Spec drop-column: the field leaves the current schema; its id is
+        RETIRED (``last-column-id`` never decreases, so a later re-add of
+        the same name gets a fresh id and old files' data for the dropped
+        column can never resurrect).  Metadata-only — no file rewrite.
+
+        Rejected while any partition spec sources the column (Iceberg
+        requires the partition field be removed first) — dropping it would
+        orphan the spec's source-id.
+        """
+
+        def mutate(fields, meta):
+            tgt = next((f for f in fields if f["name"] == name), None)
+            if tgt is None:
+                raise ValueError(f"no column {name!r}")
+            for spec in meta["partition-specs"]:
+                for pf in spec["fields"]:
+                    if pf["source-id"] == tgt["id"] and pf["transform"] != "void":
+                        raise ValueError(
+                            f"cannot drop {name!r}: partition spec "
+                            f"{spec['spec-id']} field {pf['name']!r} sources it; "
+                            "remove the partition field first"
+                        )
+            return [f for f in fields if f["name"] != name], meta["last-column-id"]
+
+        return self._evolve_schema(mutate)
+
+    def move_column(
+        self,
+        name: str,
+        before: str | None = None,
+        after: str | None = None,
+        first: bool = False,
+    ) -> int:
+        """Spec column reorder (``ALTER TABLE ... ALTER COLUMN c FIRST /
+        AFTER x``): field order in the schema changes; ids and data files
+        don't.  Reads project in the new order; old files resolve by id."""
+        if sum((before is not None, after is not None, first)) != 1:
+            raise ValueError("pass exactly one of before=, after=, first=True")
+
+        def mutate(fields, meta):
+            tgt = next((f for f in fields if f["name"] == name), None)
+            if tgt is None:
+                raise ValueError(f"no column {name!r}")
+            rest = [f for f in fields if f["name"] != name]
+            if first:
+                idx = 0
+            else:
+                anchor = before or after
+                pos = next(
+                    (i for i, f in enumerate(rest) if f["name"] == anchor), None
+                )
+                if pos is None:
+                    raise ValueError(f"no anchor column {anchor!r}")
+                idx = pos if before else pos + 1
+            return rest[:idx] + [tgt] + rest[idx:], meta["last-column-id"]
+
+        return self._evolve_schema(mutate)
+
+    def make_optional(self, name: str) -> int:
+        """Spec required→optional relaxation.  The inverse (optional→
+        required) is spec-illegal — existing files may hold nulls — and is
+        rejected."""
+
+        def mutate(fields, meta):
+            tgt = next((f for f in fields if f["name"] == name), None)
+            if tgt is None:
+                raise ValueError(f"no column {name!r}")
+            tgt["required"] = False
+            return fields, meta["last-column-id"]
+
+        return self._evolve_schema(mutate)
 
 
-def make_optional(tbl: IcebergTable, name: str) -> int:
-    """Spec required→optional relaxation.  The inverse (optional→
-    required) is spec-illegal — existing files may hold nulls — and is
-    rejected."""
-
-    def mutate(fields, meta):
-        tgt = next((f for f in fields if f["name"] == name), None)
-        if tgt is None:
-            raise ValueError(f"no column {name!r}")
-        tgt["required"] = False
-        return fields, meta["last-column-id"]
-
-    return _evolve(tbl, mutate)
+def _snapshot_schema_id(meta: dict, snapshot_id: int | None) -> int:
+    """The schema id a snapshot was committed under (spec: every
+    snapshot records its ``schema-id``).  Current schema for None and
+    for snapshots written without the field."""
+    if snapshot_id is not None:
+        for s in meta["snapshots"]:
+            if s["snapshot-id"] == snapshot_id:
+                sid = s.get("schema-id")
+                if sid is not None:
+                    return sid
+                break
+    return meta["current-schema-id"]
 
 
 def schema_activation_boundaries(meta: dict) -> dict[int, int] | None:
@@ -2139,21 +2155,6 @@ def history_from_schemas(schemas: list[dict], current_id: int) -> dict:
     }
 
 
-def schema_history(tbl: IcebergTable, snapshot_id: int | None = None) -> dict | None:
-    """Schema history for the spec flavor: every schema version's
-    (field_id, name, DataType, nullable) rows.  None when the table has
-    a single schema (nothing to resolve) or predates activation
-    tracking.  With ``snapshot_id``, the history's current schema is
-    the one that snapshot was committed under (time-travel reads
-    project against it)."""
-    meta = tbl.metadata()
-    if len(meta["schemas"]) <= 1:
-        return None
-    if schema_activation_boundaries(meta) is None:
-        return None
-    return history_from_schemas(meta["schemas"], tbl.schema_id_at(snapshot_id))
-
-
 def derive_name_mapping(
     schemas: list[dict], current_id: int
 ) -> dict[str, list[str]] | None:
@@ -2174,24 +2175,3 @@ def derive_name_mapping(
         if prior:
             mapping[f["name"]] = prior
     return mapping or None
-
-
-def name_mapping_from_history(
-    tbl: IcebergTable, snapshot_id: int | None = None
-) -> dict[str, list[str]] | None:
-    """Scan name-mapping for the spec flavor (see derive_name_mapping)."""
-    meta = tbl.metadata()
-    return derive_name_mapping(meta["schemas"], tbl.schema_id_at(snapshot_id))
-
-
-# bind as methods for a fluent table API
-IcebergTable.add_column = add_column
-IcebergTable.rename_column = rename_column
-IcebergTable.promote_column = promote_column
-IcebergTable.drop_column = drop_column
-IcebergTable.move_column = move_column
-IcebergTable.make_optional = make_optional
-IcebergTable.update_sort_order = update_sort_order
-IcebergTable.default_sort_order = default_sort_order
-IcebergTable.name_mapping = name_mapping_from_history
-IcebergTable.schema_history = schema_history

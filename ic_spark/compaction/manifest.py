@@ -22,9 +22,13 @@ import os
 import tempfile
 import time
 from dataclasses import dataclass
+from typing import TYPE_CHECKING
 
 from ic_spark.compaction.epochs import epoch_days, epoch_micros
 from ic_spark.compaction.request import FileContent, FileScanTask
+
+if TYPE_CHECKING:
+    from pyspark.sql import types as T
 
 
 class CommitConflictError(RuntimeError):
@@ -340,7 +344,7 @@ def _stat_literal_pair(sv, lit, ctype: str | None = None):
     inverts ordering across the separator byte (' ' < 'T'), wrongly
     pruning e.g. ``ts > '...T00:00:00'`` against a max of
     ``'... 23:00:00'`` (same class as the identity-partition spelling
-    bug, r9).  ``ctype`` is the DECLARED column domain when the caller
+    bug).  ``ctype`` is the DECLARED column domain when the caller
     knows it ("string" | "temporal" | "numeric"): declared types
     compare at full typed fidelity; untyped string pairs go through
     the agreement-guarded :func:`_str_pair` (a digit/ISO-looking
@@ -467,6 +471,14 @@ def _file_may_match(
     return True
 
 
+def _with_statistics_entry(entries: list[dict], entry: dict) -> list[dict]:
+    """``entries`` with ``entry`` registered: one statistics entry per
+    snapshot (Iceberg REST set-statistics semantics), so a re-analyze at
+    the same snapshot replaces the old entry instead of stacking."""
+    sid = entry.get("snapshot-id")
+    return [e for e in entries if e.get("snapshot-id") != sid] + [entry]
+
+
 @dataclass
 class Snapshot:
     snapshot_id: int
@@ -537,8 +549,10 @@ class ManifestTable:
         self._store(state)
         return 0
 
-    def schema(self):
-        """Current registered schema as a StructType, or None."""
+    def schema(self, snapshot_id: int | None = None) -> T.StructType | None:
+        """Current registered schema as a StructType, or None.  This
+        flavor records no per-snapshot schema, so ``snapshot_id`` is
+        ignored (time travel reads under the current schema)."""
         from ic_spark.compaction.iceberg_meta import iceberg_to_spark_schema
 
         state = self._load()
@@ -551,7 +565,11 @@ class ManifestTable:
         )
         return iceberg_to_spark_schema(cur)
 
-    def name_mapping(self):
+    def name_mapping(
+        self, snapshot_id: int | None = None
+    ) -> dict[str, list[str]] | None:
+        """Scan name-mapping of the current schema (``snapshot_id`` is
+        ignored, as in :meth:`schema`)."""
         from ic_spark.compaction.iceberg_meta import derive_name_mapping
 
         state = self._load()
@@ -559,7 +577,9 @@ class ManifestTable:
             return None
         return derive_name_mapping(state["schemas"], state["current_schema_id"])
 
-    def schema_history(self) -> dict | None:
+    def schema_history(self, snapshot_id: int | None = None) -> dict | None:
+        """Planner schema history, None for a single schema
+        (``snapshot_id`` is ignored, as in :meth:`schema`)."""
         from ic_spark.compaction.iceberg_meta import history_from_schemas
 
         state = self._load()
@@ -569,11 +589,9 @@ class ManifestTable:
             state["schemas"], state["current_schema_id"]
         )
 
-    def _max_live_seq(self) -> int:
-        snap = self.current_snapshot()
-        if snap is None:
-            return 0
-        return max((f.get("sequence_number", 0) for f in snap.files), default=0)
+    def default_sort_order(self) -> tuple[int, list[dict]]:
+        """Always ``(0, [])``: this flavor has no sort orders."""
+        return 0, []
 
     def _schema_boundaries(self) -> dict[int, int] | None:
         state = self._load()
@@ -611,7 +629,7 @@ class ManifestTable:
         state["current_schema_id"] = new_id
         state["last_column_id"] = last_col
         act = dict(state.get("schema_activation", {}))
-        act[str(new_id)] = self._max_live_seq()
+        act[str(new_id)] = self.next_sequence_number() - 1
         state["schema_activation"] = act
         self._store(state)
         return new_id
@@ -794,7 +812,7 @@ class ManifestTable:
                 # fields (Iceberg's own naming convention) are allowed:
                 # the fanout writer routes their dirs through a prefixed
                 # derived column so the source stays in the pages
-                # (orchestrator.IDENTITY_DIR_PREFIX, r9).
+                # (orchestrator.IDENTITY_DIR_PREFIX).
                 raise ValueError(
                     f"spec field name must differ from source column: {f}"
                 )
@@ -854,6 +872,63 @@ class ManifestTable:
         if sid is None:
             return None
         return self.snapshot_at(sid)
+
+    def current_snapshot_id(self) -> int | None:
+        return self._load()["current_snapshot_id"]
+
+    def next_sequence_number(self, branch: str | None = None) -> int:
+        """The sequence number a commit on ``branch`` (main by default)
+        records: one past the highest live sequence number at that head.
+        Taken from the branch head, not main, so successive branch
+        appends keep the strictly increasing per-commit numbers the
+        equality-delete ``<`` guard relies on after a fast-forward."""
+        head = self._load().get("refs", {}).get(branch) if branch else None
+        snap = self.snapshot_at(head) if head is not None else self.current_snapshot()
+        files = snap.files if snap else []
+        return max((f.get("sequence_number", 0) for f in files), default=0) + 1
+
+    def ancestor_ids(self, snapshot_id: int) -> list[int]:
+        """``snapshot_id`` and its ancestors, oldest first.  Recorded
+        parent pointers are walked where present, and plain list order
+        is used for mainline commits written without one.  Staged (WAP)
+        snapshots and unmerged branch commits are not ancestors."""
+        state = self._load()
+        if not any(
+            s["snapshot_id"] == snapshot_id and not s.get("staged")
+            for s in state["snapshots"]
+        ):
+            raise ValueError(f"snapshot {snapshot_id} not found")
+        return self._chain_to(state, snapshot_id)
+
+    def main_log(self) -> list[tuple[int, str | None]]:
+        """(snapshot id, operation) of every commit on main's timeline,
+        oldest first: the ancestors of the current snapshot."""
+        state = self._load()
+        ops = {s["snapshot_id"]: s.get("operation") for s in state["snapshots"]}
+        return [
+            (i, ops[i]) for i in self._chain_to(state, state.get("current_snapshot_id"))
+        ]
+
+    @staticmethod
+    def _chain_to(state: dict, node: int | None) -> list[int]:
+        """Ancestry of ``node`` in ``state``, oldest first: walk parent
+        pointers back (branch segments and fast-forwards record them),
+        then prepend the parentless mainline commits in list order."""
+        live = [s for s in state["snapshots"] if not s.get("staged")]
+        by_id = {s["snapshot_id"]: s for s in live}
+        tail: list[int] = []
+        while node in by_id and "parent_snapshot_id" in by_id[node]:
+            tail.append(node)
+            node = by_id[node]["parent_snapshot_id"]
+        head: list[int] = []
+        if node in by_id:
+            order = [s["snapshot_id"] for s in live]
+            head = [
+                i
+                for i in order[: order.index(node) + 1]
+                if "parent_snapshot_id" not in by_id[i]
+            ]
+        return head + list(reversed(tail))
 
     def scan_tasks(
         self,
@@ -1332,6 +1407,21 @@ class ManifestTable:
 
     def refs(self) -> dict[str, int]:
         return dict(self._load().get("refs", {}))
+
+    # -- statistics files ----------------------------------------------
+
+    def statistics(self) -> list[dict]:
+        """Registered statistics entries, oldest first."""
+        return self._load().get("statistics", [])
+
+    def register_statistics(self, entry: dict) -> None:
+        """Register a statistics entry; an entry for the same snapshot is
+        replaced, not stacked."""
+        state = self._load()
+        state["statistics"] = _with_statistics_entry(
+            state.get("statistics", []), entry
+        )
+        self._store(state)
 
     def resolve_ref(self, name: str) -> int:
         refs = self.refs()

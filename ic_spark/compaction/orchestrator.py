@@ -41,15 +41,12 @@ def default_spec_fields(table) -> tuple[int, list | None]:
     spec, else (spec_id, None) for unpartitioned tables.
 
     Identity fields whose name equals the source column are renamed
-    with :data:`IDENTITY_DIR_PREFIX` for the fanout writer — the old
-    behavior returned None for ANY such spec, so compaction and every
-    COW row op silently rewrote identity-partitioned tables as
-    unpartitioned files with null manifest partition values, destroying
-    the declared layout and all partition pruning (r9 review find,
-    confirmed by execution).
+    with :data:`IDENTITY_DIR_PREFIX` for the fanout writer.  Returning
+    None for such a spec would make compaction and every COW row op
+    rewrite identity-partitioned tables as unpartitioned files with null
+    manifest partition values, destroying the declared layout and all
+    partition pruning.
     """
-    if not hasattr(table, "default_spec_id"):
-        return 0, None
     spec_id = table.default_spec_id()
     fields = table.partition_spec(spec_id)
     if not fields:
@@ -104,17 +101,11 @@ class Compaction:
         current schema, which is exactly Iceberg compaction behavior.
         """
         if schema is None:
-            if not hasattr(table, "schema"):
-                raise ValueError("schema required for tables without schema metadata")
             schema = table.schema()
             if schema is None:
                 raise ValueError("schema required for tables without schema metadata")
-        name_mapping = (
-            table.name_mapping() if hasattr(table, "name_mapping") else None
-        )
-        schema_history = (
-            table.schema_history() if hasattr(table, "schema_history") else None
-        )
+        name_mapping = table.name_mapping()
+        schema_history = table.schema_history()
         # Partition-spec evolution: rewrite under the table's CURRENT
         # default spec — files written under older specs (or before any
         # partitioning) come out re-laid-out in the new spec, which is
@@ -126,11 +117,7 @@ class Compaction:
         # ALTER TABLE ... WRITE ORDERED BY: the table's default sort
         # order drives the rewrite's per-file local sort (selective
         # min/max footer stats), matching Iceberg compaction behavior.
-        sort_order_id, sort_order = (
-            table.default_sort_order()
-            if hasattr(table, "default_sort_order")
-            else (0, [])
-        )
+        sort_order_id, sort_order = table.default_sort_order()
         data, pos, eq = table.scan_tasks()
         if not data:
             return RewriteFilesResponse()
@@ -154,7 +141,7 @@ class Compaction:
             # The table's own FileIO (object-store tables) rides into
             # the rewrite so the avro/orc writers and DV reads route
             # through the same connector the metadata plane uses.
-            file_io=getattr(table, "file_io", None),
+            file_io=table.file_io,
         )
         # Iceberg v3 row lineage: compaction must PRESERVE every
         # surviving row's _row_id / _last_updated_sequence_number —
@@ -162,7 +149,7 @@ class Compaction:
         # committed entries keep a null first_row_id (spec rule).
         lineage = (
             {t.data_file_path: t.first_row_id for t in data}
-            if getattr(table, "row_lineage", False)
+            if table.row_lineage
             else None
         )
         response = rewrite_files(self.spark, request, lineage=lineage)
@@ -401,8 +388,8 @@ class Compaction:
             .dropDuplicates(["file_path", "pos"])
             # pin once: the count below AND commit_deletion_vectors'
             # groupBy/applyInPandas both consume this — without the
-            # checkpoint the scan + semi-join ran end-to-end twice
-            # (same pattern as convert_equality_deletes; r9 review find)
+            # checkpoint the scan + semi-join would run end-to-end twice
+            # (same pattern as convert_equality_deletes)
               # stable_checkpoint: reliable when a checkpoint dir is set
             .transform(stable_checkpoint)
         )
@@ -578,7 +565,7 @@ class Compaction:
         # rows' ids (same obligation as full_compact) — materialize the
         # lineage columns and commit materialized entries so
         # _assign_row_ids claims nothing.
-        lineage_on = getattr(table, "row_lineage", False)
+        lineage_on = table.row_lineage
         for group in groups:
             out_dir = os.path.join(table.root, f"data-{uuid.uuid4().hex[:12]}")
             response = rewrite_files(
@@ -591,16 +578,8 @@ class Compaction:
                     dir_path=out_dir,
                     target_partitions=target_partitions,
                     data_file_format=data_file_format,
-                    name_mapping=(
-                        table.name_mapping()
-                        if hasattr(table, "name_mapping")
-                        else None
-                    ),
-                    schema_history=(
-                        table.schema_history()
-                        if hasattr(table, "schema_history")
-                        else None
-                    ),
+                    name_mapping=table.name_mapping(),
+                    schema_history=table.schema_history(),
                 ),
                 lineage=(
                     {t.data_file_path: t.first_row_id for t in group}

@@ -29,9 +29,7 @@ def rewrite_data_files(spark, table, strategy: str = "binpack", **kw):
     ``full`` (whole-table rewrite with delete application)."""
     c = _compaction(spark)
     schema = kw.get("schema")
-    if schema is None and (
-        not hasattr(table, "schema") or table.schema() is None
-    ):
+    if schema is None and table.schema() is None:
         # Tables without schema metadata: derive it from the current
         # read (schema-tracking tables resolve their own).
         from ic_spark.compaction.deletes import read_table
@@ -92,31 +90,20 @@ def fast_forward(spark, table, branch: str, force: bool = False, **kw):
 def rollback_to_snapshot(spark, table, snapshot_id: int, **kw):
     # Iceberg's procedure returns the pre-rollback id so a runbook can
     # un-rollback; record it before the pointer moves.
-    if hasattr(table, "current_snapshot"):
-        cur = table.current_snapshot()
-        previous = cur.snapshot_id if cur else None
-    else:
-        previous = table.current_snapshot_id()
+    previous = table.current_snapshot_id()
     sid = table.rollback_to_snapshot(snapshot_id)
     return {"previous_snapshot_id": previous, "current_snapshot_id": sid}
 
 
 def ancestors_of(spark, table, snapshot_id: int | None = None, **kw):
-    """Snapshot ancestry via recorded parent pointers (shared with the
-    changelog's main-timeline walker): staged (WAP) snapshots and
-    unmerged branch commits are NOT ancestors of main commits and are
-    excluded (r9 review find — list-order slicing reported them)."""
-    from ic_spark.compaction.changelog import main_ancestor_ids
-
+    """Snapshot ancestry via recorded parent pointers: staged (WAP)
+    snapshots and unmerged branch commits are NOT ancestors of main
+    commits and are excluded, which list-order slicing would miss."""
     if snapshot_id is None:
-        if hasattr(table, "current_snapshot"):
-            cur = table.current_snapshot()
-            snapshot_id = cur.snapshot_id if cur else None
-        else:
-            snapshot_id = table.current_snapshot_id()
+        snapshot_id = table.current_snapshot_id()
     if snapshot_id is None:
         return {"snapshot_ids": []}
-    return {"snapshot_ids": main_ancestor_ids(table, snapshot_id)}
+    return {"snapshot_ids": table.ancestor_ids(snapshot_id)}
 
 
 def analyze_table(spark, table, columns=None, **kw):
@@ -139,10 +126,10 @@ def create_changelog_view(
 
     if from_snapshot_id is None:
         raise ValueError("create_changelog_view needs from_snapshot_id")
-    # Forward the full option surface — **kw silently swallowed
-    # compute_updates / with_lineage, handing back a plain
-    # INSERT/DELETE changelog while the caller believed
-    # UPDATE_BEFORE/UPDATE_AFTER pairing ran (r9 review find).
+    # Forward the full option surface and reject the rest: a swallowed
+    # compute_updates / with_lineage would hand back a plain
+    # INSERT/DELETE changelog while the caller believes
+    # UPDATE_BEFORE/UPDATE_AFTER pairing ran.
     df = register_changelog_view(
         spark,
         table,

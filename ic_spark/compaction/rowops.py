@@ -71,32 +71,22 @@ def predicate_column(where: list[tuple]):
 
 
 def _infer_schema(spark: SparkSession, table: ManifestTable) -> StructType:
-    if hasattr(table, "schema"):
-        s = table.schema()
-        if s is not None:
-            return s
+    s = table.schema()
+    if s is not None:
+        return s
     data, _, _ = table.scan_tasks()
     if not data:
         raise ValueError("empty table and no schema given")
     from ic_spark.compaction.deletes import infer_read_schema
 
     inferred = infer_read_schema(spark, data)
-    if getattr(table, "row_lineage", False):
+    if table.row_lineage:
         # materialized lineage columns in compacted footers are
         # metadata, not user columns (same rule as read_table)
         from ic_spark.compaction.planner import strip_lineage_fields
 
         inferred = strip_lineage_fields(inferred)
     return inferred
-
-
-def _pinned_snapshot_id(table):
-    """Current snapshot id across both table flavors (the optimistic-
-    concurrency pin every row op passes to commit_rewrite)."""
-    if hasattr(table, "current_snapshot_id"):
-        return table.current_snapshot_id()
-    snap = table.current_snapshot()
-    return snap.snapshot_id if snap else None
 
 
 def _next_seq(data, eq) -> int:
@@ -134,12 +124,8 @@ def _rewrite_and_commit(
     # Evolved spec tables: rewrite resolves old file schemas through the
     # history name-mapping, exactly like full_compact (renamed columns
     # in files written before the rename).
-    name_mapping = (
-        table.name_mapping() if hasattr(table, "name_mapping") else None
-    )
-    schema_history = (
-        table.schema_history() if hasattr(table, "schema_history") else None
-    )
+    name_mapping = table.name_mapping()
+    schema_history = table.schema_history()
     new_seq = _next_seq(candidates, eq)
     out_dir = os.path.join(table.root, f"data-{uuid.uuid4().hex[:12]}")
     # Row-lineage tables: the MoR read carries _row_id /
@@ -152,7 +138,7 @@ def _rewrite_and_commit(
     # monotonic, not dense).
     lineage = (
         {t.data_file_path: t.first_row_id for t in candidates}
-        if getattr(table, "row_lineage", False)
+        if table.row_lineage
         else None
     )
     response = rewrite_files(
@@ -217,7 +203,7 @@ def delete_where(
     candidate file are rewritten without the matching rows."""
     if schema is None:
         schema = _infer_schema(spark, table)
-    expected = _pinned_snapshot_id(table)
+    expected = table.current_snapshot_id()
     _, pos, eq = table.scan_tasks()
     candidates, _, _ = table.scan_tasks(data_filter=where)
     if not candidates:
@@ -255,7 +241,7 @@ def update_where(
     unknown = set(assignments) - field_names
     if unknown:
         raise ValueError(f"assignments for unknown columns: {sorted(unknown)}")
-    expected = _pinned_snapshot_id(table)
+    expected = table.current_snapshot_id()
     _, pos, eq = table.scan_tasks()
     candidates, _, _ = table.scan_tasks(data_filter=where)
     if not candidates:
@@ -283,9 +269,9 @@ def update_where(
             )
         # ONE select for every assignment: SQL UPDATE evaluates the
         # predicate and every RHS against the OLD row.  Sequential
-        # withColumn re-resolved both against already-mutated columns
-        # (r9 review find: {"a": "2", "b": "3"} with WHERE a=1 never
-        # set b, and {"a": "a+1", "b": "a"} wrote b = old_a + 1).
+        # withColumn would re-resolve both against already-mutated
+        # columns ({"a": "2", "b": "3"} with WHERE a=1 would never set
+        # b, and {"a": "a+1", "b": "a"} would write b = old_a + 1).
         cols = []
         for f in schema.fields:
             if f.name in assignments:
@@ -362,7 +348,7 @@ def merge_into(
                 f"full-row merge needs every table column in source; missing {lacking}"
             )
 
-    expected = _pinned_snapshot_id(table)
+    expected = table.current_snapshot_id()
     all_data, pos, eq = table.scan_tasks()
     if not all_data:
         raise ValueError("table has no data files")
@@ -372,7 +358,7 @@ def merge_into(
         # matched target row out once per duplicate (and insert
         # unmatched duplicates multiply) — Spark/Iceberg raise
         # MERGE_CARDINALITY_VIOLATION; silently growing the table is
-        # wrong data (r9 review find).  The delete-only path anti-joins
+        # wrong data.  The delete-only path anti-joins
         # and is insensitive to duplicates.
         dup = (
             source.groupBy(*key_cols)
@@ -576,9 +562,9 @@ def merge_into(
         # rewrite with the SMALLEST live file as a carrier (its rows
         # pass through the MoR read unchanged; the source unions on as
         # inserts) so the insert honors partition-spec fanout, lineage
-        # id assignment, footer stats, and remote-FS routing — the old
-        # raw os.listdir + unpartitioned write bypassed all four and
-        # crashed outright on object-store roots (r9 review find).
+        # id assignment, footer stats, and remote-FS routing — a raw
+        # os.listdir + unpartitioned write would bypass all four and
+        # crash outright on object-store roots.
         candidates = [min(all_data, key=lambda t: t.file_size_in_bytes)]
 
     return _rewrite_and_commit(

@@ -36,51 +36,6 @@ from ic_spark.sources.puffin import PuffinBlob, read_puffin, write_puffin
 HLL_BLOB_TYPE = "apache-datasketches-hll-v1"
 
 
-def _current_snapshot_id(table) -> int:
-    if hasattr(table, "current_snapshot"):
-        snap = table.current_snapshot()
-        if snap is None:
-            raise ValueError("table has no snapshots")
-        return snap.snapshot_id
-    sid = table.current_snapshot_id()
-    if sid is None:
-        raise ValueError("table has no snapshots")
-    return sid
-
-
-def _register(table, entry: dict) -> None:
-    """Register a statistics entry in table metadata (both flavors).
-
-    One entry per snapshot (Iceberg REST set-statistics semantics): a
-    re-analyze at the same snapshot replaces, never stacks."""
-
-    def merged(entries: list[dict]) -> list[dict]:
-        keep = [
-            e for e in entries if e.get("snapshot-id") != entry.get("snapshot-id")
-        ]
-        return keep + [entry]
-
-    if hasattr(table, "_load"):  # JSON ManifestTable
-        state = table._load()
-        state["statistics"] = merged(state.get("statistics", []))
-        table._store(state)
-    else:  # spec IcebergTable
-        # version FIRST, then that version's metadata — the reverse
-        # order paired stale metadata with a fresh expected_version,
-        # letting this register erase a concurrent commit (r9 find).
-        version = table.version()
-        meta = dict(table.metadata(version))
-        meta["statistics"] = merged(meta.get("statistics", []))
-        table._commit_metadata(meta, expected_version=version)
-
-
-def table_statistics(table) -> list[dict]:
-    """All registered statistics entries, oldest first."""
-    if hasattr(table, "_load"):
-        return table._load().get("statistics", [])
-    return table.metadata().get("statistics", [])
-
-
 def _sketch_df(spark: SparkSession, df, columns: list[str]):
     aggs = [F.count(F.lit(1)).alias("__row_count")]
     for c in columns:
@@ -102,7 +57,7 @@ def _write_stats_file(
                 properties={"field": c, "null_count": str(row[f"n_{c}"] or 0)},
             )
         )
-    # Through the table's metadata seam (r11): object-store roots get
+    # Through the table's metadata seam: object-store roots get
     # connector IO; local roots keep the plain write byte-for-byte.
     mfs = table_mfs(table)
     path = os.path.join(table.root, f"stats-{uuid.uuid4().hex[:12]}", "stats.puffin")
@@ -143,13 +98,13 @@ def analyze_table(
 
     df = read_table(spark, table)
     columns = columns or df.columns
-    snapshot_id = _current_snapshot_id(table)
+    snapshot_id = table.current_snapshot_id()
     row = _sketch_df(spark, df, columns)
     # all-null columns yield a null sketch: nothing to register for them
     columns = [c for c in columns if row[f"s_{c}"] is not None]
     sketches = {c: bytes(row[f"s_{c}"]) for c in columns}
     entry = _write_stats_file(table, columns, row, sketches, snapshot_id)
-    _register(table, entry)
+    table.register_statistics(entry)
     return entry
 
 
@@ -163,7 +118,7 @@ def analyze_incremental(
     (sketch union cannot subtract rows)."""
     from ic_spark.compaction.deletes import read_incremental
 
-    stats = table_statistics(table)
+    stats = table.statistics()
     if not stats:
         return analyze_table(spark, table, columns)
     last = stats[-1]
@@ -189,11 +144,11 @@ def analyze_incremental(
     if missing:
         return analyze_table(spark, table, columns)
 
-    snapshot_id = _current_snapshot_id(table)
+    snapshot_id = table.current_snapshot_id()
     if delta.isEmpty():
         entry = dict(last)
         entry["snapshot-id"] = snapshot_id
-        _register(table, entry)
+        table.register_statistics(entry)
         return entry
     row = _sketch_df(spark, delta, columns)
     # merge delta sketches with stored bytes via ONE local union job
@@ -217,14 +172,14 @@ def analyze_incremental(
         prior_nulls = int(prior[c]["properties"].get("null_count", "0"))
         combined_row[f"n_{c}"] = prior_nulls + (row[f"n_{c}"] or 0)
     entry = _write_stats_file(table, columns, combined_row, merged, snapshot_id)
-    _register(table, entry)
+    table.register_statistics(entry)
     return entry
 
 
 def column_ndv_estimates(spark: SparkSession, table) -> dict[str, float]:
     """NDV estimate per column from the LATEST registered statistics
     file (``hll_sketch_estimate`` over the stored sketch bytes)."""
-    stats = table_statistics(table)
+    stats = table.statistics()
     if not stats:
         raise ValueError("no statistics registered; run analyze_table")
     last = stats[-1]

@@ -37,8 +37,10 @@ from ic_spark.functions.text import (
 )
 
 
-# _spread decision memo: (session id, analyzed-plan semanticHash,
-# target) -> bool (repartition or not).  The ``df.rdd`` partition-count
+# _spread decision memo: (application id, analyzed-plan semanticHash,
+# target) -> bool (repartition or not).  The application id, unlike
+# id(session), is never reused by a later session, so an entry cannot
+# outlive the application that made it.  The ``df.rdd`` partition-count
 # probe runs the full optimizer + physical planning + file-split
 # computation DRIVER-SIDE — measured 190-700 ms per call at sf0.1,
 # paid at query-BUILD time inside every timed rep — while the decision
@@ -61,11 +63,12 @@ def _spread(df: DataFrame) -> DataFrame:
     scale, file splits already provide parallelism and the shuffle
     would be pure cost).
     """
-    target = df.sparkSession.sparkContext.defaultParallelism
-    pk = _plan_key(df)
+    sc = df.sparkSession.sparkContext
+    target = sc.defaultParallelism
+    pk = plan_key(df)
     key = None
     if pk is not None:
-        key = (id(df.sparkSession), pk, target)
+        key = (sc.applicationId, pk, target)
         hit = _SPREAD_MEMO.get(key)
         if hit is not None:
             return df.repartition(target) if hit else df
@@ -86,7 +89,8 @@ def _content_key(c: Column, normalize: bool) -> Column:
     return c
 
 
-# Probe memo: (keys-plan semanticHash, params) -> collected hot rows.
+# Probe memo: (application id, (keys-plan semanticHash, params)) ->
+# collected hot rows.
 # A corpus's hot-key profile is a property of the DATA; within one
 # session, identical logical plans re-probe for free (bench reps, the
 # candidates+verify double-consumption in dedup pipelines).  Entries
@@ -96,10 +100,13 @@ _PROBE_MEMO: dict = {}
 _PROBE_MEMO_MAX = 256
 
 
-def _plan_key(df: DataFrame):
+def plan_key(df: DataFrame) -> int | None:
     """Semantic hash of a DataFrame's analyzed plan — stable across
     identical rebuilds of the same query, distinct across different
-    sources/filters.  None (no memoization) if the JVM call fails."""
+    sources/filters.  None (no memoization) if the JVM call fails.
+    The memos assume static sources: a file rewritten in place under
+    an unchanged plan keeps its key, and since every memo is advisory
+    a stale entry can only pick a result-identical plan shape."""
     try:
         return df._jdf.queryExecution().analyzed().semanticHash()
     except Exception:
@@ -113,7 +120,7 @@ def _probe_hot_keys(
     salt: str,
     detect_sample: float,
     max_hot_collect: int,
-    memo_key=None,
+    memo_key: tuple | None = None,
 ):
     """Sampled hot-key probe shared by the blocked self-join operators
     (:func:`token_jaccard_pairs`, :func:`minhash_lsh_candidates`).
@@ -165,6 +172,8 @@ def _probe_hot_keys(
             .alias("__k"),
         )
     )
+    if memo_key is not None:
+        memo_key = (sampled_keys.sparkSession.sparkContext.applicationId, memo_key)
     if memo_key is not None and memo_key in _PROBE_MEMO:
         rows = _PROBE_MEMO[memo_key]
     else:
@@ -369,8 +378,8 @@ def token_jaccard_pairs(
         inter = F.size(F.array_intersect(F.col("__ta"), F.col("__tb")))
         union = F.col("__na") + F.col("__nb") - inter
         # Threshold on the RAW ratio (the oracle's semantics — rounding
-        # first admitted pairs up to 5e-7 below t at huge unions, an
-        # asymmetry the r10 review flagged); round only for display.
+        # first would admit pairs up to 5e-7 below t at huge unions);
+        # round only for display.
         raw = inter.cast("double") / union.cast("double")
         jac = F.round(raw, 6)
         return cond & (raw >= threshold), jac
@@ -391,7 +400,7 @@ def token_jaccard_pairs(
         # hot corpus a stale foreign probe.
         memo_key=(
             None
-            if (_pk := _plan_key(df)) is None
+            if (_pk := plan_key(df)) is None
             else ("jaccard", _pk, tuple(block_cols), subblock_target, detect_sample,
                max_hot_collect)
         ),
@@ -415,7 +424,7 @@ def token_jaccard_pairs(
             "id_a", "id_b", jac.alias("jaccard")
         )
     if isinstance(hot_df, str):
-        # "full": in-plan detection (the r5 shape) — the block-size
+        # "full": in-plan detection — the block-size
         # aggregate's hot rows broadcast as the left-join build side,
         # empty-when-uniform.  Taken when salt="always" or the sampled
         # hot set overflowed max_hot_collect.
@@ -769,28 +778,28 @@ def minhash_signatures(
             lambda s: F.pmod(portable_hash60(s), F.lit(2**31).cast("long")),
         )
     else:
-        # Production path (r11): composite token-hash shingles — no
+        # Production path: composite token-hash shingles — no
         # shingle strings built; ~4x cheaper base pass (the signature
         # stage dominated this operator's cold wall).
         from ic_spark.functions.text import hashed_word_shingles_sql
 
         # one parse for the whole shingle+reduce pipeline (the Column
-        # build cost ~250 py4j round trips per call — r12)
+        # build costs ~250 py4j round trips per call)
         hashes = F.expr(
             f"transform({hashed_word_shingles_sql(f'`{content_col}`', shingle_n)},"
             f" h -> pmod(h, CAST({2**31} AS BIGINT)))"
         )
-    # Docs shorter than shingle_n have NO shingles (word_shingles' r9
-    # contract) and therefore no signature: an empty array previously
-    # crashed the Arrow kernel and, on the expression path, produced an
-    # all-NULL signature whose '' band keys made EVERY short doc a
-    # candidate of every other (r10 review find).  MinHash semantics:
+    # Docs shorter than shingle_n have NO shingles (word_shingles'
+    # contract) and therefore no signature: an empty array would crash
+    # the Arrow kernel and, on the expression path, produce an
+    # all-NULL signature whose '' band keys make EVERY short doc a
+    # candidate of every other.  MinHash semantics:
     # no shingles -> no signature -> no pairs.  The predicate is on the
     # TOKEN COUNT, not size(__h): a filter referencing the projected
     # shingle column gets the full shingle expression substituted in at
-    # pushdown and the whole pipeline ran TWICE per row (r11 plan-audit
-    # find — shingles empty iff tokens < n, so the cheap tokenize-only
-    # predicate is equivalent, and it pushes to the scan).
+    # pushdown and the whole pipeline runs TWICE per row (shingles are
+    # empty iff tokens < n, so the cheap tokenize-only predicate is
+    # equivalent, and it pushes to the scan).
     base = (
         _spread(df)
         .where(F.size(tokens(F.col(content_col))) >= shingle_n)
@@ -801,7 +810,7 @@ def minhash_signatures(
     )
     if use_arrow:
         # Same signatures, vectorized kernel — mapInArrow, not a
-        # pandas UDF (r11): (1) MapInArrow is a PLAN BARRIER, so the
+        # pandas UDF: (1) MapInArrow is a PLAN BARRIER, so the
         # optimizer can never inline the kernel into downstream
         # join/generate nodes (alias-inlining a pandas UDF whose child
         # held the let-bound composite-shingle expression hit Spark
@@ -820,10 +829,10 @@ def minhash_signatures(
         # predicate above already excludes zero-shingle rows, and the
         # kernels emit EMPTY signatures (not an error) for any that
         # slip through a filterless caller — a barrier-side filter
-        # cannot be substituted into the scan (the r11 pushdown-
+        # cannot be substituted into the scan (the pushdown-
         # substitution class), so this costs one int compare per row.
         if not portable:
-            # Production path (r13): only split + per-token xxhash64
+            # Production path: only split + per-token xxhash64
             # stay JVM-side; the per-shingle composite hash
             # (xxhash64 over each n-token-hash window) moves into the
             # kernel as a vectorized XXH64 hashLong fold over the flat
@@ -876,8 +885,7 @@ def minhash_signatures(
     # affine map of the ONE smallest base hash — 64 copies of a single
     # minhash, banding all-or-nothing, S-curve gone.
     #
-    # Element type INT, not BIGINT (r13 second half, guide §2.3
-    # "narrower types"): every element is mod 2^31-1, so the cast is
+    # Element type INT, not BIGINT (narrower types): every element is mod 2^31-1, so the cast is
     # lossless (ANSI-safe) and halves the signature frame's bytes —
     # the checkpointed materialization the LSH queries pay at corpus
     # scale (sf10: ~4.6 -> ~2.9 s) and every downstream band slice.
@@ -898,7 +906,7 @@ def _perm_minima(values, starts, A, B, P, block: int | None = 65536):
     hot loop of both signature kernels: ``out[j, s] = min over segment
     s of (A[j]*values + B[j]) mod P``.
 
-    ``block`` cache-blocks the loop (r13 second half): the unblocked
+    ``block`` cache-blocks the loop: the unblocked
     spelling makes ``4 × len(A)`` full passes over the batch's shingle
     buffer (~5 MB at the default 10k-row Arrow batch), which is
     L3-traffic 64 times over — and with 32 workers sharing the LLC the
@@ -916,7 +924,7 @@ def _perm_minima(values, starts, A, B, P, block: int | None = 65536):
     import numpy as np
 
     k = len(starts)
-    # int32 output (r13): every element is mod 2^31-1, and the narrower
+    # int32 output: every element is mod 2^31-1, and the narrower
     # matrix halves the signature bytes the callers serialize to Arrow
     # and the queries checkpoint (assignment from the int64 reduceat
     # rows casts losslessly)
@@ -959,7 +967,7 @@ def _arrow_minhash_batches(a: list[int], b: list[int]):
     (pinned in tests) while the 64 interpreted HOF passes become 64
     vectorized numpy passes.
 
-    r11 (was a pandas UDF): the Arrow ListArray's flat values/offsets
+    mapInArrow, not a pandas UDF: the Arrow ListArray's flat values/offsets
     buffers ARE the concatenated-hash layout the kernel wants — no
     Series-of-ndarray boxing, no per-batch ``np.concatenate``, and the
     MapInArrow plan node is a barrier the optimizer cannot inline the
@@ -993,7 +1001,7 @@ def _arrow_minhash_batches(a: list[int], b: list[int]):
                 # Zero-shingle rows (docs shorter than shingle_n, or
                 # NULL text — unreachable via minhash_signatures'
                 # token-count pre-filter, but a filterless caller must
-                # not crash or corrupt segments, r12): emit an EMPTY
+                # not crash or corrupt segments): emit an EMPTY
                 # signature the post-barrier size(sig) filter drops.
                 # reduceat over the non-empty starts alone is exact:
                 # empty rows contribute no values, so consecutive
@@ -1019,7 +1027,7 @@ def _arrow_minhash_batches(a: list[int], b: list[int]):
             # (perms, rows): one reduceat per permutation keeps peak
             # memory at one block-sized temp, not a (perms x |H|)
             # matrix — the in-place + cache-blocked loop lives in
-            # _perm_minima (r13).
+            # _perm_minima.
             out = _perm_minima(values, starts, A, B, P)
             sig = pa.ListArray.from_arrays(
                 pa.array(
@@ -1035,7 +1043,7 @@ def _arrow_minhash_batches(a: list[int], b: list[int]):
 
 
 def _arrow_minhash_from_token_hashes(a: list[int], b: list[int], n: int):
-    """Signature kernel taking TOKEN hashes (r13): computes the
+    """Signature kernel taking TOKEN hashes: computes the
     composite per-shingle hash — Spark's ``xxhash64(slice(ht, i, n))``,
     i.e. the seed-42 hashLong fold over each n-token-hash window —
     the 31-bit ``pmod`` wrap, and the permutation minima, all
@@ -1073,7 +1081,7 @@ def _arrow_minhash_from_token_hashes(a: list[int], b: list[int], n: int):
 
     def _hash_long(inp, seed, o, t):
         """Vectorized Spark ``XXH64.hashLong(inp, seed)`` (uint64),
-        fully in-place (r13 second half): ``o`` receives the result,
+        fully in-place: ``o`` receives the result,
         ``t`` is scratch — the allocating spelling made ~8 W-sized
         temporaries per fold call (3 calls per batch), pure memory
         traffic; out= kwargs cut it to two reused buffers (measured
@@ -1182,7 +1190,7 @@ def lsh_band_keys(
     diagnostics (e.g. the bench skew probe's enumerated-pair counter)
     use the SAME key construction the candidate join shuffles on.
 
-    Built as ONE ``F.expr`` SQL parse (r12): composing the guard +
+    Built as ONE ``F.expr`` SQL parse: composing the guard +
     explode + per-band slice/hash from Column objects cost ~250 py4j
     round trips — 0.2-1.0 s of pure driver time per call, paid TWICE
     per dedup query (banded frame + the sampled probe) at every scale
@@ -1209,8 +1217,8 @@ def lsh_band_keys(
             f"{rows_per_band}), x -> CAST(x AS STRING)))"
         )
     else:
-        # Production key (r13 second half): hash the band's sig slice
-        # DIRECTLY — the previous spelling built a ~40-char decimal
+        # Production key: hash the band's sig slice
+        # DIRECTLY — a string key would build a ~40-char decimal
         # string per band per doc (16 strings/doc of interpreted
         # concat_ws+CAST) only to hash it.  Key equality semantics are
         # unchanged: two docs share a band key iff their slice values
@@ -1241,11 +1249,11 @@ def minhash_lsh_candidates(
     detect_sample: float = 0.05,
     max_hot_collect: int = 4096,
     big_side: bool = False,
-    probe_memo_key=None,
+    probe_memo_key: int | None = None,
 ) -> DataFrame:
     """Candidate near-duplicate pairs via LSH banding → (id_a, id_b).
 
-    ``probe_memo_key`` (r13): stable identity for the hot-key probe
+    ``probe_memo_key``: stable identity for the hot-key probe
     memo.  The default key is the semanticHash of ``signatures`` —
     which is USELESS when the caller checkpoints the signature frame
     first, because every checkpoint wraps a fresh RDD and hashes
@@ -1298,7 +1306,7 @@ def minhash_lsh_candidates(
     identical (the hash only narrows the shuffled key to 8 bytes), and
     a DuckDB oracle can build the same string key.
 
-    ``big_side=True`` (r12): pin the uniform-path self-join to a
+    ``big_side=True``: pin the uniform-path self-join to a
     SHUFFLED HASH join, mirroring the salted path's existing hint.
     The banded frame sits above a checkpoint + explode, so Catalyst's
     size estimate is unreliable and the planner broadcast an 800k-row
@@ -1335,7 +1343,7 @@ def minhash_lsh_candidates(
             None
             if (_pk := (probe_memo_key
                         if probe_memo_key is not None
-                        else _plan_key(signatures))) is None
+                        else plan_key(signatures))) is None
             else ("lsh", _pk, bands, rows_per_band, portable, bucket_target,
                detect_sample, max_hot_collect)
         ),
@@ -1407,8 +1415,7 @@ def minhash_lsh_candidates(
     # one Exchange — alias-aware partitioning propagation satisfies
     # the join's required clustering, so ReusedExchange computes the
     # band+salt+explode stage ONCE with no persist (and therefore no
-    # session cache-manager entry to leak across calls, unlike the r5
-    # shape).
+    # session cache-manager entry to leak across calls).
     n_spread = banded.sparkSession.sparkContext.defaultParallelism
     spread = exploded.repartition(
         n_spread, F.col("band"), F.col("bhash"), F.col("__c1"), F.col("__c2")

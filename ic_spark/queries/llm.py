@@ -46,8 +46,8 @@ SQL_STOPLIST = "[" + ", ".join(f"'{s}'" for s in EN_STOPWORDS) + "]"
 
 # ONE spelling of the dedup operators' parameters, shared by the
 # production query, the md5-portable driver twin, AND bench.py's
-# work-normalizing pair enumerator (r10 review find: bench hardcoded
-# copies that would silently desync if a query retuned).
+# work-normalizing pair enumerator: hardcoded copies would silently
+# desync if a query retuned.
 _MINHASH_NUM, _MINHASH_N, _MINHASH_BANDS, _MINHASH_R = 64, 3, 16, 4
 _JACCARD_BLOCK = ["lang", "source"]
 _JACCARD_THRESHOLD = 0.8
@@ -55,12 +55,11 @@ _JACCARD_THRESHOLD = 0.8
 
 def _verify_pairs_single_pass(cands, sh, threshold: float = 0.5):
     """Exact-Jaccard verification of LSH candidate pairs in ONE pass
-    over the shingle frame (r13, VERDICT r12 #2).
+    over the shingle frame.
 
-    The r12 shape joined a CHECKPOINTED shingle frame twice (as sh_a
-    and sh_b) — the checkpoint existed only because two joins consumed
-    the frame, and without a barrier each join re-ran the corpus scan +
-    semi-join + shingle pass.  Fused shape: explode each candidate pair
+    Joining the shingle frame twice (as sh_a and sh_b) would need a
+    checkpoint, because without a barrier each join re-runs the corpus
+    scan + semi-join + shingle pass.  Fused shape: explode each candidate pair
     into its two member ids, join the (un-materialized) shingle frame
     ONCE, and regroup by pair — the heavy shingle arrays cross exactly
     one exchange (the pair groupBy) and the third checkpoint
@@ -115,8 +114,8 @@ def _verify_pairs_single_pass(cands, sh, threshold: float = 0.5):
 
 def _broadcast_threshold_bytes(spark: SparkSession | None) -> int:
     """The session's ``spark.sql.autoBroadcastJoinThreshold`` in bytes
-    (r12 ADVICE: mirror the planner's ACTUAL decision instead of
-    hard-coding its default).  Falls back to Spark's default 10 MiB
+    (mirrors the planner's ACTUAL decision instead of hard-coding its
+    default).  Falls back to Spark's default 10 MiB
     when no session is at hand or the value is unparsable."""
     default = 10 << 20
     if spark is None:
@@ -138,7 +137,7 @@ def _broadcast_threshold_bytes(spark: SparkSession | None) -> int:
 
 
 def _lsh_big_side(sf_dir: str, spark: SparkSession | None = None) -> bool:
-    """Join-strategy gate for the LSH candidate self-join (r12): the
+    """Join-strategy gate for the LSH candidate self-join: the
     banded side is corpus × bands rows, so broadcast is only sane when
     the corpus SOURCE is tiny even after the explode — gate
     bands × on-disk bytes against the session's broadcast threshold
@@ -214,8 +213,8 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str):
     """
     d = load_table(spark, sf_dir, "documents")
     # Signatures feed BOTH sides of the LSH self-join and the verify
-    # step — persist AND barrier with count(): the r2 no-barrier
-    # variant let 3-4 downstream consumers start concurrent first
+    # step — persist AND barrier with count(): without the barrier
+    # 3-4 downstream consumers start concurrent first
     # computes of the signature plan, re-running the (now mod-p,
     # pricier) 64-permutation expression up to 4x (~17 s vs ~7 s cold
     # at sf0.1).  Two extra ~0.1 s jobs buy single-compute certainty.
@@ -224,28 +223,28 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str):
     # higher-order-function passes become 64 vectorized numpy passes
     # over one concatenated hash buffer — the signature stage dominated
     # this query's wall time after the mod-p independence fix.
-    # Checkpoint, NOT persist (r10, same reasoning as
-    # packing.pack_shards' r9 fix): the returned frame still reads
+    # Checkpoint, NOT persist (same reasoning as
+    # packing.pack_shards): the returned frame still reads
     # these intermediates, so an explicit unpersist is impossible, and
-    # a persist leaked one CacheManager entry per sweep invocation for
-    # the whole session — which ALSO let the bench's later reps serve
+    # a persist leaks one CacheManager entry per sweep invocation for
+    # the whole session — which ALSO lets the bench's later reps serve
     # from the first rep's cache via plan-matching.  The checkpoint
     # materializes once (the same single-compute guarantee the persist
     # + count barrier bought) and its blocks release with the frame.
     # stable_checkpoint upgrades to reliable checkpoints on clusters
-    # with a checkpoint dir (r10 VERDICT #5).
+    # with a checkpoint dir.
     from ic_spark.plans.checkpoint import stable_checkpoint
 
     raw_sigs = minhash_signatures(
         d, "doc_id", "text", num_hashes=_MINHASH_NUM,
         shingle_n=_MINHASH_N, use_arrow=True
     )
-    # Probe-memo key from the UNCHECKPOINTED pipeline (r13): every
+    # Probe-memo key from the UNCHECKPOINTED pipeline: every
     # checkpoint wraps a fresh RDD, so keying on the checkpointed frame
-    # made repeat invocations re-run the hot-key probe job every time.
-    from ic_spark.operators.dedup import _plan_key
+    # would re-run the hot-key probe job on every invocation.
+    from ic_spark.operators.dedup import plan_key
 
-    sigs_key = _plan_key(raw_sigs)
+    sigs_key = plan_key(raw_sigs)
     sigs = stable_checkpoint(raw_sigs)
     cands = stable_checkpoint(minhash_lsh_candidates(
         sigs, bands=_MINHASH_BANDS, rows_per_band=_MINHASH_R,
@@ -263,19 +262,18 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str):
     # Hashed sorted shingles: 8-byte compares in the verify intersect
     # instead of ~20-char strings (~2-3x on adversarial candidate
     # explosions — hot LSH buckets full of near-threshold pairs), and
-    # composite token-hash shingles (r11) skip building the shingle
+    # composite token-hash shingles skip building the shingle
     # strings at all.  Jaccard values are identical barring 64-bit
     # collisions inside one pair (~|sh|^2/2^64 — negligible), same
     # trade token_jaccard_pairs documents.
-    # No checkpoint on sh (r13): _verify_pairs_single_pass consumes it
-    # exactly once, so the r12 barrier (which existed because the
-    # sh_a/sh_b joins were two consumers) is gone — two checkpoint
+    # No checkpoint on sh: _verify_pairs_single_pass consumes it
+    # exactly once, so no barrier is needed — two checkpoint
     # materializations for the whole query instead of three.
     sh = (
         d.join(cand_ids, on="doc_id", how="left_semi")
         .select(
             F.col("doc_id"),
-            # string-name form -> single SQL parse inside (r12)
+            # string-name form -> single SQL parse inside
             F.array_sort(
                 F.array_distinct(hashed_word_shingles("text", 3))
             ).alias("sh"),
@@ -433,7 +431,7 @@ def _minhash_portable_oracle(threshold: float = 0.5) -> str:
     ),
     sh AS (
         -- docs shorter than n have NO shingles and NO signature
-        -- (word_shingles' r9 contract; the signer filters them out)
+        -- (word_shingles' contract; the signer filters them out)
         SELECT doc_id,
                list_transform(range(0, len(t) - {n} + 1),
                               i -> array_to_string(list_slice(t, i + 1, i + {n}), ' ')) AS shingles
@@ -481,17 +479,17 @@ def dedup_minhash_lsh_portable(spark: SparkSession, sf_dir: str):
     constants; only the shingle hash and the band-key compression
     differ, neither of which changes join semantics)."""
     d = load_table(spark, sf_dir, "documents")
-    # checkpoint, not persist: see dedup_minhash_lsh (r10)
+    # checkpoint, not persist: see dedup_minhash_lsh
     from ic_spark.plans.checkpoint import stable_checkpoint
 
     raw_sigs = minhash_signatures(
         d, "doc_id", "text", num_hashes=_MINHASH_NUM, shingle_n=_MINHASH_N,
         portable=True,
     )
-    # stable probe-memo key: see dedup_minhash_lsh (r13)
-    from ic_spark.operators.dedup import _plan_key
+    # stable probe-memo key: see dedup_minhash_lsh
+    from ic_spark.operators.dedup import plan_key
 
-    sigs_key = _plan_key(raw_sigs)
+    sigs_key = plan_key(raw_sigs)
     sigs = stable_checkpoint(raw_sigs)
     cands = stable_checkpoint(minhash_lsh_candidates(
         sigs, bands=_MINHASH_BANDS, rows_per_band=_MINHASH_R, portable=True,
@@ -501,7 +499,7 @@ def dedup_minhash_lsh_portable(spark: SparkSession, sf_dir: str):
     from ic_spark.functions.text import word_shingles
 
     cand_ids = cands.select(F.explode(F.array("id_a", "id_b")).alias("doc_id")).distinct()
-    # No checkpoint on sh (r13): single consumer via the fused verify —
+    # No checkpoint on sh: single consumer via the fused verify —
     # same reasoning as the production twin.  The length filter inside
     # the fused verify is result-identical here too (J >= t implies
     # min >= t*max since J <= min/max).
@@ -649,7 +647,7 @@ def sim_bruteforce_topk(spark: SparkSession, sf_dir: str):
 # cell assignment, nprobe=4 probes, exact in-cell cosine rank) —
 # shared by sim_ivf_topk (Arrow assigner) and sim_ivf_topk_expr
 # (pure-expression twin): the two paths are pinned bit-equal in
-# pytest, so one oracle checks both (r10: expr row now oracle-exact).
+# pytest, so one oracle checks both (the expr row is oracle-exact).
 _IVF_ORACLE = """
     WITH seeds AS (
         SELECT ROW_NUMBER() OVER (ORDER BY vec_id) AS cidx,
@@ -717,7 +715,7 @@ def sim_ivf_topk_expr(spark: SparkSession, sf_dir: str):
     """Same IVF search with the pure-expression cell assigner (zero
     Python in the plan — the whole-stage-codegen twin; formerly the
     headline ``sim_ivf_topk`` path, renamed when the Arrow assigner was
-    promoted).  Oracle-exact since r10 (shares _IVF_ORACLE with the
+    promoted).  Oracle-exact (shares _IVF_ORACLE with the
     Arrow path, to which it is pinned bit-equal in tests)."""
     e = load_table(spark, sf_dir, "embeddings")
     return ivf_top_k(
@@ -733,8 +731,8 @@ def sim_ivf_topk_expr(spark: SparkSession, sf_dir: str):
 
 # Whole-vector PQ/ADC oracle (no cells, no residual): seed codebooks
 # from the ksub lowest-id vectors' raw slices, per-subspace L2-argmin
-# codes, ADC lookup sums over the full corpus, ascending (r10:
-# sim_pq_topk is now oracle-exact instead of rows-only).
+# codes, ADC lookup sums over the full corpus, ascending
+# (sim_pq_topk is oracle-exact, not rows-only).
 _PQ_ORACLE = """
 WITH dims AS (SELECT UNNEST(range(0, 8)) AS j),
 book AS (
@@ -789,7 +787,7 @@ def sim_pq_topk(spark: SparkSession, sf_dir: str):
     """Product-quantized ANN (operators/similarity.py::pq_top_k): the
     corpus collapses to m small codes per vector and queries score via
     asymmetric-distance lookup tables — the memory-bound 100 TB path
-    (m ints vs dim floats per scored vector).  Oracle-exact since r10
+    (m ints vs dim floats per scored vector).  Oracle-exact
     (_PQ_ORACLE replays codebook seeding, L2-argmin codes and ADC in
     DuckDB); the code assignment and ADC arithmetic are additionally
     pinned against a Python reference in tests/test_operators.py."""
@@ -818,7 +816,7 @@ def sim_pq_topk(spark: SparkSession, sf_dir: str):
 # keep seeds), L2-argmin codes, cosine probes, ADC lookup sums.
 # Shared by sim_ivfpq_topk (in-memory) and sim_ivfpq_indexed_topk
 # (persisted serve) — the two paths are pinned bit-equal in pytest,
-# so one oracle checks both (r10: both rows are now oracle-exact).
+# so one oracle checks both (both rows are oracle-exact).
 _IVFPQ_ORACLE = """
     WITH dims AS (
         SELECT UNNEST(range(0, 8)) AS j
@@ -926,12 +924,12 @@ def sim_ivfpq_topk(spark: SparkSession, sf_dir: str):
     the IVFADC layout): coarse cells prune the scan to ~nprobe/nlist
     of the corpus, PQ codes of the cell RESIDUAL collapse scoring to m
     array lookups, one Lloyd round tightens the codebooks.  Oracle-exact
-    since r10 (shares _IVFPQ_ORACLE with the persisted-index twin);
+    (shares _IVFPQ_ORACLE with the persisted-index twin);
     code/ADC arithmetic, cluster retrieval and the
     recall-vs-brute-force floor are pinned in tests/test_operators.py.
-    Headline since r7 (VERDICT r6 #6): this is the flagship ANN layout,
-    so a perf regression in it must be driver-visible; the r6-comparable
-    22-query subtotal is emitted separately by bench.py."""
+    A headline query: this is the flagship ANN layout, so a perf
+    regression in it must show in the headline bench; the 22-query
+    subtotal without it is emitted separately by bench.py."""
     from ic_spark.operators.similarity import ivf_pq_top_k
 
     e = load_table(spark, sf_dir, "embeddings")
@@ -964,8 +962,8 @@ def sim_ivfpq_indexed_topk(spark: SparkSession, sf_dir: str):
     in-memory ivf_pq_top_k is additionally pinned in
     tests/test_operators.py::test_ivfpq_persisted_index_equals_inmemory.
 
-    The DuckDB oracle replays the WHOLE deterministic build (VERDICT r9
-    #1): lowest-id seed centroids -> cosine cell assignment (ties ->
+    The DuckDB oracle replays the WHOLE deterministic build:
+    lowest-id seed centroids -> cosine cell assignment (ties ->
     lowest index) -> exact residuals -> seed codebooks from the ksub
     lowest-id residual slices -> ONE Lloyd round (per-subspace L2
     argmin + grouped elementwise mean; empty codes keep their seeds,
@@ -1015,8 +1013,8 @@ def ivfpq_index_dir(sf_dir: str) -> str:
     codes table into /tmp on every sweep rep, and a fixed shared path
     raced concurrent processes (one rebuild rmtree-ing under another's
     serve).  This keying is the ONE owner of the path construction —
-    bench.py's cleanup previously duplicated it and would have silently
-    no-opped if the spelling changed (r10 review find)."""
+    a duplicate in bench.py's cleanup would silently no-op if the
+    spelling changed."""
     import hashlib
     import os
     import tempfile

@@ -623,8 +623,6 @@ def _append_sorted(spark, t, df, tmp, tag, key):
     (and so the lineage row ids) a deterministic function of ``key``."""
     import os
 
-    from ic_spark.compaction.deletes import _next_sequence_number
-
     p = os.path.join(tmp, tag)
     df.repartition(1).sortWithinPartitions(key).write.mode(
         "overwrite"
@@ -636,7 +634,7 @@ def _append_sorted(spark, t, df, tmp, tag, key):
         [
             {
                 "path": f,
-                "sequence_number": _next_sequence_number(t),
+                "sequence_number": t.next_sequence_number(),
                 "content": "DATA",
                 "file_size_in_bytes": os.path.getsize(f),
                 # metadata-only count: one footer read, no data scan
@@ -681,7 +679,7 @@ def _append_sorted(spark, t, df, tmp, tag, key):
     """,
 )
 def mor_row_lineage(spark: SparkSession, sf_dir: str):
-    """Iceberg v3 row lineage, driver-checked end to end (the r7
+    """Iceberg v3 row lineage, oracle-checked end to end (the lineage
     flagship's correctness row): a REAL table is built by appending the
     %4==0 and %4==2 orders as two sorted files (contiguous id ranges
     claimed from next_row_id in commit order), FULLY COMPACTED — the
@@ -907,10 +905,7 @@ def mor_changelog_scan(spark: SparkSession, sf_dir: str):
     from concurrent.futures import ThreadPoolExecutor
 
     from ic_spark.compaction.changelog import read_changelog
-    from ic_spark.compaction.deletes import (
-        _next_sequence_number,
-        _write_single_file,
-    )
+    from ic_spark.compaction.deletes import _write_single_file
     from ic_spark.compaction.manifest import ManifestTable
     from ic_spark.compaction.metafs import table_mfs
     from ic_spark.compaction.request import FileContent
@@ -953,7 +948,7 @@ def mor_changelog_scan(spark: SparkSession, sf_dir: str):
             [
                 {
                     "path": f,
-                    "sequence_number": _next_sequence_number(t),
+                    "sequence_number": t.next_sequence_number(),
                     "content": "DATA",
                     "file_size_in_bytes": os.path.getsize(f),
                 }
@@ -966,7 +961,7 @@ def mor_changelog_scan(spark: SparkSession, sf_dir: str):
         [
             {
                 "path": del_f,
-                "sequence_number": _next_sequence_number(t),
+                "sequence_number": t.next_sequence_number(),
                 "content": FileContent.EQUALITY_DELETES.name,
                 "equality_ids": ["o_orderkey"],
                 "file_size_in_bytes": mfs.size(del_f),

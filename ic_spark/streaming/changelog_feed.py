@@ -31,7 +31,7 @@ class ChangelogFeed:
     fully handled; a fresh checkpoint starts from ``from_snapshot_id``
     (exclusive — that snapshot's state is the baseline, its successors
     are delivered).  ``file_io`` routes the progress record through
-    the pyarrow fileio seam (r12 — a restartable feed on a different
+    the pyarrow fileio seam (a restartable feed on a different
     machine needs its checkpoint on durable storage, same as Spark's
     own streaming checkpoints); local paths keep the POSIX
     temp+``os.replace`` publish byte-for-byte.

@@ -27,8 +27,7 @@ from ic_spark.compaction.manifest import ManifestTable
 
 
 def _live_paths(table) -> set[str]:
-    """Live file paths of the current snapshot — the replay-commit log.
-    Duck-types both flavors (JSON ManifestTable / spec IcebergTable)."""
+    """Live file paths of the current snapshot — the replay-commit log."""
     data, pos, eq = table.scan_tasks()
     return {t.data_file_path for t in data + pos + eq}
 
@@ -44,19 +43,17 @@ def _committed(
       a compaction between a batch's commit and its crash-replay
       rewrites the batch's files, erasing the path marker below, and
       without the ledger the replay would re-commit the batch
-      (double-counted rows — r9 review find);
-    - the batch-scoped path marker in the live snapshot (the original
-      protocol; still needed for spec-flavor tables without the
-      ledger, and for the narrow window of non-append sinks that mark
-      after their commit).
+      (double-counted rows);
+    - the batch-scoped path marker in the live snapshot, which covers
+      batches committed before the ledger recorded them, and the narrow
+      window of non-append sinks that mark after their commit.
 
     Like the path markers, the ledger is keyed by sink ``name``: a NEW
     streaming query (fresh checkpoint, batch ids restarting at 0) that
     writes the same table must use a distinct name.
     """
     if name is not None and batch_id is not None:
-        hwm = getattr(table, "stream_batch_hwm", None)
-        if hwm is not None and batch_id <= hwm(name):
+        if batch_id <= table.stream_batch_hwm(name):
             return True
     return any(p.startswith(marker) for p in _live_paths(table))
 
@@ -79,8 +76,8 @@ def manifest_append_sink(table: ManifestTable, name: str = "stream"):
         if _committed(table, marker, name, batch_id):
             return  # replayed batch, already committed
         df.write.mode("overwrite").parquet(out_dir)
-        # listing + sizes through the table's metadata seam (r11):
-        # plain os.listdir on an object-store dir spelling finds nothing
+        # listing + sizes through the table's metadata seam: plain
+        # os.listdir on an object-store dir spelling finds nothing
         from ic_spark.compaction.metafs import table_mfs
 
         mfs = table_mfs(table)
@@ -91,16 +88,8 @@ def manifest_append_sink(table: ManifestTable, name: str = "stream"):
         )
         if not parts:  # empty micro-batch
             return
-        from ic_spark.compaction.deletes import _next_sequence_number
-
-        seq = _next_sequence_number(table)
-        # Ledger-capable tables record the batch id in the SAME atomic
-        # commit; others keep the original marker-only protocol.
-        kw = (
-            {"stream_mark": (name, batch_id)}
-            if hasattr(table, "stream_batch_hwm")
-            else {}
-        )
+        seq = table.next_sequence_number()
+        # The batch id lands in the ledger in the SAME atomic commit.
         table.append_snapshot(
             [
                 {
@@ -111,7 +100,7 @@ def manifest_append_sink(table: ManifestTable, name: str = "stream"):
                 }
                 for p in parts
             ],
-            **kw,
+            stream_mark=(name, batch_id),
         )
 
     return write_batch
@@ -148,9 +137,7 @@ def manifest_upsert_sink(
         # Post-commit ledger mark (merge_upsert owns its commit): the
         # window between the two writes is covered by the path marker;
         # only a compaction racing INTO that window could erase it.
-        mark = getattr(table, "mark_stream_batch", None)
-        if mark is not None:
-            mark(name, batch_id)
+        table.mark_stream_batch(name, batch_id)
 
     return write_batch
 
@@ -312,9 +299,8 @@ def compact_gram_index(spark, table: ManifestTable) -> int | None:
     # between the scan and the rewrite would be folded into the merged
     # file AND stay live (double-counted doc_freq).  The pinned id makes
     # commit_rewrite fail with CommitConflictError instead — retry when
-    # the stream pauses (r9 review find).
-    snap = table.current_snapshot()
-    expected = snap.snapshot_id if snap else None
+    # the stream pauses.
+    expected = table.current_snapshot_id()
     data, _, _ = table.scan_tasks()
     if not data:
         return None
@@ -333,7 +319,7 @@ def compact_gram_index(spark, table: ManifestTable) -> int | None:
         for f in mfs.listdir(out_dir)
         if f.endswith(".parquet")
     )
-    seq = table._max_live_seq()
+    seq = table.next_sequence_number() - 1
     added = [
         {
             "path": p,
@@ -416,14 +402,11 @@ def manifest_dv_delete_sink(
         # commit path raises ValueError for OTHER conditions too
         # (malformed blob properties), and swallowing one of those
         # would silently drop a batch of deletes forever — the
-        # checkpoint commits regardless of what this function ate
-        # (r9 review find).
+        # checkpoint commits regardless of what this function ate.
         if matches.isEmpty():
             return  # no key matched any live row: nothing to delete
         commit_deletion_vectors(spark, table, matches, tag=tag)
-        mark = getattr(table, "mark_stream_batch", None)
-        if mark is not None:
-            mark(name, batch_id)
+        table.mark_stream_batch(name, batch_id)
 
     return write_batch
 
@@ -468,7 +451,7 @@ def ivfpq_index_append_sink(
     ``file_io`` routes the publish plane — index.json read, the
     pre-delete sweep, the stage→codes renames and the stage cleanup —
     through the pyarrow fileio seam (:class:`_IndexFS`), the same
-    treatment build/append/compact/serve got in r9-r10; local paths
+    treatment build/append/compact/serve get; local paths
     keep the ``os.replace`` fast path byte-for-byte.  The staged
     encode itself still writes through Spark's Hadoop layer (data
     plane) with the caller's ``dir_path`` spelling.

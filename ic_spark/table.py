@@ -19,6 +19,46 @@ and metadata tables all hang off one object:
 ``Table.at`` auto-detects the metadata flavor: a ``metadata/``
 directory with spec version files loads an :class:`IcebergTable`,
 otherwise the JSON :class:`ManifestTable`.
+
+The table contract.  ``ManifestTable``, ``IcebergTable`` and
+``SqlCatalogTable`` expose these methods under the same names and
+signatures, so no caller asks which flavor it holds:
+
+- ``schema(snapshot_id=None)``, ``name_mapping(snapshot_id=None)`` and
+  ``schema_history(snapshot_id=None)``: the spec flavor answers for the
+  schema the snapshot was committed under; the JSON flavor records no
+  per-snapshot schema and ignores ``snapshot_id``.  The JSON flavor's
+  ``schema()`` is None until ``register_schema``.
+- ``current_snapshot_id()``: None for an empty table.
+- ``next_sequence_number(branch=None)``: the sequence number the next
+  commit records.  JSON: one past the highest live sequence number at
+  the branch head (main by default).  Spec: ``last-sequence-number + 1``
+  for any branch, read from metadata without planning a scan.
+- ``default_sort_order()``: ``(order_id, fields)``; the JSON flavor has
+  no sort orders and returns ``(0, [])``.
+- ``count_rows(snapshot_id=None)``: COUNT(*) from manifest stats, None
+  when metadata cannot answer; the spec flavor always returns None.
+- ``statistics()`` / ``register_statistics(entry)``: statistics-file
+  entries, one per snapshot.
+- ``ancestor_ids(snapshot_id)`` and ``main_log()``: a snapshot's
+  ancestry, and the (snapshot id, operation) list of main's timeline.
+- Planning and commits: ``scan_tasks``, ``incremental_tasks``,
+  ``commit_rewrite``, ``rollback_to_snapshot``, ``fast_forward``,
+  ``expire_snapshots``, ``snapshot_id_as_of``, ``refs``, ``resolve_ref``,
+  ``remove_ref``.
+- Layout and evolution: ``default_spec_id``, ``partition_spec``,
+  ``update_partition_spec``, ``add_column``, ``rename_column``,
+  ``promote_column``, ``drop_column``, ``move_column``, ``make_optional``.
+- Row lineage and streaming: the ``row_lineage`` and ``next_row_id``
+  properties, ``enable_row_lineage``, ``stream_batch_hwm``,
+  ``mark_stream_batch``.
+- The ``root`` and ``file_io`` attributes, and the ``_mfs`` metadata seam
+  (:func:`ic_spark.compaction.metafs.table_mfs`).
+
+Beyond the contract, ``append_snapshot(stage=True)``,
+``publish_snapshot``, ``register_schema``, ``remove_orphan_files`` and
+``vacuum`` are JSON-only; ``metadata()``, table properties,
+``update_sort_order`` and ``set_ref(ref_type=...)`` are spec-only.
 """
 
 from __future__ import annotations
@@ -84,9 +124,9 @@ class Table:
                 ),
             )
         # JSON flavor: register the same schema/partitioning instead of
-        # silently discarding both (r9 review find — schema() returned
-        # None, compact() raised, DDL was unavailable, appends skipped
-        # conformance, and the requested partitioning never existed).
+        # discarding both — without them schema() returns None, compact()
+        # raises, DDL is unavailable, appends skip conformance and the
+        # requested partitioning never exists.
         tbl = ManifestTable(location, file_io=file_io)
         tbl._mfs.makedirs(tbl._mfs.root)  # noqa: SLF001 — seam-routed mkdir
         tbl.register_schema(schema)
@@ -132,7 +172,7 @@ class Table:
 
     def count(self) -> int:
         """COUNT(*): manifest stats when delete-free, else a Spark job."""
-        n = self.inner.count_rows() if hasattr(self.inner, "count_rows") else None
+        n = self.inner.count_rows()
         return n if n is not None else self.read().count()
 
     # -- writes --------------------------------------------------------
@@ -147,9 +187,7 @@ class Table:
 
         import uuid as _uuid
 
-        target = (
-            self.inner.schema() if hasattr(self.inner, "schema") else None
-        )
+        target = self.inner.schema()
         if target is not None:
             import pyspark.sql.functions as F
 
@@ -183,37 +221,10 @@ class Table:
                     "file_size_in_bytes": mfs.size(p),
                 }
             )
-        if hasattr(self.inner, "current_snapshot"):  # JSON flavor needs seq
-            from ic_spark.compaction.deletes import _next_sequence_number
-
-            if branch:
-                # Sequence from the BRANCH head, not main: successive
-                # branch appends otherwise all stamped main's next seq,
-                # breaking the strictly-increasing per-commit invariant
-                # the equality-delete `<` guard depends on after a
-                # fast-forward (r9 review find).
-                head = self.inner._load().get("refs", {}).get(branch)
-                snap = (
-                    self.inner.snapshot_at(head)
-                    if head is not None
-                    else self.inner.current_snapshot()
-                )
-                seq = (
-                    max(
-                        (
-                            f.get("sequence_number", 0)
-                            for f in (snap.files if snap else [])
-                        ),
-                        default=0,
-                    )
-                    + 1
-                )
-            else:
-                seq = _next_sequence_number(self.inner)
-            for e in entries:
-                e["sequence_number"] = seq
-        kw = {"branch": branch} if branch else {}
-        return self.inner.append_snapshot(entries, **kw)
+        seq = self.inner.next_sequence_number(branch)
+        for e in entries:
+            e["sequence_number"] = seq
+        return self.inner.append_snapshot(entries, branch=branch or None)
 
     # -- row-level changes ---------------------------------------------
 

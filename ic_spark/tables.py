@@ -113,8 +113,12 @@ def ensure_session_confs(spark: SparkSession) -> None:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
 
 
-# Lazy-DataFrame memo: (session id, resolved path, mtime_ns, size) →
-# DataFrame.  spark.read.parquet costs ~0.1 s of driver time per call
+# Lazy-DataFrame memo: (application id, session uuid, resolved path,
+# mtime_ns, size) → DataFrame.  Neither id is ever reused by a later
+# application or session (id(session) can be, after garbage
+# collection), and the session part keeps sibling sessions — which
+# share the application but not their confs — off each other's
+# DataFrames.  spark.read.parquet costs ~0.1 s per call
 # (py4j round trips + DataSource resolution + footer schema read), and
 # query fns re-load the same fixture tables on every invocation.  A
 # DataFrame is an immutable LAZY plan — reusing it re-scans the parquet
@@ -140,7 +144,7 @@ def _df_memo_key(spark: SparkSession, path: str):
         # A directory's own mtime only changes when entries are
         # added/removed/renamed — an in-place rewrite of an existing
         # part file would return a memoized plan whose cached file
-        # listing has stale lengths (r12 ADVICE).  Fold every file's
+        # listing has stale lengths.  Fold every file's
         # mtime/size into the key instead.
         try:
             for root, _, files in os.walk(path):
@@ -150,7 +154,13 @@ def _df_memo_key(spark: SparkSession, path: str):
                     size += fst.st_size
         except OSError:
             return None
-    return (id(spark), os.path.realpath(path), mtime, size)
+    return (
+        spark.sparkContext.applicationId,
+        spark._jsparkSession.sessionUUID(),
+        os.path.realpath(path),
+        mtime,
+        size,
+    )
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -165,7 +175,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             return cached
     df = _load_table_fresh(spark, path, name)
     if key is not None:
-        # LRU eviction (r12 VERDICT minor): a scan sweeping many SF
+        # LRU eviction: a scan sweeping many SF
         # dirs in one session evicts oldest-first instead of thrashing
         # the whole memo at the cap.
         while len(_DF_MEMO) >= _DF_MEMO_MAX:
@@ -195,8 +205,7 @@ def nanos_ts_to_micros(df: DataFrame, col: str = "ts") -> DataFrame:
     2^53 exact range, so float division is off by 1µs.  The ONE
     spelling of this truncation, shared by the batch loader above and
     ``streaming/windows.stream_events`` — two copies of it could
-    silently diverge and break the module's stream==batch invariant
-    (r10 review find)."""
+    silently diverge and break the module's stream==batch invariant."""
     return df.withColumn(
         col, F.timestamp_micros(F.expr(f"`{col}` DIV 1000"))
     )

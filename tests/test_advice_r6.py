@@ -38,7 +38,7 @@ def test_probe_memo_skips_failed_plan_key(spark, monkeypatch):
         "id long, content string, blk string",
     )
     dd._PROBE_MEMO.clear()
-    monkeypatch.setattr(dd, "_plan_key", lambda _df: None)
+    monkeypatch.setattr(dd, "plan_key", lambda _df: None)
     dd.token_jaccard_pairs(df, "id", "content", ["blk"], threshold=0.1).count()
     assert dd._PROBE_MEMO == {}
     monkeypatch.undo()

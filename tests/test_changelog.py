@@ -14,7 +14,6 @@ import pytest
 
 from ic_spark.compaction.changelog import read_changelog
 from ic_spark.compaction.deletes import (
-    _next_sequence_number,
     merge_upsert,
     read_table,
     write_deletion_vectors,
@@ -37,8 +36,7 @@ def _append(spark, tbl, df, tmp_path, tag):
         "file_size_in_bytes": os.path.getsize(f),
         "column_stats": cs,
     }
-    if isinstance(tbl, ManifestTable):
-        e["sequence_number"] = _next_sequence_number(tbl)
+    e["sequence_number"] = tbl.next_sequence_number()
     return tbl.append_snapshot([e])
 
 

@@ -147,14 +147,13 @@ def test_full_compact_partitioned_avro_manifest_partition_values(spark, tmp_path
     them under spec-0 transforms (stats-based equality skipping still
     applies via the min==max==value column_stats)."""
     from ic_spark.compaction import Compaction, ManifestTable
-    from ic_spark.compaction.deletes import _next_sequence_number
 
     rows = [(i, i % 3) for i in range(30)]
     df = spark.createDataFrame(rows, "id int, grp int")
     f = _src_file(spark, tmp_path, rows, "id int, grp int")
     t = ManifestTable(str(tmp_path / "tbl"))
     t.append_snapshot(
-        [{"path": f, "sequence_number": _next_sequence_number(t), "content": "DATA"}]
+        [{"path": f, "sequence_number": t.next_sequence_number(), "content": "DATA"}]
     )
     Compaction(spark).full_compact(
         t, df.schema, data_file_format="avro", partition_by=["grp"]
@@ -221,13 +220,12 @@ def test_adhoc_partition_entries_never_spec_pruned(spark, tmp_path):
 
 def _tbl_with_partitioned_compact(spark, tmp_path, fmt, rows, schema, pcols):
     from ic_spark.compaction import Compaction, ManifestTable
-    from ic_spark.compaction.deletes import _next_sequence_number
 
     df = spark.createDataFrame(rows, schema)
     f = _src_file(spark, tmp_path, rows, schema)
     t = ManifestTable(str(tmp_path / "tbl"))
     t.append_snapshot(
-        [{"path": f, "sequence_number": _next_sequence_number(t), "content": "DATA"}]
+        [{"path": f, "sequence_number": t.next_sequence_number(), "content": "DATA"}]
     )
     Compaction(spark).full_compact(
         t, df.schema, data_file_format=fmt, partition_by=pcols
@@ -291,7 +289,7 @@ def test_partitioned_recompaction_materializes_column(spark, tmp_path):
 def test_partitioned_plus_plain_files_mixed_read(spark, tmp_path):
     """Mixed layout: files that DO carry the column in their pages win
     (coalesce order) while dropped-column files fill from metadata."""
-    from ic_spark.compaction.deletes import _next_sequence_number, read_table
+    from ic_spark.compaction.deletes import read_table
 
     rows = [(i, i % 2) for i in range(8)]
     t, df = _tbl_with_partitioned_compact(
@@ -300,7 +298,7 @@ def test_partitioned_plus_plain_files_mixed_read(spark, tmp_path):
     extra = [(100, 7), (101, None)]
     f2 = _src_file(spark, tmp_path / "extra", extra, "id int, grp int")
     t.append_snapshot(
-        [{"path": f2, "sequence_number": _next_sequence_number(t), "content": "DATA"}]
+        [{"path": f2, "sequence_number": t.next_sequence_number(), "content": "DATA"}]
     )
     out = sorted(
         [tuple(r) for r in read_table(spark, t, schema=df.schema).collect()],
@@ -359,7 +357,7 @@ def test_binpack_into_avro(spark, tmp_path):
     manifest entries carry the new file_format so mixed-format scans
     group correctly."""
     from ic_spark.compaction import Compaction, ManifestTable
-    from ic_spark.compaction.deletes import _next_sequence_number, read_table
+    from ic_spark.compaction.deletes import read_table
 
     t = ManifestTable(str(tmp_path / "tbl"))
     all_rows = []
@@ -368,7 +366,7 @@ def test_binpack_into_avro(spark, tmp_path):
         all_rows += rows
         f = _src_file(spark, tmp_path / f"s{k}", rows, "id int, name string")
         t.append_snapshot(
-            [{"path": f, "sequence_number": _next_sequence_number(t),
+            [{"path": f, "sequence_number": t.next_sequence_number(),
               "content": "DATA", "file_size_in_bytes": os.path.getsize(f)}]
         )
     schema = spark.createDataFrame(all_rows, "id int, name string").schema
@@ -444,14 +442,14 @@ def test_partitioned_orc_read_stays_native(spark, tmp_path):
 def test_incremental_scan_reads_appended_avro(spark, tmp_path):
     """incremental_tasks threads file_format: an appended avro data
     file must route through the avro scan, not the parquet reader."""
-    from ic_spark.compaction.deletes import _next_sequence_number, read_incremental
+    from ic_spark.compaction.deletes import read_incremental
     from ic_spark.compaction.manifest import ManifestTable
     from ic_spark.sources.avro_io import write_container
 
     t = ManifestTable(str(tmp_path / "tbl"))
     f0 = _src_file(spark, tmp_path / "p0", [(1, "a")], "id int, name string")
     t.append_snapshot(
-        [{"path": f0, "sequence_number": _next_sequence_number(t), "content": "DATA"}]
+        [{"path": f0, "sequence_number": t.next_sequence_number(), "content": "DATA"}]
     )
     base = t.current_snapshot().snapshot_id
     av = str(tmp_path / "f1.avro")
@@ -464,7 +462,7 @@ def test_incremental_scan_reads_appended_avro(spark, tmp_path):
         [{"id": 2, "name": "b"}, {"id": 3, "name": "c"}],
     )
     t.append_snapshot(
-        [{"path": av, "sequence_number": _next_sequence_number(t),
+        [{"path": av, "sequence_number": t.next_sequence_number(),
           "content": "DATA", "file_format": "avro"}]
     )
     schema = spark.createDataFrame([(1, "a")], "id int, name string").schema

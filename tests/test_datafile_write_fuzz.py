@@ -157,7 +157,7 @@ def test_avro_datafile_temporal_decimal_roundtrip(spark, tmp_path):
     import decimal as dec
 
     from ic_spark.compaction import Compaction, ManifestTable
-    from ic_spark.compaction.deletes import _next_sequence_number, read_table
+    from ic_spark.compaction.deletes import read_table
 
     rows = [
         (
@@ -178,7 +178,7 @@ def test_avro_datafile_temporal_decimal_roundtrip(spark, tmp_path):
         os.path.join(src, n) for n in os.listdir(src) if n.endswith(".parquet")
     )
     t.append_snapshot(
-        [{"path": f, "sequence_number": _next_sequence_number(t), "content": "DATA"}]
+        [{"path": f, "sequence_number": t.next_sequence_number(), "content": "DATA"}]
     )
     Compaction(spark).full_compact(t, df.schema, data_file_format="avro")
     want = sorted(spark.read.parquet(src).collect(), key=lambda r: r.id)
@@ -197,7 +197,7 @@ def test_orc_datafile_temporal_decimal_roundtrip(spark, tmp_path):
     import decimal as dec
 
     from ic_spark.compaction import Compaction, ManifestTable
-    from ic_spark.compaction.deletes import _next_sequence_number, read_table
+    from ic_spark.compaction.deletes import read_table
 
     rows = [
         (
@@ -217,7 +217,7 @@ def test_orc_datafile_temporal_decimal_roundtrip(spark, tmp_path):
         os.path.join(src, n) for n in os.listdir(src) if n.endswith(".parquet")
     )
     t.append_snapshot(
-        [{"path": f, "sequence_number": _next_sequence_number(t), "content": "DATA"}]
+        [{"path": f, "sequence_number": t.next_sequence_number(), "content": "DATA"}]
     )
     Compaction(spark).full_compact(t, df.schema, data_file_format="orc")
     want = sorted(spark.read.parquet(src).collect(), key=lambda r: r.id)
@@ -233,7 +233,7 @@ def test_avro_decimal_wide_precision_exact(spark, tmp_path):
     import decimal as dec
 
     from ic_spark.compaction import Compaction, ManifestTable
-    from ic_spark.compaction.deletes import _next_sequence_number, read_table
+    from ic_spark.compaction.deletes import read_table
 
     big = dec.Decimal("1234567890123456789012345678.9012345678")
     rows = [(1, big), (2, -big), (3, None)]
@@ -245,7 +245,7 @@ def test_avro_decimal_wide_precision_exact(spark, tmp_path):
         os.path.join(src, n) for n in os.listdir(src) if n.endswith(".parquet")
     )
     t.append_snapshot(
-        [{"path": f, "sequence_number": _next_sequence_number(t), "content": "DATA"}]
+        [{"path": f, "sequence_number": t.next_sequence_number(), "content": "DATA"}]
     )
     Compaction(spark).full_compact(t, df.schema, data_file_format="avro")
     got = {r.id: r.dc for r in read_table(spark, t).collect()}

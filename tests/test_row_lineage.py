@@ -288,7 +288,7 @@ def test_lineage_invariants_random_histories(spark, tmp_path):
             rows = [(next_id + i, f"n{next_id + i}", float(i)) for i in range(n)]
             # strictly newer than every live file INCLUDING delete
             # files, so the eq-delete strict-< guard never hides new rows
-            seq = t._max_live_seq() + 1
+            seq = t.next_sequence_number()
             file_no += 1
             path = write_parquet(
                 spark, str(tmp_path / f"f{file_no}"), rows, SCHEMA

@@ -24,7 +24,6 @@ import pytest
 from pyspark.sql.types import LongType, StringType
 
 from ic_spark.compaction.deletes import (
-    _next_sequence_number,
     read_table,
     write_position_deletes,
 )
@@ -62,8 +61,7 @@ def _append(spark, tbl, df, tmp_path, tag: str):
         "file_size_in_bytes": os.path.getsize(f),
         "column_stats": cs,
     }
-    if isinstance(tbl, ManifestTable):
-        entry["sequence_number"] = _next_sequence_number(tbl)
+    entry["sequence_number"] = tbl.next_sequence_number()
     tbl.append_snapshot([entry])
 
 

@@ -14,7 +14,6 @@ from ic_spark.compaction.stats import (
     analyze_incremental,
     analyze_table,
     column_ndv_estimates,
-    table_statistics,
 )
 
 
@@ -45,7 +44,7 @@ def test_analyze_and_estimates(spark, tmp_path):
     est = column_ndv_estimates(spark, table)
     assert abs(est["id"] - 1000) / 1000 < 0.05  # HLL within 5%
     assert abs(est["g"] - 10) < 1
-    assert len(table_statistics(table)) == 1
+    assert len(table.statistics()) == 1
 
 
 def test_analyze_incremental_unions_sketches(spark, tmp_path):

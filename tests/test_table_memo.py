@@ -50,3 +50,38 @@ def test_missing_path_not_memoized(spark, tmp_path):
     with pytest.raises(Exception):
         load_table(spark, str(tmp_path / "nope"), "customer")
     assert len(_DF_MEMO) == before
+
+
+def test_memo_entries_of_another_application_not_served(spark, tmp_sf_dir):
+    """Every memo is keyed on the application id, which no later
+    application reuses (id(session) can be reused after garbage
+    collection): an entry planted under another id is never served."""
+    import pyspark.sql.functions as F
+    from pyspark.sql import Row
+
+    import ic_spark.operators.dedup as dd
+    from ic_spark import tables
+
+    app = spark.sparkContext.applicationId
+
+    key = tables._df_memo_key(spark, os.path.join(tmp_sf_dir, "customer.parquet"))
+    assert key[0] == app
+    sentinel = spark.range(1)
+    tables._DF_MEMO[(("other-app",) + key[1:], "customer")] = sentinel
+    got = load_table(spark, tmp_sf_dir, "customer")
+    assert got is not sentinel and got.count() == 100
+
+    df = spark.range(0, 10, numPartitions=1)
+    target = spark.sparkContext.defaultParallelism
+    pk = dd.plan_key(df)
+    dd._SPREAD_MEMO[("other-app", pk, target)] = not (1 < target)  # wrong
+    dd._spread(df)
+    assert dd._SPREAD_MEMO[(app, pk, target)] == (1 < target)
+
+    # A foreign entry holding more hot rows than max_hot_collect would
+    # turn this uniform probe into "full" detection if it were served.
+    dd._PROBE_MEMO[("other-app", ("probe",))] = [Row(k=i, __k=2) for i in range(5)]
+    keys = spark.range(100).select(F.col("id").alias("k"))
+    hot = dd._probe_hot_keys(keys, ["k"], 100, "auto", 1.0, 2, memo_key=("probe",))
+    assert hot is None
+    assert dd._PROBE_MEMO[(app, ("probe",))] == []
