@@ -56,7 +56,7 @@ from ic_spark.compaction.epochs import (
 from ic_spark.compaction.request import FileContent, FileScanTask
 from ic_spark.sources.avro_io import read_container, write_container
 
-from ic_spark.compaction.manifest import CommitConflictError, _with_statistics_entry
+from ic_spark.compaction.manifest import CommitConflictError, with_statistics_entry
 from ic_spark.compaction.metafs import check_remote_commit_safety
 
 # --------------------------------------------------- type serialization
@@ -1762,7 +1762,7 @@ class IcebergTable:
         for the same snapshot is replaced, not stacked."""
         version, meta = self._metadata_for_commit()
         meta = dict(meta)
-        meta["statistics"] = _with_statistics_entry(
+        meta["statistics"] = with_statistics_entry(
             meta.get("statistics", []), entry
         )
         self._commit_metadata(meta, expected_version=version)

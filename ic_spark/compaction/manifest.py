@@ -471,7 +471,7 @@ def _file_may_match(
     return True
 
 
-def _with_statistics_entry(entries: list[dict], entry: dict) -> list[dict]:
+def with_statistics_entry(entries: list[dict], entry: dict) -> list[dict]:
     """``entries`` with ``entry`` registered: one statistics entry per
     snapshot (Iceberg REST set-statistics semantics), so a re-analyze at
     the same snapshot replaces the old entry instead of stacking."""
@@ -1418,7 +1418,7 @@ class ManifestTable:
         """Register a statistics entry; an entry for the same snapshot is
         replaced, not stacked."""
         state = self._load()
-        state["statistics"] = _with_statistics_entry(
+        state["statistics"] = with_statistics_entry(
             state.get("statistics", []), entry
         )
         self._store(state)

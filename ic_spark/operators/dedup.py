@@ -89,8 +89,9 @@ def _content_key(c: Column, normalize: bool) -> Column:
     return c
 
 
-# Probe memo: (application id, (keys-plan semanticHash, params)) ->
-# collected hot rows.
+# Probe memo: (application id, kind, keys-plan semanticHash, *params)
+# -> collected hot rows.  The key stays flat so a None plan hash would
+# show as a top-level element.
 # A corpus's hot-key profile is a property of the DATA; within one
 # session, identical logical plans re-probe for free (bench reps, the
 # candidates+verify double-consumption in dedup pipelines).  Entries
@@ -173,7 +174,7 @@ def _probe_hot_keys(
         )
     )
     if memo_key is not None:
-        memo_key = (sampled_keys.sparkSession.sparkContext.applicationId, memo_key)
+        memo_key = (sampled_keys.sparkSession.sparkContext.applicationId,) + memo_key
     if memo_key is not None and memo_key in _PROBE_MEMO:
         rows = _PROBE_MEMO[memo_key]
     else:

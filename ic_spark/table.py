@@ -52,8 +52,8 @@ signatures, so no caller asks which flavor it holds:
 - Row lineage and streaming: the ``row_lineage`` and ``next_row_id``
   properties, ``enable_row_lineage``, ``stream_batch_hwm``,
   ``mark_stream_batch``.
-- The ``root`` and ``file_io`` attributes, and the ``_mfs`` metadata seam
-  (:func:`ic_spark.compaction.metafs.table_mfs`).
+- The ``root`` and ``file_io`` attributes.  The metadata-plane IO is
+  reached through :func:`ic_spark.compaction.metafs.table_mfs`.
 
 Beyond the contract, ``append_snapshot(stage=True)``,
 ``publish_snapshot``, ``register_schema``, ``remove_orphan_files`` and
@@ -111,6 +111,7 @@ class Table:
         Iceberg v2 metadata, else the JSON-manifest analog."""
         from ic_spark.compaction.iceberg_meta import IcebergTable
         from ic_spark.compaction.manifest import ManifestTable
+        from ic_spark.compaction.metafs import table_mfs
 
         if spec_metadata:
             return cls(
@@ -128,7 +129,8 @@ class Table:
         # raises, DDL is unavailable, appends skip conformance and the
         # requested partitioning never exists.
         tbl = ManifestTable(location, file_io=file_io)
-        tbl._mfs.makedirs(tbl._mfs.root)  # noqa: SLF001 — seam-routed mkdir
+        mfs = table_mfs(tbl)
+        mfs.makedirs(mfs.root)  # seam-routed mkdir
         tbl.register_schema(schema)
         if partition_by:
             tbl.update_partition_spec(
@@ -183,6 +185,7 @@ class Table:
         Spec-metadata tables conform the frame to the TABLE schema
         first (order + types) — a wider-typed source can't silently
         write files the schema rejects on read."""
+        from ic_spark.compaction.metafs import table_mfs
         from ic_spark.compaction.writer import _stats_from_footer
 
         import uuid as _uuid
@@ -203,7 +206,7 @@ class Table:
         # connector-routed (object-store) table appends end to end; on
         # local roots within()/fs are identity/None — the plain-open
         # fast path.
-        mfs = self.inner._mfs  # noqa: SLF001
+        mfs = table_mfs(self.inner)
         entries = []
         for name in mfs.listdir(out):
             if not name.endswith(".parquet"):

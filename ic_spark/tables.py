@@ -113,12 +113,12 @@ def ensure_session_confs(spark: SparkSession) -> None:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
 
 
-# Lazy-DataFrame memo: (application id, session uuid, resolved path,
-# mtime_ns, size) → DataFrame.  Neither id is ever reused by a later
-# application or session (id(session) can be, after garbage
-# collection), and the session part keeps sibling sessions — which
-# share the application but not their confs — off each other's
-# DataFrames.  spark.read.parquet costs ~0.1 s per call
+# Lazy-DataFrame memo: (session uuid, resolved path, mtime_ns, size) →
+# DataFrame.  The JVM session uuid is random per session, so no later
+# session or application reuses it (id(session) can be, after garbage
+# collection), and sibling sessions — which share the application but
+# not their confs — stay off each other's DataFrames.
+# spark.read.parquet costs ~0.1 s per call
 # (py4j round trips + DataSource resolution + footer schema read), and
 # query fns re-load the same fixture tables on every invocation.  A
 # DataFrame is an immutable LAZY plan — reusing it re-scans the parquet
@@ -155,7 +155,6 @@ def _df_memo_key(spark: SparkSession, path: str):
         except OSError:
             return None
     return (
-        spark.sparkContext.applicationId,
         spark._jsparkSession.sessionUUID(),
         os.path.realpath(path),
         mtime,

@@ -53,9 +53,10 @@ def test_missing_path_not_memoized(spark, tmp_path):
 
 
 def test_memo_entries_of_another_application_not_served(spark, tmp_sf_dir):
-    """Every memo is keyed on the application id, which no later
-    application reuses (id(session) can be reused after garbage
-    collection): an entry planted under another id is never served."""
+    """The memos key on ids no later application reuses (the JVM
+    session uuid for load_table, the application id for the dedup
+    memos; id(session) can be reused after garbage collection): an
+    entry planted under another application's id is never served."""
     import pyspark.sql.functions as F
     from pyspark.sql import Row
 
@@ -65,9 +66,9 @@ def test_memo_entries_of_another_application_not_served(spark, tmp_sf_dir):
     app = spark.sparkContext.applicationId
 
     key = tables._df_memo_key(spark, os.path.join(tmp_sf_dir, "customer.parquet"))
-    assert key[0] == app
+    assert key[0] == spark._jsparkSession.sessionUUID()
     sentinel = spark.range(1)
-    tables._DF_MEMO[(("other-app",) + key[1:], "customer")] = sentinel
+    tables._DF_MEMO[(("other-session",) + key[1:], "customer")] = sentinel
     got = load_table(spark, tmp_sf_dir, "customer")
     assert got is not sentinel and got.count() == 100
 
@@ -80,8 +81,8 @@ def test_memo_entries_of_another_application_not_served(spark, tmp_sf_dir):
 
     # A foreign entry holding more hot rows than max_hot_collect would
     # turn this uniform probe into "full" detection if it were served.
-    dd._PROBE_MEMO[("other-app", ("probe",))] = [Row(k=i, __k=2) for i in range(5)]
+    dd._PROBE_MEMO[("other-app", "probe")] = [Row(k=i, __k=2) for i in range(5)]
     keys = spark.range(100).select(F.col("id").alias("k"))
     hot = dd._probe_hot_keys(keys, ["k"], 100, "auto", 1.0, 2, memo_key=("probe",))
     assert hot is None
-    assert dd._PROBE_MEMO[(app, ("probe",))] == []
+    assert dd._PROBE_MEMO[(app, "probe")] == []
