@@ -56,7 +56,8 @@ def test_memo_entries_of_another_application_not_served(spark, tmp_sf_dir):
     """The memos key on ids no later application reuses (the JVM
     session uuid for load_table, the application id for the dedup
     memos; id(session) can be reused after garbage collection): an
-    entry planted under another application's id is never served."""
+    entry planted under another session's or application's id is
+    never served."""
     import pyspark.sql.functions as F
     from pyspark.sql import Row
 
