@@ -138,13 +138,12 @@ def read_changelog(
     from ic_spark.compaction.deletes import _evolved_scan_args, infer_read_schema
     from ic_spark.compaction.planner import (
         _maybe_broadcast,
-        _scan_deletion_vectors,
         _scan_with_hidden_cols,
         apply_equality_deletes,
         apply_position_deletes,
-        attach_lineage,
+        equality_delete_rows,
         lineage_scan_schema,
-        scan_position_delete_rows,
+        position_delete_rows,
         strip_lineage_fields,
     )
 
@@ -183,34 +182,16 @@ def read_changelog(
         + ", _change_type string, _commit_snapshot_id long, _change_ordinal int"
     )
 
-    def lin(df: DataFrame, tasks) -> DataFrame:
-        """Resolve lineage columns on a hidden-col scan of ``tasks``."""
+    def lin(tasks) -> dict | None:
+        """The lineage map of ``tasks`` for a hidden-col scan."""
         if not with_lineage:
-            return df
-        return attach_lineage(
-            spark, df, {t.data_file_path: t.first_row_id for t in tasks}
-        )
-
-    def pos_rows(tasks) -> DataFrame | None:
-        """(file_path, pos) rows of a snapshot's positional delete
-        content (parquet + puffin flavors)."""
-        pq = [t for t in tasks if t.file_format != "puffin"]
-        dv = [t for t in tasks if t.file_format == "puffin"]
-        parts = []
-        if pq:
-            parts.append(scan_position_delete_rows(spark, pq))
-        if dv:
-            parts.append(
-                _scan_deletion_vectors(
-                    spark, [t.data_file_path for t in dv]
-                ).toDF(SYS_HIDDEN_FILE_PATH, SYS_HIDDEN_POS)
-            )
-        if not parts:
             return None
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
+        return {t.data_file_path: t.first_row_id for t in tasks}
+
+    def eq_rows(group) -> DataFrame:
+        return equality_delete_rows(
+            spark, group, schema, evo.get("name_mapping"), evo.get("schema_history")
+        )
 
     def prev_visible(p_data, p_pos, p_eq, with_pos=False, with_seq=False):
         """Rows visible in the PREVIOUS snapshot, hidden cols kept.
@@ -223,28 +204,20 @@ def read_changelog(
             spark,
             p_data,
             schema=scan_schema,
-            with_pos=with_pos or bool(p_pos) or with_lineage,
-            with_seq=with_seq or bool(p_eq) or with_lineage,
+            with_pos=with_pos or bool(p_pos),
+            with_seq=with_seq or bool(p_eq),
+            lineage=lin(p_data),
             **evo,
         )
         if p_pos:
-            prev = pos_rows(p_pos)
+            prev = position_delete_rows(spark, p_pos, p_data)
             base = apply_position_deletes(
                 base, _maybe_broadcast(prev, p_pos)
             )
-        if p_eq:
-            for group in split_equality_delete_groups(p_eq):
-                g_cols = list(group.equality_ids)
-                g_del = _scan_with_hidden_cols(
-                    spark,
-                    list(group.tasks),
-                    with_seq=True,
-                    columns=g_cols,
-                    schema_history=evo.get("schema_history"),
-                )
-                g_del = _maybe_broadcast(g_del, list(group.tasks))
-                base = apply_equality_deletes(base, g_del, g_cols)
-        return lin(base, p_data)
+        for group in split_equality_delete_groups(p_eq):
+            g_del = _maybe_broadcast(eq_rows(group), list(group.tasks))
+            base = apply_equality_deletes(base, g_del, list(group.equality_ids))
+        return base
 
     parts: list[DataFrame] = []
     cur_prev = prev_id
@@ -290,11 +263,7 @@ def read_changelog(
                     name_mapping=evo.get("name_mapping"),
                     schema_history=evo.get("schema_history"),
                 ),
-                lineage=(
-                    {t.data_file_path: t.first_row_id for t in removed}
-                    if with_lineage
-                    else None
-                ),
+                lineage=lin(removed),
             )
 
         if operation == "overwrite":
@@ -303,16 +272,8 @@ def read_changelog(
                     _with_meta(removed_rows(), cols, "DELETE", sid, ordinal)
                 )
             if added:
-                ins = lin(
-                    _scan_with_hidden_cols(
-                        spark,
-                        added,
-                        schema=scan_schema,
-                        with_pos=with_lineage,
-                        with_seq=with_lineage,
-                        **evo,
-                    ),
-                    added,
+                ins = _scan_with_hidden_cols(
+                    spark, added, schema=scan_schema, lineage=lin(added), **evo
                 )
                 parts.append(_with_meta(ins, cols, "INSERT", sid, ordinal))
             cur_prev = sid
@@ -330,45 +291,33 @@ def read_changelog(
                 _with_meta(removed_rows(), cols, "DELETE", sid, ordinal)
             )
         if added:
-            ins = lin(
-                _scan_with_hidden_cols(
-                    spark,
-                    added,
-                    schema=scan_schema,
-                    with_pos=with_lineage,
-                    with_seq=with_lineage,
-                    **evo,
-                ),
-                added,
+            ins = _scan_with_hidden_cols(
+                spark, added, schema=scan_schema, lineage=lin(added), **evo
             )
             parts.append(_with_meta(ins, cols, "INSERT", sid, ordinal))
-        if pos_changed:
-            prev_rows = pos_rows(p_pos)
-            cur_rows = pos_rows(c_pos)
-            if cur_rows is not None:
-                newly = (
-                    cur_rows
-                    if prev_rows is None
-                    else cur_rows.exceptAll(prev_rows)
-                )
-                # Rows these positions hide lived in files visible BEFORE
-                # this commit — with that snapshot's own deletes applied,
-                # so an already-hidden row is never re-reported.
-                base = prev_visible(p_data, p_pos, p_eq, with_pos=True)
-                hit = base.join(
-                    newly, on=[SYS_HIDDEN_FILE_PATH, SYS_HIDDEN_POS], how="left_semi"
-                )
-                parts.append(_with_meta(hit, cols, "DELETE", sid, ordinal))
+        if pos_changed and c_pos:
+            # Both sides fold onto the manifest spelling of the files
+            # visible BEFORE this commit, so a delete re-recorded under
+            # another spelling is not new.
+            cur_rows = position_delete_rows(spark, c_pos, p_data)
+            prev_rows = position_delete_rows(spark, p_pos, p_data) if p_pos else None
+            newly = (
+                cur_rows
+                if prev_rows is None
+                else cur_rows.exceptAll(prev_rows)
+            )
+            # Rows these positions hide lived in files visible BEFORE
+            # this commit — with that snapshot's own deletes applied,
+            # so an already-hidden row is never re-reported.
+            base = prev_visible(p_data, p_pos, p_eq, with_pos=True)
+            hit = base.join(
+                newly, on=[SYS_HIDDEN_FILE_PATH, SYS_HIDDEN_POS], how="left_semi"
+            )
+            parts.append(_with_meta(hit, cols, "DELETE", sid, ordinal))
         if new_eq:
             for group in split_equality_delete_groups(new_eq):
                 eq_cols = list(group.equality_ids)
-                keys = _scan_with_hidden_cols(
-                    spark,
-                    list(group.tasks),
-                    with_seq=True,
-                    columns=eq_cols,
-                    schema_history=evo.get("schema_history"),
-                )
+                keys = eq_rows(group)
                 base = prev_visible(p_data, p_pos, p_eq, with_seq=True)
                 cond = F.col(f"d.{SYS_HIDDEN_SEQ_NUM}") < F.col(
                     f"e.{SYS_HIDDEN_SEQ_NUM}"

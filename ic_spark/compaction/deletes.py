@@ -338,6 +338,17 @@ def commit_deletion_vectors(
     from ic_spark.compaction.metafs import table_mfs
 
     mfs = table_mfs(table)
+    # Existing blobs may reference their data file under a scan
+    # spelling; fold each onto the manifest spelling the new bitmaps
+    # carry, so one data file never ends up with two vectors.
+    from ic_spark.compaction.planner import FileLookup
+
+    paths = FileLookup(data_tasks).paths
+
+    def ref_of(b) -> str:
+        ref = b.properties.get("referenced-data-file", "")
+        return paths.get(ref, ref)
+
     superseded: set[str] = set()
     for t in pos:
         if t.file_format != "puffin":
@@ -347,7 +358,7 @@ def commit_deletion_vectors(
             for b in read_puffin(mfs.read_bytes(t.data_file_path))
             if b.type == DV_BLOB_TYPE
         ]
-        refs = {b.properties.get("referenced-data-file", "") for b in existing}
+        refs = {ref_of(b) for b in existing}
         if not refs & merged.keys():
             continue  # untouched puffin file stays as-is
         superseded.add(t.data_file_path)
@@ -358,7 +369,7 @@ def commit_deletion_vectors(
             # union, not last-wins-overwrite.
             dv_fold(
                 merged,
-                b.properties.get("referenced-data-file", ""),
+                ref_of(b),
                 b.data,
                 int(b.properties.get("cardinality", "0")),
             )
@@ -422,7 +433,7 @@ def commit_deletion_vectors_distributed(
     distributed over ``num_files`` puffin files (default: the session's
     parallelism) instead of one.
     """
-    _, pos, _eq = table.scan_tasks()
+    data, pos, _eq = table.scan_tasks()
     puffin_paths = sorted(
         t.data_file_path for t in pos if t.file_format == "puffin"
     )
@@ -490,9 +501,13 @@ def commit_deletion_vectors_distributed(
             )
         )
         # binaryFile yields file:-prefixed URIs; manifests store plain
-        # paths — normalize before comparing.
+        # paths — normalize before comparing.  Blob refs fold onto the
+        # manifest spelling the new bitmaps carry (one vector per file).
+        from ic_spark.compaction.planner import FileLookup
+
         plain = F.regexp_replace(F.col("puffin_path"), "^file:", "")
-        inv = inv.withColumn("puffin_path", plain).persist()
+        ref = FileLookup(data).canonical(F.col("ref"))
+        inv = inv.withColumn("puffin_path", plain).withColumn("ref", ref).persist()
         sup_paths = {
             r.puffin_path
             for r in inv.join(

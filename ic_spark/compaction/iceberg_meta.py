@@ -359,7 +359,7 @@ def fill_partition_values(
     id_to_ice: dict[int, Any],
 ) -> dict | None:
     """Convert Iceberg INTERNAL partition representations into strings
-    the planner's partition fill (``attach_partition_values``:
+    the planner's partition fill (``planner.FileLookup``:
     ``coalesce(page, CAST(str(value)))``) resolves to the right typed
     values.
 
@@ -1803,6 +1803,16 @@ class IcebergTable:
         if name not in refs:
             raise ValueError(f"unknown ref: {name}")
         return refs[name]["snapshot-id"]
+
+    def remove_orphan_files(
+        self, older_than_s: float = 3 * 24 * 3600, delete: bool = False
+    ) -> list[str]:
+        """Not supported on the spec flavor: its data files are listed in
+        manifests that this flavor does not sweep the table root
+        against, so it cannot tell an orphan from a live file."""
+        raise NotImplementedError(
+            "remove_orphan_files is supported on JSON-manifest tables only"
+        )
 
     def expire_snapshots(self) -> list[str]:
         """Retain the current snapshot plus every ref target; return

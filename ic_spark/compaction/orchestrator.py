@@ -15,7 +15,8 @@ from __future__ import annotations
 import os
 import uuid
 
-from pyspark.sql import SparkSession
+import pyspark.sql.functions as F
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
 from ic_spark.compaction.manifest import ManifestTable
@@ -71,6 +72,19 @@ def spec_partition_entry_values(values: dict | None) -> dict:
         ): v
         for k, v in (values or {}).items()
     }
+
+
+def _live_position_deletes(rows: DataFrame, lookup) -> DataFrame:
+    """The ``(file_path, pos)`` position-delete rows whose data file the
+    file lookup knows, under its manifest spelling, deduplicated."""
+    from ic_spark.compaction.request import SYS_HIDDEN_FILE_PATH, SYS_HIDDEN_POS
+
+    live = lookup.find(F.col(SYS_HIDDEN_FILE_PATH))
+    return (
+        rows.where(live.isNotNull())
+        .select(live["path"].alias("file_path"), F.col(SYS_HIDDEN_POS).alias("pos"))
+        .dropDuplicates(["file_path", "pos"])
+    )
 
 
 class Compaction:
@@ -202,14 +216,12 @@ class Compaction:
         without this action a month of 1-minute batches is ~43k delete
         files whose UNION dominates scan planning.  The rewrite is
         O(delete data), never touches data files, and commits as one
-        atomic swap.  The live-path prune joins against the manifest's
-        file list — manifest-scale metadata the driver already holds,
-        so broadcasting it is free at any table size.
+        atomic swap.  The live-path prune looks each delete up in the
+        manifest's file list, a constant table in the plan — metadata
+        the driver already holds, so the prune ships no join side.
 
         Returns ``{"merged": n_input_files, "kept_rows": n}``.
         """
-        import pyspark.sql.functions as F
-
         from ic_spark.compaction.writer import _stats_from_footer
 
         data, pos, _eq = table.scan_tasks()
@@ -218,26 +230,20 @@ class Compaction:
         pos = [t for t in pos if t.file_format != "puffin"]
         if not pos:
             return {"merged": 0, "kept_rows": 0}
-        # Recorded delete paths are SCAN spellings (URI-encoded for
-        # parquet metadata, raw for binaryFile) — expand the live set
-        # to every spelling so no live delete is misjudged dangling
-        # (which would resurrect its rows).  Left-semi: duplicate keys
-        # on the broadcast side cannot double output rows.
+        # Recorded delete paths may be any scan spelling (URI-encoded
+        # for parquet metadata, raw for binaryFile) or the manifest's:
+        # a delete is live when the file lookup knows its spelling, so
+        # no live delete is misjudged dangling (which would resurrect
+        # its rows), and kept rows are rewritten under the manifest
+        # spelling so one row recorded twice is kept once.
         from ic_spark.compaction.planner import (
-            scan_path_variant_df,
+            FileLookup,
             scan_position_delete_rows,
         )
 
-        live = scan_path_variant_df(
-            self.spark, [t.data_file_path for t in data]
+        pruned = _live_position_deletes(
+            scan_position_delete_rows(self.spark, pos), FileLookup(data)
         )
-        pd_df = scan_position_delete_rows(self.spark, pos).toDF(
-            "file_path", "pos"
-        )
-        fp, ps = "file_path", "pos"
-        pruned = pd_df.join(
-            F.broadcast(live), F.col(fp) == F.col("path"), "left_semi"
-        ).dropDuplicates([fp, ps])
         from ic_spark.compaction.metafs import table_mfs
 
         mfs = table_mfs(table)
@@ -297,11 +303,11 @@ class Compaction:
         puffins = [t for t in pos if t.file_format == "puffin"]
         if len(puffins) < 2:
             return {"merged": 0, "dvs": 0}
-        from ic_spark.compaction.planner import _scan_path_variants
+        # Refs under any spelling of a live file fold onto its manifest
+        # spelling; a ref of no live file is dangling.
+        from ic_spark.compaction.planner import FileLookup
 
-        live = {
-            v for t in data for v in _scan_path_variants(t.data_file_path)
-        }
+        live = FileLookup(data).paths
         from ic_spark.compaction.metafs import table_mfs
 
         mfs = table_mfs(table)
@@ -310,8 +316,8 @@ class Compaction:
             for b in read_puffin(mfs.read_bytes(t.data_file_path)):
                 if b.type != DV_BLOB_TYPE:
                     continue
-                ref = b.properties.get("referenced-data-file", "")
-                if ref not in live:
+                ref = live.get(b.properties.get("referenced-data-file", ""))
+                if ref is None:
                     continue  # dangling vector: its data file is gone
                 dv_fold(
                     merged,
@@ -357,8 +363,6 @@ class Compaction:
 
         Returns ``{"converted": n_parquet_files, "dv_rows": n}``.
         """
-        import pyspark.sql.functions as F
-
         from ic_spark.compaction.deletes import commit_deletion_vectors
 
         data, pos, _eq = table.scan_tasks()
@@ -369,26 +373,20 @@ class Compaction:
         if not data:
             table.commit_rewrite([], removed)
             return {"converted": len(parquet_pos), "dv_rows": 0}
-        # Same every-spelling live set as rewrite_position_deletes.
+        # Same live-set rule as rewrite_position_deletes.
         from ic_spark.compaction.planner import (
-            scan_path_variant_df,
+            FileLookup,
             scan_position_delete_rows,
         )
 
-        live = scan_path_variant_df(
-            self.spark, [t.data_file_path for t in data]
-        )
-        pd_df = scan_position_delete_rows(self.spark, parquet_pos)
-        fp, ps = pd_df.columns[:2]
         matches = (
-            pd_df.select(
-                F.col(fp).alias("file_path"), F.col(ps).cast("long").alias("pos")
+            _live_position_deletes(
+                scan_position_delete_rows(self.spark, parquet_pos),
+                FileLookup(data),
             )
-            .join(F.broadcast(live), F.col("file_path") == F.col("path"), "left_semi")
-            .dropDuplicates(["file_path", "pos"])
             # pin once: the count below AND commit_deletion_vectors'
             # groupBy/applyInPandas both consume this — without the
-            # checkpoint the scan + semi-join would run end-to-end twice
+            # checkpoint the scan + live filter would run end-to-end twice
             # (same pattern as convert_equality_deletes)
               # stable_checkpoint: reliable when a checkpoint dir is set
             .transform(stable_checkpoint)
@@ -422,9 +420,10 @@ class Compaction:
 
         Returns ``{"converted": n_eq_files, "delete_rows": n}``.
         """
-        import pyspark.sql.functions as F
-
-        from ic_spark.compaction.planner import _scan_with_hidden_cols
+        from ic_spark.compaction.planner import (
+            _scan_with_hidden_cols,
+            equality_delete_rows,
+        )
         from ic_spark.compaction.request import (
             SYS_HIDDEN_FILE_PATH,
             SYS_HIDDEN_POS,
@@ -451,9 +450,7 @@ class Compaction:
                 with_pos=True,
                 columns=eq_cols,
             )
-            eq_del = _scan_with_hidden_cols(
-                self.spark, list(group.tasks), with_seq=True, columns=eq_cols
-            )
+            eq_del = equality_delete_rows(self.spark, group, table.schema())
             cond = F.col(f"d.{SYS_HIDDEN_SEQ_NUM}") < F.col(
                 f"e.{SYS_HIDDEN_SEQ_NUM}"
             )

@@ -16,12 +16,16 @@ Spark-first choices (vs. the reference's hand-built scan):
   the vectorized Parquet scan, before any shuffle, so the file→row
   mapping is exact (reference per-file counter:
   ``iceberg_file_task_scan.rs:234-247``).
-- The per-file sequence number is a per-scan-group literal
-  (reference ``add_seq_num_into_batch``,
-  ``iceberg_file_task_scan.rs:265-280``): files are grouped by
-  sequence number and each group is ONE multi-path vectorized scan, so
-  a table with N files but few distinct sequence numbers stays a few
-  scans, not N.
+- One scan per (file format, write schema) group: sequence numbers
+  never split a scan.  Each row gets its file's attributes — sequence
+  number (reference ``add_seq_num_into_batch``,
+  ``iceberg_file_task_scan.rs:265-280``), manifest path, identity
+  partition values, ``first_row_id`` — from one per-file lookup keyed
+  on the scan's path column (:class:`FileLookup`).  The lookup is a
+  constant hash table Catalyst folds into the plan: building it runs
+  no Spark job and costs O(1) py4j calls however many files there are.
+- Delete files are read under an enforced schema, so building the plan
+  runs no schema-inference job.
 - Delete tables are broadcast when small (the typical case — delete
   files are a fraction of data); at 100 TB the anti-join then never
   shuffles the data side.  AQE handles the large-delete fallback by
@@ -34,17 +38,34 @@ Spark-first choices (vs. the reference's hand-built scan):
 
 from __future__ import annotations
 
+import json
+import os
+import zlib
 from collections import defaultdict
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql.types import (
+    ArrayType,
+    LongType,
+    MapType,
+    StringType,
+    StructField,
+    StructType,
+)
 
-from ic_spark.compaction.evolution import evolved_projection, validate_file_schemas
+from ic_spark.compaction.evolution import (
+    _local_path,
+    evolved_projection,
+    validate_file_schemas,
+)
 from ic_spark.compaction.request import (
+    LAST_UPDATED_SEQ_COL,
+    ROW_ID_COL,
     SYS_HIDDEN_FILE_PATH,
     SYS_HIDDEN_POS,
     SYS_HIDDEN_SEQ_NUM,
-    FileContent,
+    EqualityDeleteGroup,
     FileScanTask,
     RewriteFilesRequest,
     split_equality_delete_groups,
@@ -54,6 +75,10 @@ from ic_spark.compaction.request import (
 # hint.  (AQE would usually discover this, but being explicit removes a
 # shuffle of the — potentially 100 TB — data side from the static plan.)
 BROADCAST_DELETE_BYTES = 256 * 1024 * 1024
+
+# Raw scan-path column of one scan group, read by the file lookup.
+_SCAN_PATH = "__scan_path"
+_FILE = "__file"
 
 
 def _scan_with_hidden_cols(
@@ -65,12 +90,22 @@ def _scan_with_hidden_cols(
     columns: list[str] | None = None,
     name_mapping: dict | None = None,
     schema_history: dict | None = None,
+    lineage: dict | None = None,
 ) -> DataFrame | None:
-    """Scan file tasks, grouped by sequence number, with hidden columns.
+    """Scan file tasks with hidden columns: one multi-path vectorized
+    scan per (file format, write schema) group, whatever the number of
+    sequence numbers.
 
-    One multi-path vectorized scan per distinct sequence number; hidden
-    columns are derived at scan time (metadata columns + one literal),
-    i.e. before any shuffle can break file→row identity.
+    Per-file attributes come from one job-free :class:`FileLookup`
+    keyed on the scan's own path column, so they are exact per row and
+    exist before any shuffle can break file→row identity:
+    ``sys_hidden_seq_num`` (``with_seq``), the MANIFEST spelling of the
+    path in ``sys_hidden_file_path`` plus ``sys_hidden_pos``
+    (``with_pos``), identity partition values, and — with a
+    ``lineage`` map (manifest path → first_row_id) — the row-lineage
+    columns ``_row_id`` / ``_last_updated_sequence_number`` (``schema``
+    must then be :func:`lineage_scan_schema`).  A scan with none of
+    these builds no lookup.
 
     Schema evolution: with an enforced ``schema``, old files null-fill
     added columns and Spark's Parquet reader applies widening reads;
@@ -82,39 +117,38 @@ def _scan_with_hidden_cols(
     """
     if not tasks:
         return None
+    # _row_id derives from the row position.
+    with_pos = with_pos or lineage is not None
     cur_sid = schema_history["current_id"] if schema_history else None
     # Identity partition columns dropped from hive-layout data pages
-    # must be re-attached from manifest partition values — done HERE so
-    # every consumer (MoR, changelog, incremental, rowops) sees real
-    # values, not page nulls.  The join needs the hidden path column;
-    # request it internally and strip it after the fill if the caller
-    # didn't ask for positions.
+    # are re-attached from manifest partition values HERE, so every
+    # consumer (MoR, changelog, incremental, rowops) sees real values,
+    # not page nulls.
     pv_names: set[str] = set()
     for t in tasks:
-        pv = getattr(t, "partition_values", None)
-        if pv:
-            pv_names.update(pv)
+        if t.partition_values:
+            pv_names.update(t.partition_values)
     if columns is not None:
         pv_names &= set(columns)
     elif schema is not None:
         pv_names &= {f.name for f in schema.fields}
-    need_fill = bool(pv_names)
-    # The fill needs only the PATH column, which every format's native
-    # reader exposes — never force the positional (codec) scan path
-    # for it.
-    want_path = with_pos or need_fill
-    # Group by (sequence number, file format, write schema): one
-    # multi-path scan per group.  The reference's task list mixes
-    # formats freely (DataFileFormat enum, proto.rs:282-289); the
-    # write-schema component only splits groups on multi-schema tables
-    # with activation tracking (schema_history present).
-    by_seq: dict[tuple[int, str, int | None], list[str]] = defaultdict(list)
+    partition_cols = sorted(pv_names)
+    lookup = None
+    if with_seq or with_pos or partition_cols:
+        lookup = FileLookup(tasks, partition_cols, lineage)
+    # The reference's task list mixes formats freely (DataFileFormat
+    # enum, proto.rs:282-289).  The write schema is the tracked schema
+    # id on tables with activation tracking (schema_history present);
+    # on name-mapped parquet it is the footer schema, because schema
+    # merging refuses two generations whose column types differ.
+    groups: dict[tuple, list[str]] = defaultdict(list)
     for t in tasks:
-        fmt = getattr(t, "file_format", "parquet") or "parquet"
-        wsid = (
-            getattr(t, "write_schema_id", None) if schema_history else None
-        )
-        by_seq[(t.sequence_number, fmt, wsid)].append(t.data_file_path)
+        fmt = t.file_format or "parquet"
+        wsid = t.write_schema_id if schema_history else None
+        footer = None
+        if name_mapping and schema is not None and fmt == "parquet" and wsid in (None, cur_sid):
+            footer = _footer_schema(t.data_file_path)
+        groups[(fmt, wsid, footer)].append(t.data_file_path)
 
     if schema is not None:
         # Footer validation is a Parquet-metadata check.  Groups with a
@@ -124,71 +158,42 @@ def _scan_with_hidden_cols(
         parquet_paths = [
             t.data_file_path
             for t in tasks
-            if (getattr(t, "file_format", "parquet") or "parquet") == "parquet"
-            and (
-                not schema_history
-                or getattr(t, "write_schema_id", None) in (None, cur_sid)
-            )
+            if (t.file_format or "parquet") == "parquet"
+            and (not schema_history or t.write_schema_id in (None, cur_sid))
         ]
         if parquet_paths:
             validate_file_schemas(parquet_paths, schema, name_mapping)
 
     parts: list[DataFrame] = []
-    for key in sorted(
-        by_seq, key=lambda k: (k[0], k[1], -1 if k[2] is None else k[2])
-    ):
-        seq, fmt, wsid = key
-        paths = by_seq[key]
+    for key in sorted(groups, key=lambda k: (k[0], -1 if k[1] is None else k[1], k[2] or ())):
+        fmt, wsid, _footer = key
+        paths = groups[key]
+        write_schema = wsid is not None and wsid != cur_sid
         if fmt != "parquet":
-            if wsid is not None and wsid != cur_sid:
+            if write_schema:
                 # Field-id resolution for NON-parquet groups too: the
                 # codec scans read by NAME, so an ORC/Avro file written
-                # before a rename read the renamed column as all-NULL
-                # and a dropped-then-re-added column resurrected old
-                # data (r9 review find).  Scan under the WRITE schema,
-                # then project onto the current one by field id,
-                # keeping the scan's hidden columns.
+                # before a rename must be scanned under its WRITE
+                # schema and projected onto the current one by field
+                # id — else the renamed column reads all-NULL and a
+                # dropped-then-re-added column resurrects old data.
                 write_struct, proj = _history_projection_cols(
                     schema_history, wsid, columns
                 )
                 g = _scan_non_parquet_group(
-                    spark,
-                    paths,
-                    fmt,
-                    seq,
-                    write_struct,
-                    with_seq,
-                    with_pos,
-                    None,
-                    with_path=want_path,
+                    spark, paths, fmt, write_struct, with_pos, None, lookup is not None
                 )
-                hidden = [
-                    F.col(c)
-                    for c in (
-                        SYS_HIDDEN_SEQ_NUM,
-                        SYS_HIDDEN_FILE_PATH,
-                        SYS_HIDDEN_POS,
-                    )
-                    if c in g.columns
-                ]
+                hidden = [c for c in (_SCAN_PATH, SYS_HIDDEN_POS) if c in g.columns]
                 parts.append(g.select(*proj, *hidden))
             else:
                 parts.append(
                     _scan_non_parquet_group(
-                        spark,
-                        paths,
-                        fmt,
-                        seq,
-                        schema,
-                        with_seq,
-                        with_pos,
-                        columns,
-                        with_path=want_path,
+                        spark, paths, fmt, schema, with_pos, columns, lookup is not None
                     )
                 )
             continue
         cols: list = []
-        if wsid is not None and wsid != cur_sid:
+        if write_schema:
             # Field-id resolution against the group's WRITE schema
             # (Iceberg exact semantics): renames read the old name,
             # widenings cast, absent ids null-fill — and a re-added
@@ -212,11 +217,8 @@ def _scan_with_hidden_cols(
                 cols.extend(F.col(c) for c in columns)
             else:
                 cols.append(F.col("*"))
-        if with_seq:
-            # Reference add_seq_num_into_batch: per-file constant.
-            cols.append(F.lit(seq).cast("long").alias(SYS_HIDDEN_SEQ_NUM))
-        if want_path:
-            cols.append(F.col("_metadata.file_path").alias(SYS_HIDDEN_FILE_PATH))
+        if lookup is not None:
+            cols.append(F.col("_metadata.file_path").alias(_SCAN_PATH))
         if with_pos:
             # Reference add_file_path_pos_into_batch: running per-file
             # row index.  _metadata.row_index matches the reference's
@@ -227,34 +229,59 @@ def _scan_with_hidden_cols(
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)
-    if need_fill:
-        # Enforced/merged schemas surface dropped columns as nulls; a
-        # pruned or inferred scan may omit them entirely — fill only
-        # what is present (absence keeps the old plan-time error).
-        present = sorted(pv_names & set(out.columns))
-        if present:
-            fill = {}
-            for t in tasks:
-                pv = getattr(t, "partition_values", None)
-                if not pv:
-                    continue
-                m = {
-                    c: (
-                        None
-                        if pv[c] is None
-                        or pv[c] == "__HIVE_DEFAULT_PARTITION__"
-                        else str(pv[c])
-                    )
-                    for c in present
-                    if c in pv
-                }
-                if m:
-                    fill[t.data_file_path] = m
-            if fill:
-                out = attach_partition_values(spark, out, fill, present)
-        if not with_pos:
-            out = out.drop(SYS_HIDDEN_FILE_PATH)
-    return out
+    if lookup is None:
+        return out
+    return _with_file_attrs(out, lookup, with_seq, with_pos, lineage is not None)
+
+
+def _footer_schema(path: str) -> tuple | None:
+    """A local parquet file's physical (name, type) columns; None when
+    pyarrow cannot read its footer here."""
+    import pyarrow.parquet as pq
+
+    local = _local_path(path)
+    if local is None or os.path.isdir(local):
+        return None
+    footer = pq.read_schema(local)
+    return tuple(zip(footer.names, map(str, footer.types)))
+
+
+def _with_file_attrs(
+    scan: DataFrame, lookup: "FileLookup", with_seq: bool, with_pos: bool, lineage: bool
+) -> DataFrame:
+    """Project a scan's raw path column onto its file's attributes.
+
+    The attribute struct is computed once per row in its own projection
+    (Catalyst keeps a non-trivial expression referenced several times
+    in a separate Project rather than inlining it per reference)."""
+    f = F.col(_FILE)
+    out = scan.select("*", lookup.attrs(F.col(_SCAN_PATH)).alias(_FILE))
+    types = {fld.name: fld.dataType for fld in out.schema.fields}
+    lineage_cols = (ROW_ID_COL, LAST_UPDATED_SEQ_COL) if lineage else ()
+    cols = []
+    for c in out.columns:
+        if c in (_FILE, _SCAN_PATH, SYS_HIDDEN_POS) or c in lineage_cols:
+            continue
+        if c in lookup.partition_fields:
+            # Enforced/merged schemas surface dropped columns as nulls;
+            # files that DO carry the column in their pages win.
+            pv = f[lookup.partition_fields[c]].cast(types[c])
+            cols.append(F.coalesce(F.col(c), pv).alias(c))
+        else:
+            cols.append(F.col(c))
+    if with_seq:
+        cols.append(f["seq"].alias(SYS_HIDDEN_SEQ_NUM))
+    if with_pos:
+        cols.append(f["path"].alias(SYS_HIDDEN_FILE_PATH))
+        cols.append(F.col(SYS_HIDDEN_POS))
+    if lineage:
+        # Iceberg v3 row lineage: a file's materialized columns win;
+        # otherwise _row_id = first_row_id + position and the last
+        # updated sequence number is the file's.
+        row_id = F.coalesce(F.col(ROW_ID_COL), f["first_row_id"] + F.col(SYS_HIDDEN_POS))
+        last_seq = F.coalesce(F.col(LAST_UPDATED_SEQ_COL), f["seq"])
+        cols += [row_id.alias(ROW_ID_COL), last_seq.alias(LAST_UPDATED_SEQ_COL)]
+    return out.select(*cols)
 
 
 def _history_projection_cols(
@@ -264,8 +291,6 @@ def _history_projection_cols(
     write-schema group — shared by the parquet reader and the non-
     parquet codec scans so EVERY format resolves renames/widenings/
     re-adds by field id, not by name."""
-    from pyspark.sql.types import StructField, StructType
-
     from ic_spark.compaction.evolution import is_promotable
 
     write_fields = schema_history["schemas"][wsid]
@@ -321,14 +346,14 @@ def _scan_non_parquet_group(
     spark: SparkSession,
     paths: list[str],
     fmt: str,
-    seq: int,
     schema,
-    with_seq: bool,
     with_pos: bool,
     columns: list[str] | None,
     with_path: bool = False,
 ) -> DataFrame:
-    """Scan one (seq, format) group of Avro or ORC data files.
+    """Scan one group of Avro or ORC data files: the user columns, then
+    the raw scan path (``with_path``) and row position (``with_pos``)
+    under the names the ``_scan_with_hidden_cols`` tail reads.
 
     Avro: the distributed pure-Python codec scan (sources/avro_scan.py)
     computes exact per-file running row positions during decode — the
@@ -340,56 +365,32 @@ def _scan_non_parquet_group(
     the native reader's row order (pinned in tests).
     """
     with_path = with_path or with_pos
-    if fmt == "avro":
-        from ic_spark.sources import avro_scan
+    if fmt == "avro" or (fmt == "orc" and with_pos):
+        if fmt == "avro":
+            from ic_spark.sources import avro_scan as codec
 
-        df = avro_scan.read_avro_distributed(
-            spark,
-            paths,
-            schema=schema,
-            columns=columns,
-            with_path_pos=with_pos,
-            with_path=with_path,
-        )
-        cols: list = []
-        if columns:
-            cols.extend(F.col(c) for c in columns)
-        else:
-            cols.extend(
-                F.col(c)
-                for c in df.columns
-                if c not in (avro_scan.FILE_PATH_COL, avro_scan.POS_COL)
+            df = codec.read_avro_distributed(
+                spark,
+                paths,
+                schema=schema,
+                columns=columns,
+                with_path_pos=with_pos,
+                with_path=with_path,
             )
-        if with_seq:
-            cols.append(F.lit(seq).cast("long").alias(SYS_HIDDEN_SEQ_NUM))
-        if with_path:
-            cols.append(F.col(avro_scan.FILE_PATH_COL).alias(SYS_HIDDEN_FILE_PATH))
-        if with_pos:
-            cols.append(F.col(avro_scan.POS_COL).alias(SYS_HIDDEN_POS))
-        return df.select(*cols)
-    if fmt == "orc":
-        if with_pos:
-            from ic_spark.sources import orc_scan
+        else:
+            from ic_spark.sources import orc_scan as codec
 
-            df = orc_scan.read_orc_distributed(
+            df = codec.read_orc_distributed(
                 spark, paths, schema=schema, columns=columns, with_path_pos=True
             )
-            cols = []
-            if columns:
-                cols.extend(F.col(c) for c in columns)
-            else:
-                cols.extend(
-                    F.col(c)
-                    for c in df.columns
-                    if c not in (orc_scan.FILE_PATH_COL, orc_scan.POS_COL)
-                )
-            if with_seq:
-                cols.append(F.lit(seq).cast("long").alias(SYS_HIDDEN_SEQ_NUM))
-            cols.append(
-                F.col(orc_scan.FILE_PATH_COL).alias(SYS_HIDDEN_FILE_PATH)
-            )
-            cols.append(F.col(orc_scan.POS_COL).alias(SYS_HIDDEN_POS))
-            return df.select(*cols)
+        hidden = (codec.FILE_PATH_COL, codec.POS_COL)
+        cols = [F.col(c) for c in columns or df.columns if c not in hidden]
+        if with_path:
+            cols.append(F.col(codec.FILE_PATH_COL).alias(_SCAN_PATH))
+        if with_pos:
+            cols.append(F.col(codec.POS_COL).alias(SYS_HIDDEN_POS))
+        return df.select(*cols)
+    if fmt == "orc":
         reader = spark.read
         if schema is not None:
             reader = reader.schema(schema)
@@ -398,15 +399,11 @@ def _scan_non_parquet_group(
         # options ("modifiedBefore") and the scan reads half the files.
         df = reader.orc(list(paths))
         cols = [F.col(c) for c in columns] if columns else [F.col("*")]
-        if with_seq:
-            cols.append(F.lit(seq).cast("long").alias(SYS_HIDDEN_SEQ_NUM))
         if with_path:
-            # Path-only (partition fill): the NATIVE vectorized reader
-            # exposes _metadata.file_path — only row_index forces the
-            # codec scan above.
-            cols.append(
-                F.col("_metadata.file_path").alias(SYS_HIDDEN_FILE_PATH)
-            )
+            # Path-only (lookup): the NATIVE vectorized reader exposes
+            # _metadata.file_path — only row_index forces the codec
+            # scan above.
+            cols.append(F.col("_metadata.file_path").alias(_SCAN_PATH))
         return df.select(*cols)
     raise ValueError(f"unsupported data file format: {fmt}")
 
@@ -418,49 +415,131 @@ def scan_position_delete_rows(
     (sys_hidden_file_path, sys_hidden_pos), tolerating BOTH column-name
     flavors: the Iceberg spec's ``file_path``/``pos`` (what
     write_position_deletes emits, so real Iceberg readers interop) and
-    the legacy ``sys_hidden_*`` names.
+    the legacy ``sys_hidden_*`` names.  Paths keep the spelling the
+    files recorded (:func:`position_delete_rows` folds them).
 
     Files are grouped by their footer's leading column names before the
     multi-path read — a single mixed read would resolve by one sampled
     schema and silently NULL the other flavor's columns.  The sniff is
     one pyarrow footer read per DELETE file (delete files are few and
-    maintenance-bounded; Iceberg planning reads these footers too).
+    maintenance-bounded; Iceberg planning reads these footers too), and
+    each group is read under the enforced ``(string, long)`` schema of
+    the sniffed names, so planning runs no schema-inference job.  A
+    footer pyarrow cannot read (object-store path) leaves its group to
+    Spark's inference under the spec names.
     """
-    from collections import defaultdict as _dd
+    import pyarrow.parquet as pq
 
-    import pyarrow.parquet as _pq
-
-    import os as _os
-
-    def _sniff(path: str) -> tuple:
+    def sniff(path: str) -> tuple | None:
         p = path
-        if _os.path.isdir(p):  # tasks may reference a directory write
+        if os.path.isdir(p):  # tasks may reference a directory write
             p = next(
                 (
-                    _os.path.join(p, n)
-                    for n in sorted(_os.listdir(p))
+                    os.path.join(p, n)
+                    for n in sorted(os.listdir(p))
                     if n.endswith(".parquet")
                 ),
                 p,
             )
         try:
-            return tuple(_pq.read_schema(p).names[:2])
+            return tuple(pq.read_schema(p).names[:2])
         except Exception:
-            return ("file_path", "pos")
+            return None
 
-    groups: dict[tuple, list[str]] = _dd(list)
+    groups: dict[tuple | None, list[str]] = defaultdict(list)
     for t in tasks:
-        groups[_sniff(t.data_file_path)].append(t.data_file_path)
-    parts = [
-        spark.read.parquet(*paths)
-        .select(*list(names)[:2])
-        .toDF(SYS_HIDDEN_FILE_PATH, SYS_HIDDEN_POS)
-        for names, paths in sorted(groups.items())
-    ]
+        groups[sniff(t.data_file_path)].append(t.data_file_path)
+    parts = []
+    for names, paths in sorted(groups.items(), key=lambda kv: kv[0] or ()):
+        if names is None:
+            df = spark.read.parquet(*paths).select(
+                "file_path", F.col("pos").cast("long")
+            )
+        else:
+            df = spark.read.schema(
+                StructType(
+                    [
+                        StructField(names[0], StringType()),
+                        StructField(names[1], LongType()),
+                    ]
+                )
+            ).parquet(*paths)
+        parts.append(df.toDF(SYS_HIDDEN_FILE_PATH, SYS_HIDDEN_POS))
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)
     return out
+
+
+def position_delete_rows(
+    spark: SparkSession,
+    tasks: list[FileScanTask],
+    data_files: list[FileScanTask],
+) -> DataFrame:
+    """Every (sys_hidden_file_path, sys_hidden_pos) row of parquet
+    position-delete files and deletion vectors (puffin), each path
+    folded onto the MANIFEST spelling of its data file in
+    ``data_files`` — the spelling the data scan's hidden path column
+    carries.  Deletes recorded under any scan spelling (``file:``
+    scheme, %XX-encoded ASCII) or the plain manifest path therefore
+    meet their rows in a plain equi-join; a path of no file in
+    ``data_files`` stays as recorded and matches nothing.
+    """
+    pq_tasks = [t for t in tasks if t.file_format != "puffin"]
+    dv_tasks = [t for t in tasks if t.file_format == "puffin"]
+    parts = []
+    if pq_tasks:
+        parts.append(scan_position_delete_rows(spark, pq_tasks))
+    if dv_tasks:
+        parts.append(
+            _scan_deletion_vectors(
+                spark, [t.data_file_path for t in dv_tasks]
+            ).toDF(SYS_HIDDEN_FILE_PATH, SYS_HIDDEN_POS)
+        )
+    out = parts[0]
+    for p in parts[1:]:
+        out = out.unionByName(p)
+    lookup = FileLookup(data_files)
+    return out.select(
+        lookup.canonical(F.col(SYS_HIDDEN_FILE_PATH)).alias(SYS_HIDDEN_FILE_PATH),
+        F.col(SYS_HIDDEN_POS),
+    )
+
+
+def equality_delete_rows(
+    spark: SparkSession,
+    group: EqualityDeleteGroup,
+    schema=None,
+    name_mapping: dict | None = None,
+    schema_history: dict | None = None,
+) -> DataFrame:
+    """One scan of an equality-delete group: its key columns plus
+    ``sys_hidden_seq_num``.
+
+    The files are read under ``schema``'s key fields (footers checked
+    by ``validate_file_schemas``), so planning runs no schema-inference
+    job.  With a ``name_mapping``, a delete file written BEFORE a key
+    rename stores the key under its OLD footer name, and the evolved
+    projection coalesces the current name with its historical names.
+    """
+    eq_cols = list(group.equality_ids)
+    by_name = {f.name: f for f in schema.fields} if schema is not None else {}
+    eq_schema = None
+    if all(c in by_name for c in eq_cols):
+        eq_schema = StructType([by_name[c] for c in eq_cols])
+    return _scan_with_hidden_cols(
+        spark,
+        list(group.tasks),
+        schema=eq_schema,
+        with_seq=True,
+        # columns rides along even with the enforced schema: a mixed
+        # group (one delete per write-schema generation) must prune its
+        # history-projected parts to eq_cols too or the union of parts
+        # mismatches.
+        columns=eq_cols,
+        name_mapping=name_mapping if eq_schema is not None else None,
+        schema_history=schema_history,
+    )
 
 
 def _scan_deletion_vectors(spark: SparkSession, paths: list[str]) -> DataFrame:
@@ -473,7 +552,6 @@ def _scan_deletion_vectors(spark: SparkSession, paths: list[str]) -> DataFrame:
     position-delete files — plan shape unchanged, delete data never
     driver-side.
     """
-    from pyspark.sql.types import LongType, StringType, StructField, StructType
 
     def expand_dvs(batches):
         import pandas as pd
@@ -582,16 +660,15 @@ def _uri_spelling(p: str) -> str:
 
 def _scan_path_variants(p: str) -> list[str]:
     """Every string the scan's hidden path column could spell for a
-    manifest path ``p`` — the broadcast-map join key set.
+    manifest path ``p`` — the key set of its :class:`FileLookup` entry.
 
     Two spellings exist: the raw filesystem path (binaryFile-based
     scans: avro, and the ``file:``-prefixed raw form) and the Hadoop
     Path URI (parquet/orc ``_metadata.file_path``: illegal ASCII
     percent-encoded, non-ASCII raw — :func:`_uri_spelling`).  Encoding
-    is done HERE on the map side so the join stays a plain broadcast
-    hash equi-join on the unmodified scan column — no per-row decode
-    in the hot path.  Variants are deduped per path; callers must also
-    dedupe ACROSS paths (a duplicate join key doubles joined rows).
+    is done HERE on the build side so the scan column is looked up
+    unmodified — no per-row decode in the hot path.  Variants are
+    deduped per path.
     """
     enc = _uri_spelling(p)
     out = [p]
@@ -604,144 +681,113 @@ def _scan_path_variants(p: str) -> list[str]:
     return out
 
 
-def scan_path_variant_df(spark: SparkSession, paths, col_name: str = "path"):
-    """One-column DataFrame holding EVERY scan spelling of ``paths`` —
-    the broadcast probe side for left-semi liveness checks (delete
-    maintenance).  Left-semi tolerates duplicate keys, so a plain set
-    union suffices; above the file-count threshold the list ships as
-    one Arrow batch instead of Py4J-pickled tuples."""
-    vals = sorted({v for p in paths for v in _scan_path_variants(p)})
-    if len(vals) > LINEAGE_ARROW_FILE_THRESHOLD:
-        import pandas as pd
-
-        return spark.createDataFrame(
-            pd.DataFrame({col_name: pd.Series(vals, dtype="string")}),
-            schema=f"{col_name} string",
-        )
-    return spark.createDataFrame(
-        [(v,) for v in vals] or [("",)], f"{col_name} string"
-    )
+def _file_spellings(path: str) -> list[str]:
+    """Every string a scan's path column could spell for ``path``: the
+    :func:`_scan_path_variants`, plus those of the filesystem path a
+    ``file:`` URI names."""
+    out = _scan_path_variants(path)
+    local = _local_path(path) if path.startswith("file:") else None
+    if local is not None and local != path:
+        out += [v for v in _scan_path_variants(local) if v not in out]
+    return out
 
 
-def _normalize_delete_join_paths(
-    spark: SparkSession, data: DataFrame, pos_del: DataFrame, data_files
-):
-    """Fold every scan spelling of the data files' paths onto the
-    MANIFEST spelling on BOTH sides of the position-delete anti-join.
+def _task_files(path: str) -> list[str]:
+    """The files a task path stands for: the path itself, or every
+    non-hidden file under a local directory (tasks may reference a
+    directory write; Spark skips names starting with ``_`` or ``.``)."""
+    local = _local_path(path)
+    if local is None or not os.path.isdir(local):
+        return [path]
+    return [
+        os.path.join(root, n)
+        for root, _dirs, names in sorted(os.walk(local))
+        for n in sorted(names)
+        if not n.startswith(("_", "."))
+    ]
 
-    The scan's hidden path column carries Hadoop-URI/raw spellings
-    (``file:`` scheme, %XX-encoded ASCII) while externally written
-    position deletes and DV refs record the manifest's plain path — an
-    unnormalized equi-join matches nothing and every deleted row
-    silently resurfaces (r9 review find).  Same broadcast map-side
-    dual-emission pattern as :func:`attach_partition_values`, with the
-    same collision guard; skipped entirely when no file has more than
-    one spelling (the map would be the identity).
+
+class FileLookup:
+    """Per-file attributes of a task list, looked up by any spelling of
+    a file's path: ``path`` (the manifest spelling; for a directory
+    task, the file's own path), ``seq`` (its sequence number), one
+    ``pv<i>`` string per identity partition column, and, with a
+    ``lineage`` map (manifest path → first_row_id), ``first_row_id``.
+
+    The table is one JSON string literal parsed by ``from_json``, which
+    Catalyst constant-folds into the plan: building it runs no Spark
+    job and costs O(1) py4j calls however many files there are.  A
+    Spark map lookup scans its keys linearly, so the literal is an
+    array of small maps bucketed by ``crc32`` of the spelling (Python's
+    ``zlib.crc32`` and Spark's ``crc32`` agree on the UTF-8 bytes): a
+    row costs one hash and a few key compares.  Each spelling is
+    emitted here, on the build side, so the scan column is looked up
+    unmodified.  Two files sharing a spelling (``/p=a b`` vs
+    ``/p=a%20b``) are ambiguous and refused: any binding would give
+    one file's attributes to the other's rows.  ``paths`` is the same
+    table on the driver: spelling → file path.
     """
-    seen: dict[str, str] = {}
-    multi = False
-    for t in data_files:
-        vs = _scan_path_variants(t.data_file_path)
-        if len(vs) > 1:
-            multi = True
-        for v in vs:
-            other = seen.get(v)
-            if other is None:
-                seen[v] = t.data_file_path
-            elif other != t.data_file_path:
-                raise ValueError(
-                    f"ambiguous scan path spelling {v!r}: "
-                    f"{other!r} vs {t.data_file_path!r}"
-                )
-    if not multi:
-        return data, pos_del
-    rows = sorted(seen.items())
-    map_schema = "__np_var string, __np_canon string"
-    if len(rows) > LINEAGE_ARROW_FILE_THRESHOLD:
-        import pandas as pd
 
-        map_df = spark.createDataFrame(
-            pd.DataFrame(rows, columns=["__np_var", "__np_canon"]).astype(
-                "string"
-            ),
-            schema=map_schema,
+    def __init__(
+        self,
+        tasks: list[FileScanTask],
+        partition_cols: list[str] = (),
+        lineage: dict | None = None,
+    ):
+        self.partition_fields = {c: f"pv{i}" for i, c in enumerate(partition_cols)}
+        fields = [StructField("path", StringType()), StructField("seq", LongType())]
+        fields += [StructField(n, StringType()) for n in self.partition_fields.values()]
+        if lineage is not None:
+            fields.append(StructField("first_row_id", LongType()))
+        self.struct = StructType(fields)
+        entries: dict[str, dict] = {}
+        self.paths: dict[str, str] = {}
+        for t in tasks:
+            pv = t.partition_values or {}
+            for path in _task_files(t.data_file_path):
+                rec = {"path": path, "seq": t.sequence_number}
+                for c, name in self.partition_fields.items():
+                    v = pv.get(c)
+                    hive_null = v is None or v == "__HIVE_DEFAULT_PARTITION__"
+                    rec[name] = None if hive_null else str(v)
+                if lineage is not None:
+                    rec["first_row_id"] = lineage.get(t.data_file_path)
+                for v in _file_spellings(path):
+                    other = self.paths.setdefault(v, path)
+                    if other != path:
+                        raise ValueError(
+                            f"ambiguous scan path spelling {v!r}: "
+                            f"{other!r} vs {path!r}"
+                        )
+                    entries[v] = rec
+        self.buckets = max(1, len(entries))
+        table: list[dict] = [{} for _ in range(self.buckets)]
+        for v, rec in entries.items():
+            table[zlib.crc32(v.encode("utf-8")) % self.buckets][v] = rec
+        self._table = F.from_json(
+            F.lit(json.dumps(table)), ArrayType(MapType(StringType(), self.struct))
         )
-    else:
-        map_df = spark.createDataFrame(rows, map_schema)
 
-    def norm(df: DataFrame) -> DataFrame:
-        out = df.join(
-            F.broadcast(map_df),
-            F.col(SYS_HIDDEN_FILE_PATH) == F.col("__np_var"),
-            "left",
+    def find(self, path: Column) -> Column:
+        """The attribute struct of ``path``, or NULL when no file in the
+        task list has that spelling."""
+        slot = F.crc32(path.cast("binary")) % self.buckets + 1
+        return F.element_at(F.element_at(self._table, slot.cast("int")), path)
+
+    def attrs(self, path: Column) -> Column:
+        """:meth:`find` that raises on a miss.  A scanned file always
+        has attributes; a NULL sequence number would turn the
+        equality-delete guard ``d.seq < e.seq`` false and bring deleted
+        rows back silently."""
+        miss = F.raise_error(
+            F.concat(F.lit("scan path missing from the file lookup: "), path)
         )
-        return out.withColumn(
-            SYS_HIDDEN_FILE_PATH,
-            F.coalesce(F.col("__np_canon"), F.col(SYS_HIDDEN_FILE_PATH)),
-        ).drop("__np_var", "__np_canon")
+        return F.coalesce(self.find(path), miss.cast(self.struct))
 
-    return norm(data), norm(pos_del)
-
-
-def attach_partition_values(
-    spark: SparkSession,
-    df: DataFrame,
-    fill: dict[str, dict[str, str | None]],
-    cols: list[str],
-) -> DataFrame:
-    """Re-attach identity partition columns on a hidden-col scan via a
-    broadcast (file_path → values) map — the attach_lineage pattern:
-    map-side dual-emission path normalization (scan paths carry the
-    ``file:`` scheme, manifest paths are plain), a plain broadcast hash
-    equi-join on the unmodified hidden path column, and per-column
-    ``coalesce(page_value, cast(map_value))`` so files that DO carry
-    the column in their pages win.  Cost scales with file count."""
-    types = {f.name: f.dataType for f in df.schema.fields}
-    rows: list[tuple] = []
-    seen: dict[str, str] = {}
-    for p, m in fill.items():
-        vals = tuple(m.get(c) for c in cols)
-        for v in _scan_path_variants(p):
-            other = seen.get(v)
-            if other is None:
-                seen[v] = p
-                rows.append((v,) + vals)
-            elif other != p:
-                # Two distinct files share a scan spelling (e.g.
-                # '/p=a b/f' vs '/p=a%20b/f') — any binding would
-                # silently attach the WRONG values to one of them.
-                raise ValueError(
-                    f"ambiguous scan path spelling {v!r}: "
-                    f"{other!r} vs {p!r}"
-                )
-    map_schema = "__pf_path string, " + ", ".join(
-        f"`__pf_{c}` string" for c in cols
-    )
-    if len(rows) > LINEAGE_ARROW_FILE_THRESHOLD:
-        # Same Arrow-batch routing as attach_lineage: above the
-        # threshold, Py4J-pickling millions of tuples dominates plan
-        # time; one Arrow batch ships the map instead.
-        import pandas as pd
-
-        map_df = spark.createDataFrame(
-            pd.DataFrame(
-                rows, columns=["__pf_path"] + [f"__pf_{c}" for c in cols]
-            ).astype("string"),
-            schema=map_schema,
-        )
-    else:
-        map_df = spark.createDataFrame(rows, map_schema)
-    out = df.join(
-        F.broadcast(map_df),
-        F.col(SYS_HIDDEN_FILE_PATH) == F.col("__pf_path"),
-        "left",
-    )
-    for c in cols:
-        out = out.withColumn(
-            c,
-            F.coalesce(F.col(c), F.col(f"__pf_{c}").cast(types[c])),
-        )
-    return out.drop("__pf_path", *[f"__pf_{c}" for c in cols])
+    def canonical(self, path: Column) -> Column:
+        """The manifest spelling of ``path``; a path of no file in the
+        task list passes through unchanged."""
+        return F.coalesce(self.find(path)["path"], path)
 
 
 def build_merge_on_read(
@@ -752,7 +798,10 @@ def build_merge_on_read(
     """Construct the MoR DataFrame: data minus deleted rows, user schema.
 
     Semantic port of ``build_merge_on_read`` + ``SqlBuilder.build``
-    (reference datafusion_processor.rs:254-308, 371-477).
+    (reference datafusion_processor.rs:254-308, 371-477).  One data
+    scan per (format, write-schema) group and one delete scan per
+    equality-delete group, whatever the number of sequence numbers;
+    building the plan runs no Spark job.
 
     ``lineage`` (Iceberg v3 row lineage, spec "Row Lineage"): a map
     ``file_path -> first_row_id`` covering every data file.  The output
@@ -761,114 +810,53 @@ def build_merge_on_read(
     ``first_row_id + position`` / the file's sequence number; files
     with None MATERIALIZE both as physical columns (compaction
     outputs), surfaced by appending the two nullable fields to the
-    enforced scan schema (plain files null-fill them).  The map ships
-    as a broadcast (file_path, first_row_id) join — never a driver-side
-    per-row loop — so it scales with file COUNT, not row count.
+    enforced scan schema (plain files null-fill them).  The map rides
+    in the scan's file lookup, so it scales with file COUNT, not rows.
     """
-    has_pos = bool(request.position_delete_files)
-    has_eq = bool(request.equality_delete_files)
     # The lineage metadata columns are never user columns — strip them
     # if an inferred schema picked them up from materialized files.
     user_cols = [f.name for f in strip_lineage_fields(request.schema).fields]
     scan_schema = request.schema
     if lineage is not None:
         scan_schema = lineage_scan_schema(request.schema)
+        user_cols += [ROW_ID_COL, LAST_UPDATED_SEQ_COL]
 
     data = _scan_with_hidden_cols(
         spark,
         request.data_files,
         schema=scan_schema,
-        with_seq=has_eq or lineage is not None,
-        with_pos=has_pos or lineage is not None,
+        with_seq=bool(request.equality_delete_files),
+        with_pos=bool(request.position_delete_files),
         name_mapping=request.name_mapping,
         schema_history=request.schema_history,
+        lineage=lineage,
     )
     if data is None:
         raise ValueError("rewrite request has no data files")
 
-    if has_pos:
+    if request.position_delete_files:
         # Position-delete schema is fixed (file_path, pos) — reference
         # datafusion_processor.rs:350-368.  Deletion-vector (puffin)
-        # tasks expand to the same two columns; both flavors union
-        # positionally into one anti-join side.
-        pq_tasks = [
-            t for t in request.position_delete_files if t.file_format != "puffin"
-        ]
-        dv_tasks = [
-            t for t in request.position_delete_files if t.file_format == "puffin"
-        ]
-        parts = []
-        if pq_tasks:
-            parts.append(scan_position_delete_rows(spark, pq_tasks))
-        if dv_tasks:
-            parts.append(
-                _scan_deletion_vectors(
-                    spark, [t.data_file_path for t in dv_tasks]
-                ).toDF(SYS_HIDDEN_FILE_PATH, SYS_HIDDEN_POS)
-            )
-        pos_del = parts[0]
-        for p in parts[1:]:
-            pos_del = pos_del.unionByName(p)
-        data, pos_del = _normalize_delete_join_paths(
-            spark, data, pos_del, request.data_files
+        # tasks expand to the same two columns in the same anti-join.
+        pos_del = position_delete_rows(
+            spark, request.position_delete_files, request.data_files
         )
         pos_del = _maybe_broadcast(pos_del, request.position_delete_files)
         data = apply_position_deletes(data, pos_del)
 
-    if has_eq:
-        # One anti-join per order-sensitive equality-id group, chained in
-        # task order (reference :279-305, group split :376-400).
-        # schema_history rides along: a delete file written BEFORE a
-        # key-column rename stores the key under its OLD name, and the
-        # field-id projection resolves it to the current name.
-        for group in split_equality_delete_groups(request.equality_delete_files):
-            eq_cols = list(group.equality_ids)
-            # name_mapping-only rename tracking (no schema_history /
-            # write_schema_id on the delete task): a delete file
-            # written BEFORE a key rename stores the key under its OLD
-            # footer name, and the plain columns= read would fail at
-            # plan time on the current name.  Route through the
-            # enforced-schema + evolved-projection path, which
-            # coalesces the current name with its historical names
-            # (r9 review find).
-            eq_schema = None
-            if request.name_mapping:
-                by_name = {f.name: f for f in request.schema.fields}
-                if all(c in by_name for c in eq_cols):
-                    from pyspark.sql.types import StructType as _ST
-
-                    eq_schema = _ST([by_name[c] for c in eq_cols])
-            eq_del = _scan_with_hidden_cols(
-                spark,
-                list(group.tasks),
-                schema=eq_schema,
-                with_seq=True,
-                # columns rides along even with the enforced schema: a
-                # mixed group (one delete per write-schema generation)
-                # must prune its history-projected parts to eq_cols too
-                # or the union of parts mismatches.
-                columns=eq_cols,
-                name_mapping=(
-                    request.name_mapping if eq_schema is not None else None
-                ),
-                schema_history=request.schema_history,
-            )
-            eq_del = _maybe_broadcast(eq_del, list(group.tasks))
-            data = apply_equality_deletes(data, eq_del, eq_cols)
+    # One anti-join per order-sensitive equality-id group, chained in
+    # task order (reference :279-305, group split :376-400).
+    # schema_history rides along: a delete file written BEFORE a
+    # key-column rename stores the key under its OLD name, and the
+    # field-id projection resolves it to the current name.
+    for group in split_equality_delete_groups(request.equality_delete_files):
+        eq_del = equality_delete_rows(
+            spark, group, request.schema, request.name_mapping, request.schema_history
+        )
+        eq_del = _maybe_broadcast(eq_del, list(group.tasks))
+        data = apply_equality_deletes(data, eq_del, list(group.equality_ids))
 
     # Final projection: hidden columns never leak (reference :447-448).
-    if lineage is not None:
-        from ic_spark.compaction.request import (
-            LAST_UPDATED_SEQ_COL,
-            ROW_ID_COL,
-        )
-
-        data = attach_lineage(spark, data, lineage)
-        return data.select(
-            *user_cols,
-            F.col(ROW_ID_COL),
-            F.col(LAST_UPDATED_SEQ_COL),
-        )
     return data.select(*user_cols)
 
 
@@ -876,10 +864,6 @@ def strip_lineage_fields(schema):
     """Drop the lineage metadata fields from a (possibly inferred)
     schema — compacted footers materialize them physically, but they
     are never user columns."""
-    from pyspark.sql.types import StructType
-
-    from ic_spark.compaction.request import LAST_UPDATED_SEQ_COL, ROW_ID_COL
-
     return StructType(
         [
             f
@@ -894,106 +878,10 @@ def lineage_scan_schema(schema):
     materialized files surface their physical ``_row_id`` /
     ``_last_updated_sequence_number`` columns and plain files null-fill
     them (any pre-existing lineage fields are stripped first)."""
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    from ic_spark.compaction.request import LAST_UPDATED_SEQ_COL, ROW_ID_COL
-
     return StructType(
         list(strip_lineage_fields(schema).fields)
         + [
             StructField(ROW_ID_COL, LongType(), True),
             StructField(LAST_UPDATED_SEQ_COL, LongType(), True),
         ]
-    )
-
-
-# Above this many files, attach_lineage builds its broadcast map via
-# one Arrow batch (pandas) instead of Py4J row-at-a-time serialization:
-# a million-file map must not pickle a million tuples through the
-# gateway just because a caller took the default (the same auto-routing
-# rule as DV_DISTRIBUTED_FILE_THRESHOLD).
-LINEAGE_ARROW_FILE_THRESHOLD = 4096
-
-
-def attach_lineage(
-    spark: SparkSession,
-    df: DataFrame,
-    lineage: dict,
-    arrow_threshold: int | None = None,
-) -> DataFrame:
-    """Resolve the Iceberg v3 lineage columns on a hidden-col scan:
-    ``_row_id`` = file first_row_id + position (or the file's
-    materialized column), ``_last_updated_sequence_number`` = the
-    materialized column or the file's sequence number.  ``df`` must
-    carry the hidden path/pos/seq columns AND the (nullable) lineage
-    fields from :func:`lineage_scan_schema`.  The file map ships as a
-    broadcast join — cost scales with file count, never rows.
-
-    Path normalization happens on the MAP side, not per scanned row:
-    scan paths carry the ``file:`` scheme and URI percent-encoding
-    while manifest paths are plain, so each map path is emitted under
-    every spelling the scan could produce (:func:`_scan_path_variants`)
-    and the join key is the raw hidden path column — no per-row
-    regexp/decode in the hot path, and the join stays a plain
-    broadcast hash equi-join on an unmodified column.  (The map itself
-    is inherently driver-sized: it is built from the already-planned
-    scan tasks, exactly like the reference's driver-side scan
-    planning; above :data:`LINEAGE_ARROW_FILE_THRESHOLD` files it
-    ships as one Arrow batch instead of Py4J-pickled tuples.)"""
-    from ic_spark.compaction.request import LAST_UPDATED_SEQ_COL, ROW_ID_COL
-
-    if arrow_threshold is None:
-        arrow_threshold = LINEAGE_ARROW_FILE_THRESHOLD
-    paths: list[str] = []
-    frids: list[int | None] = []
-    seen: dict[str, str] = {}
-    for p, frid in lineage.items():
-        for v in _scan_path_variants(p):
-            other = seen.get(v)
-            if other is None:
-                seen[v] = p
-                paths.append(v)
-                frids.append(frid)
-            elif other != p:
-                raise ValueError(
-                    f"ambiguous scan path spelling {v!r}: "
-                    f"{other!r} vs {p!r}"
-                )
-    if len(lineage) > arrow_threshold:
-        import pandas as pd
-
-        lin_df = spark.createDataFrame(
-            pd.DataFrame(
-                {
-                    "__lin_path": pd.Series(paths, dtype="string"),
-                    "__first_row_id": pd.array(frids, dtype="Int64"),
-                }
-            ),
-            schema="__lin_path string, __first_row_id long",
-        )
-    else:
-        lin_df = spark.createDataFrame(
-            list(zip(paths, frids)), "__lin_path string, __first_row_id long"
-        )
-    out = df.join(
-        F.broadcast(lin_df),
-        F.col(SYS_HIDDEN_FILE_PATH) == F.col("__lin_path"),
-        "left",
-    )
-    row_id = F.coalesce(
-        F.col(ROW_ID_COL), F.col("__first_row_id") + F.col(SYS_HIDDEN_POS)
-    )
-    last_seq = F.coalesce(
-        F.col(LAST_UPDATED_SEQ_COL), F.col(SYS_HIDDEN_SEQ_NUM)
-    )
-    others = [
-        c
-        for c in out.columns
-        if c
-        not in (ROW_ID_COL, LAST_UPDATED_SEQ_COL, "__lin_path", "__first_row_id")
-    ]
-    return out.select(
-        *others,
-        row_id.alias(ROW_ID_COL),
-        last_seq.alias(LAST_UPDATED_SEQ_COL),
     )

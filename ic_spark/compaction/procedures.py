@@ -75,9 +75,20 @@ def expire_snapshots(spark, table, **kw):
     return {"deleted_data_files_count": len(removed), "orphaned_paths": removed}
 
 
-def remove_orphan_files(spark, table, **kw):
+def remove_orphan_files(
+    spark,
+    table,
+    older_than_ms: float = 3 * 24 * 3600 * 1000,
+    dry_run: bool = True,
+    **kw,
+):
+    """Iceberg remove_orphan_files: files under the table root that no
+    retained snapshot references and that are older than
+    ``older_than_ms`` milliseconds (the 3-day default guards in-flight
+    writers).  Lists them; ``dry_run=False`` also deletes them.  Spec
+    tables raise NotImplementedError."""
     removed = table.remove_orphan_files(
-        **{k: v for k, v in kw.items() if k in ("older_than_ms", "dry_run")}
+        older_than_s=older_than_ms / 1000, delete=not dry_run
     )
     return {"orphan_file_location_count": len(removed), "paths": removed}
 

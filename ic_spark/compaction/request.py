@@ -11,7 +11,8 @@ Python mirror of the reference's native structs:
 Spark difference: we don't carry per-task byte ranges or projected field
 ids — Spark's FileSourceScanExec does its own split planning and Catalyst
 prunes columns; a task here is (path, seq_num, content) and the engine
-reads per-sequence-number groups with one vectorized Parquet scan each.
+reads each (format, write schema) group with one vectorized scan, the
+sequence number coming from a per-file lookup (planner.FileLookup).
 """
 
 from __future__ import annotations
@@ -73,7 +74,7 @@ class FileScanTask:
     first_row_id: int | None = None
     # Manifest-recorded partition values (hive dir strings) for files
     # whose identity partition columns were dropped from the data pages;
-    # the MoR scan re-attaches them (planner._partition_fill_plan).
+    # the MoR scan re-attaches them (planner.FileLookup).
     partition_values: dict | None = None
 
 

@@ -409,17 +409,9 @@ def merge_into(
             .distinct()
             .collect()
         }
-    # _metadata.file_path yields file:-prefixed, URI-encoded spellings;
-    # manifests store plain paths — match on every spelling the scan
-    # can produce (a missed match would silently skip the file's
-    # matched rows, and insert_not_matched would then duplicate them).
-    from ic_spark.compaction.planner import _scan_path_variants
-
-    candidates = [
-        t
-        for t in all_data
-        if any(v in touched_paths for v in _scan_path_variants(t.data_file_path))
-    ]
+    # The scan's hidden path column carries the manifest spelling, so a
+    # touched file is found by plain membership.
+    candidates = [t for t in all_data if t.data_file_path in touched_paths]
 
     needs_full_rows = (
         when_matched == "update" and not update_assignments

@@ -687,7 +687,7 @@ def mor_row_lineage(spark: SparkSession, sf_dir: str):
     _last_updated_sequence_number) pair — then the odd orders append
     under fresh ids.  read_table(with_lineage=True) resolves plain
     files as first_row_id + position and compacted files from their
-    materialized columns (planner.attach_lineage coalesce order); the
+    materialized columns (the planner's file-lookup coalesce order); the
     oracle reconstructs both from deterministic per-parity row_numbers,
     so id drift, wrong seq inheritance, or a broken coalesce breaks
     the value-hash match."""
@@ -845,7 +845,7 @@ def mor_partitioned_fill_read(spark: SparkSession, sf_dir: str):
     pages), an equality delete keyed on that PARTITION column lands at
     the next sequence, and read_table must fill the column from
     manifest partition values before applying the delete
-    (planner._scan_with_hidden_cols fill + attach_partition_values).
+    (planner._scan_with_hidden_cols fill from its file lookup).
     Exceeds the reference, which delegates partitioned-read semantics
     to iceberg-rs."""
     import os

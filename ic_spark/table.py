@@ -56,8 +56,9 @@ signatures, so no caller asks which flavor it holds:
   reached through :func:`ic_spark.compaction.metafs.table_mfs`.
 
 Beyond the contract, ``append_snapshot(stage=True)``,
-``publish_snapshot``, ``register_schema``, ``remove_orphan_files`` and
-``vacuum`` are JSON-only; ``metadata()``, table properties,
+``publish_snapshot``, ``register_schema`` and ``vacuum`` are JSON-only,
+and the spec flavor's ``remove_orphan_files`` raises
+NotImplementedError; ``metadata()``, table properties,
 ``update_sort_order`` and ``set_ref(ref_type=...)`` are spec-only.
 """
 

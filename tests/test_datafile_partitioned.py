@@ -333,9 +333,9 @@ def test_changelog_over_partitioned_table_fills_partition_column(spark, tmp_path
 
 
 @pytest.mark.slow
-def test_partition_fill_plan_broadcast_no_regexp(spark, tmp_path):
-    """Plan pin: the partition-value fill is a plain broadcast hash
-    equi-join on the unmodified hidden path column — no per-row regexp,
+def test_partition_fill_plan_lookup_no_join_no_regexp(spark, tmp_path):
+    """Plan pin: the partition-value fill is a constant per-file lookup
+    on the unmodified hidden path column — no join, no per-row regexp,
     no shuffle of the data side."""
     from ic_spark.compaction.deletes import read_table
 
@@ -345,7 +345,7 @@ def test_partition_fill_plan_broadcast_no_regexp(spark, tmp_path):
     )
     out = read_table(spark, t, schema=df.schema)
     plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan
+    assert "Join" not in plan
     assert "regexp" not in plan.lower()
     assert "Exchange hashpartitioning" not in plan  # data side never shuffles
 
@@ -532,18 +532,17 @@ def test_partitioned_adversarial_values_roundtrip(spark, tmp_path, fmt):
 def test_path_spelling_collision_raises(spark, tmp_path):
     """Two distinct manifest paths sharing a scan spelling ('/p=a b' vs
     '/p=a%20b') are genuinely ambiguous — any binding would silently
-    attach one file's values to the other's rows.  The fill refuses."""
-    from ic_spark.compaction.planner import attach_partition_values
+    attach one file's values to the other's rows.  The file lookup
+    refuses."""
+    from ic_spark.compaction.planner import FileLookup
+    from ic_spark.compaction.request import FileScanTask
 
-    df = spark.createDataFrame([(1, "x")], "id int, g string").withColumn(
-        "sys_hidden_file_path", F.lit("file:/d/p=a%20b/f.parquet")
-    )
-    fill = {
-        "/d/p=a b/f.parquet": {"g": "a b"},
-        "/d/p=a%20b/f.parquet": {"g": "a%20b"},
-    }
+    tasks = [
+        FileScanTask("/d/p=a b/f.parquet", partition_values={"g": "a b"}),
+        FileScanTask("/d/p=a%20b/f.parquet", partition_values={"g": "a%20b"}),
+    ]
     with pytest.raises(ValueError, match="ambiguous scan path spelling"):
-        attach_partition_values(spark, df, fill, ["g"])
+        FileLookup(tasks, ["g"])
 
 
 def test_scan_path_variants_match_real_spark_spelling(spark, tmp_path):

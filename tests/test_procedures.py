@@ -159,3 +159,37 @@ def test_create_changelog_view_rejects_unknown_options(spark, proc_table):
             spark, "create_changelog_view", table=proc_table,
             from_snapshot_id=first, compute_update_rows=True,  # typo'd name
         )
+
+
+def test_call_remove_orphan_files(spark, proc_table, tmp_path):
+    """``older_than_ms`` / ``dry_run`` reach the table as its age in
+    seconds and its delete switch: fresh orphans are kept under the
+    default age, listed at age 0, and deleted only with dry_run=False.
+    Spec-metadata tables refuse with NotImplementedError."""
+    import pyspark.sql.types as T
+
+    from ic_spark.compaction.iceberg_meta import IcebergTable
+
+    table = proc_table
+    stray_dir = os.path.join(table.root, "aborted")
+    spark.range(3).coalesce(1).write.parquet(stray_dir)
+    stray = next(
+        os.path.join(stray_dir, n)
+        for n in os.listdir(stray_dir)
+        if n.endswith(".parquet")
+    )
+    out = call(spark, "remove_orphan_files", table=table)
+    assert out == {"orphan_file_location_count": 0, "paths": []}
+    out = call(spark, "remove_orphan_files", table=table, older_than_ms=0)
+    assert out["paths"] == [os.path.abspath(stray)]
+    assert os.path.exists(stray)
+    out = call(
+        spark, "remove_orphan_files", table=table, older_than_ms=0, dry_run=False
+    )
+    assert out["orphan_file_location_count"] == 1
+    assert not os.path.exists(stray)
+    spec = IcebergTable.create(
+        str(tmp_path / "spec"), T.StructType([T.StructField("id", T.LongType())])
+    )
+    with pytest.raises(NotImplementedError, match="JSON-manifest"):
+        call(spark, "remove_orphan_files", table=spec, older_than_ms=0)

@@ -600,3 +600,44 @@ def test_dv_commit_unions_carried_blobs_across_superseded_files(
     assert refs[paths["R"]] == {1, 2}
     assert refs[paths["A"]] == {0, 5}
     assert refs[paths["B"]] == {0, 5}
+
+
+@pytest.mark.parametrize("distributed", [False, True])
+@pytest.mark.parametrize("spelling", ["plain", "file:"])
+def test_dv_write_unions_vectors_under_any_ref_spelling(spark, tmp_path, distributed, spelling):
+    """A vector already recorded for a data file — under the manifest
+    path, as spec writers record it, or under the scan's ``file:``
+    spelling — and a new vector for the same file are one file's
+    vectors: the next DV write unions them into ONE blob, on the driver
+    and the executor commit paths alike."""
+    import os
+
+    import pyspark.sql.functions as F
+
+    from ic_spark.compaction import ManifestTable
+    from ic_spark.compaction.deletes import (
+        dv_blobs,
+        dv_manifest_entry,
+        read_table,
+        write_deletion_vectors,
+    )
+
+    table = ManifestTable(str(tmp_path / "tbl"))
+    d = str(tmp_path / "data")
+    spark.range(0, 20).coalesce(1).write.parquet(d)
+    f = next(os.path.join(d, n) for n in os.listdir(d) if n.endswith(".parquet"))
+    table.append_snapshot([{"path": f, "sequence_number": 1, "content": "DATA"}])
+    ref = f if spelling == "plain" else "file:" + f
+    blobs = dv_blobs({ref: (serialize_dv_blob([1, 2]), 2)})
+    old = str(tmp_path / "old" / "deletes.puffin")
+    os.makedirs(os.path.dirname(old))
+    write_puffin(old, blobs)
+    table.append_snapshot([dv_manifest_entry(old, 2, blobs)])
+
+    write_deletion_vectors(spark, table, F.col("id") == 5, distributed=distributed)
+    _, pos, _ = table.scan_tasks()
+    live = [b for t in pos for b in read_puffin(t.data_file_path) if b.type == DV_BLOB_TYPE]
+    assert [b.properties["referenced-data-file"] for b in live] == [f]
+    assert deserialize_dv_blob(live[0].data) == [1, 2, 5]
+    ids = sorted(r.id for r in read_table(spark, table).collect())
+    assert ids == [i for i in range(20) if i not in (1, 2, 5)]

@@ -372,36 +372,59 @@ def test_changelog_with_lineage(spark, tmp_path):
         read_changelog(spark, plain, 0, with_lineage=True)
 
 
-@pytest.mark.slow
-def test_attach_lineage_routes_pinned_equal(spark, tmp_path):
-    """The Arrow-batch map route (forced with arrow_threshold=0)
-    returns EXACTLY the literal route's rows, and neither plan
-    evaluates a per-row regexp — path normalization lives on the
-    broadcast map side, so the join is a plain broadcast hash
-    equi-join on the unmodified hidden path column."""
-    from ic_spark.compaction.planner import (
-        _scan_with_hidden_cols,
-        attach_lineage,
-        lineage_scan_schema,
-    )
+def test_lineage_values_pinned_on_many_file_table(spark, tmp_path):
+    """Every row of a 48-file lineage table spread over 12 sequence
+    numbers reads ``_row_id`` = its file's first_row_id + position and
+    ``_last_updated_sequence_number`` = its file's sequence number (the
+    pyarrow oracle below), from ONE data scan with no join: the
+    per-file values come from the scan's file lookup."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
 
-    t, f1, f2 = _mk_lineage_table(spark, tmp_path)
+    t = ManifestTable(str(tmp_path / "tbl"))
+    next_id = 0
+    for seq in range(1, 13):
+        entries = []
+        for k in range(4):
+            n = 3 + (seq + k) % 4
+            ids = list(range(next_id, next_id + n))
+            next_id += n
+            f = str(tmp_path / f"d{seq:02d}_{k}.parquet")
+            pq.write_table(
+                pa.table(
+                    {
+                        "id": pa.array(ids, pa.int32()),
+                        "name": [f"n{i}" for i in ids],
+                        "v": [float(i) for i in ids],
+                    }
+                ),
+                f,
+            )
+            entries.append(
+                {"path": f, "sequence_number": seq, "content": "DATA",
+                 "record_count": n}
+            )
+        t.append_snapshot(entries)
+        if seq == 1:
+            t.enable_row_lineage()
     data, _, _ = t.scan_tasks()
-    schema = lineage_scan_schema(spark.createDataFrame([], SCHEMA).schema)
-    base = _scan_with_hidden_cols(
-        spark, data, schema=schema, with_pos=True, with_seq=True
-    )
-    lin = {d.data_file_path: d.first_row_id for d in data}
-    a = attach_lineage(spark, base, lin)
-    b = attach_lineage(spark, base, lin, arrow_threshold=0)
-    rows_a = sorted(map(tuple, a.collect()), key=repr)
-    rows_b = sorted(map(tuple, b.collect()), key=repr)
-    assert rows_a == rows_b
-    assert {r._row_id for r in a.collect()} == set(range(16))
-    for d in (a, b):
-        plan = d._jdf.queryExecution().executedPlan().toString()
-        assert "regexp" not in plan.lower()
-        assert "BroadcastHashJoin" in plan
+    assert len(data) == 48
+    expect = set()
+    for d in data:
+        ids = pq.read_table(d.data_file_path).column("id").to_pylist()
+        for pos, i in enumerate(ids):
+            expect.add((i, d.first_row_id + pos, d.sequence_number))
+    schema = spark.createDataFrame([], SCHEMA).schema
+    df = read_table(spark, t, schema=schema, with_lineage=True)
+    got = {
+        (r.id, r._row_id, r._last_updated_sequence_number)
+        for r in df.collect()
+    }
+    assert got == expect
+    assert {r[1] for r in got} == set(range(next_id))
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("FileScan parquet") == 1
+    assert "Join" not in plan
 
 
 @pytest.mark.slow
