@@ -16,6 +16,11 @@ Both append to the ManifestTable under a NEW sequence number, so a
 subsequent MoR scan/compaction hides the targeted rows without
 rewriting data (the whole point of merge-on-read: deletes are O(delete
 size), compaction amortizes the rewrite).
+
+- ``merge_upsert`` — the upsert writer's commit: the batch's data files
+  plus an equality delete on its keys at ONE sequence number.  Writing
+  the batch is its only Spark job; the keys come from the written
+  files' key columns, read on the driver beside their footer stats.
 """
 
 from __future__ import annotations
@@ -25,6 +30,7 @@ import uuid
 
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql.types import TimestampType
 
 from ic_spark.compaction.manifest import ManifestTable
 from ic_spark.compaction.request import (
@@ -728,14 +734,26 @@ def merge_upsert(
     is O(batch) — a table-sized rewrite never happens; compaction
     amortizes delete application later.
 
+    Writing the batch is the only Spark job.  The driver already opens
+    each written file's footer for its manifest stats; in the same loop
+    it reads that file's key columns (pyarrow, through the table's
+    metadata seam), takes the distinct keys and publishes them as the
+    equality-delete file.  Scale: that file is one file, which a
+    Spark write would also build in one task holding the same
+    distinct-key set, so the work stays O(batch) and single-threaded —
+    it runs on the driver instead of in an executor task.
+
     Rows within one batch must be key-unique (same contract as a keyed
     upsert stream); duplicates share the batch's sequence number and
     would ALL survive.  Returns the new snapshot id.
 
-    ``batch_tag`` pins the output directories to a deterministic name
-    (streaming replays overwrite the same half-written dir instead of
-    leaking a new one); callers own the committed-already check.
+    ``batch_tag`` pins the output paths to a deterministic name
+    (streaming replays overwrite the same half-written files instead
+    of leaking new ones); callers own the committed-already check.
     """
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
     missing = [c for c in key_cols if c not in source.columns]
     if missing:
         raise ValueError(f"source missing key columns: {missing}")
@@ -747,7 +765,7 @@ def merge_upsert(
     from ic_spark.compaction.writer import _stats_from_footer
 
     mfs = table_mfs(table)
-    entries = []
+    entries, key_parts = [], []
     for name in mfs.listdir(data_dir):
         if not name.endswith(".parquet"):
             continue
@@ -755,6 +773,13 @@ def merge_upsert(
         record_count, column_stats, _ = _stats_from_footer(
             mfs.within(p), data_dir, filesystem=mfs.fs
         )
+        # Spark writes TIMESTAMP as INT96; pyarrow's default nanosecond
+        # read wraps values outside 1677-2262, so read at Spark's own
+        # microsecond precision.
+        with pq.ParquetFile(
+            mfs.within(p), filesystem=mfs.fs, coerce_int96_timestamp_unit="us"
+        ) as written:
+            key_parts.append(written.read(columns=key_cols))
         entries.append(
             {
                 "path": p,
@@ -769,19 +794,37 @@ def merge_upsert(
         )
     if not entries:
         raise ValueError("source wrote no data files (empty batch?)")
-    # Keys come from a column-pruned scan of the files just written —
-    # one cheap columnar pass, not a second execution of the source plan.
-    keys = spark.read.parquet(data_dir).select(*key_cols).distinct()
-    eq_path = _write_single_file(
-        keys, os.path.join(table.root, f"eq-del-{batch}"), mfs
+    keys = (
+        pa.concat_tables(key_parts)
+        .group_by(key_cols, use_threads=False)
+        .aggregate([])
     )
+    # INT96 carries no zone, but Spark's TIMESTAMP is an instant: the
+    # delete file records it UTC-adjusted, the type the table declares
+    # (unadjusted would read as TIMESTAMP_NTZ to other readers).
+    for c in key_cols:
+        if isinstance(source.schema[c].dataType, TimestampType):
+            keys = keys.set_column(
+                keys.schema.get_field_index(c),
+                c,
+                keys[c].cast(pa.timestamp("us", tz="UTC")),
+            )
+    buf = pa.BufferOutputStream()
+    pq.write_table(keys, buf, coerce_timestamps="us")
+    data = buf.getvalue().to_pybytes()
+    # One fixed name: a replay of the same batch_tag overwrites the file
+    # instead of adding a second delete file beside it.
+    eq_dir = os.path.join(table.root, f"eq-del-{batch}")
+    eq_path = os.path.join(eq_dir, "keys.parquet")
+    mfs.makedirs(eq_dir)
+    mfs.write_atomic(eq_path, data)
     entries.append(
         {
             "path": eq_path,
             "sequence_number": seq,
             "content": FileContent.EQUALITY_DELETES.name,
             "equality_ids": list(key_cols),
-            "file_size_in_bytes": mfs.size(eq_path),
+            "file_size_in_bytes": len(data),
         }
     )
     return table.append_snapshot(entries)

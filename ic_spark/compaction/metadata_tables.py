@@ -96,8 +96,8 @@ def _as_snapshots(table, wanted_ids=None) -> tuple[list, int | None]:
     ``wanted_ids`` limits the EXPENSIVE spec-flavor materialization
     (each snapshot's files require reading its manifest list + Avro
     manifests) to the snapshots the caller actually consumes — a
-    `.files` query needs only the current snapshot, not a per-snapshot
-    manifest read across the whole history (r9 review find).
+    `.files` query needs only the current snapshot, so its cost must
+    not grow with the length of the history.
     """
     if isinstance(table, ManifestTable):
         cur = table.current_snapshot()
@@ -116,8 +116,8 @@ def _as_snapshots(table, wanted_ids=None) -> tuple[list, int | None]:
     # Union of EVERY schema in the metadata: equality-delete files
     # written against a since-dropped/renamed column must still report
     # their key columns — mapping through the current schema alone
-    # rendered them indistinguishable from no-key deletes (r9 review
-    # find).  Later schemas win name collisions.
+    # would render them indistinguishable from no-key deletes.  Later
+    # schemas win name collisions.
     id_to_name = {}
     for sch in meta["schemas"]:
         for f in sch["fields"]:
@@ -179,13 +179,10 @@ def read_metadata_table(
     if kind in ("files", "delete_files"):
         # Only the current snapshot's files are consumed: don't
         # materialize the whole history's manifests.
-        if isinstance(table, ManifestTable):
-            cur0 = table.current_snapshot()
-            cur_ids = {cur0.snapshot_id} if cur0 else set()
-        else:
-            cid = table.metadata().get("current-snapshot-id")
-            cur_ids = set() if cid in (-1, None) else {cid}
-        snaps, cur_id = _as_snapshots(table, wanted_ids=cur_ids)
+        cid = table.current_snapshot_id()
+        snaps, cur_id = _as_snapshots(
+            table, wanted_ids=set() if cid is None else {cid}
+        )
     else:
         snaps, cur_id = _as_snapshots(table)
     current = next((s for s in snaps if s.snapshot_id == cur_id), None)
@@ -301,23 +298,13 @@ def snapshot_diff(
     """File-level CDC between two snapshots: one row per file that was
     added or removed, with its content type — what a downstream sync
     job consumes to mirror table changes without a full re-scan."""
-    if to_snapshot_id is None:
-        if isinstance(table, ManifestTable):
-            cur0 = table.current_snapshot()
-            cur_id0 = cur0.snapshot_id if cur0 else None
-        else:
-            cid = table.metadata().get("current-snapshot-id")
-            cur_id0 = None if cid in (-1, None) else cid
-    else:
-        cur_id0 = to_snapshot_id
-    snaps, cur_id = _as_snapshots(
-        table, wanted_ids={from_snapshot_id, cur_id0}
-    )
+    to_id = table.current_snapshot_id() if to_snapshot_id is None else to_snapshot_id
+    snaps, _ = _as_snapshots(table, wanted_ids={from_snapshot_id, to_id})
     by_id = {s.snapshot_id: s for s in snaps}
     frm = by_id.get(from_snapshot_id)
     if frm is None:
         raise ValueError(f"snapshot {from_snapshot_id} not found")
-    to = by_id.get(cur_id if to_snapshot_id is None else to_snapshot_id)
+    to = by_id.get(to_id)
     if to is None:
         raise ValueError(f"snapshot {to_snapshot_id} not found")
     old = {f["path"]: f for f in frm.files}

@@ -85,10 +85,10 @@ def _stats_from_footer(
                 has_min_max = st is not None and st.has_min_max
                 # NATIVE values here (Decimal/datetime/date/...):
                 # row groups must merge in the value domain — min() over
-                # _json_safe strings compared '550.00' > '1600.00'
-                # lexically, recording a max BELOW real rows and
-                # silently skipping their file at scan time (r9 review
-                # find).  Stringified once after the merge.
+                # _json_safe strings compares '550.00' > '1600.00'
+                # lexically, recording a max BELOW real rows that
+                # silently skips their file at scan time.  Stringified
+                # once after the merge.
                 mn = st.min if has_min_max else None
                 mx = st.max if has_min_max else None
             except Exception:
@@ -100,8 +100,8 @@ def _stats_from_footer(
                 # No stats for this row group at all: both its null
                 # count and its value range are unknown — bounds
                 # accumulated from OTHER row groups no longer cover the
-                # file (same silent-file-skip class as the lexical
-                # merge, r9 third-pass find).
+                # file, and recording them would skip it at scan time
+                # like the lexical merge above.
                 entry["null_count"] = None
                 entry["min"] = entry["max"] = None
                 entry["_nobounds"] = True

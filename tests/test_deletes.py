@@ -363,8 +363,7 @@ def test_externally_spelled_position_deletes_apply(spark, tmp_path):
     """Position-delete files written by OTHER engines record the
     manifest's plain path, while the scan's hidden path column spells
     Hadoop URIs ('file:' scheme) — without normalization the anti-join
-    matched nothing and every deleted row silently resurfaced
-    (r9 review find)."""
+    matches nothing and every deleted row silently resurfaces."""
     from ic_spark.compaction.manifest import ManifestTable
 
     table = ManifestTable(str(tmp_path / "ext"))
@@ -403,7 +402,7 @@ def test_externally_spelled_position_deletes_apply(spark, tmp_path):
 def test_empty_equality_ids_rejected(spark):
     """An equality-delete task with NO equality ids would anti-join on
     the sequence guard alone and wipe every older row — it must fail
-    loudly (r9 review find)."""
+    loudly."""
     from ic_spark.compaction.request import (
         FileContent,
         FileScanTask,
@@ -441,3 +440,81 @@ def test_position_delete_no_match_raises_not_commits(spark, tmp_path):
     assert len(table.snapshots()) == before
     _, pos, _ = table.scan_tasks()
     assert pos == []
+
+
+def test_merge_upsert_is_one_job_and_keys_match_oracle(spark, tmp_path):
+    """An upsert runs one Spark job, the batch write: its equality-delete
+    file holds exactly the batch's distinct keys, derived on the driver,
+    and the merge-on-read result equals a pyarrow oracle.  The key mixes
+    long, string with a null, decimal, date and a pre-1900 TIMESTAMP
+    (Spark writes TIMESTAMP as INT96)."""
+    import datetime as dt
+    from decimal import Decimal
+
+    import pyarrow as pa
+
+    from ic_spark.table import Table
+
+    schema = (
+        "k long, s string, d decimal(12,2), day date, ts timestamp, v long"
+    )
+    keys = ["k", "s", "d", "day", "ts"]
+
+    def row(k, s, v, year=1850):
+        return (
+            k, s, Decimal(f"{k}.25"), dt.date(year, 3, k % 28 + 1),
+            dt.datetime(year, 6, 1, 12, 30, k % 60, 123456), v,
+        )
+
+    base = [row(k, f"s{k}", 0) for k in range(10)]
+    # Keys 2 and 7 replace base rows; key 3 carries a NULL string and
+    # key 11 a year-2999 date and timestamp, so both are inserts.  Key 12
+    # appears twice, so the batch has fewer distinct keys than rows.
+    batch = [row(2, "s2", 1), row(7, "s7", 1), row(3, None, 1),
+             row(11, "s11", 1, year=2999), row(12, "s12", 1),
+             row(12, "s12", 2)]
+    t = Table.create(
+        spark, str(tmp_path / "t"), spark.createDataFrame([], schema).schema
+    )
+    t.append(spark.createDataFrame(base, schema))
+    source = spark.createDataFrame(batch, schema)
+
+    before = spark.sparkContext._jsc.sc().dagScheduler().nextJobId()
+    t.upsert(source, keys)
+    jobs = spark.sparkContext._jsc.sc().dagScheduler().nextJobId() - before
+    assert jobs == 1, f"upsert ran {jobs} Spark jobs"
+
+    arrow_schema = pa.schema(
+        [("k", pa.int64()), ("s", pa.string()), ("d", pa.decimal128(12, 2)),
+         ("day", pa.date32()), ("ts", pa.timestamp("us")), ("v", pa.int64())]
+    )
+    names = arrow_schema.names
+
+    def arrow(rows):
+        return pa.Table.from_pylist([dict(zip(names, r)) for r in rows], arrow_schema)
+
+    arrow_batch = arrow(batch)
+    want_keys = arrow_batch.group_by(keys).aggregate([]).select(keys).to_pylist()
+    _, _, eq = t.inner.scan_tasks()
+    assert len(eq) == 1
+    # TIMESTAMP is an instant: the delete file declares it UTC-adjusted,
+    # as the table does, not as a zone-less TIMESTAMP_NTZ.
+    import pyarrow.parquet as pq
+
+    ts_type = pq.read_schema(eq[0].data_file_path).field("ts").type
+    assert ts_type == pa.timestamp("us", tz="UTC")
+    key_schema = source.select(*keys).schema
+    got_keys = spark.read.schema(key_schema).parquet(eq[0].data_file_path)
+    assert sorted(got_keys.collect(), key=repr) == sorted(
+        (tuple(r[c] for c in keys) for r in want_keys), key=repr
+    )
+
+    survivors = arrow(base).join(
+        arrow_batch.select(keys).group_by(keys).aggregate([]),
+        keys=keys, join_type="left anti",
+    )
+    want = [
+        tuple(r.values())
+        for r in pa.concat_tables([survivors.select(names), arrow_batch]).to_pylist()
+    ]
+    assert sorted(map(tuple, t.read().collect()), key=repr) == sorted(want, key=repr)

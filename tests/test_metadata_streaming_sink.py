@@ -516,7 +516,7 @@ def test_streaming_sinks_over_spec_metadata(spark, tmp_path):
 
     # The spec-flavor ledger (table properties) records every sink's
     # committed batches — the signal that survives compaction rewriting
-    # the batch directories (r9 review find).
+    # the batch directories.
     assert tbl.stream_batch_hwm("stream") == 1
     assert tbl.stream_batch_hwm("upsert") == 2
     assert tbl.stream_batch_hwm("dvdel") == 3
@@ -807,10 +807,9 @@ def test_ivfpq_index_streaming_append_sink(spark, tmp_path):
 def test_append_sink_replay_after_compaction_is_noop(spark, tmp_path):
     """The manifest sinks' commit log must survive table maintenance:
     compaction rewrites a batch's files, erasing the path marker, and
-    before the per-sink batch ledger a crash-replay of that batch
-    re-committed it — permanently double-counted rows (r9 review
-    find).  The ledger is written in the SAME atomic commit as the
-    batch's files."""
+    without the per-sink batch ledger a crash-replay of that batch
+    re-commits it — permanently double-counted rows.  The ledger is
+    written in the SAME atomic commit as the batch's files."""
     from ic_spark.compaction import Compaction
 
     table = ManifestTable(str(tmp_path / "t"))
@@ -883,7 +882,7 @@ def test_compact_gram_index_conflicts_with_concurrent_delta(
     """A streaming delta committed between compact_gram_index's scan
     and its rewrite would be folded AND left live (double-counted);
     the pinned expected_snapshot_id turns that window into a
-    CommitConflictError instead (r9 review find)."""
+    CommitConflictError instead."""
     import pyspark.sql.functions as F
 
     import ic_spark.compaction.deletes as deletes_mod
@@ -937,3 +936,29 @@ def test_compact_gram_index_conflicts_with_concurrent_delta(
         read_table(spark, idx).agg(F.sum("doc_freq").alias("s")).first().s
     )
     assert total2 == total
+
+
+def test_upsert_replay_overwrites_its_delete_file(spark, tmp_path, monkeypatch):
+    """A batch_tag replay after a crash between the file writes and the
+    commit overwrites the half-written files: its ``eq-del-{tag}/``
+    directory holds one delete file, and the read sees the batch once."""
+    from ic_spark.compaction.deletes import merge_upsert
+
+    table = _mk_table(spark, tmp_path, 6, "replay")
+    batch = spark.createDataFrame([(2, 20), (9, 90)], "id long, v long")
+
+    def crash(entries):
+        raise OSError("crashed before the commit")
+
+    monkeypatch.setattr(table, "append_snapshot", crash)
+    with pytest.raises(OSError):
+        merge_upsert(spark, table, batch, ["id"], batch_tag="t-00000001")
+    monkeypatch.undo()
+    merge_upsert(spark, table, batch, ["id"], batch_tag="t-00000001")
+
+    eq_dir = os.path.join(table.root, "eq-del-t-00000001")
+    files = [n for n in os.listdir(eq_dir) if n.endswith(".parquet")]
+    _, _, eq = table.scan_tasks()
+    assert [os.path.join(eq_dir, n) for n in files] == [e.data_file_path for e in eq]
+    got = sorted(tuple(r) for r in read_table(spark, table).collect())
+    assert got == sorted(({i: i * 2 for i in range(6)} | {2: 20, 9: 90}).items())
