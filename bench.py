@@ -329,7 +329,7 @@ def main() -> None:
         "latency_ref": LATENCY_REF,
         # Drift ratios: |1 - drift| > ~0.15 means the host speed CHANGED
         # mid-run and any cross-round comparison this round needs a
-        # same-host A/B (tools/ab.py), not anchor arithmetic.
+        # same-host A/B (tools/pairs.py), not anchor arithmetic.
         "calibration_drift": round(calib / calib_pre, 3) if calib_pre else None,
         "latency_drift": (
             round(latency_post / latency_pre, 3) if latency_pre else None

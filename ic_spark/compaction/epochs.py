@@ -9,7 +9,7 @@ a NAIVE datetime measures from the naive epoch, as written.
 
 Manifest encoding (``iceberg_meta._coerce_partition_value``), the scan
 fill's reverse mapping (``iceberg_meta.fill_partition_values``),
-partition pruning (``manifest._temporal_epoch``) and the Avro data-file
+partition pruning (``table_model._temporal_epoch``) and the Avro data-file
 wire encoder (``writer._logical_leaf_fixer``) all need the SAME
 conversion: four hand-maintained copies desynchronized once already
 (r9 review find) — they now share these helpers.  Exact integer

@@ -26,9 +26,11 @@ Spec features implemented:
   with O_EXCL, so of two racing committers exactly one wins (the
   Hadoop-catalog commit protocol).
 
-``IcebergTable`` duck-types ``ManifestTable``'s planning surface
-(``scan_tasks`` / ``commit_rewrite`` / ``expire_snapshots`` / ``root``),
-so ``Compaction.full_compact`` runs unchanged over spec metadata.
+``IcebergTable`` is one of the two codecs of the shared table model
+(:mod:`ic_spark.compaction.table_model`): it decodes snapshots into live
+files and stores schema versions, and the model plans scans and runs the
+column DDL over it, so ``Compaction.full_compact`` runs unchanged over
+spec metadata.
 
 Scale note: manifests are KB-scale driver-side planning I/O, exactly as
 Iceberg libraries read them.  Data files stay Parquet and are scanned
@@ -53,85 +55,21 @@ from ic_spark.compaction.epochs import (
     epoch_micros,
 )
 
-from ic_spark.compaction.request import FileContent, FileScanTask
+from ic_spark.compaction.request import FileContent
 from ic_spark.sources.avro_io import read_container, write_container
 
 from ic_spark.compaction.manifest import CommitConflictError, with_statistics_entry
 from ic_spark.compaction.metafs import check_remote_commit_safety
+from ic_spark.compaction.table_model import (
+    ModelState,
+    TableModel,
+    activation_boundaries,
+    evolve_schemas,
+    iceberg_to_spark_type,
+    schema_to_iceberg,
+)
 
 # --------------------------------------------------- type serialization
-
-
-def spark_to_iceberg_type(dt: T.DataType) -> Any:
-    if isinstance(dt, T.BooleanType):
-        return "boolean"
-    if isinstance(dt, T.IntegerType):
-        return "int"
-    if isinstance(dt, T.LongType):
-        return "long"
-    if isinstance(dt, T.FloatType):
-        return "float"
-    if isinstance(dt, T.DoubleType):
-        return "double"
-    if isinstance(dt, T.StringType):
-        return "string"
-    if isinstance(dt, T.BinaryType):
-        return "binary"
-    if isinstance(dt, T.DateType):
-        return "date"
-    if isinstance(dt, T.TimestampType):
-        return "timestamptz"
-    if isinstance(dt, T.TimestampNTZType):
-        return "timestamp"
-    if isinstance(dt, T.DecimalType):
-        return f"decimal({dt.precision}, {dt.scale})"
-    raise ValueError(f"unsupported type for iceberg schema: {dt.simpleString()}")
-
-
-def iceberg_to_spark_type(t: Any) -> T.DataType:
-    m = {
-        "boolean": T.BooleanType(),
-        "int": T.IntegerType(),
-        "long": T.LongType(),
-        "float": T.FloatType(),
-        "double": T.DoubleType(),
-        "string": T.StringType(),
-        "binary": T.BinaryType(),
-        "date": T.DateType(),
-        "timestamptz": T.TimestampType(),
-        "timestamp": T.TimestampNTZType(),
-    }
-    if isinstance(t, str) and t in m:
-        return m[t]
-    if isinstance(t, str) and t.startswith("decimal"):
-        p, s = t[t.index("(") + 1 : t.index(")")].split(",")
-        return T.DecimalType(int(p), int(s))
-    raise ValueError(f"unsupported iceberg type: {t!r}")
-
-
-def schema_to_iceberg(schema: T.StructType, schema_id: int = 0) -> dict:
-    """Spark StructType → Iceberg schema JSON with sequential field ids
-    (same positional-id convention as the proto bridge, proto.py)."""
-    fields = []
-    for i, f in enumerate(schema.fields, start=1):
-        fields.append(
-            {
-                "id": i,
-                "name": f.name,
-                "required": not f.nullable,
-                "type": spark_to_iceberg_type(f.dataType),
-            }
-        )
-    return {"type": "struct", "schema-id": schema_id, "fields": fields}
-
-
-def iceberg_to_spark_schema(s: dict) -> T.StructType:
-    return T.StructType(
-        [
-            T.StructField(f["name"], iceberg_to_spark_type(f["type"]), not f["required"])
-            for f in s["fields"]
-        ]
-    )
 
 
 def serialize_bound(dt: T.DataType, value: Any) -> bytes | None:
@@ -212,30 +150,6 @@ def serialize_bound(dt: T.DataType, value: Any) -> bytes | None:
             return struct.pack("<q", epoch_micros(v))
     except (ValueError, TypeError):
         return None
-    return None
-
-
-def _column_domain_tag(dt: T.DataType) -> str | None:
-    """Spark column type → the stats comparator's domain tag
-    (``manifest._stat_literal_pair``): "string" | "temporal" |
-    "numeric" | None (no special handling)."""
-    if isinstance(dt, T.StringType):
-        return "string"
-    if isinstance(dt, (T.DateType, T.TimestampType, T.TimestampNTZType)):
-        return "temporal"
-    if isinstance(
-        dt,
-        (
-            T.ByteType,
-            T.ShortType,
-            T.IntegerType,
-            T.LongType,
-            T.FloatType,
-            T.DoubleType,
-            T.DecimalType,
-        ),
-    ):
-        return "numeric"
     return None
 
 
@@ -526,7 +440,7 @@ _ENUM_TO_CONTENT = {v: k for k, v in _CONTENT_TO_ENUM.items()}
 # ------------------------------------------------------------ the table
 
 
-class IcebergTable:
+class IcebergTable(TableModel):
     """A Hadoop-catalog-layout Iceberg v2 table (metadata side).
 
     Implements the table contract listed in :mod:`ic_spark.table` with
@@ -636,42 +550,6 @@ class IcebergTable:
         version = self.version()
         return version, self.metadata(version)
 
-    def schema(self, snapshot_id: int | None = None) -> T.StructType | None:
-        """Current schema, or with ``snapshot_id`` the schema that
-        snapshot was committed under: VERSION AS OF reads project under
-        the schema the data was written with (Iceberg's time-travel
-        rule)."""
-        meta = self.metadata()
-        sid = _snapshot_schema_id(meta, snapshot_id)
-        return iceberg_to_spark_schema(
-            next(s for s in meta["schemas"] if s["schema-id"] == sid)
-        )
-
-    def name_mapping(
-        self, snapshot_id: int | None = None
-    ) -> dict[str, list[str]] | None:
-        """Scan name-mapping (see :func:`derive_name_mapping`) relative
-        to the schema of ``snapshot_id`` (current by default)."""
-        meta = self.metadata()
-        return derive_name_mapping(
-            meta["schemas"], _snapshot_schema_id(meta, snapshot_id)
-        )
-
-    def schema_history(self, snapshot_id: int | None = None) -> dict | None:
-        """Every schema version's (field_id, name, DataType, nullable)
-        rows.  None when the table has a single schema (nothing to
-        resolve) or predates activation tracking.  With ``snapshot_id``,
-        the history's current schema is the one that snapshot was
-        committed under (time-travel reads project against it)."""
-        meta = self.metadata()
-        if len(meta["schemas"]) <= 1:
-            return None
-        if schema_activation_boundaries(meta) is None:
-            return None
-        return history_from_schemas(
-            meta["schemas"], _snapshot_schema_id(meta, snapshot_id)
-        )
-
     def _commit_metadata(self, meta: dict, expected_version: int | None) -> None:
         """Hadoop-catalog commit: O_EXCL create of v{N+1}, then hint swap.
 
@@ -724,20 +602,11 @@ class IcebergTable:
 
     # -- snapshots -----------------------------------------------------
 
-    def current_snapshot_id(self) -> int | None:
-        meta = self.metadata()
-        sid = meta.get("current-snapshot-id", -1)
-        return None if sid in (-1, None) else sid
-
     def next_sequence_number(self, branch: str | None = None) -> int:
         """The sequence number the next commit records.  Spec sequence
         numbers are table-wide (``last-sequence-number``), so a branch
         commit takes the same next number as a main commit."""
         return self.metadata()["last-sequence-number"] + 1
-
-    def count_rows(self, snapshot_id: int | None = None) -> int | None:
-        """Always None: the spec flavor answers COUNT(*) with a scan."""
-        return None
 
     def snapshots(self) -> list[dict]:
         return self.metadata()["snapshots"]
@@ -769,21 +638,10 @@ class IcebergTable:
             for e in meta.get("snapshot-log", [])
         ]
 
-    def snapshot_id_as_of(self, timestamp_ms: int) -> int:
-        """TIMESTAMP AS OF over the spec snapshot-log (Iceberg time
-        travel by timestamp)."""
-        best = None
-        for entry in self.metadata().get("snapshot-log", []):
-            if entry["timestamp-ms"] <= timestamp_ms and (
-                best is None or entry["timestamp-ms"] >= best["timestamp-ms"]
-            ):
-                best = entry
-        if best is None:
-            raise ValueError(f"no snapshot at or before {timestamp_ms}")
-        return best["snapshot-id"]
-
-    def _snapshot(self, snapshot_id: int | None) -> dict | None:
-        meta = self.metadata()
+    def _snapshot(
+        self, snapshot_id: int | None, meta: dict | None = None
+    ) -> dict | None:
+        meta = self.metadata() if meta is None else meta
         sid = snapshot_id if snapshot_id is not None else meta.get("current-snapshot-id")
         if sid in (-1, None):
             return None
@@ -830,7 +688,7 @@ class IcebergTable:
                 # annotated exactly as Iceberg's Avro mapping defines —
                 # logicalType timestamp-micros plus adjust-to-utc
                 # (false = without zone, true = instant).  Repo
-                # convention (spark_to_iceberg_type): iceberg
+                # convention (table_model.spark_to_iceberg_type): iceberg
                 # "timestamp" is WITHOUT zone (Spark NTZ), so foreign
                 # readers must not take its values as UTC instants.
                 "timestamp": {
@@ -888,6 +746,9 @@ class IcebergTable:
                 name_to_field[c]["id"] for c in f["equality_ids"] if c in name_to_field
             ]
         content = _ENUM_TO_CONTENT[FileContent[f.get("content", "DATA")]]
+        if content == CONTENT_DATA and f.get("record_count") is None:
+            # a 0 here would read as an empty file to COUNT(*) from stats
+            raise ValueError(f"data file {f['path']} has no record_count")
         # Both the writer ("partition_values", hive-dir strings) and the
         # orchestrator ("partition") feed this; coerce values to the
         # partition struct's avro field types so the typed encoder
@@ -906,7 +767,7 @@ class IcebergTable:
             "file_path": f["path"],
             "file_format": f.get("file_format", "PARQUET"),
             "partition": partition,
-            "record_count": int(f.get("record_count", 0)),
+            "record_count": int(f.get("record_count") or 0),
             "file_size_in_bytes": int(f.get("file_size_in_bytes", 0)),
             "first_row_id": f.get("first_row_id"),
             "value_counts": values or None,
@@ -1026,17 +887,14 @@ class IcebergTable:
             "deleted_rows_count": 0,
         }
 
-    def _live_entries(self, snapshot: dict | None) -> list[tuple[dict, int]]:
-        """(manifest_entry, inherited_sequence_number) for every live
-        file of ``snapshot`` — sequence-number inheritance applied."""
-        return [(e, s) for e, s, _ in self._live_entries_with_spec(snapshot)]
-
     def _live_entries_with_spec(
-        self, snapshot: dict | None
+        self, snapshot: dict | None, deletes_only: bool = False
     ) -> list[tuple[dict, int, int]]:
-        """Like :meth:`_live_entries` plus each entry's manifest-level
-        ``partition_spec_id`` (the spec its partition tuple was written
-        under — per-spec pruning needs it)."""
+        """(manifest_entry, inherited_sequence_number, partition_spec_id)
+        for every live file of ``snapshot``: sequence-number inheritance
+        applied, and the manifest-level spec its partition tuple was
+        written under (per-spec pruning needs it).  ``deletes_only``
+        reads no data manifest."""
         if snapshot is None:
             return []
         out = []
@@ -1045,6 +903,8 @@ class IcebergTable:
             filesystem=self._mfs.fs,
         )
         for mf in manifests:
+            if deletes_only and mf.get("content") == DATA_MANIFEST:
+                continue
             _, _, entries = read_container(
                 self._mfs.within(mf["manifest_path"]),
                 filesystem=self._mfs.fs,
@@ -1056,6 +916,113 @@ class IcebergTable:
                 if seq is None:  # spec: inherit from the manifest list
                     seq = mf["sequence_number"]
                 out.append((e, seq, mf.get("partition_spec_id", 0)))
+        return out
+
+    def model_state(self, raw: dict | None = None) -> ModelState:
+        """One read of the table metadata (or the metadata ``raw``
+        already read) as the shared table model's view."""
+        meta = self.metadata() if raw is None else raw
+        sid = meta.get("current-snapshot-id")
+        return ModelState(
+            raw=meta,
+            schemas=meta["schemas"],
+            current_schema_id=meta["current-schema-id"],
+            last_column_id=meta["last-column-id"],
+            boundaries=activation_boundaries(
+                meta["schemas"],
+                json.loads(
+                    meta.get("properties", {}).get("ic.schema-activation", "{}")
+                ),
+            ),
+            specs={
+                str(p["spec-id"]): _writer_spec(meta, p)
+                for p in meta["partition-specs"]
+            },
+            default_spec_id=meta["default-spec-id"],
+            snapshots=[(s["snapshot-id"], s["timestamp-ms"]) for s in meta["snapshots"]],
+            snapshot_log=[
+                (e["snapshot-id"], e["timestamp-ms"])
+                for e in meta.get("snapshot-log", [])
+            ],
+            current_snapshot_id=None if sid in (-1, None) else sid,
+            snapshot_schema_ids={
+                s["snapshot-id"]: s["schema-id"]
+                for s in meta["snapshots"]
+                if s.get("schema-id") is not None
+            },
+            refs={
+                n: (r["snapshot-id"], r.get("type", "tag"))
+                for n, r in meta.get("refs", {}).items()
+            },
+        )
+
+    def live_files(
+        self,
+        snapshot_id: int | None = None,
+        state: ModelState | None = None,
+        bounds: bool = False,
+        deletes_only: bool = False,
+    ) -> list[dict] | None:
+        """Decode a snapshot's manifests into file dicts: one per live
+        manifest entry (a deletion-vector file, one per vector), with
+        inherited sequence numbers, the manifest's partition spec id, and
+        the partition tuple both as stored (``partition``, in Iceberg's
+        internal representation) and converted for the planner's fill
+        (``partition_values``).  ``bounds``
+        deserializes each entry's lower/upper bounds into
+        ``column_stats`` under the current schema; ``deletes_only``
+        decodes the delete manifests alone."""
+        state = self.model_state() if state is None else state
+        meta = state.raw
+        snap = self._snapshot(snapshot_id, meta)
+        if snap is None:
+            return None
+        fields = state.current_fields()
+        id_to_ice = {f["id"]: f["type"] for f in fields}
+        raw_specs = {p["spec-id"]: p["fields"] for p in meta["partition-specs"]}
+        if bounds:
+            id_to_name = {f["id"]: f["name"] for f in fields}
+            id_to_type = {i: iceberg_to_spark_type(t) for i, t in id_to_ice.items()}
+        out = []
+        for e, seq, spec_id in self._live_entries_with_spec(snap, deletes_only):
+            df = e["data_file"]
+            f = {
+                "path": df["file_path"],
+                "content": _CONTENT_TO_ENUM[df["content"]].name,
+                "sequence_number": seq,
+                "equality_ids": list(df["equality_ids"] or []),
+                "file_size_in_bytes": df["file_size_in_bytes"],
+                "record_count": df["record_count"],
+                # Iceberg spells formats upper-case in manifests.
+                "file_format": (df.get("file_format") or "PARQUET").lower(),
+                "first_row_id": df.get("first_row_id"),
+                "sort_order_id": df.get("sort_order_id"),
+                "partition": df.get("partition") or {},
+                "partition_values": fill_partition_values(
+                    df.get("partition"), raw_specs.get(spec_id), id_to_ice
+                ),
+                "spec_id": spec_id,
+            }
+            if df.get("referenced_data_file"):
+                f["deletion_vectors"] = {
+                    df["referenced_data_file"]: {
+                        "offset": df.get("content_offset"),
+                        "length": df.get("content_size_in_bytes"),
+                        "cardinality": df["record_count"],
+                    }
+                }
+            if bounds:
+                stats: dict[str, dict] = {}
+                for kind, key in (("lower_bounds", "min"), ("upper_bounds", "max")):
+                    for kv in df.get(kind) or []:
+                        fid = kv["key"]
+                        if fid not in id_to_name:
+                            continue
+                        v = deserialize_bound(id_to_type[fid], kv["value"])
+                        if v is not None:
+                            stats.setdefault(id_to_name[fid], {})[key] = v
+                f["column_stats"] = stats
+            out.append(f)
         return out
 
     def _commit_snapshot(
@@ -1159,59 +1126,6 @@ class IcebergTable:
         return sid
 
     # -- partition-spec evolution --------------------------------------
-
-    def default_spec_id(self) -> int:
-        return self.metadata()["default-spec-id"]
-
-    def partition_spec(self, spec_id: int | None = None) -> list[dict]:
-        """Spec fields in the writer's shape ({"name", "transform",
-        "source", "n"/"width"}).  Metadata ``bucket[N]`` reads back as
-        ``iceberg_bucket`` — spec-format tables always use the
-        spec-exact bucket so layouts interoperate with real Iceberg
-        readers."""
-        meta = self.metadata()
-        sid = meta["default-spec-id"] if spec_id is None else spec_id
-        spec = next(
-            (p for p in meta["partition-specs"] if p["spec-id"] == sid), None
-        )
-        if spec is None:
-            raise ValueError(f"unknown partition spec id {sid}")
-        schema = next(
-            s for s in meta["schemas"] if s["schema-id"] == meta["current-schema-id"]
-        )
-        id_to_name = {f["id"]: f["name"] for f in schema["fields"]}
-        id_to_type = {f["id"]: f["type"] for f in schema["fields"]}
-        out = []
-        for pf in spec["fields"]:
-            field = {
-                "name": pf["name"],
-                "source": id_to_name[pf["source-id"]],
-            }
-            st = id_to_type.get(pf["source-id"])
-            if isinstance(st, str):
-                # Primitive source type string ("date", "timestamptz",
-                # "long", ...): enables bucket-hash AND temporal
-                # identity pruning (manifest._comparable_pair needs it
-                # to map internal epoch ints back to literals).
-                field["source_type"] = st
-                if st == "uuid":
-                    # The logical marker transform_column and the
-                    # iceberg_bucket expression dispatch on — without
-                    # it a uuid column buckets by its 36-char TEXT
-                    # instead of its 16 msb/lsb bytes, silently
-                    # non-interoperable with Iceberg-written layouts.
-                    field["logical"] = "uuid"
-            t = pf["transform"]
-            if t.startswith("bucket["):
-                field["transform"] = "iceberg_bucket"
-                field["n"] = int(t[len("bucket[") : -1])
-            elif t.startswith("truncate["):
-                field["transform"] = "truncate"
-                field["width"] = int(t[len("truncate[") : -1])
-            else:
-                field["transform"] = t
-            out.append(field)
-        return out
 
     def update_partition_spec(self, fields: list[dict]) -> int:
         """Evolve the partition layout: register a new spec in
@@ -1476,198 +1390,6 @@ class IcebergTable:
         self._commit_metadata(new_meta, expected_version=version)
         return head
 
-    def scan_tasks(
-        self,
-        snapshot_id: int | None = None,
-        data_filter: list[tuple] | None = None,
-    ) -> tuple[list[FileScanTask], list[FileScanTask], list[FileScanTask]]:
-        """Plan (data, pos-delete, eq-delete) tasks from spec metadata —
-        same triple ``build_merge_on_read`` consumes.
-
-        ``data_filter`` is the ManifestTable-shaped conjunction of
-        ``(col, op, value)`` triples: data files are skipped on their
-        manifest lower/upper bounds AND their partition tuple evaluated
-        against the spec each manifest was written under (delete files
-        are never pruned)."""
-        from ic_spark.compaction.manifest import (
-            _file_may_match,
-            _file_may_match_partition,
-        )
-
-        meta = self.metadata()
-        schema = next(
-            s for s in meta["schemas"] if s["schema-id"] == meta["current-schema-id"]
-        )
-        id_to_name = {f["id"]: f["name"] for f in schema["fields"]}
-        id_to_type = {
-            f["id"]: iceberg_to_spark_type(f["type"]) for f in schema["fields"]
-        }
-        id_to_ice = {f["id"]: f["type"] for f in schema["fields"]}
-        # Declared per-column domain tags: with the schema in hand the
-        # stats comparator prunes at full typed fidelity instead of the
-        # agreement-guarded untyped fallback.
-        column_types = {
-            id_to_name[i]: _column_domain_tag(t)
-            for i, t in id_to_type.items()
-        }
-        raw_spec_fields = {
-            p["spec-id"]: p["fields"] for p in meta["partition-specs"]
-        }
-        specs_by_id: dict[str, list[dict]] = {}
-        if data_filter:
-            for p in meta["partition-specs"]:
-                try:
-                    specs_by_id[str(p["spec-id"])] = self.partition_spec(
-                        p["spec-id"]
-                    )
-                except (KeyError, ValueError):
-                    continue  # unresolvable spec -> no pruning under it
-        data, pos, eq = [], [], []
-        seen: set[str] = set()
-        # Per-file write-schema resolution: multi-schema tables with
-        # activation boundaries resolve each data file's write schema
-        # from its sequence number (None for single-schema / legacy).
-        boundaries = (
-            schema_activation_boundaries(meta)
-            if len(meta["schemas"]) > 1
-            else None
-        )
-        for e, seq, spec_id in self._live_entries_with_spec(
-            self._snapshot(snapshot_id)
-        ):
-            df = e["data_file"]
-            task = FileScanTask(
-                data_file_path=df["file_path"],
-                sequence_number=seq,
-                content=_CONTENT_TO_ENUM[df["content"]],
-                equality_ids=tuple(
-                    id_to_name[i] for i in (df["equality_ids"] or [])
-                ),
-                file_size_in_bytes=df["file_size_in_bytes"],
-                record_count=df.get("record_count") or 0,
-                # Iceberg spells formats upper-case in manifests; the
-                # planner's (seq, format) grouping uses lower-case.
-                file_format=(df.get("file_format") or "PARQUET").lower(),
-                write_schema_id=resolve_write_schema_id(boundaries, seq),
-                first_row_id=df.get("first_row_id"),
-                partition_values=fill_partition_values(
-                    df.get("partition"),
-                    raw_spec_fields.get(spec_id),
-                    id_to_ice,
-                ),
-            )
-            if task.content is FileContent.DATA:
-                if data_filter:
-                    stats: dict[str, dict] = {}
-                    for kind, key in (("lower_bounds", "min"), ("upper_bounds", "max")):
-                        for kv in df.get(kind) or []:
-                            fid = kv["key"]
-                            if fid not in id_to_name:
-                                continue
-                            v = deserialize_bound(id_to_type[fid], kv["value"])
-                            if v is not None:
-                                stats.setdefault(id_to_name[fid], {})[key] = v
-                    probe = {
-                        "column_stats": stats,
-                        "spec_id": spec_id,
-                        "partition": df.get("partition") or {},
-                    }
-                    if not _file_may_match(probe, data_filter, column_types):
-                        continue
-                    if not _file_may_match_partition(
-                        probe, specs_by_id, data_filter
-                    ):
-                        continue
-                data.append(task)
-            elif task.data_file_path not in seen:
-                seen.add(task.data_file_path)
-                (pos if task.content is FileContent.POSITION_DELETES else eq).append(
-                    task
-                )
-            elif task.content is FileContent.POSITION_DELETES and task.record_count:
-                # Per-vector DV expansion shares one puffin path; fold
-                # each vector's cardinality into the deduped task so
-                # broadcast sizing sees the file's TOTAL position count.
-                import dataclasses as _dc
-
-                for i, p in enumerate(pos):
-                    if p.data_file_path == task.data_file_path:
-                        pos[i] = _dc.replace(
-                            p, record_count=p.record_count + task.record_count
-                        )
-                        break
-        return data, pos, eq
-
-    def incremental_tasks(
-        self, from_snapshot_id: int, to_snapshot_id: int | None = None
-    ) -> list[FileScanTask]:
-        """DATA files added after ``from_snapshot_id`` (Iceberg
-        ``IncrementalAppendScan`` over spec metadata).  Rejects ranges
-        containing rewrites or new delete files — those change or
-        retract already-read rows, which an append-only consumer cannot
-        represent (same condition ManifestTable.incremental_tasks and
-        Iceberg itself enforce)."""
-        frm = self._snapshot(from_snapshot_id)
-        to = self._snapshot(to_snapshot_id)
-        if to is None:
-            raise ValueError(f"snapshot {to_snapshot_id} not found")
-        old = {e["data_file"]["file_path"] for e, _ in self._live_entries(frm)}
-        # One manifest pass supplies entries AND each one's spec id.
-        new_entries = {
-            e["data_file"]["file_path"]: (e, s, sp)
-            for e, s, sp in self._live_entries_with_spec(to)
-        }
-        removed = old - set(new_entries)
-        meta = self.metadata()
-        cur_schema = next(
-            s
-            for s in meta["schemas"]
-            if s["schema-id"] == meta["current-schema-id"]
-        )
-        id_to_ice = {f["id"]: f["type"] for f in cur_schema["fields"]}
-        # Per-entry spec resolution (same as scan_tasks): a
-        # partition-evolved table's older entries were written under
-        # older specs — converting their partition values under the
-        # default spec would miss identity date/timestamp fields.
-        raw_spec_fields = {
-            p["spec-id"]: p["fields"] for p in meta["partition-specs"]
-        }
-        if removed:
-            raise ValueError(
-                f"snapshots {from_snapshot_id}..{to['snapshot-id']} rewrite "
-                f"{len(removed)} file(s); incremental append scan undefined"
-            )
-        added = [
-            (e, s, sp) for p, (e, s, sp) in new_entries.items() if p not in old
-        ]
-        deletes = [
-            e for e, _, _ in added if e["data_file"]["content"] != CONTENT_DATA
-        ]
-        if deletes:
-            raise ValueError(
-                f"snapshots {from_snapshot_id}..{to['snapshot-id']} add "
-                f"{len(deletes)} delete file(s); incremental append scan undefined"
-            )
-        return [
-            FileScanTask(
-                data_file_path=e["data_file"]["file_path"],
-                sequence_number=s,
-                content=FileContent.DATA,
-                file_size_in_bytes=e["data_file"]["file_size_in_bytes"],
-                record_count=e["data_file"].get("record_count") or 0,
-                file_format=(
-                    e["data_file"].get("file_format") or "PARQUET"
-                ).lower(),
-                first_row_id=e["data_file"].get("first_row_id"),
-                partition_values=fill_partition_values(
-                    e["data_file"].get("partition"),
-                    raw_spec_fields.get(sp),
-                    id_to_ice,
-                ),
-            )
-            for e, s, sp in added
-        ]
-
     def commit_rewrite(
         self,
         added: list[dict],
@@ -1793,17 +1515,6 @@ class IcebergTable:
         new_meta["refs"] = refs
         self._commit_metadata(new_meta, expected_version=version)
 
-    def refs(self) -> dict[str, int]:
-        return {
-            n: r["snapshot-id"] for n, r in self.metadata().get("refs", {}).items()
-        }
-
-    def resolve_ref(self, name: str) -> int:
-        refs = self.metadata().get("refs", {})
-        if name not in refs:
-            raise ValueError(f"unknown ref: {name}")
-        return refs[name]["snapshot-id"]
-
     def remove_orphan_files(
         self, older_than_s: float = 3 * 24 * 3600, delete: bool = False
     ) -> list[str]:
@@ -1829,13 +1540,13 @@ class IcebergTable:
         keep_paths = {
             e["data_file"]["file_path"]
             for s in retained
-            for e, _ in self._live_entries(s)
+            for e, _, _ in self._live_entries_with_spec(s)
         }
         orphans: set[str] = set()
         for s in meta["snapshots"]:
             if s["snapshot-id"] in keep_ids:
                 continue
-            for e, _ in self._live_entries(s):
+            for e, _, _ in self._live_entries_with_spec(s):
                 p = e["data_file"]["file_path"]
                 if p not in keep_paths:
                     orphans.add(p)
@@ -1854,23 +1565,15 @@ class IcebergTable:
     def _evolve_schema(self, mutate) -> int:
         """Commit a metadata version whose schemas list gains one schema.
 
-        ``mutate(fields, meta) -> (new_fields, last_column_id)`` transforms a
-        deep copy of the current schema's field list.  Snapshots are
-        untouched — schema updates are metadata-only commits (Iceberg spec:
-        "Schema Evolution" is free; data files are never rewritten).
+        Snapshots are untouched — schema updates are metadata-only
+        commits (Iceberg spec: "Schema Evolution" is free; data files are
+        never rewritten).
         """
-        import copy
-
         version, meta = self._metadata_for_commit()
-        cur = next(
-            s for s in meta["schemas"] if s["schema-id"] == meta["current-schema-id"]
-        )
-        fields, last_col = mutate(copy.deepcopy(cur["fields"]), meta)
-        new_id = max(s["schema-id"] for s in meta["schemas"]) + 1
         new_meta = dict(meta)
-        new_meta["schemas"] = list(meta["schemas"]) + [
-            {"type": "struct", "schema-id": new_id, "fields": fields}
-        ]
+        new_meta["schemas"], new_id, last_col = evolve_schemas(
+            self.model_state(meta), mutate
+        )
         new_meta["current-schema-id"] = new_id
         new_meta["last-column-id"] = last_col
         new_meta["last-updated-ms"] = int(time.time() * 1000)
@@ -1887,61 +1590,6 @@ class IcebergTable:
         new_meta["properties"] = props
         self._commit_metadata(new_meta, expected_version=version)
         return new_id
-
-    def add_column(self, name: str, spark_type) -> int:
-        """Spec add-column: new field id past last-column-id; always optional
-        (old files null-fill — required would break existing data)."""
-
-        def mutate(fields, meta):
-            if any(f["name"] == name for f in fields):
-                raise ValueError(f"column {name!r} already exists")
-            fid = meta["last-column-id"] + 1
-            fields.append(
-                {
-                    "id": fid,
-                    "name": name,
-                    "required": False,
-                    "type": spark_to_iceberg_type(spark_type),
-                }
-            )
-            return fields, fid
-
-        return self._evolve_schema(mutate)
-
-    def rename_column(self, old: str, new: str) -> int:
-        """Spec rename: the field ID is the identity; only the name moves."""
-
-        def mutate(fields, meta):
-            if any(f["name"] == new for f in fields):
-                raise ValueError(f"column {new!r} already exists")
-            tgt = next((f for f in fields if f["name"] == old), None)
-            if tgt is None:
-                raise ValueError(f"no column {old!r}")
-            tgt["name"] = new
-            return fields, meta["last-column-id"]
-
-        return self._evolve_schema(mutate)
-
-    def promote_column(self, name: str, spark_type) -> int:
-        """Spec widening promotion — validated by the same rule the scan
-        enforces (evolution.is_promotable), so metadata can never declare a
-        type the reader would corrupt on."""
-        from ic_spark.compaction.evolution import is_promotable
-
-        def mutate(fields, meta):
-            tgt = next((f for f in fields if f["name"] == name), None)
-            if tgt is None:
-                raise ValueError(f"no column {name!r}")
-            src_t = iceberg_to_spark_type(tgt["type"])
-            if not is_promotable(src_t, spark_type):
-                raise ValueError(
-                    f"cannot promote {name}: {src_t.simpleString()} -> "
-                    f"{spark_type.simpleString()} is not an Iceberg widening"
-                )
-            tgt["type"] = spark_to_iceberg_type(spark_type)
-            return fields, meta["last-column-id"]
-
-        return self._evolve_schema(mutate)
 
     def update_sort_order(self, fields: list[dict]) -> int:
         """``ALTER TABLE ... WRITE ORDERED BY`` — register a new sort order
@@ -2020,168 +1668,46 @@ class IcebergTable:
             )
         return oid, out
 
-    def drop_column(self, name: str) -> int:
-        """Spec drop-column: the field leaves the current schema; its id is
-        RETIRED (``last-column-id`` never decreases, so a later re-add of
-        the same name gets a fresh id and old files' data for the dropped
-        column can never resurrect).  Metadata-only — no file rewrite.
-
-        Rejected while any partition spec sources the column (Iceberg
-        requires the partition field be removed first) — dropping it would
-        orphan the spec's source-id.
-        """
-
-        def mutate(fields, meta):
-            tgt = next((f for f in fields if f["name"] == name), None)
-            if tgt is None:
-                raise ValueError(f"no column {name!r}")
-            for spec in meta["partition-specs"]:
-                for pf in spec["fields"]:
-                    if pf["source-id"] == tgt["id"] and pf["transform"] != "void":
-                        raise ValueError(
-                            f"cannot drop {name!r}: partition spec "
-                            f"{spec['spec-id']} field {pf['name']!r} sources it; "
-                            "remove the partition field first"
-                        )
-            return [f for f in fields if f["name"] != name], meta["last-column-id"]
-
-        return self._evolve_schema(mutate)
-
-    def move_column(
-        self,
-        name: str,
-        before: str | None = None,
-        after: str | None = None,
-        first: bool = False,
-    ) -> int:
-        """Spec column reorder (``ALTER TABLE ... ALTER COLUMN c FIRST /
-        AFTER x``): field order in the schema changes; ids and data files
-        don't.  Reads project in the new order; old files resolve by id."""
-        if sum((before is not None, after is not None, first)) != 1:
-            raise ValueError("pass exactly one of before=, after=, first=True")
-
-        def mutate(fields, meta):
-            tgt = next((f for f in fields if f["name"] == name), None)
-            if tgt is None:
-                raise ValueError(f"no column {name!r}")
-            rest = [f for f in fields if f["name"] != name]
-            if first:
-                idx = 0
-            else:
-                anchor = before or after
-                pos = next(
-                    (i for i, f in enumerate(rest) if f["name"] == anchor), None
-                )
-                if pos is None:
-                    raise ValueError(f"no anchor column {anchor!r}")
-                idx = pos if before else pos + 1
-            return rest[:idx] + [tgt] + rest[idx:], meta["last-column-id"]
-
-        return self._evolve_schema(mutate)
-
-    def make_optional(self, name: str) -> int:
-        """Spec required→optional relaxation.  The inverse (optional→
-        required) is spec-illegal — existing files may hold nulls — and is
-        rejected."""
-
-        def mutate(fields, meta):
-            tgt = next((f for f in fields if f["name"] == name), None)
-            if tgt is None:
-                raise ValueError(f"no column {name!r}")
-            tgt["required"] = False
-            return fields, meta["last-column-id"]
-
-        return self._evolve_schema(mutate)
-
-
-def _snapshot_schema_id(meta: dict, snapshot_id: int | None) -> int:
-    """The schema id a snapshot was committed under (spec: every
-    snapshot records its ``schema-id``).  Current schema for None and
-    for snapshots written without the field."""
-    if snapshot_id is not None:
-        for s in meta["snapshots"]:
-            if s["snapshot-id"] == snapshot_id:
-                sid = s.get("schema-id")
-                if sid is not None:
-                    return sid
-                break
-    return meta["current-schema-id"]
-
-
-def schema_activation_boundaries(meta: dict) -> dict[int, int] | None:
-    """{schema_id: last-sequence-number at activation} for ALL schemas,
-    or None when any non-initial schema predates boundary tracking
-    (legacy tables fall back to name-mapping resolution)."""
-    schemas = meta["schemas"]
-    act = json.loads(
-        meta.get("properties", {}).get("ic.schema-activation", "{}")
+def _writer_spec(meta: dict, spec: dict) -> list[dict]:
+    """One metadata partition spec in the writer's shape ({"name",
+    "transform", "source", "n"/"width"}), sources named through the
+    current schema (None for a since-dropped source).  Metadata
+    ``bucket[N]`` reads back as ``iceberg_bucket`` — spec-format tables
+    always use the spec-exact bucket so layouts interoperate with real
+    Iceberg readers."""
+    schema = next(
+        s for s in meta["schemas"] if s["schema-id"] == meta["current-schema-id"]
     )
-    out: dict[int, int] = {}
-    initial = min(s["schema-id"] for s in schemas)
-    for s in schemas:
-        sid = s["schema-id"]
-        if sid == initial:
-            out[sid] = -1  # active since before any data commit
-        elif str(sid) in act:
-            out[sid] = int(act[str(sid)])
+    id_to_name = {f["id"]: f["name"] for f in schema["fields"]}
+    id_to_type = {f["id"]: f["type"] for f in schema["fields"]}
+    out = []
+    for pf in spec["fields"]:
+        field = {
+            "name": pf["name"],
+            "source": id_to_name.get(pf["source-id"]),
+        }
+        st = id_to_type.get(pf["source-id"])
+        if isinstance(st, str):
+            # Primitive source type string ("date", "timestamptz",
+            # "long", ...): enables bucket-hash AND temporal identity
+            # pruning (table_model._comparable_pair needs it to map
+            # internal epoch ints back to literals).
+            field["source_type"] = st
+            if st == "uuid":
+                # The logical marker transform_column and the
+                # iceberg_bucket expression dispatch on — without it a
+                # uuid column buckets by its 36-char TEXT instead of its
+                # 16 msb/lsb bytes, silently non-interoperable with
+                # Iceberg-written layouts.
+                field["logical"] = "uuid"
+        t = pf["transform"]
+        if t.startswith("bucket["):
+            field["transform"] = "iceberg_bucket"
+            field["n"] = int(t[len("bucket[") : -1])
+        elif t.startswith("truncate["):
+            field["transform"] = "truncate"
+            field["width"] = int(t[len("truncate[") : -1])
         else:
-            return None
+            field["transform"] = t
+        out.append(field)
     return out
-
-
-def resolve_write_schema_id(
-    boundaries: dict[int, int] | None, sequence_number: int
-) -> int | None:
-    """The schema a file committed at ``sequence_number`` was written
-    under: the schema with the LARGEST activation boundary strictly
-    below the file's sequence number (ties -> newest schema id)."""
-    if boundaries is None:
-        return None
-    eligible = [
-        (b, sid) for sid, b in boundaries.items() if b < sequence_number
-    ]
-    if not eligible:
-        return None
-    return max(eligible)[1]
-
-
-def history_from_schemas(schemas: list[dict], current_id: int) -> dict:
-    """Planner-shaped schema history (RewriteFilesRequest.schema_history)
-    from an iceberg-style schemas list.  Shared by both flavors."""
-    return {
-        "current_id": current_id,
-        "schemas": {
-            s["schema-id"]: tuple(
-                (
-                    f["id"],
-                    f["name"],
-                    iceberg_to_spark_type(f["type"]),
-                    not f["required"],
-                )
-                for f in s["fields"]
-            )
-            for s in schemas
-        },
-    }
-
-
-def derive_name_mapping(
-    schemas: list[dict], current_id: int
-) -> dict[str, list[str]] | None:
-    """Name-mapping from a schemas list: for each CURRENT field id,
-    every name it carried in older schema versions.  This is exactly
-    what Iceberg's schema.name-mapping.default encodes for files
-    written without field ids.  Shared by both metadata flavors."""
-    cur = next(s for s in schemas if s["schema-id"] == current_id)
-    mapping: dict[str, list[str]] = {}
-    for f in cur["fields"]:
-        prior = []
-        for s in schemas:
-            if s["schema-id"] == current_id:
-                continue
-            for g in s["fields"]:
-                if g["id"] == f["id"] and g["name"] != f["name"] and g["name"] not in prior:
-                    prior.append(g["name"])
-        if prior:
-            mapping[f["name"]] = prior
-    return mapping or None

@@ -16,459 +16,21 @@ an Iceberg metadata-JSON pointer swap on a POSIX store.
 
 from __future__ import annotations
 
-import functools
-import json
 import os
-import tempfile
 import time
 from dataclasses import dataclass
-from typing import TYPE_CHECKING
 
-from ic_spark.compaction.epochs import epoch_days, epoch_micros
-from ic_spark.compaction.request import FileContent, FileScanTask
-
-if TYPE_CHECKING:
-    from pyspark.sql import types as T
-
+from ic_spark.compaction.table_model import (
+    ModelState,
+    TableModel,
+    activation_boundaries,
+    evolve_schemas,
+    resolve_write_schema_id,
+    schema_to_iceberg,
+)
 
 class CommitConflictError(RuntimeError):
     """A rewrite commit lost an optimistic-concurrency race."""
-
-
-_PRUNE_OPS = {"=", "<", "<=", ">", ">="}
-
-
-def _coerce_partition_value(pv, like):
-    """Hive directory names store partition values as strings; coerce
-    back toward the comparison literal's type (int ordinals, bucket ids,
-    truncated numerics).  Failure to coerce means "don't prune"."""
-    if pv is None or not isinstance(pv, str):
-        return pv
-    if isinstance(like, bool):
-        return None
-    if isinstance(like, int):
-        try:
-            return int(pv)
-        except ValueError:
-            return None
-    if isinstance(like, float):
-        try:
-            return float(pv)
-        except ValueError:
-            return None
-    return pv
-
-
-def _temporal_epoch(days: bool, value):
-    """One identity-partition value → its Iceberg internal int (epoch
-    days when ``days`` else epoch micros), or None when the value
-    cannot be converted faithfully.
-
-    Values arrive in flavor-dependent shapes: spec-metadata manifests
-    store the internal ints themselves, hive-dir manifests store ISO
-    strings, and the caller's predicate literal may be a string or a
-    ``date``/``datetime`` object.  Aware datetimes convert against the
-    UTC epoch (Iceberg timestamptz semantics); naive ones against the
-    naive epoch (exact integer arithmetic either way).
-    """
-    import datetime as dt
-
-    if isinstance(value, bool) or value is None:
-        return None
-    if isinstance(value, int):
-        return value
-    if isinstance(value, str):
-        try:
-            value = (
-                dt.date.fromisoformat(value)
-                if days
-                else dt.datetime.fromisoformat(value)
-            )
-        except ValueError:
-            return None
-    if days:
-        if isinstance(value, dt.datetime):
-            # A sub-day literal has no exact epoch-days image: the
-            # truncation would make the exclusive-bound tightening
-            # prune the boundary day whose rows DO satisfy e.g.
-            # `d < 2024-06-01T12:00`.  Opt out of pruning instead.
-            if (
-                value.hour or value.minute or value.second
-                or value.microsecond or value.tzinfo is not None
-            ):
-                return None
-            value = value.date()
-        if isinstance(value, dt.date):
-            return epoch_days(value)
-        return None
-    if isinstance(value, dt.date) and not isinstance(value, dt.datetime):
-        value = dt.datetime(value.year, value.month, value.day)
-    if not isinstance(value, dt.datetime):
-        return None
-    return epoch_micros(value)
-
-
-_TEMPORAL_TYPES = ("date", "timestamp", "timestamptz", "timestamp_ntz")
-
-
-@functools.lru_cache(maxsize=4096)
-def _parse_iso_temporal(s: str):
-    """``datetime`` for an ISO date/datetime string, else None.  Both
-    the 'T' and space separators parse (datetime.fromisoformat accepts
-    either); date-only strings land at midnight so mixed date/datetime
-    pairs still share the micros domain.  Cached: scan planning calls
-    this with the SAME predicate literal for every file entry."""
-    import datetime as dt
-
-    try:
-        return dt.datetime.fromisoformat(s)
-    except ValueError:
-        pass
-    try:
-        d = dt.date.fromisoformat(s)
-        return dt.datetime(d.year, d.month, d.day)
-    except ValueError:
-        return None
-
-
-@functools.lru_cache(maxsize=4096)
-def _parse_decimal(s: str):
-    """``Decimal`` for a finite numeric string, else None (cached for
-    the same per-file reason as :func:`_parse_iso_temporal`)."""
-    from decimal import Decimal, InvalidOperation
-
-    try:
-        d = Decimal(s)
-    except InvalidOperation:
-        return None
-    return d if d.is_finite() else None
-
-
-def _sign(a, b) -> int:
-    return (a > b) - (a < b)
-
-
-def _str_pair(sv: str, lit: str):
-    """UNTYPED string pair → one comparable domain, or None (keep).
-
-    Without a declared column type, a string that parses as an ISO
-    temporal or a number could equally be a genuine STRING column whose
-    engine semantics are lexical — so a typed interpretation may only
-    prune where it AGREES with the lexical order (disagree → None).
-    This still fixes the motivating spelling bugs: equal instants with
-    'T' vs space spellings disagree with lexical equality and are KEPT,
-    and inverted-order mis-prunes disagree by construction.  Same-
-    format spellings (the overwhelmingly common case) agree and prune
-    at full typed fidelity."""
-    lex = _sign(sv, lit)
-    a, b = _parse_iso_temporal(sv), _parse_iso_temporal(lit)
-    if a is not None and b is not None:
-        if (a.tzinfo is None) is not (b.tzinfo is None):
-            return None
-        ea, eb = _temporal_epoch(False, a), _temporal_epoch(False, b)
-        if ea is None or eb is None or _sign(ea, eb) != lex:
-            return None
-        return ea, eb
-    da, db = _parse_decimal(sv), _parse_decimal(lit)
-    if da is not None and db is not None:
-        if _sign(da, db) != lex:
-            return None
-    return sv, lit
-
-
-def _comparable_pair(pv, tv, source_type):
-    """Coerce one (partition value, transformed literal) pair into a
-    single comparable domain, or None when no faithful comparison
-    exists (the caller must NOT prune).
-
-    The identity transform is the only one whose partition values can
-    be temporal: spec manifests record internal epoch ints while
-    predicates carry strings/dates, so a naive ``!=`` between an int
-    and a string is always-True and silently drops matching files.
-    """
-    import datetime as dt
-
-    temporal = (
-        source_type in _TEMPORAL_TYPES
-        if source_type is not None
-        else isinstance(pv, (dt.date, dt.datetime))
-        or isinstance(tv, (dt.date, dt.datetime))
-    )
-    if temporal:
-        # One domain for BOTH sides: epoch days only when the declared
-        # type (or, lacking one, a date-not-datetime value on either
-        # side) says date; everything else compares in micros.
-        days = source_type == "date" or (
-            source_type is None
-            and any(
-                isinstance(x, dt.date) and not isinstance(x, dt.datetime)
-                for x in (pv, tv)
-            )
-        )
-        a = _temporal_epoch(days, pv)
-        b = _temporal_epoch(days, tv)
-        if a is None or b is None:
-            return None
-        return a, b
-    if isinstance(pv, bool) is not isinstance(tv, bool):
-        return None
-    if isinstance(pv, (int, float)) and isinstance(tv, (int, float)):
-        return pv, tv
-    if isinstance(pv, str) and isinstance(tv, str):
-        # Hive-flavor manifests (no declared source_type) store temporal
-        # identity values as str(datetime) — SPACE separator — while
-        # predicate literals commonly use the 'T' spelling.  Lexical
-        # comparison across spellings wrongly prunes on equality and can
-        # invert ordering (' ' < 'T'); but the column could equally be a
-        # genuine STRING partition, so the shared helper prunes only
-        # where the typed and lexical interpretations agree.
-        return _str_pair(pv, tv)
-    if isinstance(pv, type(tv)) or isinstance(tv, type(pv)):
-        return pv, tv
-    # Mixed leftover shapes (e.g. an int partition value against a
-    # string literal with no declared source type): comparing them
-    # would prune wrongly — opt out.
-    return None
-
-
-def _file_may_match_partition(
-    file_entry: dict, specs: dict[str, list[dict]], data_filter: list[tuple]
-) -> bool:
-    """Partition-level pruning under spec evolution: judge each file by
-    ITS OWN partition spec (``spec_id``) and recorded partition values —
-    files written under an older spec are evaluated against that spec,
-    exactly Iceberg's per-spec residual evaluation.  Conservative
-    everywhere: unknown spec, missing partition value, or an
-    unevaluable transform keeps the file.
-    """
-    from ic_spark.compaction.transforms import (
-        MONOTONE_TRANSFORMS,
-        apply_transform_py,
-    )
-
-    if file_entry.get("adhoc_partition"):
-        # partition_by fanout values recorded outside any registered
-        # spec: never evaluate them under spec transforms (stats-based
-        # pruning still applies via column_stats).
-        return True
-    spec = specs.get(str(file_entry.get("spec_id", 0)))
-    partition = file_entry.get("partition") or {}
-    if not spec or not partition:
-        return True
-    for col, op, value in data_filter:
-        for field in spec:
-            if field.get("source", field["name"]) != col:
-                continue
-            tname = field["transform"]
-            lit = value
-            # Iceberg's strict-projection boundary adjustment: for an
-            # exclusive bound on an INTEGER source, `k < v` has the same
-            # row set as `k <= v-1`, and t(v-1) can land in the previous
-            # partition — tightening e.g. `k < 100` to prune the
-            # trunc-100 bin "100" itself.  The rewrite is only valid
-            # when the SOURCE domain is integral: a DOUBLE identity
-            # partition holding 4.5 satisfies `k < 5` but not `k <= 4`,
-            # so identity defers tightening to the post-normalization
-            # block below (gated on both sides landing in an int
-            # domain), and truncate requires a declared int/long source
-            # (undeclared hive-flavor values opt out at coercion —
-            # fractional strings never coerce to the int literal; a
-            # scale-0 decimal that does coerce is integral anyway).
-            if (
-                isinstance(value, int)
-                and not isinstance(value, bool)
-                and tname == "truncate"
-                and field.get("source_type") in (None, "int", "long")
-            ):
-                if op == "<":
-                    lit = value - 1
-                elif op == ">":
-                    lit = value + 1
-            ok, tv = apply_transform_py(field, lit, field.get("source_type"))
-            if not ok:
-                continue
-            pv = _coerce_partition_value(partition.get(field["name"]), tv)
-            if pv is None:
-                continue  # null partition / not recorded / uncoercible
-            if tname in MONOTONE_TRANSFORMS:
-                if tname == "identity":
-                    # Temporal identity values arrive as internal epoch
-                    # ints (spec manifests), ISO strings (hive dirs) or
-                    # date/datetime literals — normalize both sides or
-                    # opt out; a cross-type != would silently prune.
-                    pair = _comparable_pair(
-                        pv, tv, field.get("source_type")
-                    )
-                    if pair is None:
-                        continue
-                    pv, tv = pair
-                    if (
-                        lit is value  # pre-transform adjustment skipped
-                        and isinstance(pv, int)
-                        and isinstance(tv, int)
-                        and not isinstance(pv, bool)
-                        and not isinstance(tv, bool)
-                    ):
-                        # Same exclusive-bound tightening as the int
-                        # path, in the normalized epoch domain (days/
-                        # micros are the storage granularity): for
-                        # identity, `k > v` ≡ `k >= v+1`, so the
-                        # boundary partition itself prunes.
-                        if op == "<":
-                            tv -= 1
-                        elif op == ">":
-                            tv += 1
-                try:
-                    if op == "=" and pv != tv:
-                        return False
-                    if op in ("<", "<=") and pv > tv:
-                        return False
-                    if op in (">", ">=") and pv < tv:
-                        return False
-                except TypeError:
-                    continue
-            elif tname in ("bucket", "iceberg_bucket"):
-                # Hash buckets: only equality can prune.
-                if op == "=" and pv != tv:
-                    return False
-    return True
-
-
-def _stat_literal_pair(sv, lit, ctype: str | None = None):
-    """One (stat value, predicate literal) pair in a single comparable
-    domain, or None when no faithful comparison exists (keep the file).
-
-    Temporal stats serialize as ``str(datetime)`` — SPACE separator
-    (``writer._json_safe``) — while callers pass 'T'-spelled ISO
-    strings or date/datetime objects; a lexical string comparison
-    inverts ordering across the separator byte (' ' < 'T'), wrongly
-    pruning e.g. ``ts > '...T00:00:00'`` against a max of
-    ``'... 23:00:00'`` (same class as the identity-partition spelling
-    bug).  ``ctype`` is the DECLARED column domain when the caller
-    knows it ("string" | "temporal" | "numeric"): declared types
-    compare at full typed fidelity; untyped string pairs go through
-    the agreement-guarded :func:`_str_pair` (a digit/ISO-looking
-    string could equally be a genuine STRING column whose engine
-    order is lexical).
-    """
-    import datetime as dt
-
-    if ctype == "string":
-        # Engine semantics are lexical; non-string literals have no
-        # faithful order against a string column.
-        if isinstance(sv, str) and isinstance(lit, str):
-            return sv, lit
-        return None
-    if isinstance(sv, str):
-        if isinstance(lit, str):
-            if ctype == "temporal":
-                a, b = _parse_iso_temporal(sv), _parse_iso_temporal(lit)
-                if (
-                    a is None
-                    or b is None
-                    or (a.tzinfo is None) is not (b.tzinfo is None)
-                ):
-                    return None
-                return _temporal_epoch(False, a), _temporal_epoch(False, b)
-            if ctype == "numeric":
-                da, db = _parse_decimal(sv), _parse_decimal(lit)
-                if da is None or db is None:
-                    return None
-                return da, db
-            return _str_pair(sv, lit)
-        if isinstance(lit, dt.date):
-            a = _parse_iso_temporal(sv)
-            if a is None:
-                return None
-            b = (
-                lit
-                if isinstance(lit, dt.datetime)
-                else dt.datetime(lit.year, lit.month, lit.day)
-            )
-            if (a.tzinfo is None) is not (b.tzinfo is None):
-                return None
-            return _temporal_epoch(False, a), _temporal_epoch(False, b)
-        if ctype == "numeric" and isinstance(lit, (int, float)):
-            # Decimal compares exactly against int and float (py3.2+).
-            da = _parse_decimal(sv)
-            return None if da is None else (da, lit)
-    if ctype == "numeric" and isinstance(lit, str):
-        # Object-valued numeric stats (Iceberg binary bounds decode to
-        # Decimal/int/float) against a string literal: the declared
-        # domain makes the literal's numeric reading authoritative.
-        from decimal import Decimal
-
-        if isinstance(sv, (int, float, Decimal)) and not isinstance(
-            sv, bool
-        ):
-            db = _parse_decimal(lit)
-            return None if db is None else (sv, db)
-    if isinstance(sv, dt.date):
-        # Object-valued temporal stats (Iceberg binary bounds decode to
-        # date / aware-or-naive datetime) against object or ISO-string
-        # literals: one shared micros domain, refusing cross-awareness
-        # pairs (an instant has no faithful order against a wall-clock
-        # literal without a session timezone).
-        a = (
-            sv
-            if isinstance(sv, dt.datetime)
-            else dt.datetime(sv.year, sv.month, sv.day)
-        )
-        b = lit
-        if isinstance(b, str):
-            b = _parse_iso_temporal(b)
-        elif isinstance(b, dt.date) and not isinstance(b, dt.datetime):
-            b = dt.datetime(b.year, b.month, b.day)
-        if not isinstance(b, dt.datetime):
-            return None
-        if (a.tzinfo is None) is not (b.tzinfo is None):
-            return None
-        return _temporal_epoch(False, a), _temporal_epoch(False, b)
-    return sv, lit
-
-
-def _file_may_match(
-    file_entry: dict,
-    data_filter: list[tuple],
-    column_types: dict[str, str] | None = None,
-) -> bool:
-    """Can any row of this file satisfy ALL predicates, judging only by
-    the manifest's per-column min/max?  Conservative: missing stats or
-    mixed value types mean "maybe" (keep the file).  ``column_types``
-    maps column → declared domain tag ("string"/"temporal"/"numeric")
-    where the caller's schema knows it (Iceberg flavor); untyped
-    columns fall back to agreement-guarded comparison."""
-    stats = file_entry.get("column_stats") or {}
-    for col, op, value in data_filter:
-        if op not in _PRUNE_OPS:
-            raise ValueError(f"unsupported prune op: {op!r}")
-        st = stats.get(col)
-        if not st:
-            continue
-        lo, hi = st.get("min"), st.get("max")
-        if lo is None or hi is None:
-            continue
-        ctype = (column_types or {}).get(col)
-        plo = _stat_literal_pair(lo, value, ctype)
-        phi = _stat_literal_pair(hi, value, ctype)
-        if plo is None or phi is None:
-            continue
-        lo, vlo = plo
-        hi, vhi = phi
-        try:
-            if op == "=" and not (lo <= vlo and vhi <= hi):
-                return False
-            if op == "<" and not (lo < vlo):
-                return False
-            if op == "<=" and not (lo <= vlo):
-                return False
-            if op == ">" and not (hi > vhi):
-                return False
-            if op == ">=" and not (hi >= vhi):
-                return False
-        except TypeError:
-            continue  # incomparable types (e.g. str stats vs int) → keep
-    return True
 
 
 def with_statistics_entry(entries: list[dict], entry: dict) -> list[dict]:
@@ -477,6 +39,16 @@ def with_statistics_entry(entries: list[dict], entry: dict) -> list[dict]:
     the same snapshot replaces the old entry instead of stacking."""
     sid = entry.get("snapshot-id")
     return [e for e in entries if e.get("snapshot-id") != sid] + [entry]
+
+
+def _record_ref_type(state: dict, name: str, ref_type: str) -> None:
+    """Record ``name`` as a branch, or drop its record for a tag (the
+    type of a ref with no record): tag-only states keep their bytes."""
+    types = state.get("ref_types")
+    if ref_type == "branch":
+        state["ref_types"] = {**(types or {}), name: "branch"}
+    elif types and name in types:
+        types.pop(name)
 
 
 @dataclass
@@ -489,7 +61,7 @@ class Snapshot:
     operation: str | None = None
 
 
-class ManifestTable:
+class ManifestTable(TableModel):
     """A directory-backed table: ``{root}/manifest.json`` + data files.
 
     ``file_io`` routes the metadata plane (manifest.json swap, orphan
@@ -524,19 +96,17 @@ class ManifestTable:
 
     # -- schema evolution (optional registry) --------------------------
     #
-    # Mirrors the spec flavor's field-id schema machinery: an
-    # iceberg-style schemas list with stable field ids, evolution DDL
-    # (add/rename/widen/drop/move/optional), and per-evolution
-    # sequence-number activation boundaries so scans resolve each data
-    # file against the schema it was WRITTEN under.  Tables that never
-    # call register_schema keep plain footer-schema reads (schema()
-    # returns None).
+    # An iceberg-style schemas list with stable field ids, and per-
+    # evolution sequence-number activation boundaries
+    # (``schema_activation``) so scans resolve each data file against
+    # the schema it was WRITTEN under.  The column DDL is the shared
+    # table model's (table_model.TableModel).  Tables that never call
+    # register_schema keep plain footer-schema reads (schema() returns
+    # None).
 
     def register_schema(self, spark_schema) -> int:
         """Register the table's initial schema (enables evolution DDL +
         exact write-schema resolution)."""
-        from ic_spark.compaction.iceberg_meta import schema_to_iceberg
-
         state = self._load()
         if state.get("schemas"):
             raise ValueError("schema already registered")
@@ -549,83 +119,86 @@ class ManifestTable:
         self._store(state)
         return 0
 
-    def schema(self, snapshot_id: int | None = None) -> T.StructType | None:
-        """Current registered schema as a StructType, or None.  This
-        flavor records no per-snapshot schema, so ``snapshot_id`` is
-        ignored (time travel reads under the current schema)."""
-        from ic_spark.compaction.iceberg_meta import iceberg_to_spark_schema
-
-        state = self._load()
-        if not state.get("schemas"):
-            return None
-        cur = next(
-            s
-            for s in state["schemas"]
-            if s["schema-id"] == state["current_schema_id"]
-        )
-        return iceberg_to_spark_schema(cur)
-
-    def name_mapping(
-        self, snapshot_id: int | None = None
-    ) -> dict[str, list[str]] | None:
-        """Scan name-mapping of the current schema (``snapshot_id`` is
-        ignored, as in :meth:`schema`)."""
-        from ic_spark.compaction.iceberg_meta import derive_name_mapping
-
-        state = self._load()
-        if not state.get("schemas"):
-            return None
-        return derive_name_mapping(state["schemas"], state["current_schema_id"])
-
-    def schema_history(self, snapshot_id: int | None = None) -> dict | None:
-        """Planner schema history, None for a single schema
-        (``snapshot_id`` is ignored, as in :meth:`schema`)."""
-        from ic_spark.compaction.iceberg_meta import history_from_schemas
-
-        state = self._load()
-        if len(state.get("schemas") or []) <= 1:
-            return None
-        return history_from_schemas(
-            state["schemas"], state["current_schema_id"]
-        )
-
     def default_sort_order(self) -> tuple[int, list[dict]]:
         """Always ``(0, [])``: this flavor has no sort orders."""
         return 0, []
 
-    def _schema_boundaries(self) -> dict[int, int] | None:
-        state = self._load()
-        if len(state.get("schemas") or []) <= 1:
-            return None
-        act = state.get("schema_activation", {})
-        out: dict[int, int] = {}
-        for s in state["schemas"]:
-            sid = s["schema-id"]
-            if str(sid) not in act:
+    def model_state(self, raw: dict | None = None) -> ModelState:
+        """One read of ``manifest.json`` (or the state ``raw`` already
+        read) as the shared table model's view."""
+        state = self._load() if raw is None else raw
+        ref_types = state.get("ref_types", {})
+        snapshots = [(s["snapshot_id"], s["timestamp_ms"]) for s in state["snapshots"]]
+        return ModelState(
+            raw=state,
+            schemas=state.get("schemas") or [],
+            current_schema_id=state.get("current_schema_id"),
+            last_column_id=state.get("last_column_id", 0),
+            boundaries=activation_boundaries(
+                state.get("schemas") or [], state.get("schema_activation", {})
+            ),
+            specs=state.get("partition_specs", {"0": []}),
+            default_spec_id=state.get("default_spec_id", 0),
+            snapshots=snapshots,
+            snapshot_log=snapshots,
+            current_snapshot_id=state["current_snapshot_id"],
+            snapshot_schema_ids={},
+            refs={
+                n: (sid, ref_types.get(n, "tag"))
+                for n, sid in state.get("refs", {}).items()
+            },
+        )
+
+    def live_files(
+        self,
+        snapshot_id: int | None = None,
+        state: ModelState | None = None,
+        bounds: bool = False,
+        deletes_only: bool = False,
+    ) -> list[dict] | None:
+        """The snapshot's recorded file dicts (``bounds`` is moot: their
+        column stats are inline), only its delete files for
+        ``deletes_only``.  Equality-delete key names map to field ids
+        under the schema each delete file was written with."""
+        state = self.model_state() if state is None else state
+        sid = state.current_snapshot_id if snapshot_id is None else snapshot_id
+        snap = next(
+            (s for s in state.raw["snapshots"] if s["snapshot_id"] == sid), None
+        )
+        if snap is None:
+            if snapshot_id is None:
                 return None
-            out[sid] = int(act[str(sid)])
+            raise ValueError(f"snapshot {snapshot_id} not found")
+        files = snap["files"]
+        if deletes_only:
+            files = [f for f in files if f.get("content", "DATA") != "DATA"]
+        if not state.schemas:
+            return files
+        ids_by_schema = {
+            s["schema-id"]: {f["name"]: f["id"] for f in s["fields"]}
+            for s in state.schemas
+        }
+        out = []
+        for f in files:
+            if f.get("equality_ids"):
+                wid = resolve_write_schema_id(
+                    state.boundaries, f.get("sequence_number", 0)
+                )
+                ids = ids_by_schema.get(wid, ids_by_schema[state.current_schema_id])
+                f = {**f, "equality_ids": [ids.get(k, k) for k in f["equality_ids"]]}
+            out.append(f)
         return out
 
     def _evolve_schema(self, mutate) -> int:
-        """Append a new schema version produced by ``mutate(fields,
-        state) -> (fields, last_column_id)``; record its activation
-        boundary (files committed at strictly higher sequence numbers
-        were written under it)."""
-        import copy
-
+        """Append the schema version ``mutate`` builds; record its
+        activation boundary (files committed at strictly higher sequence
+        numbers were written under it)."""
         state = self._load()
         if not state.get("schemas"):
             raise ValueError("no schema registered (call register_schema)")
-        cur = next(
-            s
-            for s in state["schemas"]
-            if s["schema-id"] == state["current_schema_id"]
+        state["schemas"], new_id, last_col = evolve_schemas(
+            self.model_state(state), mutate
         )
-        fields, last_col = mutate(copy.deepcopy(cur["fields"]), state)
-        new_id = max(s["schema-id"] for s in state["schemas"]) + 1
-        state["schemas"] = list(state["schemas"]) + [
-            {"type": "struct", "schema-id": new_id, "fields": fields}
-        ]
         state["current_schema_id"] = new_id
         state["last_column_id"] = last_col
         act = dict(state.get("schema_activation", {}))
@@ -633,136 +206,6 @@ class ManifestTable:
         state["schema_activation"] = act
         self._store(state)
         return new_id
-
-    def add_column(self, name: str, spark_type) -> int:
-        """Add-column DDL: fresh field id, always optional (old files
-        null-fill)."""
-        from ic_spark.compaction.iceberg_meta import spark_to_iceberg_type
-
-        def mutate(fields, state):
-            if any(f["name"] == name for f in fields):
-                raise ValueError(f"column {name!r} already exists")
-            fid = state["last_column_id"] + 1
-            fields.append(
-                {
-                    "id": fid,
-                    "name": name,
-                    "required": False,
-                    "type": spark_to_iceberg_type(spark_type),
-                }
-            )
-            return fields, fid
-
-        return self._evolve_schema(mutate)
-
-    def rename_column(self, old: str, new: str) -> int:
-        """Rename DDL: the field id is the identity; only the name moves."""
-
-        def mutate(fields, state):
-            if any(f["name"] == new for f in fields):
-                raise ValueError(f"column {new!r} already exists")
-            tgt = next((f for f in fields if f["name"] == old), None)
-            if tgt is None:
-                raise ValueError(f"no column {old!r}")
-            tgt["name"] = new
-            return fields, state["last_column_id"]
-
-        return self._evolve_schema(mutate)
-
-    def promote_column(self, name: str, spark_type) -> int:
-        """Widening promotion, validated by the same rule the scan
-        enforces (evolution.is_promotable)."""
-        from ic_spark.compaction.evolution import is_promotable
-        from ic_spark.compaction.iceberg_meta import (
-            iceberg_to_spark_type,
-            spark_to_iceberg_type,
-        )
-
-        def mutate(fields, state):
-            tgt = next((f for f in fields if f["name"] == name), None)
-            if tgt is None:
-                raise ValueError(f"no column {name!r}")
-            src_t = iceberg_to_spark_type(tgt["type"])
-            if not is_promotable(src_t, spark_type):
-                raise ValueError(
-                    f"cannot promote {name}: {src_t.simpleString()} -> "
-                    f"{spark_type.simpleString()} is not an Iceberg widening"
-                )
-            tgt["type"] = spark_to_iceberg_type(spark_type)
-            return fields, state["last_column_id"]
-
-        return self._evolve_schema(mutate)
-
-    def drop_column(self, name: str) -> int:
-        """Drop DDL: the field leaves the schema, its id is retired
-        (last_column_id never decreases), so a later re-add gets a
-        fresh id and old files' data never resurrects.  Rejected while
-        any partition spec sources the column."""
-
-        def mutate(fields, state):
-            tgt = next((f for f in fields if f["name"] == name), None)
-            if tgt is None:
-                raise ValueError(f"no column {name!r}")
-            for sid, spec in state.get("partition_specs", {}).items():
-                for pf in spec:
-                    if (
-                        pf.get("source", pf["name"]) == name
-                        and pf["transform"] != "void"
-                    ):
-                        raise ValueError(
-                            f"cannot drop {name!r}: partition spec {sid} "
-                            f"field {pf['name']!r} sources it; remove the "
-                            "partition field first"
-                        )
-            return [f for f in fields if f["name"] != name], state[
-                "last_column_id"
-            ]
-
-        return self._evolve_schema(mutate)
-
-    def move_column(
-        self,
-        name: str,
-        before: str | None = None,
-        after: str | None = None,
-        first: bool = False,
-    ) -> int:
-        """Reorder DDL (FIRST / BEFORE x / AFTER x): field order changes,
-        ids and data files don't."""
-        if sum((before is not None, after is not None, first)) != 1:
-            raise ValueError("pass exactly one of before=, after=, first=True")
-
-        def mutate(fields, state):
-            tgt = next((f for f in fields if f["name"] == name), None)
-            if tgt is None:
-                raise ValueError(f"no column {name!r}")
-            rest = [f for f in fields if f["name"] != name]
-            if first:
-                idx = 0
-            else:
-                anchor = before or after
-                pos = next(
-                    (i for i, f in enumerate(rest) if f["name"] == anchor),
-                    None,
-                )
-                if pos is None:
-                    raise ValueError(f"no anchor column {anchor!r}")
-                idx = pos if before else pos + 1
-            return rest[:idx] + [tgt] + rest[idx:], state["last_column_id"]
-
-        return self._evolve_schema(mutate)
-
-    def make_optional(self, name: str) -> int:
-        """required→optional relaxation (the inverse is illegal)."""
-
-        def mutate(fields, state):
-            tgt = next((f for f in fields if f["name"] == name), None)
-            if tgt is None:
-                raise ValueError(f"no column {name!r}")
-            tgt["required"] = False
-            return fields, state["last_column_id"]
-
-        return self._evolve_schema(mutate)
 
     # -- partition-spec evolution --------------------------------------
     #
@@ -772,22 +215,6 @@ class ManifestTable:
     # existing files — scans evaluate every file against its own spec.
     # (Iceberg spec "Partition Evolution"; the reference ships a
     # PartitionSpec per rewrite request, core/proto/iceberg.proto:18-61.)
-
-    def partition_specs(self) -> dict[str, list[dict]]:
-        state = self._load()
-        return state.get("partition_specs", {"0": []})
-
-    def default_spec_id(self) -> int:
-        return self._load().get("default_spec_id", 0)
-
-    def partition_spec(self, spec_id: int | None = None) -> list[dict]:
-        """Spec fields for ``spec_id`` (default: the table's current
-        default spec).  Spec 0 is the implicit unpartitioned spec."""
-        specs = self.partition_specs()
-        sid = self.default_spec_id() if spec_id is None else spec_id
-        if str(sid) not in specs:
-            raise ValueError(f"unknown partition spec id {sid}")
-        return specs[str(sid)]
 
     def update_partition_spec(self, fields: list[dict]) -> int:
         """Evolve the table's partitioning: register ``fields`` as a new
@@ -853,28 +280,12 @@ class ManifestTable:
                 return s
         return None
 
-    def snapshot_id_as_of(self, timestamp_ms: int) -> int:
-        """TIMESTAMP AS OF: the last snapshot committed at or before
-        ``timestamp_ms`` (Iceberg's snapshot-log lookup)."""
-        best = None
-        for s in self.snapshots():
-            if s.timestamp_ms <= timestamp_ms and (
-                best is None or s.timestamp_ms >= best.timestamp_ms
-            ):
-                best = s
-        if best is None:
-            raise ValueError(f"no snapshot at or before {timestamp_ms}")
-        return best.snapshot_id
-
     def current_snapshot(self) -> Snapshot | None:
         state = self._load()
         sid = state["current_snapshot_id"]
         if sid is None:
             return None
         return self.snapshot_at(sid)
-
-    def current_snapshot_id(self) -> int | None:
-        return self._load()["current_snapshot_id"]
 
     def next_sequence_number(self, branch: str | None = None) -> int:
         """The sequence number a commit on ``branch`` (main by default)
@@ -929,129 +340,6 @@ class ManifestTable:
                 if "parent_snapshot_id" not in by_id[i]
             ]
         return head + list(reversed(tail))
-
-    def scan_tasks(
-        self,
-        snapshot_id: int | None = None,
-        data_filter: list[tuple] | None = None,
-    ) -> tuple[list[FileScanTask], list[FileScanTask], list[FileScanTask]]:
-        """Plan a snapshot into (data, pos-delete, eq-delete) tasks.
-
-        Analog of ``get_tasks_from_table`` (reference mod.rs:121-171:
-        ``table.scan().snapshot_id(id)`` — time travel included);
-        delete tasks are deduped by path like the reference's HashSet
-        guard (:143-158).
-
-        ``data_filter`` is a conjunction of ``(col, op, value)`` triples
-        (op in ``= < <= > >=``) evaluated against each data file's
-        manifest ``column_stats`` min/max — Iceberg's manifest-level
-        file skipping: at 100 TB this is what turns a point/range query
-        into a scan of a handful of files instead of the whole table.
-        Files without stats for a referenced column always survive
-        (pruning must never change results), and delete files are never
-        pruned (a surviving data file may need any of them).
-        """
-        if snapshot_id is None:
-            snap = self.current_snapshot()
-        else:
-            snap = self.snapshot_at(snapshot_id)
-            if snap is None:
-                raise ValueError(f"snapshot {snapshot_id} not found")
-        if snap is None:
-            return [], [], []
-        specs = self.partition_specs()
-        data, pos, eq = [], [], []
-        seen: set[str] = set()
-        boundaries = self._schema_boundaries()
-        if boundaries is not None:
-            from ic_spark.compaction.iceberg_meta import resolve_write_schema_id
-        for f in snap.files:
-            task = FileScanTask(
-                data_file_path=f["path"],
-                sequence_number=f.get("sequence_number", 0),
-                content=FileContent[f.get("content", "DATA")],
-                equality_ids=tuple(f.get("equality_ids", ())),
-                file_size_in_bytes=f.get("file_size_in_bytes", 0),
-                record_count=f.get("record_count") or 0,
-                # "puffin" marks deletion-vector files (Iceberg v3
-                # analog, sources/puffin.py); data files may be
-                # avro/orc/parquet.  Lower-cased: the planner's format
-                # routing is case-sensitive and Iceberg spells formats
-                # upper-case.
-                file_format=(f.get("file_format") or "parquet").lower(),
-                write_schema_id=(
-                    resolve_write_schema_id(
-                        boundaries, f.get("sequence_number", 0)
-                    )
-                    if boundaries is not None
-                    else None
-                ),
-                first_row_id=f.get("first_row_id"),
-                partition_values=f.get("partition") or None,
-            )
-            if task.content is FileContent.DATA:
-                if data_filter and not _file_may_match(f, data_filter):
-                    continue
-                if data_filter and not _file_may_match_partition(
-                    f, specs, data_filter
-                ):
-                    continue
-                data.append(task)
-            elif task.data_file_path not in seen:
-                seen.add(task.data_file_path)
-                (pos if task.content is FileContent.POSITION_DELETES else eq).append(task)
-        return data, pos, eq
-
-    def incremental_tasks(
-        self, from_snapshot_id: int, to_snapshot_id: int | None = None
-    ) -> list[FileScanTask]:
-        """DATA files added after ``from_snapshot_id`` up to
-        ``to_snapshot_id`` (current by default) — the incremental append
-        scan (Iceberg ``IncrementalAppendScan`` semantics).
-
-        Raises if the range contains a rewrite (files removed) or new
-        delete files: those snapshots change or retract already-read
-        rows, which an append-only consumer cannot represent —
-        the same condition Iceberg rejects non-append operations on.
-        """
-        frm = self.snapshot_at(from_snapshot_id)
-        if frm is None:
-            raise ValueError(f"snapshot {from_snapshot_id} not found")
-        to = (
-            self.current_snapshot()
-            if to_snapshot_id is None
-            else self.snapshot_at(to_snapshot_id)
-        )
-        if to is None:
-            raise ValueError(f"snapshot {to_snapshot_id} not found")
-        old_paths = {f["path"] for f in frm.files}
-        new_by_path = {f["path"]: f for f in to.files}
-        removed = old_paths - set(new_by_path)
-        if removed:
-            raise ValueError(
-                f"snapshots {from_snapshot_id}..{to.snapshot_id} rewrite "
-                f"{len(removed)} file(s); incremental append scan undefined"
-            )
-        added = [f for p, f in new_by_path.items() if p not in old_paths]
-        deletes = [f for f in added if f.get("content", "DATA") != "DATA"]
-        if deletes:
-            raise ValueError(
-                f"snapshots {from_snapshot_id}..{to.snapshot_id} add "
-                f"{len(deletes)} delete file(s); incremental append scan undefined"
-            )
-        return [
-            FileScanTask(
-                data_file_path=f["path"],
-                sequence_number=f.get("sequence_number", 0),
-                content=FileContent.DATA,
-                file_size_in_bytes=f.get("file_size_in_bytes", 0),
-                record_count=f.get("record_count") or 0,
-                file_format=(f.get("file_format") or "parquet").lower(),
-                first_row_id=f.get("first_row_id"),
-                partition_values=f.get("partition") or None,
-            )
-            for f in added
-        ]
 
     # ------------------------------------------------ row lineage (v3)
 
@@ -1217,6 +505,7 @@ class ManifestTable:
         state["snapshots"].append(entry)
         if branch is not None:
             state.setdefault("refs", {})[branch] = sid
+            _record_ref_type(state, branch, "branch")
         elif not stage:
             state["current_snapshot_id"] = sid
         if stream_mark is not None:
@@ -1391,22 +680,24 @@ class ManifestTable:
 
     # -- refs (tags) ---------------------------------------------------
 
-    def set_ref(self, name: str, snapshot_id: int) -> None:
-        """Tag a snapshot (Iceberg ref semantics): the target survives
-        ``expire_snapshots`` and is addressable by name."""
+    def set_ref(self, name: str, snapshot_id: int, ref_type: str = "tag") -> None:
+        """Record a named ref (Iceberg ref semantics): the target survives
+        ``expire_snapshots`` and is addressable by name.  Branches are
+        recorded in ``ref_types``; a ref with no record there is a tag."""
+        if ref_type not in ("tag", "branch"):
+            raise ValueError(f"ref type must be tag|branch: {ref_type}")
         state = self._load()
         if not any(s["snapshot_id"] == snapshot_id for s in state["snapshots"]):
             raise ValueError(f"snapshot {snapshot_id} not found")
         state.setdefault("refs", {})[name] = snapshot_id
+        _record_ref_type(state, name, ref_type)
         self._store(state)
 
     def remove_ref(self, name: str) -> None:
         state = self._load()
         state.get("refs", {}).pop(name, None)
+        _record_ref_type(state, name, "tag")
         self._store(state)
-
-    def refs(self) -> dict[str, int]:
-        return dict(self._load().get("refs", {}))
 
     # -- statistics files ----------------------------------------------
 
@@ -1422,41 +713,6 @@ class ManifestTable:
             state.get("statistics", []), entry
         )
         self._store(state)
-
-    def resolve_ref(self, name: str) -> int:
-        refs = self.refs()
-        if name not in refs:
-            raise ValueError(f"unknown ref: {name!r}")
-        return refs[name]
-
-    def count_rows(self, snapshot_id: int | None = None) -> int | None:
-        """COUNT(*) answered from manifest metadata alone — Iceberg's
-        aggregate pushdown to stats: sum of per-file ``record_count``
-        when the snapshot has no delete files (deletes hide an unknown
-        number of rows, so the metadata answer would over-count).
-
-        Returns None when metadata can't answer (delete files present,
-        or any data file lacks a record count) — the caller falls back
-        to ``read_table(...).count()``.  At 100 TB this is the
-        difference between a manifest read and a full scan for the
-        most common dashboard query there is.
-        """
-        snap = (
-            self.current_snapshot()
-            if snapshot_id is None
-            else self.snapshot_at(snapshot_id)
-        )
-        if snap is None:
-            return 0
-        total = 0
-        for f in snap.files:
-            if f.get("content", "DATA") != "DATA":
-                return None  # deletes present: metadata can't answer
-            rc = f.get("record_count")
-            if rc is None or rc < 0:
-                return None
-            total += rc
-        return total
 
     # -- physical cleanup ----------------------------------------------
 

@@ -178,7 +178,7 @@ class Compaction:
                 "content": "DATA",
                 "file_size_in_bytes": f.file_size_in_bytes,
                 # Footer-derived stats land in the manifest so later
-                # scans can file-skip (manifest._file_may_match).
+                # scans can file-skip (table_model._file_may_match).
                 "record_count": f.record_count,
                 "column_stats": f.column_stats,
             }

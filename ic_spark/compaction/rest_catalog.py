@@ -228,7 +228,7 @@ class CatalogBackend:
     def create_table(self, ns: str, payload: dict) -> dict:
         import os
 
-        from ic_spark.compaction.iceberg_meta import iceberg_to_spark_schema
+        from ic_spark.compaction.table_model import iceberg_to_spark_schema
 
         name = payload.get("name")
         if not self._safe_segment(name):
@@ -718,7 +718,7 @@ class RestCatalog:
         partition_by: list[str] | None = None,
         properties: dict | None = None,
     ) -> IcebergTable:
-        from ic_spark.compaction.iceberg_meta import schema_to_iceberg
+        from ic_spark.compaction.table_model import schema_to_iceberg
 
         payload = {
             "name": name,

@@ -197,14 +197,14 @@ def apply_transform_py(spec: dict, value, source_type: str | None = None):
             and isinstance(value, dt.date)
             and not isinstance(value, dt.datetime)
         ):
-            from ic_spark.compaction.manifest import _temporal_epoch
+            from ic_spark.compaction.table_model import _temporal_epoch
 
             iv = _temporal_epoch(True, value)
             if iv is None:
                 return False, None
             h = py_hash_long(iv)  # spec: date hashes epoch days as long
         elif st in ("timestamp", "timestamptz", "timestamp_ntz"):
-            from ic_spark.compaction.manifest import _temporal_epoch
+            from ic_spark.compaction.table_model import _temporal_epoch
 
             iv = _temporal_epoch(False, value)
             if iv is None:

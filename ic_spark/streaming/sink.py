@@ -79,6 +79,7 @@ def manifest_append_sink(table: ManifestTable, name: str = "stream"):
         # listing + sizes through the table's metadata seam: plain
         # os.listdir on an object-store dir spelling finds nothing
         from ic_spark.compaction.metafs import table_mfs
+        from ic_spark.compaction.writer import _stats_from_footer
 
         mfs = table_mfs(table)
         parts = sorted(
@@ -88,6 +89,18 @@ def manifest_append_sink(table: ManifestTable, name: str = "stream"):
         )
         if not parts:  # empty micro-batch
             return
+        # The footer's count goes into the manifest (COUNT(*) answers
+        # from it).  A 0-row part, which Spark writes for an empty task,
+        # holds nothing to read and is not committed, unless every part
+        # is empty: one is kept so the batch still reads as 0 rows.
+        counts = {
+            p: _stats_from_footer(mfs.within(p), out_dir, filesystem=mfs.fs)[0]
+            for p in parts
+        }
+        keep = [p for p in parts if counts[p]] or parts[:1]
+        for p in parts:
+            if p not in keep:
+                mfs.unlink(p)
         seq = table.next_sequence_number()
         # The batch id lands in the ledger in the SAME atomic commit.
         table.append_snapshot(
@@ -96,9 +109,10 @@ def manifest_append_sink(table: ManifestTable, name: str = "stream"):
                     "path": p,
                     "sequence_number": seq,
                     "content": "DATA",
+                    "record_count": counts[p],
                     "file_size_in_bytes": mfs.size(p),
                 }
-                for p in parts
+                for p in keep
             ],
             stream_mark=(name, batch_id),
         )
@@ -312,6 +326,7 @@ def compact_gram_index(spark, table: ManifestTable) -> int | None:
     out_dir = os.path.join(table.root, f"idx-compact-{int(time.time() * 1000)}")
     merged.write.mode("overwrite").parquet(out_dir)
     from ic_spark.compaction.metafs import table_mfs
+    from ic_spark.compaction.writer import _stats_from_footer
 
     mfs = table_mfs(table)
     parts = sorted(
@@ -325,6 +340,9 @@ def compact_gram_index(spark, table: ManifestTable) -> int | None:
             "path": p,
             "sequence_number": seq,
             "content": "DATA",
+            "record_count": _stats_from_footer(
+                mfs.within(p), out_dir, filesystem=mfs.fs
+            )[0],
             "file_size_in_bytes": mfs.size(p),
         }
         for p in parts

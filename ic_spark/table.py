@@ -22,7 +22,13 @@ otherwise the JSON :class:`ManifestTable`.
 
 The table contract.  ``ManifestTable``, ``IcebergTable`` and
 ``SqlCatalogTable`` expose these methods under the same names and
-signatures, so no caller asks which flavor it holds:
+signatures, so no caller asks which flavor it holds.  Planning
+(``scan_tasks``, ``incremental_tasks``, ``count_rows``), the schema,
+spec and ref reads and the column DDL are written once, on the shared
+table model (:class:`ic_spark.compaction.table_model.TableModel`), over
+each flavor's codec: ``model_state()`` reads the table state once and
+``live_files(snapshot_id=None, state=None, bounds=False,
+deletes_only=False)`` decodes a snapshot into live-file dicts.
 
 - ``schema(snapshot_id=None)``, ``name_mapping(snapshot_id=None)`` and
   ``schema_history(snapshot_id=None)``: the spec flavor answers for the
@@ -36,8 +42,10 @@ signatures, so no caller asks which flavor it holds:
   for any branch, read from metadata without planning a scan.
 - ``default_sort_order()``: ``(order_id, fields)``; the JSON flavor has
   no sort orders and returns ``(0, [])``.
-- ``count_rows(snapshot_id=None)``: COUNT(*) from manifest stats, None
-  when metadata cannot answer; the spec flavor always returns None.
+- ``count_rows(snapshot_id=None)``: COUNT(*) from manifest stats on
+  both flavors, None when delete files are present or a data file
+  records no rows or no count (spec manifests once wrote 0 for a
+  missing count; a spec data file without a count is now refused).
 - ``statistics()`` / ``register_statistics(entry)``: statistics-file
   entries, one per snapshot.
 - ``ancestor_ids(snapshot_id)`` and ``main_log()``: a snapshot's
@@ -45,10 +53,13 @@ signatures, so no caller asks which flavor it holds:
 - Planning and commits: ``scan_tasks``, ``incremental_tasks``,
   ``commit_rewrite``, ``rollback_to_snapshot``, ``fast_forward``,
   ``expire_snapshots``, ``snapshot_id_as_of``, ``refs``, ``resolve_ref``,
-  ``remove_ref``.
+  ``remove_ref``, and ``set_ref(name, snapshot_id, ref_type="tag")``
+  (a branch commit records its ref as a branch on both flavors).
 - Layout and evolution: ``default_spec_id``, ``partition_spec``,
   ``update_partition_spec``, ``add_column``, ``rename_column``,
   ``promote_column``, ``drop_column``, ``move_column``, ``make_optional``.
+  ``drop_column`` is refused while a partition spec sources the column
+  or a live equality-delete file of a retained snapshot keys on it.
 - Row lineage and streaming: the ``row_lineage`` and ``next_row_id``
   properties, ``enable_row_lineage``, ``stream_batch_hwm``,
   ``mark_stream_batch``.
@@ -58,8 +69,8 @@ signatures, so no caller asks which flavor it holds:
 Beyond the contract, ``append_snapshot(stage=True)``,
 ``publish_snapshot``, ``register_schema`` and ``vacuum`` are JSON-only,
 and the spec flavor's ``remove_orphan_files`` raises
-NotImplementedError; ``metadata()``, table properties,
-``update_sort_order`` and ``set_ref(ref_type=...)`` are spec-only.
+NotImplementedError; ``metadata()``, table properties and
+``update_sort_order`` are spec-only.
 """
 
 from __future__ import annotations
@@ -225,10 +236,17 @@ class Table:
                     "file_size_in_bytes": mfs.size(p),
                 }
             )
-        seq = self.inner.next_sequence_number(branch)
+        # Spark writes a 0-row part for an empty task.  It holds nothing
+        # to read and is not committed, unless every part is empty: one
+        # is kept so an empty append still reads as 0 rows.
+        kept = [e for e in entries if e["record_count"]] or entries[:1]
         for e in entries:
+            if e not in kept:
+                mfs.unlink(e["path"])
+        seq = self.inner.next_sequence_number(branch)
+        for e in kept:
             e["sequence_number"] = seq
-        return self.inner.append_snapshot(entries, branch=branch or None)
+        return self.inner.append_snapshot(kept, branch=branch or None)
 
     # -- row-level changes ---------------------------------------------
 
@@ -302,43 +320,9 @@ class Table:
     def properties(self) -> dict[str, str]:
         return self.inner.properties()
 
-    def set_ref(self, name: str, snapshot_id: int, **kw) -> None:
-        self.inner.set_ref(name, snapshot_id, **kw)
-
-    def fast_forward(self, branch: str, force: bool = False) -> int:
-        return self.inner.fast_forward(branch, force=force)
-
-    def expire_snapshots(self) -> list[str]:
-        return self.inner.expire_snapshots()
-
-    # -- schema / partition DDL (both metadata flavors; the JSON flavor
-    # needs register_schema first) -------------------------------------
-
-    def add_column(self, name: str, spark_type) -> int:
-        return self.inner.add_column(name, spark_type)
-
-    def rename_column(self, old: str, new: str) -> int:
-        return self.inner.rename_column(old, new)
-
-    def promote_column(self, name: str, spark_type) -> int:
-        """Widening promotion (int→long, float→double, decimal scale)."""
-        return self.inner.promote_column(name, spark_type)
-
-    def drop_column(self, name: str) -> int:
-        """Drop a column (metadata-only; the field id retires, so a
-        later re-add of the same name never resurrects old data)."""
-        return self.inner.drop_column(name)
-
-    def move_column(self, name: str, **kw) -> int:
-        """Reorder a column: ``first=True`` / ``before=x`` / ``after=x``."""
-        return self.inner.move_column(name, **kw)
-
-    def make_optional(self, name: str) -> int:
-        """Relax a required column to optional (inverse is rejected)."""
-        return self.inner.make_optional(name)
-
-    def update_partition_spec(self, fields: list[dict]) -> int:
-        return self.inner.update_partition_spec(fields)
+    # -- sort DDL.  The rest of the table contract (refs, fast-forward,
+    # expiry, partition-spec and column DDL) reaches the table through
+    # __getattr__.
 
     def update_sort_order(self, fields: list[dict]) -> int:
         """ALTER TABLE ... WRITE ORDERED BY (spec-metadata tables):

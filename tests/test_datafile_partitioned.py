@@ -211,7 +211,7 @@ def test_adhoc_partition_entries_never_spec_pruned(spark, tmp_path):
     """Manifest entries from ad-hoc partition_by carry adhoc_partition
     and survive partition pruning unconditionally (conservative), even
     when a registered spec would transform a colliding column name."""
-    from ic_spark.compaction.manifest import _file_may_match_partition
+    from ic_spark.compaction.table_model import _file_may_match_partition
 
     entry = {"partition": {"grp": "7"}, "adhoc_partition": True}
     specs = {"0": [{"name": "grp", "source": "grp", "transform": "bucket", "n": 4}]}

@@ -17,10 +17,10 @@ from ic_spark.compaction.iceberg_meta import (
     ADDED,
     EXISTING,
     IcebergTable,
-    iceberg_to_spark_schema,
     schema_to_iceberg,
     serialize_bound,
 )
+from ic_spark.compaction.table_model import iceberg_to_spark_schema
 from ic_spark.compaction.manifest import CommitConflictError
 from ic_spark.sources.avro_io import read_container, write_container
 

@@ -533,6 +533,69 @@ def test_streaming_sinks_over_spec_metadata(spark, tmp_path):
         sink_mod._live_paths = orig
 
 
+def test_spec_count_after_sink_append(spark, tmp_path):
+    """COUNT(*) from manifest stats on spec metadata: the append sink
+    records each file's footer count, so ``Table.count()`` equals a
+    scan; a data file recording 0 rows (spec manifests written before
+    counts were required hold 0 for "unknown") sends the count to the
+    scan; a data entry with no count is refused."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from ic_spark.compaction.iceberg_meta import IcebergTable
+    from ic_spark.table import Table
+
+    schema = spark.createDataFrame([], "id long, v string").schema
+    tbl = IcebergTable.create(str(tmp_path / "spec_count"), schema)
+    t = Table(spark, tbl)
+    mk = lambda rows: spark.createDataFrame(rows, schema)
+    append = manifest_append_sink(tbl)
+    append(mk([(1, "a"), (2, "b")]), 0)
+    append(mk([(3, "c")]), 1)
+    assert tbl.count_rows() == 3
+    assert t.count() == t.read().count() == 3
+
+    path = str(tmp_path / "old.parquet")
+    pq.write_table(pa.table({"id": pa.array([7, 8], pa.int64()),
+                             "v": ["x", "y"]}), path)
+    entry = {"path": path, "content": "DATA",
+             "sequence_number": tbl.next_sequence_number(),
+             "file_size_in_bytes": os.path.getsize(path)}
+    with pytest.raises(ValueError, match="record_count"):
+        tbl.append_snapshot([entry])
+    tbl.append_snapshot([{**entry, "record_count": 0}])
+    assert tbl.count_rows() is None
+    assert t.count() == t.read().count() == 5
+
+
+def test_empty_appends_read_zero_rows(spark, tmp_path):
+    """The append paths leave out Spark's 0-row parts, but an append of
+    no rows keeps one, so the table still reads (0 rows) instead of
+    having no data file; a non-empty append commits only parts with
+    rows."""
+    from ic_spark.compaction.iceberg_meta import IcebergTable
+    from ic_spark.table import Table
+
+    schema = spark.createDataFrame([], "id long, v string").schema
+    mk = lambda rows: spark.createDataFrame(rows, schema)
+    for name in ("sink", "append"):
+        tbl = IcebergTable.create(str(tmp_path / name), schema)
+        t = Table(spark, tbl)
+        write = manifest_append_sink(tbl) if name == "sink" else None
+        if write is None:
+            t.append(mk([]))
+        else:
+            write(mk([]), 0)
+        assert t.read().count() == t.count() == 0
+        if write is None:
+            t.append(mk([(1, "a"), (2, "b")]))
+        else:
+            write(mk([(1, "a"), (2, "b")]), 1)
+        counts = sorted(f["record_count"] for f in tbl.live_files())
+        assert counts[0] == 0 and counts[1:] and all(counts[1:])
+        assert t.read().count() == t.count() == 2
+
+
 @pytest.mark.slow
 def test_streaming_span_dedup_sink(spark, tmp_path):
     """Continuous-ingest substring-span dedup: per-batch spans equal the

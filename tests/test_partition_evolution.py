@@ -19,7 +19,7 @@ import pytest
 
 from ic_spark.compaction import Compaction, ManifestTable
 from ic_spark.compaction.deletes import read_table, write_position_deletes
-from ic_spark.compaction.manifest import (
+from ic_spark.compaction.table_model import (
     _file_may_match,
     _file_may_match_partition,
 )
@@ -47,7 +47,7 @@ def test_spec_registry_update_and_idempotence(tmp_path):
     # Re-registering an existing spec flips the default, mints no id.
     assert t.update_partition_spec(day) == sid1
     assert t.default_spec_id() == sid1
-    assert set(t.partition_specs()) == {"0", "1", "2"}
+    assert set(t.model_state().specs) == {"0", "1", "2"}
 
     # identity fields may reuse the source name (Iceberg's convention;
     # the fanout writer routes dirs through a prefixed derived column —
@@ -1037,7 +1037,7 @@ def test_footer_stats_merge_in_native_domain_and_bound_hardening(tmp_path):
         deserialize_bound,
         serialize_bound,
     )
-    from ic_spark.compaction.manifest import _file_may_match
+    from ic_spark.compaction.table_model import _file_may_match
     from ic_spark.compaction.writer import _stats_from_footer
 
     # (1) two row groups whose lexical and numeric maxima disagree
@@ -1087,7 +1087,7 @@ def test_footer_stats_rowgroup_gaps_poison_bounds(tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from ic_spark.compaction.manifest import _file_may_match
+    from ic_spark.compaction.table_model import _file_may_match
     from ic_spark.compaction.writer import _stats_from_footer
 
     # rg0 has stats ('aaa','bbb'); rg1's huge strings suppress min/max.
@@ -1128,7 +1128,7 @@ def test_serialize_bound_foreign_shapes_and_typed_numeric_objects():
     import pyspark.sql.types as T
 
     from ic_spark.compaction.iceberg_meta import serialize_bound
-    from ic_spark.compaction.manifest import _file_may_match
+    from ic_spark.compaction.table_model import _file_may_match
 
     # foreign shapes: degrade, never crash
     assert serialize_bound(T.TimestampType(), dtm.date(2024, 6, 1)) is None

@@ -20,6 +20,7 @@ import json
 import os
 
 import pyspark.sql.functions as F
+import pyspark.sql.types as T
 import pytest
 from pyspark.sql.types import LongType, StringType
 
@@ -300,11 +301,10 @@ def test_write_ordered_by_sort_order_ddl(spark, tmp_path):
         vals = [r.val for r in spark.read.parquet(t.data_file_path).collect()]
         assert vals == sorted(vals, reverse=True), "file not sorted desc"
     # sort_order_id recorded on the manifest entries
-    entries = [e for e, _ in tbl._live_entries(tbl._snapshot(None))]
     assert all(
-        e["data_file"]["sort_order_id"] == 1
-        for e in entries
-        if e["data_file"]["content"] == 0
+        f["sort_order_id"] == 1
+        for f in tbl.live_files()
+        if f["content"] == "DATA"
     )
     assert read_table(spark, tbl).count() == 10
 
@@ -567,3 +567,57 @@ def test_aliases_case_insensitive_key_lookup():
     assert _aliases({"b": ["x"], "B": ["y"]}, "B") == ["y"]
     # ambiguous folded keys, no exact: match nothing
     assert _aliases({"Ab": ["x"], "aB": ["y"]}, "ab") == []
+
+
+def _upserted_table(spark, tmp_path, flavor: str):
+    """A table of ten rows plus one upsert keyed on ``k``, and the
+    pyarrow oracle of its rows: base rows whose key the batch replaces
+    are gone, the batch's rows are in."""
+    import pyarrow as pa
+
+    from ic_spark.table import Table
+
+    schema = T.StructType(
+        [T.StructField("k", LongType()), T.StructField("v", StringType())]
+    )
+    base = pa.table({"k": list(range(10)), "v": [f"a{i}" for i in range(10)]})
+    batch = pa.table({"k": [1, 4, 100], "v": ["b1", "b4", "b100"]})
+    t = Table.create(
+        spark, str(tmp_path / f"keys_{flavor}"), schema,
+        spec_metadata=flavor == "spec",
+    )
+    t.append(spark.createDataFrame(base.to_pylist(), schema))
+    t.upsert(spark.createDataFrame(batch.to_pylist(), schema), ["k"])
+    kept = base.filter(pa.compute.invert(pa.compute.is_in(
+        base["k"], value_set=batch["k"]
+    )))
+    oracle = sorted(tuple(r.values()) for r in pa.concat_tables([kept, batch]).to_pylist())
+    return t, oracle
+
+
+@pytest.mark.parametrize("flavor", ["spec", "json"])
+def test_drop_of_equality_delete_key_is_refused(spark, tmp_path, flavor):
+    """Dropping a column that a live equality-delete file keys on would
+    leave the delete unmatchable and every read failing: the drop is
+    refused, the schema is unchanged and the table still reads."""
+    t, oracle = _upserted_table(spark, tmp_path, flavor)
+    with pytest.raises(ValueError, match="equality-delete file .* keys on it"):
+        t.drop_column("k")
+    assert [f.name for f in t.inner.schema().fields] == ["k", "v"]
+    assert sorted(tuple(r) for r in t.read().collect()) == oracle
+    # a column no delete keys on still drops
+    t.drop_column("v")
+    assert [f.name for f in t.inner.schema().fields] == ["k"]
+
+
+@pytest.mark.parametrize("flavor", ["spec", "json"])
+def test_rename_of_equality_delete_key_reads_oracle(spark, tmp_path, flavor):
+    """Equality-delete keys are field ids: after a rename the delete
+    file written under the old name still matches its rows."""
+    t, oracle = _upserted_table(spark, tmp_path, flavor)
+    t.rename_column("k", "k2")
+    _, _, eq = t.inner.scan_tasks()
+    assert [task.equality_ids for task in eq] == [("k2",)]
+    got = t.read()
+    assert got.columns == ["k2", "v"]
+    assert sorted(tuple(r) for r in got.collect()) == oracle
