@@ -762,7 +762,7 @@ def merge_upsert(
     data_dir = os.path.join(table.root, f"upsert-data-{batch}")
     source.write.mode("overwrite").parquet(data_dir)
     from ic_spark.compaction.metafs import table_mfs
-    from ic_spark.compaction.writer import _stats_from_footer
+    from ic_spark.compaction.writer import _stats_from_footer, drop_empty_parts
 
     mfs = table_mfs(table)
     entries, key_parts = [], []
@@ -794,6 +794,7 @@ def merge_upsert(
         )
     if not entries:
         raise ValueError("source wrote no data files (empty batch?)")
+    entries = drop_empty_parts(mfs, entries)
     keys = (
         pa.concat_tables(key_parts)
         .group_by(key_cols, use_threads=False)

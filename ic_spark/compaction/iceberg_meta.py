@@ -27,10 +27,11 @@ Spec features implemented:
   Hadoop-catalog commit protocol).
 
 ``IcebergTable`` is one of the two codecs of the shared table model
-(:mod:`ic_spark.compaction.table_model`): it decodes snapshots into live
-files and stores schema versions, and the model plans scans and runs the
-column DDL over it, so ``Compaction.full_compact`` runs unchanged over
-spec metadata.
+(:mod:`ic_spark.compaction.table_model`): it decodes the table state and
+its snapshots, and applies each transition the model computes by writing
+manifests, a manifest list and ``v{N+1}.metadata.json``.  The model plans
+scans, runs the DDL and computes every commit over it, so
+``Compaction.full_compact`` runs unchanged over spec metadata.
 
 Scale note: manifests are KB-scale driver-side planning I/O, exactly as
 Iceberg libraries read them.  Data files stay Parquet and are scanned
@@ -58,14 +59,16 @@ from ic_spark.compaction.epochs import (
 from ic_spark.compaction.request import FileContent
 from ic_spark.sources.avro_io import read_container, write_container
 
-from ic_spark.compaction.manifest import CommitConflictError, with_statistics_entry
 from ic_spark.compaction.metafs import check_remote_commit_safety
 from ic_spark.compaction.table_model import (
+    CommitConflictError,
     ModelState,
     TableModel,
+    Transition,
     activation_boundaries,
-    evolve_schemas,
+    check_live,
     iceberg_to_spark_type,
+    now_ms,
     schema_to_iceberg,
 )
 
@@ -437,6 +440,9 @@ _CONTENT_TO_ENUM = {
 _ENUM_TO_CONTENT = {v: k for k, v in _CONTENT_TO_ENUM.items()}
 
 
+# table property holding the streaming-batch ledger
+_STREAM_LEDGER_PROP = "ic-spark.stream-batches"
+
 # ------------------------------------------------------------ the table
 
 
@@ -525,10 +531,20 @@ class IcebergTable(TableModel):
         return tbl
 
     def version(self) -> int | None:
+        """The current metadata version: the hint, stepped past while the
+        next version file exists (Iceberg's
+        ``HadoopTableOperations.findVersion``).  A committer that crashed
+        between its version-file create and its hint swap has published
+        that version; without the step every later commit would collide
+        with its file."""
         hint = os.path.join(self.metadata_dir, "version-hint.text")
-        if not self._mfs.exists(hint):
-            return None
-        return int(self._mfs.read_text(hint).strip())
+        v = int(self._mfs.read_text(hint).strip()) if self._mfs.exists(hint) else 0
+        while self._mfs.exists(self._version_path(v + 1)):
+            v += 1
+        return v or None
+
+    def _version_path(self, version: int) -> str:
+        return os.path.join(self.metadata_dir, f"v{version}.metadata.json")
 
     def metadata(self, version: int | None = None) -> dict:
         """Current metadata, or the EXACT ``version`` when given — the
@@ -538,9 +554,7 @@ class IcebergTable(TableModel):
         v = self.version() if version is None else version
         if v is None:
             raise ValueError(f"no iceberg table at {self.root}")
-        return self._mfs.read_json(
-            os.path.join(self.metadata_dir, f"v{v}.metadata.json")
-        )
+        return self._mfs.read_json(self._version_path(v))
 
     def _metadata_for_commit(self) -> tuple[int | None, dict]:
         """(version, that exact version's metadata) for an optimistic
@@ -576,15 +590,13 @@ class IcebergTable(TableModel):
             raise CommitConflictError(
                 f"table moved: expected metadata v{expected_version}, found v{current}"
             )
-        path = os.path.join(self.metadata_dir, f"v{new_version}.metadata.json")
+        path = self._version_path(new_version)
         if expected_version is not None:
             meta = dict(meta)
             meta["metadata-log"] = list(meta.get("metadata-log", [])) + [
                 {
                     "timestamp-ms": int(time.time() * 1000),
-                    "metadata-file": os.path.join(
-                        self.metadata_dir, f"v{expected_version}.metadata.json"
-                    ),
+                    "metadata-file": self._version_path(expected_version),
                 }
             ]
         try:
@@ -742,9 +754,8 @@ class IcebergTable(TableModel):
                 nulls.append({"key": fld["id"], "value": int(st["null_count"])})
         eq_ids = None
         if f.get("equality_ids"):
-            eq_ids = [
-                name_to_field[c]["id"] for c in f["equality_ids"] if c in name_to_field
-            ]
+            # names the model checked against the current schema
+            eq_ids = [name_to_field[c]["id"] for c in f["equality_ids"]]
         content = _ENUM_TO_CONTENT[FileContent[f.get("content", "DATA")]]
         if content == CONTENT_DATA and f.get("record_count") is None:
             # a 0 here would read as an empty file to COUNT(*) from stats
@@ -918,11 +929,12 @@ class IcebergTable(TableModel):
                 out.append((e, seq, mf.get("partition_spec_id", 0)))
         return out
 
-    def model_state(self, raw: dict | None = None) -> ModelState:
-        """One read of the table metadata (or the metadata ``raw``
-        already read) as the shared table model's view."""
-        meta = self.metadata() if raw is None else raw
+    def model_state(self) -> ModelState:
+        """One read of the table metadata, version first, as the shared
+        table model's view."""
+        version, meta = self._metadata_for_commit()
         sid = meta.get("current-snapshot-id")
+        props = meta.get("properties", {})
         return ModelState(
             raw=meta,
             schemas=meta["schemas"],
@@ -930,9 +942,7 @@ class IcebergTable(TableModel):
             last_column_id=meta["last-column-id"],
             boundaries=activation_boundaries(
                 meta["schemas"],
-                json.loads(
-                    meta.get("properties", {}).get("ic.schema-activation", "{}")
-                ),
+                json.loads(props.get("ic.schema-activation", "{}")),
             ),
             specs={
                 str(p["spec-id"]): _writer_spec(meta, p)
@@ -954,6 +964,10 @@ class IcebergTable(TableModel):
                 n: (r["snapshot-id"], r.get("type", "tag"))
                 for n, r in meta.get("refs", {}).items()
             },
+            next_row_id=meta.get("next-row-id"),
+            stream_batches=json.loads(props.get(_STREAM_LEDGER_PROP, "{}")),
+            statistics=meta.get("statistics", []),
+            version=version,
         )
 
     def live_files(
@@ -964,8 +978,9 @@ class IcebergTable(TableModel):
         deletes_only: bool = False,
     ) -> list[dict] | None:
         """Decode a snapshot's manifests into file dicts: one per live
-        manifest entry (a deletion-vector file, one per vector), with
-        inherited sequence numbers, the manifest's partition spec id, and
+        file (a deletion-vector puffin's per-vector entries fold into one
+        dict, the inverse of ``_entries_for_file``), with inherited
+        sequence numbers, the manifest's partition spec id, and
         the partition tuple both as stored (``partition``, in Iceberg's
         internal representation) and converted for the planner's fill
         (``partition_values``).  ``bounds``
@@ -984,6 +999,7 @@ class IcebergTable(TableModel):
             id_to_name = {f["id"]: f["name"] for f in fields}
             id_to_type = {i: iceberg_to_spark_type(t) for i, t in id_to_ice.items()}
         out = []
+        puffins: dict[str, dict] = {}
         for e, seq, spec_id in self._live_entries_with_spec(snap, deletes_only):
             df = e["data_file"]
             f = {
@@ -1004,13 +1020,18 @@ class IcebergTable(TableModel):
                 "spec_id": spec_id,
             }
             if df.get("referenced_data_file"):
-                f["deletion_vectors"] = {
-                    df["referenced_data_file"]: {
-                        "offset": df.get("content_offset"),
-                        "length": df.get("content_size_in_bytes"),
-                        "cardinality": df["record_count"],
-                    }
+                dv = {
+                    "offset": df.get("content_offset"),
+                    "length": df.get("content_size_in_bytes"),
+                    "cardinality": df["record_count"],
                 }
+                folded = puffins.get(f["path"])
+                if folded is not None:
+                    folded["deletion_vectors"][df["referenced_data_file"]] = dv
+                    folded["record_count"] += df["record_count"]
+                    continue
+                f["deletion_vectors"] = {df["referenced_data_file"]: dv}
+                puffins[f["path"]] = f
             if bounds:
                 stats: dict[str, dict] = {}
                 for kind, key in (("lower_bounds", "min"), ("upper_bounds", "max")):
@@ -1029,17 +1050,19 @@ class IcebergTable(TableModel):
         self,
         meta: dict,
         expected_version: int,
-        entries_with_seq: list[tuple[dict, int | None]],
+        carried: list[tuple[dict, int, int]],
+        added: list[dict],
         operation: str,
         branch: str | None = None,
     ) -> int:
         """Write manifests + manifest list + new metadata version.
 
-        ``entries_with_seq``: (entry, seq) where seq None means "this
-        commit's sequence number" (left null in the manifest → readers
-        inherit it per spec).
+        ``carried`` are raw (entry, sequence number, spec id) triples of
+        live files, kept as EXISTING entries; ``added`` are new DataFile
+        records, written with a null sequence number that readers
+        inherit from this commit's (spec inheritance path).
         """
-        now = int(time.time() * 1000)
+        now = now_ms()
         self._mfs.makedirs(self.metadata_dir)  # manifests precede commit
         seq = meta["last-sequence-number"] + 1
         sid = int.from_bytes(os.urandom(7), "big")  # spec: unique long id
@@ -1056,15 +1079,16 @@ class IcebergTable(TableModel):
         default_sid = meta["default-spec-id"]
         data_by_spec: dict[int, list[dict]] = {}
         delete_by_spec: dict[int, list[dict]] = {}
-        added_count = 0
-        for e, s in entries_with_seq:
+        rows = [({**e, "status": EXISTING}, s, sp) for e, s, sp in carried] + [
+            ({"status": ADDED, "snapshot_id": None, "sequence_number": None,
+              "file_sequence_number": None, "data_file": df}, None, default_sid)
+            for df in added
+        ]
+        for e, s, spec_id in rows:
             entry = dict(e)
-            spec_id = entry.pop("_spec_id", default_sid)
             entry["snapshot_id"] = entry.get("snapshot_id") or sid
             entry["sequence_number"] = s  # None → inherited
             entry["file_sequence_number"] = entry.get("file_sequence_number") or s
-            if entry["status"] == ADDED:
-                added_count += 1
             bucket = (
                 data_by_spec
                 if entry["data_file"]["content"] == CONTENT_DATA
@@ -1106,7 +1130,7 @@ class IcebergTable(TableModel):
             "schema-id": meta["current-schema-id"],
             "summary": {
                 "operation": operation,
-                "added-data-files": str(added_count),
+                "added-data-files": str(len(added)),
             },
         }
         new_meta = dict(meta)
@@ -1125,18 +1149,87 @@ class IcebergTable(TableModel):
         self._commit_metadata(new_meta, expected_version=expected_version)
         return sid
 
-    # -- partition-spec evolution --------------------------------------
+    def _apply(self, base: ModelState, tr: Transition) -> int | None:
+        """Write ``tr`` as metadata version ``base.version + 1``: a
+        snapshot commit writes its manifests and manifest list first.
+        Carried files stay the raw manifest entries of the base snapshot.
+        The version-file create (or the catalog's pointer swap) is the
+        compare-and-swap.  Returns the new snapshot id for a snapshot
+        commit, the spec id for a partition-spec change."""
+        if tr.stage:
+            raise ValueError(
+                "staged (write-audit-publish) commits are JSON-flavor only"
+            )
+        meta = dict(base.raw)
+        now = now_ms()
+        out = None
+        if tr.current is not None:
+            meta["current-snapshot-id"] = tr.current
+            meta["snapshot-log"] = list(meta.get("snapshot-log", [])) + [
+                {"timestamp-ms": now, "snapshot-id": tr.current}
+            ]
+        if tr.refs:
+            refs = dict(meta.get("refs", {}))
+            for name, ref in tr.refs.items():
+                if ref is None:
+                    refs.pop(name, None)
+                else:
+                    refs[name] = {"snapshot-id": ref[0], "type": ref[1]}
+            meta["refs"] = refs
+        if tr.keep is not None:
+            meta["snapshots"] = [
+                s for s in meta["snapshots"] if s["snapshot-id"] in tr.keep
+            ]
+            meta["snapshot-log"] = [
+                x for x in meta.get("snapshot-log", []) if x["snapshot-id"] in tr.keep
+            ]
+        props = dict(meta.get("properties", {}))
+        if tr.stream_batches is not None:
+            props[_STREAM_LEDGER_PROP] = json.dumps(tr.stream_batches)
+        if tr.schema is not None:
+            schemas, new_id, last_col, boundary = tr.schema
+            meta["schemas"] = schemas
+            meta["current-schema-id"] = new_id
+            meta["last-column-id"] = last_col
+            act = json.loads(props.get("ic.schema-activation", "{}"))
+            act[str(new_id)] = boundary
+            props["ic.schema-activation"] = json.dumps(act)
+        if props != meta.get("properties", {}):
+            meta["properties"] = props
+        if tr.statistics is not None:
+            meta["statistics"] = tr.statistics
+        if tr.spec is not None:
+            out = self._register_spec(meta, tr.spec)
+        if tr.row_ids is not None:
+            meta["format-version"] = 3
+        if tr.next_row_id is not None:
+            meta["next-row-id"] = tr.next_row_id
+        meta["last-updated-ms"] = now
+        if tr.added is None and not tr.row_ids:
+            self._commit_metadata(meta, expected_version=base.version)
+            return out
+        if tr.added is None:  # row-lineage backfill: carry current, stamped
+            carried = self._live_entries_with_spec(self._snapshot(None, meta))
+            entries = [
+                (_with_first_row_id(e, tr.row_ids), s, sp) for e, s, sp in carried
+            ]
+            return self._commit_snapshot(meta, base.version, entries, [], "replace")
+        carried = []
+        if tr.base is not None:
+            carried = self._live_entries_with_spec(self._snapshot(tr.base, meta))
+        check_live(tr.removed, (e["data_file"]["file_path"] for e, _, _ in carried))
+        kept = [e for e in carried if e[0]["data_file"]["file_path"] not in tr.removed]
+        added = [df for f in tr.added for df in self._entries_for_file(f, meta)]
+        return self._commit_snapshot(
+            meta, base.version, kept, added, tr.operation, branch=tr.branch
+        )
 
-    def update_partition_spec(self, fields: list[dict]) -> int:
-        """Evolve the partition layout: register a new spec in
-        ``partition-specs`` and point ``default-spec-id`` at it —
-        metadata-only, existing snapshots untouched (Iceberg
-        ``ALTER TABLE ... ADD/REPLACE PARTITION FIELD``).
-
-        ``fields`` use the writer's shape; ``bucket``/``iceberg_bucket``
-        both serialize as spec ``bucket[N]`` (and execute spec-exact).
-        """
-        version, meta = self._metadata_for_commit()
+    def _register_spec(self, meta: dict, fields: list[dict]) -> int:
+        """Make ``fields`` (writer shape, checked by the model) the
+        default spec of ``meta``; returns its id.  ``bucket`` and
+        ``iceberg_bucket`` both serialize as spec ``bucket[N]`` (and
+        execute spec-exact); an identical registered spec becomes the
+        default again."""
         schema = next(
             s for s in meta["schemas"] if s["schema-id"] == meta["current-schema-id"]
         )
@@ -1144,15 +1237,6 @@ class IcebergTable(TableModel):
         next_pid = meta.get("last-partition-id", 999) + 1
         ice_fields = []
         for f in fields:
-            if "name" not in f or "transform" not in f:
-                raise ValueError(f"spec field needs name+transform: {f}")
-            src = f.get("source", f["name"])
-            if f["name"] == src:
-                raise ValueError(
-                    f"spec field name must differ from source column: {f}"
-                )
-            if src not in name_to_id:
-                raise ValueError(f"unknown source column: {src}")
             t = f["transform"]
             if t in ("bucket", "iceberg_bucket"):
                 t = f"bucket[{int(f['n'])}]"
@@ -1164,279 +1248,25 @@ class IcebergTable(TableModel):
                 {
                     "name": f["name"],
                     "transform": t,
-                    "source-id": name_to_id[src],
+                    "source-id": name_to_id[f.get("source", f["name"])],
                     "field-id": next_pid,
                 }
             )
             next_pid += 1
-        # Idempotent DDL: an identical existing spec just becomes default.
+        keys = ("name", "transform", "source-id")
         for p in meta["partition-specs"]:
-            if [
-                {k: x[k] for k in ("name", "transform", "source-id")}
-                for x in p["fields"]
-            ] == [
-                {k: x[k] for k in ("name", "transform", "source-id")}
-                for x in ice_fields
+            if [{k: x[k] for k in keys} for x in p["fields"]] == [
+                {k: x[k] for k in keys} for x in ice_fields
             ]:
-                new_meta = dict(meta)
-                new_meta["default-spec-id"] = p["spec-id"]
-                self._commit_metadata(new_meta, expected_version=version)
+                meta["default-spec-id"] = p["spec-id"]
                 return p["spec-id"]
         new_id = max(p["spec-id"] for p in meta["partition-specs"]) + 1
-        new_meta = dict(meta)
-        new_meta["partition-specs"] = list(meta["partition-specs"]) + [
+        meta["partition-specs"] = list(meta["partition-specs"]) + [
             {"spec-id": new_id, "fields": ice_fields}
         ]
-        new_meta["default-spec-id"] = new_id
-        new_meta["last-partition-id"] = next_pid - 1
-        self._commit_metadata(new_meta, expected_version=version)
+        meta["default-spec-id"] = new_id
+        meta["last-partition-id"] = next_pid - 1
         return new_id
-
-    # ------------------------------------------------ row lineage (v3)
-
-    @property
-    def row_lineage(self) -> bool:
-        return self.metadata().get("next-row-id") is not None
-
-    @property
-    def next_row_id(self) -> int:
-        return int(self.metadata().get("next-row-id", 0))
-
-    def _assign_row_ids(self, meta: dict, files: list[dict]) -> None:
-        """Claim ``next-row-id`` ranges for newly committed data files
-        (explicit per-file first_row_id — the spec permits explicit ids,
-        making manifest-level inheritance unnecessary).  Files flagged
-        ``materialized_lineage`` keep a null first_row_id per the
-        spec's materialized-lineage rule."""
-        for f in files:
-            if f.get("content", "DATA") != "DATA":
-                continue
-            if f.get("materialized_lineage") or f.get("first_row_id") is not None:
-                continue
-            rc = f.get("record_count")
-            if rc is None:
-                raise ValueError(
-                    "row-lineage table requires record_count on data files: "
-                    + f["path"]
-                )
-            f["first_row_id"] = meta.get("next-row-id", 0)
-            meta["next-row-id"] = meta.get("next-row-id", 0) + int(rc)
-
-    def enable_row_lineage(self) -> None:
-        """Upgrade to v3 row lineage: set ``format-version`` 3 +
-        ``next-row-id`` in the table metadata and backfill every live
-        data file with an explicit ``first_row_id`` (one ``replace``
-        commit rewriting the manifests — they are immutable Avro, so
-        backfill is a carry-forward commit, not an edit)."""
-        version, meta = self._metadata_for_commit()
-        if meta.get("next-row-id") is not None:
-            return
-        meta = dict(meta)
-        meta["format-version"] = 3
-        nxt = 0
-        cur = self._snapshot(None)
-        carried = []
-        for e, s, sp in self._live_entries_with_spec(cur):
-            e2 = {**e, "status": EXISTING, "_spec_id": sp}
-            df = dict(e2["data_file"])
-            if df["content"] == CONTENT_DATA and df.get("first_row_id") is None:
-                df["first_row_id"] = nxt
-                nxt += int(df.get("record_count") or 0)
-            e2["data_file"] = df
-            carried.append((e2, s))
-        meta["next-row-id"] = nxt
-        if carried:
-            self._commit_snapshot(meta, version, carried, "replace")
-        else:
-            meta["last-updated-ms"] = int(time.time() * 1000)
-            self._commit_metadata(meta, expected_version=version)
-
-    _STREAM_LEDGER_PROP = "ic-spark.stream-batches"
-
-    def stream_batch_hwm(self, name: str) -> int:
-        """High-water mark of committed streaming batch ids for sink
-        ``name`` (-1 when none) — stored in table properties so it
-        survives compaction rewriting the batch's files (same contract
-        as ``ManifestTable.stream_batch_hwm``)."""
-        props = self.metadata().get("properties") or {}
-        led = json.loads(props.get(self._STREAM_LEDGER_PROP, "{}"))
-        return int(led.get(name, -1))
-
-    def mark_stream_batch(self, name: str, batch_id: int) -> None:
-        """Record a committed streaming batch as a metadata-only
-        property commit (for sinks whose final action is not a plain
-        append; ``append_snapshot(stream_mark=...)`` is atomic with
-        the commit and preferred)."""
-        version, meta = self._metadata_for_commit()
-        marked = self._with_stream_mark(dict(meta), (name, batch_id))
-        if marked is None:
-            return  # already at or past this batch id
-        marked["last-updated-ms"] = int(time.time() * 1000)
-        self._commit_metadata(marked, expected_version=version)
-
-    def _with_stream_mark(self, meta: dict, stream_mark) -> dict | None:
-        """Fold the ledger update into ``meta`` (returns None when the
-        HWM already covers the batch)."""
-        name, batch_id = stream_mark
-        props = dict(meta.get("properties") or {})
-        led = json.loads(props.get(self._STREAM_LEDGER_PROP, "{}"))
-        if int(batch_id) <= int(led.get(name, -1)):
-            return None
-        led[name] = int(batch_id)
-        props[self._STREAM_LEDGER_PROP] = json.dumps(led)
-        meta["properties"] = props
-        return meta
-
-    def append_snapshot(
-        self,
-        files: list[dict],
-        branch: str | None = None,
-        operation: str | None = None,
-        stream_mark: tuple[str, int] | None = None,
-    ) -> int:
-        """Append files (ManifestTable files-dict shape) as one commit.
-
-        New entries carry null sequence numbers in the manifest and
-        inherit this commit's sequence number (spec inheritance path).
-
-        With ``branch="name"`` the commit lands on that branch (spec
-        ``refs`` entry of type branch): the base is the branch head
-        (current snapshot for a new branch), ``current-snapshot-id``
-        does not move, and ``fast_forward`` advances main later.
-
-        ``stream_mark=(sink_name, batch_id)`` folds the streaming-batch
-        ledger update into the SAME metadata commit (see
-        ``streaming/sink.py``).
-        """
-        version, meta = self._metadata_for_commit()
-        if stream_mark is not None:
-            meta = self._with_stream_mark(dict(meta), stream_mark) or meta
-        if meta.get("next-row-id") is not None:
-            # assign on COPIES: a CAS-lost commit must leave the
-            # caller's dicts unstamped so a retry re-assigns against
-            # the fresh next-row-id instead of re-committing stale
-            # (overlapping) ranges
-            meta = dict(meta)
-            files = [dict(f) for f in files]
-            self._assign_row_ids(meta, files)
-        base_id = None
-        if branch is not None:
-            ref = meta.get("refs", {}).get(branch)
-            base_id = ref["snapshot-id"] if ref else None
-        base_snap = self._snapshot(base_id)  # None → current
-        carried = [
-            ({**e, "status": EXISTING, "_spec_id": sp}, s)
-            for e, s, sp in self._live_entries_with_spec(base_snap)
-        ]
-        new = [
-            ({"status": ADDED, "snapshot_id": None, "sequence_number": None,
-              "file_sequence_number": None, "data_file": df}, None)
-            for f in files
-            for df in self._entries_for_file(f, meta)
-        ]
-        if operation is None:
-            operation = (
-                "delete"
-                if files
-                and all(f.get("content", "DATA") != "DATA" for f in files)
-                else "append"
-            )
-        return self._commit_snapshot(
-            meta, version, carried + new, operation, branch=branch
-        )
-
-    def rollback_to_snapshot(self, snapshot_id: int) -> int:
-        """Point main back at an earlier snapshot (metadata-only)."""
-        version, meta = self._metadata_for_commit()
-        if all(s["snapshot-id"] != snapshot_id for s in meta["snapshots"]):
-            raise ValueError(f"snapshot {snapshot_id} not found")
-        now = int(time.time() * 1000)
-        new_meta = dict(meta)
-        new_meta["current-snapshot-id"] = snapshot_id
-        new_meta["last-updated-ms"] = now
-        new_meta["snapshot-log"] = list(meta.get("snapshot-log", [])) + [
-            {"timestamp-ms": now, "snapshot-id": snapshot_id}
-        ]
-        self._commit_metadata(new_meta, expected_version=version)
-        return snapshot_id
-
-    def fast_forward(self, branch: str, force: bool = False) -> int:
-        """Advance MAIN to the branch head when main is an ancestor of
-        it (spec ``parent-snapshot-id`` chain proves ancestry)."""
-        version, meta = self._metadata_for_commit()
-        ref = meta.get("refs", {}).get(branch)
-        if ref is None or ref.get("type") != "branch":
-            raise ValueError(f"unknown branch: {branch!r}")
-        head = ref["snapshot-id"]
-        current = meta.get("current-snapshot-id")
-        if not force and current not in (-1, None):
-            by_id = {s["snapshot-id"]: s for s in meta["snapshots"]}
-            node, ancestors = head, set()
-            while node is not None and node not in ancestors:
-                ancestors.add(node)
-                node = by_id.get(node, {}).get("parent-snapshot-id")
-            if current not in ancestors:
-                raise CommitConflictError(
-                    f"main ({current}) is not an ancestor of branch "
-                    f"{branch!r} head ({head}); rebase or pass force=True"
-                )
-        now = int(time.time() * 1000)
-        new_meta = dict(meta)
-        new_meta["current-snapshot-id"] = head
-        new_meta["last-updated-ms"] = now
-        new_meta["snapshot-log"] = list(meta.get("snapshot-log", [])) + [
-            {"timestamp-ms": now, "snapshot-id": head}
-        ]
-        self._commit_metadata(new_meta, expected_version=version)
-        return head
-
-    def commit_rewrite(
-        self,
-        added: list[dict],
-        removed_paths: set[str],
-        expected_snapshot_id: int | None = None,
-        operation: str = "replace",
-    ) -> int:
-        """RewriteFiles commit over spec metadata (reference
-        mod.rs:66-72): validates every removed file is still live
-        (stale-plan conflict), drops them, adds the rewritten files.
-        ``operation`` lands in the snapshot summary (replace =
-        maintenance, overwrite = COW row change, delete = delete-file
-        supersede) — the changelog read keys off it."""
-        version, meta = self._metadata_for_commit()
-        cur = self._snapshot(None)
-        if expected_snapshot_id is not None:
-            actual = cur["snapshot-id"] if cur else None
-            if actual != expected_snapshot_id:
-                raise CommitConflictError(
-                    f"table moved: expected snapshot {expected_snapshot_id}, "
-                    f"current is {actual}"
-                )
-        live = self._live_entries_with_spec(cur)
-        live_paths = {e["data_file"]["file_path"] for e, _, _ in live}
-        stale = sorted(removed_paths - live_paths)
-        if stale:
-            raise CommitConflictError(
-                f"{len(stale)} file(s) no longer live (concurrent rewrite?): "
-                f"{stale[:3]}..."
-            )
-        if meta.get("next-row-id") is not None:
-            # after conflict validation, on copies (see append_snapshot)
-            meta = dict(meta)
-            added = [dict(f) for f in added]
-            self._assign_row_ids(meta, added)
-        kept = [
-            ({**e, "status": EXISTING, "_spec_id": sp}, s)
-            for e, s, sp in live
-            if e["data_file"]["file_path"] not in removed_paths
-        ]
-        new = [
-            ({"status": ADDED, "snapshot_id": None, "sequence_number": None,
-              "file_sequence_number": None, "data_file": df}, None)
-            for f in added
-            for df in self._entries_for_file(f, meta)
-        ]
-        return self._commit_snapshot(meta, version, kept + new, operation)
 
     # -- table properties ----------------------------------------------
 
@@ -1472,124 +1302,6 @@ class IcebergTable(TableModel):
 
     def properties(self) -> dict[str, str]:
         return dict(self.metadata().get("properties", {}))
-
-    # -- statistics files ----------------------------------------------
-
-    def statistics(self) -> list[dict]:
-        """Registered statistics entries, oldest first."""
-        return self.metadata().get("statistics", [])
-
-    def register_statistics(self, entry: dict) -> None:
-        """Register a statistics entry as one metadata commit; an entry
-        for the same snapshot is replaced, not stacked."""
-        version, meta = self._metadata_for_commit()
-        meta = dict(meta)
-        meta["statistics"] = with_statistics_entry(
-            meta.get("statistics", []), entry
-        )
-        self._commit_metadata(meta, expected_version=version)
-
-    # -- snapshot refs (Iceberg metadata ``refs``: tags + branches) ----
-
-    def set_ref(self, name: str, snapshot_id: int, ref_type: str = "tag") -> None:
-        """Record a named ref (spec ``refs`` map in table metadata).
-        Tags pin a snapshot for time travel; branches name a movable
-        head.  Refs survive snapshot expiration."""
-        if ref_type not in ("tag", "branch"):
-            raise ValueError(f"ref type must be tag|branch: {ref_type}")
-        version, meta = self._metadata_for_commit()
-        if all(s["snapshot-id"] != snapshot_id for s in meta["snapshots"]):
-            raise ValueError(f"snapshot {snapshot_id} not found")
-        new_meta = dict(meta)
-        refs = dict(meta.get("refs", {}))
-        refs[name] = {"snapshot-id": snapshot_id, "type": ref_type}
-        new_meta["refs"] = refs
-        new_meta["last-updated-ms"] = int(time.time() * 1000)
-        self._commit_metadata(new_meta, expected_version=version)
-
-    def remove_ref(self, name: str) -> None:
-        version, meta = self._metadata_for_commit()
-        refs = dict(meta.get("refs", {}))
-        refs.pop(name, None)
-        new_meta = dict(meta)
-        new_meta["refs"] = refs
-        self._commit_metadata(new_meta, expected_version=version)
-
-    def remove_orphan_files(
-        self, older_than_s: float = 3 * 24 * 3600, delete: bool = False
-    ) -> list[str]:
-        """Not supported on the spec flavor: its data files are listed in
-        manifests that this flavor does not sweep the table root
-        against, so it cannot tell an orphan from a live file."""
-        raise NotImplementedError(
-            "remove_orphan_files is supported on JSON-manifest tables only"
-        )
-
-    def expire_snapshots(self) -> list[str]:
-        """Retain the current snapshot plus every ref target; return
-        orphaned data-file paths (caller owns physical deletion, like
-        Iceberg ``expireSnapshots`` honoring retained refs)."""
-        version, meta = self._metadata_for_commit()
-        cur = self._snapshot(None)
-        if cur is None:
-            return []
-        keep_ids = {cur["snapshot-id"]} | {
-            r["snapshot-id"] for r in meta.get("refs", {}).values()
-        }
-        retained = [s for s in meta["snapshots"] if s["snapshot-id"] in keep_ids]
-        keep_paths = {
-            e["data_file"]["file_path"]
-            for s in retained
-            for e, _, _ in self._live_entries_with_spec(s)
-        }
-        orphans: set[str] = set()
-        for s in meta["snapshots"]:
-            if s["snapshot-id"] in keep_ids:
-                continue
-            for e, _, _ in self._live_entries_with_spec(s):
-                p = e["data_file"]["file_path"]
-                if p not in keep_paths:
-                    orphans.add(p)
-        new_meta = dict(meta)
-        new_meta["snapshots"] = retained
-        new_meta["snapshot-log"] = [
-            x for x in meta.get("snapshot-log", [])
-            if x["snapshot-id"] in keep_ids
-        ]
-        new_meta["last-updated-ms"] = int(time.time() * 1000)
-        self._commit_metadata(new_meta, expected_version=version)
-        return sorted(orphans)
-
-    # -- schema evolution (metadata-only commits) ----------------------
-
-    def _evolve_schema(self, mutate) -> int:
-        """Commit a metadata version whose schemas list gains one schema.
-
-        Snapshots are untouched — schema updates are metadata-only
-        commits (Iceberg spec: "Schema Evolution" is free; data files are
-        never rewritten).
-        """
-        version, meta = self._metadata_for_commit()
-        new_meta = dict(meta)
-        new_meta["schemas"], new_id, last_col = evolve_schemas(
-            self.model_state(meta), mutate
-        )
-        new_meta["current-schema-id"] = new_id
-        new_meta["last-column-id"] = last_col
-        new_meta["last-updated-ms"] = int(time.time() * 1000)
-        # Activation boundary: files committed at sequence numbers STRICTLY
-        # ABOVE the current last-sequence-number were written under this
-        # schema (until a newer one activates).  Carried-forward entries
-        # keep their original sequence numbers, so scan planning can derive
-        # each data file's exact write schema — the field-id resolution the
-        # Iceberg spec gets from footer field ids.
-        props = dict(new_meta.get("properties", {}))
-        act = dict(json.loads(props.get("ic.schema-activation", "{}")))
-        act[str(new_id)] = meta["last-sequence-number"]
-        props["ic.schema-activation"] = json.dumps(act)
-        new_meta["properties"] = props
-        self._commit_metadata(new_meta, expected_version=version)
-        return new_id
 
     def update_sort_order(self, fields: list[dict]) -> int:
         """``ALTER TABLE ... WRITE ORDERED BY`` — register a new sort order
@@ -1667,6 +1379,16 @@ class IcebergTable(TableModel):
                 }
             )
         return oid, out
+
+def _with_first_row_id(entry: dict, row_ids: dict) -> dict:
+    """A carried manifest entry with its data file's ``first_row_id``
+    taken from ``row_ids`` ({path: (first row id, record count)})."""
+    df = entry["data_file"]
+    rid = row_ids.get(df["file_path"])
+    if rid is None or df["content"] != CONTENT_DATA:
+        return entry
+    return {**entry, "data_file": {**df, "first_row_id": rid[0]}}
+
 
 def _writer_spec(meta: dict, spec: dict) -> list[dict]:
     """One metadata partition spec in the writer's shape ({"name",

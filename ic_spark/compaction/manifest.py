@@ -2,43 +2,41 @@
 
 Stands in for the Iceberg catalog + manifest-list layer the reference
 drives through iceberg-rs (``core/src/compaction/mod.rs:44-72, 81-119``):
+snapshots are immutable entries listing data files and delete files, each
+with a sequence number and content type.  The commits themselves
+(``commit_rewrite`` as the RewriteFiles analog, ``expire_snapshots`` and
+the rest) are the shared table model's; this codec decodes
+``manifest.json`` and applies one transition to it.
 
-- snapshots are immutable entries listing data files and delete files
-  (each with a sequence number and content type);
-- ``commit_rewrite`` is the RewriteFiles transaction analog: one atomic
-  manifest swap that adds the new files and drops the replaced ones;
-- ``expire_snapshots`` drops all but the current snapshot (reference
-  ``expire_snapshot``, mod.rs:81-88) and reports files safe to delete.
-
-Atomicity is write-temp + ``os.replace`` — the same guarantee level as
-an Iceberg metadata-JSON pointer swap on a POSIX store.
+Atomicity is write-temp + ``os.replace``, the same guarantee level as an
+Iceberg metadata-JSON pointer swap on a POSIX store.  On local roots the
+swap is a compare-and-swap: under an exclusive ``flock`` of the sibling
+``manifest.json.lock``, the state is re-read and the commit refused with
+:class:`CommitConflictError` if it moved since the commit read it.
+Object-store roots have no lock: they are single-writer, as the reference
+deploys them (one compaction service owning the table).
 """
 
 from __future__ import annotations
 
+import contextlib
 import os
-import time
 from dataclasses import dataclass
 
 from ic_spark.compaction.table_model import (
+    CommitConflictError,
     ModelState,
     TableModel,
+    Transition,
     activation_boundaries,
-    evolve_schemas,
+    check_live,
+    now_ms,
     resolve_write_schema_id,
     schema_to_iceberg,
+    with_statistics_entry,
 )
 
-class CommitConflictError(RuntimeError):
-    """A rewrite commit lost an optimistic-concurrency race."""
-
-
-def with_statistics_entry(entries: list[dict], entry: dict) -> list[dict]:
-    """``entries`` with ``entry`` registered: one statistics entry per
-    snapshot (Iceberg REST set-statistics semantics), so a re-analyze at
-    the same snapshot replaces the old entry instead of stacking."""
-    sid = entry.get("snapshot-id")
-    return [e for e in entries if e.get("snapshot-id") != sid] + [entry]
+__all__ = ["CommitConflictError", "ManifestTable", "Snapshot", "with_statistics_entry"]
 
 
 def _record_ref_type(state: dict, name: str, ref_type: str) -> None:
@@ -48,7 +46,7 @@ def _record_ref_type(state: dict, name: str, ref_type: str) -> None:
     if ref_type == "branch":
         state["ref_types"] = {**(types or {}), name: "branch"}
     elif types and name in types:
-        types.pop(name)
+        state["ref_types"] = {k: v for k, v in types.items() if k != name}
 
 
 @dataclass
@@ -67,9 +65,9 @@ class ManifestTable(TableModel):
     ``file_io`` routes the metadata plane (manifest.json swap, orphan
     listing, vacuum) through the pyarrow fileio seam for object-store
     roots — see :mod:`ic_spark.compaction.metafs`.  Local roots keep
-    the pre-seam temp+``os.replace`` protocol byte-for-byte.  The data
-    files themselves read/write through Spark's Hadoop layer with the
-    caller's path spelling, unchanged.
+    the temp+``os.replace`` protocol.  The data files themselves
+    read/write through Spark's Hadoop layer with the caller's path
+    spelling, unchanged.
     """
 
     def __init__(self, root: str, file_io: dict | None = None):
@@ -77,9 +75,9 @@ class ManifestTable(TableModel):
 
         self.file_io = file_io
         self._mfs = MetaFS(root, file_io)
-        # Local roots: keep the resolved filesystem path (pre-seam
-        # behavior — `file:` spellings normalized).  Remote: within-FS
-        # path for metadata IO; data-file paths stay caller-spelled.
+        # Local roots: keep the resolved filesystem path (`file:`
+        # spellings normalized).  Remote: within-FS path for metadata
+        # IO; data-file paths stay caller-spelled.
         self.root = self._mfs.root if self._mfs.is_local else root
         self.manifest_path = self._mfs.path("manifest.json")
 
@@ -90,43 +88,67 @@ class ManifestTable(TableModel):
             return {"current_snapshot_id": None, "snapshots": []}
         return self._mfs.read_json(self.manifest_path)
 
-    def _store(self, state: dict) -> None:
+    def _swap(self, base: dict, state: dict) -> None:
+        """Replace ``manifest.json`` with ``state`` if it still holds
+        ``base``, else raise :class:`CommitConflictError`.  Every store of
+        this flavor goes through here."""
         self._mfs.makedirs(self._mfs.root)
-        self._mfs.write_json_atomic(self.manifest_path, state)
+        with self._locked():
+            if self._load() != base:
+                raise CommitConflictError(
+                    "table moved: manifest.json changed since this commit read it"
+                )
+            self._mfs.write_json_atomic(self.manifest_path, state)
 
-    # -- schema evolution (optional registry) --------------------------
+    @contextlib.contextmanager
+    def _locked(self):
+        """An exclusive ``flock`` of ``manifest.json.lock`` on local roots
+        (threads and processes alike); object-store roots are
+        single-writer and take no lock."""
+        if not self._mfs.is_local:
+            yield
+            return
+        import fcntl
+
+        with open(self.manifest_path + ".lock", "a") as fh:
+            fcntl.flock(fh, fcntl.LOCK_EX)
+            try:
+                yield
+            finally:
+                fcntl.flock(fh, fcntl.LOCK_UN)
+
+    # -- schema registry -----------------------------------------------
     #
     # An iceberg-style schemas list with stable field ids, and per-
     # evolution sequence-number activation boundaries
     # (``schema_activation``) so scans resolve each data file against
     # the schema it was WRITTEN under.  The column DDL is the shared
-    # table model's (table_model.TableModel).  Tables that never call
-    # register_schema keep plain footer-schema reads (schema() returns
-    # None).
+    # table model's.  Tables that never call register_schema keep plain
+    # footer-schema reads (schema() returns None).
 
     def register_schema(self, spark_schema) -> int:
         """Register the table's initial schema (enables evolution DDL +
         exact write-schema resolution)."""
-        state = self._load()
-        if state.get("schemas"):
+        base = self._load()
+        if base.get("schemas"):
             raise ValueError("schema already registered")
         ice = schema_to_iceberg(spark_schema)
+        state = dict(base)
         state["schemas"] = [ice]
         state["current_schema_id"] = 0
         state["last_column_id"] = len(ice["fields"])
         # Initial schema is active from before any data commit.
         state["schema_activation"] = {"0": -1}
-        self._store(state)
+        self._swap(base, state)
         return 0
 
     def default_sort_order(self) -> tuple[int, list[dict]]:
         """Always ``(0, [])``: this flavor has no sort orders."""
         return 0, []
 
-    def model_state(self, raw: dict | None = None) -> ModelState:
-        """One read of ``manifest.json`` (or the state ``raw`` already
-        read) as the shared table model's view."""
-        state = self._load() if raw is None else raw
+    def model_state(self) -> ModelState:
+        """One read of ``manifest.json`` as the shared table model's view."""
+        state = self._load()
         ref_types = state.get("ref_types", {})
         snapshots = [(s["snapshot_id"], s["timestamp_ms"]) for s in state["snapshots"]]
         return ModelState(
@@ -147,6 +169,11 @@ class ManifestTable(TableModel):
                 n: (sid, ref_types.get(n, "tag"))
                 for n, sid in state.get("refs", {}).items()
             },
+            next_row_id=(
+                int(state.get("next_row_id", 0)) if state.get("row_lineage") else None
+            ),
+            stream_batches=state.get("stream_batches") or {},
+            statistics=state.get("statistics", []),
         )
 
     def live_files(
@@ -189,75 +216,95 @@ class ManifestTable(TableModel):
             out.append(f)
         return out
 
-    def _evolve_schema(self, mutate) -> int:
-        """Append the schema version ``mutate`` builds; record its
-        activation boundary (files committed at strictly higher sequence
-        numbers were written under it)."""
-        state = self._load()
-        if not state.get("schemas"):
-            raise ValueError("no schema registered (call register_schema)")
-        state["schemas"], new_id, last_col = evolve_schemas(
-            self.model_state(state), mutate
+    def _apply(self, base: ModelState, tr: Transition) -> int | None:
+        """Write ``tr`` into a copy of ``base``'s state and swap it in
+        (:meth:`_swap`).  Returns the new snapshot id for a snapshot
+        commit, the spec id for a partition-spec change."""
+        state = dict(base.raw)
+        out = None
+        if tr.added is not None:
+            out = self._add_snapshot(state, tr)
+        if tr.current is not None:
+            state["current_snapshot_id"] = tr.current
+        for name, ref in tr.refs.items():
+            if ref is None:
+                if "refs" in state:
+                    state["refs"] = {k: v for k, v in state["refs"].items() if k != name}
+                _record_ref_type(state, name, "tag")
+            else:
+                state["refs"] = {**state.get("refs", {}), name: ref[0]}
+                _record_ref_type(state, name, ref[1])
+        if tr.keep is not None:
+            state["snapshots"] = [
+                s for s in state["snapshots"] if s["snapshot_id"] in tr.keep
+            ]
+        if tr.row_ids is not None:
+            state["row_lineage"] = True
+            state["snapshots"] = [
+                _with_row_ids(s, tr.row_ids)
+                if s["snapshot_id"] == state["current_snapshot_id"]
+                else s
+                for s in state["snapshots"]
+            ]
+        if tr.next_row_id is not None:
+            state["next_row_id"] = tr.next_row_id
+        if tr.stream_batches is not None:
+            state["stream_batches"] = tr.stream_batches
+        if tr.statistics is not None:
+            state["statistics"] = tr.statistics
+        if tr.schema is not None:
+            schemas, new_id, last_col, boundary = tr.schema
+            state["schemas"] = schemas
+            state["current_schema_id"] = new_id
+            state["last_column_id"] = last_col
+            state["schema_activation"] = {
+                **state.get("schema_activation", {}), str(new_id): boundary
+            }
+        if tr.spec is not None:
+            specs = dict(state.get("partition_specs", {"0": []}))
+            # an identical registered spec becomes the default again
+            out = next(
+                (int(sid) for sid, existing in specs.items() if existing == tr.spec),
+                None,
+            )
+            if out is None:
+                out = max(int(sid) for sid in specs) + 1
+                specs[str(out)] = tr.spec
+            state["partition_specs"] = specs
+            state["default_spec_id"] = out
+        self._swap(base.raw, state)
+        return out
+
+    @staticmethod
+    def _add_snapshot(state: dict, tr: Transition) -> int:
+        """Append the snapshot ``tr`` commits to ``state``; its id."""
+        snaps = state["snapshots"]
+        files = next(
+            (s["files"] for s in snaps if s["snapshot_id"] == tr.base), []
         )
-        state["current_schema_id"] = new_id
-        state["last_column_id"] = last_col
-        act = dict(state.get("schema_activation", {}))
-        act[str(new_id)] = self.next_sequence_number() - 1
-        state["schema_activation"] = act
-        self._store(state)
-        return new_id
-
-    # -- partition-spec evolution --------------------------------------
-    #
-    # Iceberg tables carry a REGISTRY of partition specs: each data file
-    # records the spec it was written under (``spec_id``), new writes
-    # use the default spec, and changing the layout never rewrites
-    # existing files — scans evaluate every file against its own spec.
-    # (Iceberg spec "Partition Evolution"; the reference ships a
-    # PartitionSpec per rewrite request, core/proto/iceberg.proto:18-61.)
-
-    def update_partition_spec(self, fields: list[dict]) -> int:
-        """Evolve the table's partitioning: register ``fields`` as a new
-        spec and make it the default for FUTURE writes.  Existing files
-        keep their recorded spec — no data moves (metadata-only, like
-        Iceberg ``ALTER TABLE ... ADD PARTITION FIELD``).
-
-        Each field: ``{"name", "transform", "source"?, "n"?/"width"?,
-        "source_type"?}`` (``source_type`` enables bucket pruning —
-        see transforms.apply_transform_py).
-        """
-        for f in fields:
-            if "name" not in f or "transform" not in f:
-                raise ValueError(f"spec field needs name+transform: {f}")
-            if f["name"] == f.get("source", f["name"]) and f[
-                "transform"
-            ] != "identity":
-                # Derived transforms emit the partition value as a NEW
-                # column routed into directory names; reusing the source
-                # column's name would route the source data itself into
-                # dir names and drop it from the data files.  IDENTITY
-                # fields (Iceberg's own naming convention) are allowed:
-                # the fanout writer routes their dirs through a prefixed
-                # derived column so the source stays in the pages
-                # (orchestrator.IDENTITY_DIR_PREFIX).
-                raise ValueError(
-                    f"spec field name must differ from source column: {f}"
-                )
-        state = self._load()
-        specs = state.get("partition_specs", {"0": []})
-        # Re-registering an identical spec is a no-op (idempotent DDL).
-        for sid, existing in specs.items():
-            if existing == fields:
-                state["default_spec_id"] = int(sid)
-                state["partition_specs"] = specs
-                self._store(state)
-                return int(sid)
-        new_id = max(int(s) for s in specs) + 1
-        specs[str(new_id)] = fields
-        state["partition_specs"] = specs
-        state["default_spec_id"] = new_id
-        self._store(state)
-        return new_id
+        check_live(tr.removed, (f["path"] for f in files))
+        # max+1, not current+1: staged snapshots hold ids past current.
+        sid = max((s["snapshot_id"] for s in snaps), default=0) + 1
+        entry = {
+            "snapshot_id": sid,
+            "timestamp_ms": now_ms(),
+            "operation": tr.operation,
+            "files": [f for f in files if f["path"] not in tr.removed] + tr.added,
+        }
+        # Branch and staged snapshots record their parent (fast-forward
+        # and publish prove ancestry with it); mainline commits are
+        # ordered by the list itself.
+        if tr.stage:
+            entry["staged"] = True
+        if tr.stage or tr.branch is not None:
+            entry["parent_snapshot_id"] = tr.base
+        state["snapshots"] = snaps + [entry]
+        if tr.branch is not None:
+            state["refs"] = {**state.get("refs", {}), tr.branch: sid}
+            _record_ref_type(state, tr.branch, "branch")
+        elif not tr.stage:
+            state["current_snapshot_id"] = sid
+        return sid
 
     # -- snapshot API --------------------------------------------------
 
@@ -341,227 +388,6 @@ class ManifestTable(TableModel):
             ]
         return head + list(reversed(tail))
 
-    # ------------------------------------------------ row lineage (v3)
-
-    @property
-    def row_lineage(self) -> bool:
-        return bool(self._load().get("row_lineage"))
-
-    @property
-    def next_row_id(self) -> int:
-        return int(self._load().get("next_row_id", 0))
-
-    def enable_row_lineage(self) -> None:
-        """Turn on Iceberg v3 row lineage: every data row gets a durable
-        ``_row_id`` (file ``first_row_id`` + position) and a
-        ``_last_updated_sequence_number``; the table metadata tracks
-        ``next_row_id`` and every commit claims a contiguous id range
-        sized by its files' record counts (spec "Row Lineage").
-
-        Live data files are backfilled in manifest order (record_count
-        from the entry, else the parquet footer).  Lineage applies from
-        the CURRENT snapshot forward — time-travel reads of earlier
-        snapshots have no ids, exactly like a v2→v3 upgrade.
-
-        Preservation: every file rewrite preserves surviving rows'
-        ids — full_compact and compact_small_files materialize the
-        lineage columns with no new id claims; the copy-on-write row
-        ops (delete_where / update_where / merge_into) carry ids
-        through their transforms (updated rows keep ``_row_id`` and
-        inherit the new commit's sequence number; inserted rows inherit
-        fresh ids from their file's claimed range), per the v3 rule
-        that rows copied to new files keep their lineage.  The
-        merge-on-read ``merge_upsert`` never rewrites rows at all (its
-        new versions are NEW rows; old versions die by equality
-        delete), so it is lineage-correct by construction.
-        """
-        state = self._load()
-        if state.get("row_lineage"):
-            return
-        state["row_lineage"] = True
-        state.setdefault("next_row_id", 0)
-        cur_id = state.get("current_snapshot_id")
-        for snap in state["snapshots"]:
-            if snap["snapshot_id"] != cur_id:
-                continue
-            for f in snap["files"]:
-                if f.get("content", "DATA") != "DATA":
-                    continue
-                rc = f.get("record_count")
-                if not rc:
-                    import pyarrow.parquet as pq
-
-                    rc = pq.ParquetFile(f["path"]).metadata.num_rows
-                    f["record_count"] = rc
-                f["first_row_id"] = state["next_row_id"]
-                state["next_row_id"] += rc
-        self._store(state)
-
-    def _assign_row_ids(self, state: dict, files: list[dict]) -> None:
-        """Claim ``next_row_id`` ranges for newly committed data files.
-        Files flagged ``materialized_lineage`` (compaction outputs that
-        carry ``_row_id`` as a physical column) keep a null
-        first_row_id per the spec and claim nothing."""
-        for f in files:
-            if f.get("content", "DATA") != "DATA":
-                continue
-            if f.get("materialized_lineage") or f.get("first_row_id") is not None:
-                continue
-            rc = f.get("record_count")
-            if rc is None:
-                raise ValueError(
-                    "row-lineage table requires record_count on data files: "
-                    + f["path"]
-                )
-            f["first_row_id"] = state.get("next_row_id", 0)
-            state["next_row_id"] = state.get("next_row_id", 0) + rc
-
-    def stream_batch_hwm(self, name: str) -> int:
-        """High-water mark of committed streaming batch ids for sink
-        ``name`` (-1 when none) — the durable commit log the streaming
-        sinks consult: unlike live-path markers, it survives compaction
-        rewriting the batch's files (see ``streaming/sink.py``)."""
-        return int((self._load().get("stream_batches") or {}).get(name, -1))
-
-    def mark_stream_batch(self, name: str, batch_id: int) -> None:
-        """Record a committed streaming batch OUTSIDE append_snapshot —
-        for sinks whose final action is not a plain append (upserts,
-        deletion vectors).  Prefer ``append_snapshot(stream_mark=...)``
-        where possible: that updates the ledger in the same atomic
-        manifest swap as the commit itself."""
-        state = self._load()
-        led = state.setdefault("stream_batches", {})
-        if int(batch_id) > int(led.get(name, -1)):
-            led[name] = int(batch_id)
-            self._store(state)
-
-    def append_snapshot(
-        self,
-        files: list[dict],
-        stage: bool = False,
-        branch: str | None = None,
-        operation: str | None = None,
-        stream_mark: tuple[str, int] | None = None,
-    ) -> int:
-        """Add a snapshot whose file list = current files + ``files``.
-
-        With ``stage=True`` the snapshot is recorded but the current
-        pointer does NOT move — the write-audit-publish pattern: readers
-        keep seeing the old table, the staged snapshot is auditable via
-        ``read_table(snapshot_id=...)``, and ``publish_snapshot`` flips
-        the pointer once validation passes.  Unpublished staged
-        snapshots are dropped by ``expire_snapshots`` (tag them with a
-        ref to keep them across maintenance).
-
-        With ``branch="name"`` the write lands on that BRANCH (Iceberg
-        branching): the base is the branch head (created from the
-        current snapshot if the branch is new), main readers see
-        nothing, ``read_table(ref=name)`` sees the branch, and
-        ``fast_forward`` later advances main.  Branch snapshots record
-        their parent, so fast-forward can prove ancestry.
-        """
-        if stage and branch:
-            raise ValueError("pass stage or branch, not both")
-        state = self._load()
-        if state.get("row_lineage"):
-            # assign on COPIES: a failed commit must leave the caller's
-            # dicts unstamped, or a retry would re-commit stale id
-            # ranges without advancing next_row_id
-            files = [dict(f) for f in files]
-            self._assign_row_ids(state, files)
-        cur = self.current_snapshot()
-        if branch is not None:
-            head = state.get("refs", {}).get(branch)
-            base_snap = self.snapshot_at(head) if head is not None else cur
-            base = list(base_snap.files) if base_snap else []
-        else:
-            base = list(cur.files) if cur else []
-        # max+1, not current+1: staged snapshots hold ids past current.
-        sid = max((s["snapshot_id"] for s in state["snapshots"]), default=0) + 1
-        if operation is None:
-            # Inferred Iceberg summary operation: an all-delete-file
-            # commit is a "delete"; anything adding data is an "append"
-            # (upserts add both and count as append — the changelog
-            # reads their delete files regardless).
-            operation = (
-                "delete"
-                if files
-                and all(f.get("content", "DATA") != "DATA" for f in files)
-                else "append"
-            )
-        entry = {
-            "snapshot_id": sid,
-            "timestamp_ms": int(time.time() * 1000),
-            "operation": operation,
-            "files": base + files,
-        }
-        if stage:
-            entry["staged"] = True
-            entry["parent_snapshot_id"] = state["current_snapshot_id"]
-        if branch is not None:
-            entry["parent_snapshot_id"] = (
-                head if head is not None else state["current_snapshot_id"]
-            )
-        state["snapshots"].append(entry)
-        if branch is not None:
-            state.setdefault("refs", {})[branch] = sid
-            _record_ref_type(state, branch, "branch")
-        elif not stage:
-            state["current_snapshot_id"] = sid
-        if stream_mark is not None:
-            # Same atomic swap as the commit: the streaming-batch ledger
-            # can never record a batch whose files didn't land, nor miss
-            # one whose files did.
-            led = state.setdefault("stream_batches", {})
-            n, b = stream_mark
-            if int(b) > int(led.get(n, -1)):
-                led[n] = int(b)
-        self._store(state)
-        return sid
-
-    def rollback_to_snapshot(self, snapshot_id: int) -> int:
-        """Point MAIN back at an earlier snapshot (Iceberg
-        rollback_to_snapshot): readers instantly see the old state; no
-        files move, and the abandoned snapshots stay until
-        ``expire_snapshots``."""
-        state = self._load()
-        if not any(s["snapshot_id"] == snapshot_id for s in state["snapshots"]):
-            raise ValueError(f"snapshot {snapshot_id} not found")
-        state["current_snapshot_id"] = snapshot_id
-        self._store(state)
-        return snapshot_id
-
-    def fast_forward(self, branch: str, force: bool = False) -> int:
-        """Advance MAIN to the branch head (Iceberg fast_forward).
-
-        Safe only when main is an ancestor of the branch head — walk
-        the branch's recorded parents; if the current snapshot is not
-        on that chain, concurrent main commits would be silently
-        discarded, so the call raises :class:`CommitConflictError`
-        unless ``force=True`` (cherry-pick-style overwrite the caller
-        has re-validated)."""
-        state = self._load()
-        head = state.get("refs", {}).get(branch)
-        if head is None:
-            raise ValueError(f"unknown branch: {branch!r}")
-        if not force:
-            by_id = {s["snapshot_id"]: s for s in state["snapshots"]}
-            node, seen = head, set()
-            ancestors = set()
-            while node is not None and node not in seen:
-                seen.add(node)
-                ancestors.add(node)
-                node = by_id.get(node, {}).get("parent_snapshot_id")
-            current = state["current_snapshot_id"]
-            if current is not None and current not in ancestors:
-                raise CommitConflictError(
-                    f"main ({current}) is not an ancestor of branch "
-                    f"{branch!r} head ({head}); rebase or pass force=True"
-                )
-        state["current_snapshot_id"] = head
-        self._store(state)
-        return head
-
     def publish_snapshot(self, snapshot_id: int, force: bool = False) -> None:
         """WAP publish: make an audited staged snapshot current.
 
@@ -571,187 +397,31 @@ class ManifestTable(TableModel):
         the publish raises :class:`CommitConflictError` unless
         ``force=True`` (the caller re-audited against the new state).
         """
-        state = self._load()
-        for s in state["snapshots"]:
-            if s["snapshot_id"] != snapshot_id:
-                continue
-            if not s.pop("staged", False):
-                raise ValueError(f"snapshot {snapshot_id} is not staged")
-            parent = s.pop("parent_snapshot_id", None)
-            if not force and parent != state["current_snapshot_id"]:
-                s["staged"] = True  # leave state untouched on failure
-                s["parent_snapshot_id"] = parent
-                raise CommitConflictError(
-                    f"table moved since staging: parent {parent}, "
-                    f"current {state['current_snapshot_id']}"
-                )
-            state["current_snapshot_id"] = snapshot_id
-            self._store(state)
-            return
-        raise ValueError(f"snapshot {snapshot_id} not found")
-
-    def commit_rewrite(
-        self,
-        added: list[dict],
-        removed_paths: set[str],
-        expected_snapshot_id: int | None = None,
-        operation: str = "replace",
-    ) -> int:
-        """RewriteFiles transaction: one atomic add+delete swap.
-
-        Reference mod.rs:66-72 (``rewrite_files`` action → commit).
-
-        Optimistic concurrency: every removed file must still be live in
-        the current snapshot — if a concurrent writer already rewrote or
-        deleted one, committing would silently resurrect/duplicate its
-        rows, so the commit fails with :class:`CommitConflictError`
-        (Iceberg's validation of a stale rewrite).  Pass
-        ``expected_snapshot_id`` to additionally require the table not
-        to have moved AT ALL since planning.
-        """
-        state = self._load()
-        cur = self.current_snapshot()
-        if expected_snapshot_id is not None:
-            actual = cur.snapshot_id if cur else None
-            if actual != expected_snapshot_id:
-                raise CommitConflictError(
-                    f"table moved: expected snapshot {expected_snapshot_id}, "
-                    f"current is {actual}"
-                )
-        live = {f["path"] for f in (cur.files if cur else [])}
-        stale = sorted(removed_paths - live)
-        if stale:
-            raise CommitConflictError(
-                f"{len(stale)} file(s) no longer live (concurrent rewrite?): "
-                f"{stale[:3]}..."
-            )
-        if state.get("row_lineage"):
-            # assign AFTER conflict validation and on COPIES — a
-            # CommitConflictError retry must re-run assignment against
-            # the fresh next_row_id, not re-commit a stale range
-            added = [dict(f) for f in added]
-            self._assign_row_ids(state, added)
-        kept = [f for f in (cur.files if cur else []) if f["path"] not in removed_paths]
-        # max+1, not current+1: staged (WAP) snapshots hold ids past current.
-        sid = max((s["snapshot_id"] for s in state["snapshots"]), default=0) + 1
-        state["snapshots"].append(
-            {
-                "snapshot_id": sid,
-                "timestamp_ms": int(time.time() * 1000),
-                # Iceberg summary operation: "replace" = no logical row
-                # change (compaction/maintenance); "overwrite" = COW row
-                # ops; "delete" = delete-file supersede commits.  The
-                # changelog read keys off this.
-                "operation": operation,
-                "files": kept + added,
-            }
+        base = self._load()
+        snap = next(
+            (s for s in base["snapshots"] if s["snapshot_id"] == snapshot_id), None
         )
-        state["current_snapshot_id"] = sid
-        self._store(state)
-        return sid
-
-    def expire_snapshots(self) -> list[str]:
-        """Keep the current snapshot plus every ref target; return
-        now-unreferenced paths.
-
-        Reference ``expire_snapshot`` (mod.rs:81-88).  Does NOT unlink —
-        the caller owns physical deletion (``vacuum``), like Iceberg's
-        ``expire_snapshots`` returning the orphan list.
-        """
-        state = self._load()
-        cur = self.current_snapshot()
-        if cur is None:
-            return []
-        keep_ids = {cur.snapshot_id} | set(state.get("refs", {}).values())
-        keep = [s for s in state["snapshots"] if s["snapshot_id"] in keep_ids]
-        live = {f["path"] for s in keep for f in s["files"]}
-        orphans = sorted(
-            {
-                f["path"]
-                for s in state["snapshots"]
-                if s["snapshot_id"] not in keep_ids
-                for f in s["files"]
-            }
-            - live
-        )
-        state["snapshots"] = keep
-        self._store(state)
-        return orphans
-
-    # -- refs (tags) ---------------------------------------------------
-
-    def set_ref(self, name: str, snapshot_id: int, ref_type: str = "tag") -> None:
-        """Record a named ref (Iceberg ref semantics): the target survives
-        ``expire_snapshots`` and is addressable by name.  Branches are
-        recorded in ``ref_types``; a ref with no record there is a tag."""
-        if ref_type not in ("tag", "branch"):
-            raise ValueError(f"ref type must be tag|branch: {ref_type}")
-        state = self._load()
-        if not any(s["snapshot_id"] == snapshot_id for s in state["snapshots"]):
+        if snap is None:
             raise ValueError(f"snapshot {snapshot_id} not found")
-        state.setdefault("refs", {})[name] = snapshot_id
-        _record_ref_type(state, name, ref_type)
-        self._store(state)
-
-    def remove_ref(self, name: str) -> None:
-        state = self._load()
-        state.get("refs", {}).pop(name, None)
-        _record_ref_type(state, name, "tag")
-        self._store(state)
-
-    # -- statistics files ----------------------------------------------
-
-    def statistics(self) -> list[dict]:
-        """Registered statistics entries, oldest first."""
-        return self._load().get("statistics", [])
-
-    def register_statistics(self, entry: dict) -> None:
-        """Register a statistics entry; an entry for the same snapshot is
-        replaced, not stacked."""
-        state = self._load()
-        state["statistics"] = with_statistics_entry(
-            state.get("statistics", []), entry
-        )
-        self._store(state)
+        if not snap.get("staged"):
+            raise ValueError(f"snapshot {snapshot_id} is not staged")
+        parent = snap.get("parent_snapshot_id")
+        if not force and parent != base["current_snapshot_id"]:
+            raise CommitConflictError(
+                f"table moved since staging: parent {parent}, "
+                f"current {base['current_snapshot_id']}"
+            )
+        published = {
+            k: v for k, v in snap.items() if k not in ("staged", "parent_snapshot_id")
+        }
+        state = dict(base)
+        state["snapshots"] = [
+            published if s is snap else s for s in base["snapshots"]
+        ]
+        state["current_snapshot_id"] = snapshot_id
+        self._swap(base, state)
 
     # -- physical cleanup ----------------------------------------------
-
-    def remove_orphan_files(
-        self, older_than_s: float = 3 * 24 * 3600, delete: bool = False
-    ) -> list[str]:
-        """Parquet files under the table root referenced by NO retained
-        snapshot (Iceberg's remove_orphan_files): leftovers of failed
-        writes and aborted stages.
-
-        ``older_than_s`` guards against racing an in-flight writer whose
-        files are not yet committed — Iceberg's default is the same
-        3-day cutoff; tests pass 0.  Listing only, unless
-        ``delete=True``.
-        """
-        referenced = {
-            self._mfs.normalize(f["path"])
-            for s in self._load()["snapshots"]
-            for f in s["files"]
-        }
-        cutoff = time.time() - older_than_s
-        orphans = []
-        for raw in self._mfs.walk_files(self._mfs.root):
-            if not raw.endswith(".parquet"):
-                continue
-            p = self._mfs.normalize(raw)
-            if p in referenced:
-                continue
-            try:
-                if self._mfs.mtime(p) > cutoff:
-                    continue
-            except FileNotFoundError:
-                continue
-            orphans.append(p)
-        orphans.sort()
-        if delete:
-            for p in orphans:
-                self._mfs.unlink(p)
-        return orphans
 
     def vacuum(self) -> tuple[list[str], list[str]]:
         """Expire old snapshots AND unlink their orphan files.
@@ -772,3 +442,18 @@ class ManifestTable(TableModel):
             self._mfs.unlink(ap)  # missing tolerated (idempotent re-run)
             deleted.append(p)
         return deleted, skipped
+
+
+def _with_row_ids(snap: dict, row_ids: dict) -> dict:
+    """``snap`` with its data files stamped from ``row_ids`` ({path:
+    (first row id, record count)}), the count recorded where missing."""
+    files = []
+    for f in snap["files"]:
+        if f["path"] in row_ids and f.get("content", "DATA") == "DATA":
+            first, rc = row_ids[f["path"]]
+            f = dict(f)
+            if not f.get("record_count"):
+                f["record_count"] = rc
+            f["first_row_id"] = first
+        files.append(f)
+    return {**snap, "files": files}

@@ -12,10 +12,10 @@ files — the same treatment.
 
 Protocol preservation, not translation:
 
-- Plain and ``file:`` roots keep the pre-seam byte-for-byte behavior —
-  POSIX ``O_EXCL`` create for Hadoop-catalog version files (exactly one
-  racing committer wins), ``tempfile`` + ``os.replace`` for atomic JSON
-  swaps, ``os.walk`` for orphan listing.
+- Plain and ``file:`` roots use POSIX: a temp file published by
+  ``os.link`` for Hadoop-catalog version files (exactly one racing
+  committer wins, and no reader sees a torn file), ``tempfile`` +
+  ``os.replace`` for atomic JSON swaps, ``os.walk`` for orphan listing.
 - Object-store roots (``s3://``/``gs://``/injected pyarrow FS — the
   test seam) route every metadata byte through the pyarrow connector.
   Object stores have no rename and no O_EXCL: JSON publishes become
@@ -230,16 +230,22 @@ class MetaFS:
     def create_exclusive(self, p: str, data: bytes) -> None:
         """Create ``p`` failing with FileExistsError if present.
 
-        Local: POSIX ``O_EXCL`` — of two racers exactly one wins (the
-        Hadoop-catalog commit protocol, byte-for-byte the pre-seam
-        behavior).  Object store: probe-then-PUT, best-effort only —
+        Local: the bytes go to a temp file that ``os.link`` publishes
+        under ``p``.  The link refuses to overwrite, so of two racers
+        exactly one wins (the Hadoop-catalog commit protocol), and a file
+        that exists is always whole: a crash mid-write leaves only the
+        temp file.  Object store: probe-then-PUT, best-effort only —
         module docstring explains why multi-writer commits on remote
         roots belong to the SQL/REST catalog CAS instead."""
         p = self.within(p)
         if self.fs is None:
-            fd = os.open(p, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-            with os.fdopen(fd, "wb") as f:
-                f.write(data)
+            fd, tmp = tempfile.mkstemp(dir=os.path.dirname(p), suffix=".tmp")
+            try:
+                with os.fdopen(fd, "wb") as f:
+                    f.write(data)
+                os.link(tmp, p)
+            finally:
+                os.unlink(tmp)
             return
         if self.exists(p):
             raise FileExistsError(p)

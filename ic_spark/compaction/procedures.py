@@ -85,8 +85,8 @@ def remove_orphan_files(
     """Iceberg remove_orphan_files: files under the table root that no
     retained snapshot references and that are older than
     ``older_than_ms`` milliseconds (the 3-day default guards in-flight
-    writers).  Lists them; ``dry_run=False`` also deletes them.  Spec
-    tables raise NotImplementedError."""
+    writers).  Lists them; ``dry_run=False`` also deletes them, on both
+    metadata flavors."""
     removed = table.remove_orphan_files(
         older_than_s=older_than_ms / 1000, delete=not dry_run
     )

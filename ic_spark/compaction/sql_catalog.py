@@ -455,6 +455,13 @@ class SqlCatalogTable(IcebergTable):
                 )
         return self._mfs.read_json(pointer)
 
+    def _metadata_for_commit(self) -> tuple[int | None, dict]:
+        """(version, metadata) from one pointer read: the pair can never
+        mismatch, so reading the state never raises a conflict."""
+        pointer = self._pointer()
+        m = _VERSION_RE.search(pointer)
+        return (int(m.group(1)) if m else None), self._mfs.read_json(pointer)
+
     def _commit_metadata(self, meta: dict, expected_version: int | None) -> None:
         """Write a collision-free metadata JSON, then CAS the pointer.
 

@@ -1,37 +1,41 @@
-"""One table model over two on-disk codecs: planning, state reads and
-schema evolution.
+"""One table model over two on-disk codecs: planning, state reads,
+schema evolution and every commit.
 
 The JSON ``ManifestTable`` (manifest.py) and the spec ``IcebergTable``
 (iceberg_meta.py) differ only in how they store a table.  Each is a codec
-that supplies ``model_state()`` (one read of the table state, as a
+with three duties: ``model_state()`` (one read of the table state, as a
 :class:`ModelState`), ``live_files(snapshot_id, state, bounds,
 deletes_only)`` (a snapshot decoded into live-file dicts) and
-``_evolve_schema(mutate)`` (load, store and activation boundary of a new
-schema version).  :class:`TableModel` writes the rest once: scan
-planning and its manifest-level pruning, COUNT(*) from stats, the
-schema, spec and ref reads, and the column DDL.  The mapping between
-Iceberg schema JSON, which both codecs store, and Spark types lives here
-too.
+``_apply(base, transition)`` (one :class:`Transition` written to its
+store, refused with :class:`CommitConflictError` when the table moved
+past the state ``base`` the transition was computed from).
+:class:`TableModel` writes the rest once: scan planning and its
+manifest-level pruning, COUNT(*) from stats, the schema, spec and ref
+reads, the column DDL, and every state transition (appends, rewrites,
+rollback, fast-forward, expiry, refs, statistics, stream marks, row
+lineage, partition specs, schema versions, orphan removal).  The mapping
+between Iceberg schema JSON, which both codecs store, and Spark types
+lives here too.
 
 A decoded file is the JSON flavor's file dict: ``path``, ``content`` (a
 :class:`FileContent` name), ``sequence_number``, ``file_size_in_bytes``,
 ``record_count``, ``file_format``, ``first_row_id``, ``sort_order_id``,
 ``partition`` (as stored; pruning evaluates it), ``spec_id`` and, on a
-deletion vector, ``deletion_vectors`` ({data file: {offset, length,
-cardinality}}).  Equality-delete keys (``equality_ids``) are field ids,
-or the recorded names on a table with no schema.  Column bounds
-(``column_stats``: {name: {min, max}}) are inline on the JSON flavor and
-decoded on the spec flavor only for ``bounds=True``.  The spec flavor
-adds ``partition_values``: its stored epoch ints converted to the form
-the planner's partition fill resolves.
+deletion-vector file, ``deletion_vectors`` ({data file: {offset, length,
+cardinality}}, one entry per vector the file holds).  Equality-delete
+keys (``equality_ids``) are field ids, or the recorded names on a table
+with no schema.  Column bounds (``column_stats``: {name: {min, max}}) are
+inline on the JSON flavor and decoded on the spec flavor only for
+``bounds=True``.  The spec flavor adds ``partition_values``: its stored
+epoch ints converted to the form the planner's partition fill resolves.
 """
 
 from __future__ import annotations
 
 import copy
-import dataclasses
 import functools
-from dataclasses import dataclass
+import time
+from dataclasses import dataclass, field
 from typing import Any
 
 from pyspark.sql import types as T
@@ -40,6 +44,19 @@ from ic_spark.compaction.epochs import epoch_days, epoch_micros
 from ic_spark.compaction.request import FileContent, FileScanTask
 
 _PRUNE_OPS = {"=", "<", "<=", ">", ">="}
+
+
+class CommitConflictError(RuntimeError):
+    """A commit lost an optimistic-concurrency race: the table moved past
+    the state the commit was computed from."""
+
+
+def with_statistics_entry(entries: list[dict], entry: dict) -> list[dict]:
+    """``entries`` with ``entry`` registered: one statistics entry per
+    snapshot (Iceberg REST set-statistics semantics), so a re-analyze at
+    the same snapshot replaces the old entry instead of stacking."""
+    sid = entry.get("snapshot-id")
+    return [e for e in entries if e.get("snapshot-id") != sid] + [entry]
 
 
 def _coerce_partition_value(pv, like):
@@ -643,6 +660,14 @@ class ModelState:
     snapshot_schema_ids: dict[int, int]
     # ref name -> (snapshot id, "tag" | "branch")
     refs: dict[str, tuple[int, str]]
+    # the next row id to claim; None while row lineage is off
+    next_row_id: int | None = None
+    # streaming sink name -> highest committed batch id
+    stream_batches: dict[str, int] = field(default_factory=dict)
+    # registered statistics-file entries, oldest first
+    statistics: list[dict] = field(default_factory=list)
+    # the metadata version the state was read at (spec codec's CAS token)
+    version: int | None = None
 
     def schema_id_at(self, snapshot_id: int | None) -> int | None:
         """The schema ``snapshot_id`` was committed under; the current
@@ -664,6 +689,58 @@ class ModelState:
         return names
 
 
+@dataclass(frozen=True)
+class Transition:
+    """One table state change, computed by the model from a base
+    :class:`ModelState`; the codec's ``_apply`` writes it.  Fields left at
+    their defaults change nothing.
+
+    A transition with ``added`` commits a new snapshot: the live files of
+    snapshot ``base`` (None: no files) without ``removed``, each of which
+    must still be live there, plus ``added``.  It becomes main's current
+    snapshot, the head of ``branch``, or, ``stage``d, neither."""
+
+    added: list[dict] | None = None
+    removed: frozenset = frozenset()
+    base: int | None = None
+    operation: str | None = None
+    branch: str | None = None
+    stage: bool = False
+    # main moves to this snapshot (rollback, fast-forward)
+    current: int | None = None
+    # ref name -> (snapshot id, "tag" | "branch"), or None to remove it
+    refs: dict = field(default_factory=dict)
+    # expiry: the snapshot ids retained
+    keep: frozenset | None = None
+    next_row_id: int | None = None
+    # row-lineage backfill of the current snapshot: data file path ->
+    # (first row id, record count)
+    row_ids: dict | None = None
+    stream_batches: dict | None = None
+    statistics: list | None = None
+    # a new schema version: (schemas, its id, last column id, the last
+    # sequence number before it activates)
+    schema: tuple | None = None
+    # partition spec fields (writer shape) to make the default spec
+    spec: list | None = None
+
+
+def check_live(removed, live_paths) -> None:
+    """Refuse a commit that drops files no longer live in its base: a
+    concurrent writer rewrote or deleted them, and committing would
+    resurrect or duplicate their rows (Iceberg's stale-rewrite check)."""
+    stale = sorted(set(removed) - set(live_paths))
+    if stale:
+        raise CommitConflictError(
+            f"{len(stale)} file(s) no longer live (concurrent rewrite?): "
+            f"{stale[:3]}..."
+        )
+
+
+def now_ms() -> int:
+    return int(time.time() * 1000)
+
+
 def key_names(keys, names: dict[int, str]) -> tuple[str, ...]:
     """Decoded equality-delete keys as column names.  Names recorded on a
     table with no schema pass through; an id that no schema knows reads
@@ -675,9 +752,9 @@ def key_names(keys, names: dict[int, str]) -> tuple[str, ...]:
 
 
 class TableModel:
-    """Planning, state reads and schema evolution over a codec: the
-    subclass supplies ``model_state``, ``live_files`` and
-    ``_evolve_schema`` (module docstring)."""
+    """Planning, state reads, schema evolution and every commit over a
+    codec: the subclass supplies ``model_state``, ``live_files`` and
+    ``_apply`` (module docstring)."""
 
     # -- state reads ---------------------------------------------------
 
@@ -761,9 +838,7 @@ class TableModel:
 
         Analog of ``get_tasks_from_table`` (reference mod.rs:121-171),
         time travel included.  Delete tasks are deduped by path like the
-        reference's HashSet guard (:143-158); a deletion-vector file
-        listed once per vector becomes one task counting all its
-        positions.
+        reference's HashSet guard (:143-158).
 
         ``data_filter`` is a conjunction of ``(col, op, value)`` triples
         (op in ``= < <= > >=``): a data file is skipped when its column
@@ -779,7 +854,7 @@ class TableModel:
         column_types = _column_types(state) if data_filter else None
         names = state.field_names()
         data, pos, eq = [], [], []
-        seen: dict[str, int] = {}
+        seen: set[str] = set()
         for f in files:
             content = FileContent[f.get("content", "DATA")]
             if content is FileContent.DATA:
@@ -789,13 +864,6 @@ class TableModel:
                 ):
                     continue
             elif f["path"] in seen:
-                if content is FileContent.POSITION_DELETES and f.get(
-                    "record_count"
-                ):
-                    i = seen[f["path"]]
-                    pos[i] = dataclasses.replace(
-                        pos[i], record_count=pos[i].record_count + f["record_count"]
-                    )
                 continue
             seq = f.get("sequence_number", 0)
             task = FileScanTask(
@@ -816,9 +884,8 @@ class TableModel:
             if content is FileContent.DATA:
                 data.append(task)
             else:
-                out = pos if content is FileContent.POSITION_DELETES else eq
-                seen[f["path"]] = len(out)
-                out.append(task)
+                seen.add(f["path"])
+                (pos if content is FileContent.POSITION_DELETES else eq).append(task)
         return data, pos, eq
 
     def incremental_tasks(
@@ -1020,6 +1087,409 @@ class TableModel:
             return fields, last_col
 
         return self._evolve_schema(mutate)
+
+    def _evolve_schema(self, mutate) -> int:
+        """Commit the schema version ``mutate`` builds, with its activation
+        boundary: files committed at sequence numbers strictly above the
+        last one so far were written under it, which lets scans resolve
+        each data file against its write schema (the field-id resolution
+        Iceberg gets from footer field ids).  Data files never move."""
+        state = self.model_state()
+        if not state.schemas:
+            raise ValueError("no schema registered (call register_schema)")
+        schemas, new_id, last_col = evolve_schemas(state, mutate)
+        boundary = self.next_sequence_number() - 1
+        self._apply(state, Transition(schema=(schemas, new_id, last_col, boundary)))
+        return new_id
+
+    # -- commits -------------------------------------------------------
+    #
+    # Each commit reads the state once, computes one Transition from it
+    # and hands both to the codec, which writes the transition only if
+    # the table has not moved since that read.
+
+    def append_snapshot(
+        self,
+        files: list[dict],
+        stage: bool = False,
+        branch: str | None = None,
+        operation: str | None = None,
+        stream_mark: tuple[str, int] | None = None,
+    ) -> int:
+        """Commit a snapshot whose files are the current files plus
+        ``files``; returns its id.
+
+        ``branch="name"`` commits to that branch (Iceberg branching): the
+        base is the branch head (the current snapshot for a new branch),
+        main does not move, ``read_table(ref=name)`` sees the branch, and
+        ``fast_forward`` advances main later.
+
+        ``stage=True`` (JSON flavor only) records the snapshot without
+        moving main, the write-audit-publish pattern: it is readable by
+        id, ``publish_snapshot`` makes it current, and ``expire_snapshots``
+        drops it unless a ref names it.
+
+        ``stream_mark=(sink_name, batch_id)`` records the streaming batch
+        in the same commit (see ``streaming/sink.py``).  The operation,
+        unless given, is "delete" for a commit of delete files only and
+        "append" otherwise.  Equality-delete keys must name columns of the
+        current schema, when the table has one.
+        """
+        if stage and branch:
+            raise ValueError("pass stage or branch, not both")
+        state = self.model_state()
+        _check_equality_keys(state, files)
+        next_row_id, files = _assign_row_ids(state, files)
+        base = state.current_snapshot_id
+        if branch is not None and branch in state.refs:
+            base = state.refs[branch][0]
+        if operation is None:
+            operation = (
+                "delete"
+                if files
+                and all(f.get("content", "DATA") != "DATA" for f in files)
+                else "append"
+            )
+        return self._apply(
+            state,
+            Transition(
+                added=files,
+                base=base,
+                operation=operation,
+                branch=branch,
+                stage=stage,
+                next_row_id=next_row_id,
+                stream_batches=_marked(state, stream_mark),
+            ),
+        )
+
+    def commit_rewrite(
+        self,
+        added: list[dict],
+        removed_paths: set[str],
+        expected_snapshot_id: int | None = None,
+        operation: str = "replace",
+    ) -> int:
+        """RewriteFiles transaction (reference mod.rs:66-72): one commit
+        that drops ``removed_paths`` and adds ``added``; returns the new
+        snapshot id.
+
+        Every removed file must still be live in the current snapshot, or
+        the commit raises :class:`CommitConflictError` (a concurrent
+        writer rewrote or deleted it).  ``expected_snapshot_id``
+        additionally requires that the table has not moved at all.
+        ``operation`` lands in the snapshot summary: "replace" for
+        maintenance, "overwrite" for copy-on-write row changes, "delete"
+        for delete-file supersedes; the changelog read keys off it.
+        """
+        state = self.model_state()
+        cur = state.current_snapshot_id
+        if expected_snapshot_id is not None and cur != expected_snapshot_id:
+            raise CommitConflictError(
+                f"table moved: expected snapshot {expected_snapshot_id}, "
+                f"current is {cur}"
+            )
+        _check_equality_keys(state, added)
+        next_row_id, added = _assign_row_ids(state, added)
+        return self._apply(
+            state,
+            Transition(
+                added=added,
+                removed=frozenset(removed_paths),
+                base=cur,
+                operation=operation,
+                next_row_id=next_row_id,
+            ),
+        )
+
+    def rollback_to_snapshot(self, snapshot_id: int) -> int:
+        """Point main back at an earlier snapshot (Iceberg
+        rollback_to_snapshot): no files move, and the abandoned snapshots
+        stay until ``expire_snapshots``."""
+        state = self.model_state()
+        _known(state, snapshot_id)
+        self._apply(state, Transition(current=snapshot_id))
+        return snapshot_id
+
+    def fast_forward(self, branch: str, force: bool = False) -> int:
+        """Advance main to the head of ``branch`` (Iceberg fast_forward).
+
+        Only when main is an ancestor of the head: otherwise main's own
+        commits would be silently discarded, so the call raises
+        :class:`CommitConflictError` unless ``force=True`` (an overwrite
+        the caller has re-validated).  Tags are not branches."""
+        state = self.model_state()
+        head, kind = state.refs.get(branch, (None, None))
+        if kind != "branch":
+            raise ValueError(f"unknown branch: {branch!r}")
+        cur = state.current_snapshot_id
+        if not force and cur is not None and cur not in self.ancestor_ids(head):
+            raise CommitConflictError(
+                f"main ({cur}) is not an ancestor of branch "
+                f"{branch!r} head ({head}); rebase or pass force=True"
+            )
+        self._apply(state, Transition(current=head))
+        return head
+
+    def expire_snapshots(self) -> list[str]:
+        """Keep the current snapshot and every ref target; return the
+        file paths only the dropped snapshots referenced.
+
+        Reference ``expire_snapshot`` (mod.rs:81-88).  Nothing is
+        unlinked: the caller owns physical deletion (``vacuum``), as with
+        Iceberg's ``expire_snapshots`` returning the orphan list.
+        """
+        state = self.model_state()
+        cur = state.current_snapshot_id
+        if cur is None:
+            return []
+        keep = {cur} | {sid for sid, _ in state.refs.values()}
+        kept: set[str] = set()
+        dropped: set[str] = set()
+        for sid, _ in state.snapshots:
+            paths = kept if sid in keep else dropped
+            paths.update(f["path"] for f in self.live_files(sid, state))
+        self._apply(state, Transition(keep=frozenset(keep)))
+        return sorted(dropped - kept)
+
+    # -- refs, statistics, streaming marks -----------------------------
+
+    def set_ref(self, name: str, snapshot_id: int, ref_type: str = "tag") -> None:
+        """Record a named ref (Iceberg ref semantics): a tag pins a
+        snapshot, a branch names a movable head; either keeps its target
+        through ``expire_snapshots``."""
+        if ref_type not in ("tag", "branch"):
+            raise ValueError(f"ref type must be tag|branch: {ref_type}")
+        state = self.model_state()
+        _known(state, snapshot_id)
+        self._apply(state, Transition(refs={name: (snapshot_id, ref_type)}))
+
+    def remove_ref(self, name: str) -> None:
+        self._apply(self.model_state(), Transition(refs={name: None}))
+
+    def statistics(self) -> list[dict]:
+        """Registered statistics entries, oldest first."""
+        return self.model_state().statistics
+
+    def register_statistics(self, entry: dict) -> None:
+        """Register a statistics entry; an entry for the same snapshot is
+        replaced, not stacked."""
+        state = self.model_state()
+        self._apply(
+            state,
+            Transition(statistics=with_statistics_entry(state.statistics, entry)),
+        )
+
+    def stream_batch_hwm(self, name: str) -> int:
+        """High-water mark of committed streaming batch ids for sink
+        ``name`` (-1 when none): the durable commit log the streaming sinks
+        consult, which, unlike file paths, survives compaction rewriting a
+        batch's files (see ``streaming/sink.py``)."""
+        return int(self.model_state().stream_batches.get(name, -1))
+
+    def mark_stream_batch(self, name: str, batch_id: int) -> None:
+        """Record a committed streaming batch in a commit of its own, for
+        sinks whose final action is not a plain append.  Prefer
+        ``append_snapshot(stream_mark=...)``, which records it in the
+        same commit as the batch's files."""
+        state = self.model_state()
+        marked = _marked(state, (name, batch_id))
+        if marked is not None:
+            self._apply(state, Transition(stream_batches=marked))
+
+    # -- row lineage (v3) ----------------------------------------------
+
+    @property
+    def row_lineage(self) -> bool:
+        return self.model_state().next_row_id is not None
+
+    @property
+    def next_row_id(self) -> int:
+        return self.model_state().next_row_id or 0
+
+    def enable_row_lineage(self) -> None:
+        """Turn on Iceberg v3 row lineage: every data row gets a durable
+        ``_row_id`` (file ``first_row_id`` + position) and a
+        ``_last_updated_sequence_number``; the table tracks
+        ``next_row_id`` and every commit claims a contiguous id range
+        sized by its files' record counts (spec "Row Lineage").
+
+        The current snapshot's live data files are backfilled in manifest
+        order (record count from the entry, else the parquet footer).
+        Lineage applies from the current snapshot forward: time-travel
+        reads of earlier snapshots have no ids, exactly like a v2 -> v3
+        upgrade.  The spec flavor writes the backfill as a "replace"
+        snapshot, because its manifests are immutable.
+
+        Preservation: every file rewrite keeps surviving rows' ids.
+        full_compact and compact_small_files materialize the lineage
+        columns with no new id claims; the copy-on-write row ops carry
+        ids through their transforms (updated rows keep ``_row_id`` and
+        take the new commit's sequence number; inserted rows take fresh
+        ids from their file's claimed range).  ``merge_upsert`` never
+        rewrites rows (its new versions are new rows and old versions die
+        by equality delete), so it is lineage-correct by construction.
+        """
+        state = self.model_state()
+        if state.next_row_id is not None:
+            return
+        nxt, row_ids = 0, {}
+        for f in self.live_files(None, state) or ():
+            if f.get("content", "DATA") != "DATA" or f.get("first_row_id") is not None:
+                continue
+            rc = f.get("record_count")
+            if rc is None:
+                import pyarrow.parquet as pq
+
+                rc = pq.ParquetFile(f["path"]).metadata.num_rows
+            row_ids[f["path"]] = (nxt, int(rc))
+            nxt += int(rc)
+        self._apply(state, Transition(next_row_id=nxt, row_ids=row_ids))
+
+    # -- partition-spec evolution --------------------------------------
+    #
+    # Iceberg tables carry a registry of partition specs: each data file
+    # records the spec it was written under (``spec_id``), new writes use
+    # the default spec, and changing the layout never rewrites existing
+    # files; scans evaluate every file against its own spec.  (Iceberg
+    # spec "Partition Evolution"; the reference ships a PartitionSpec per
+    # rewrite request, core/proto/iceberg.proto:18-61.)
+
+    def update_partition_spec(self, fields: list[dict]) -> int:
+        """Register ``fields`` as a partition spec and make it the default
+        for future writes; returns its spec id.  Metadata only: existing
+        files keep their recorded spec (Iceberg ``ALTER TABLE ... ADD
+        PARTITION FIELD``), and an identical registered spec becomes the
+        default again instead of a new one.
+
+        Each field: ``{"name", "transform", "source"?, "n"?/"width"?,
+        "source_type"?}`` (``source_type`` enables bucket pruning, see
+        transforms.apply_transform_py).  A derived field may not reuse its
+        source column's name: the writer routes partition values into
+        directory names, which would take the source data out of the
+        files.  An identity field may (Iceberg's own naming): the fanout
+        writer routes its directories through a prefixed derived column
+        (orchestrator.IDENTITY_DIR_PREFIX).  The source must be a column
+        of the current schema, when the table has one.
+        """
+        state = self.model_state()
+        names = {f["name"] for f in state.current_fields()}
+        for f in fields:
+            if "name" not in f or "transform" not in f:
+                raise ValueError(f"spec field needs name+transform: {f}")
+            src = f.get("source", f["name"])
+            if f["name"] == src and f["transform"] != "identity":
+                raise ValueError(
+                    f"spec field name must differ from source column: {f}"
+                )
+            if names and src not in names:
+                raise ValueError(f"unknown source column: {src}")
+        return self._apply(state, Transition(spec=list(fields)))
+
+    # -- physical cleanup ----------------------------------------------
+
+    def remove_orphan_files(
+        self, older_than_s: float = 3 * 24 * 3600, delete: bool = False
+    ) -> list[str]:
+        """Parquet files under the table root that no retained snapshot
+        references (Iceberg's remove_orphan_files): leftovers of failed
+        writes, crashed commits and aborted stages.
+
+        ``older_than_s`` guards against racing an in-flight writer whose
+        files are not committed yet; Iceberg's default is the same 3-day
+        cutoff, and tests pass 0.  Listing only, unless ``delete=True``.
+        """
+        mfs = self._mfs
+        state = self.model_state()
+        referenced = {
+            mfs.normalize(f["path"])
+            for sid, _ in state.snapshots
+            for f in self.live_files(sid, state)
+        }
+        cutoff = time.time() - older_than_s
+        orphans = []
+        for raw in mfs.walk_files(mfs.root):
+            if not raw.endswith(".parquet"):
+                continue
+            p = mfs.normalize(raw)
+            if p in referenced:
+                continue
+            try:
+                if mfs.mtime(p) > cutoff:
+                    continue
+            except FileNotFoundError:
+                continue
+            orphans.append(p)
+        orphans.sort()
+        if delete:
+            for p in orphans:
+                mfs.unlink(p)
+        return orphans
+
+
+def _known(state: ModelState, snapshot_id: int) -> None:
+    if all(sid != snapshot_id for sid, _ in state.snapshots):
+        raise ValueError(f"snapshot {snapshot_id} not found")
+
+
+def _check_equality_keys(state: ModelState, files: list[dict]) -> None:
+    """Refuse an equality-delete key that names no column of the current
+    schema: dropping it would narrow the key and delete more rows than
+    asked.  Tables with no schema record the names as given."""
+    names = {f["name"] for f in state.current_fields()}
+    if not names:
+        return
+    for f in files:
+        unknown = [k for k in f.get("equality_ids") or () if k not in names]
+        if unknown:
+            raise ValueError(
+                f"equality-delete file {f['path']} keys on unknown "
+                f"column(s) {unknown}"
+            )
+
+
+def _assign_row_ids(
+    state: ModelState, files: list[dict]
+) -> tuple[int | None, list[dict]]:
+    """(next row id after the commit, ``files``) with each new data file
+    claiming a ``first_row_id`` range on a row-lineage table.  Claims go
+    on copies, so a commit that loses a race leaves the caller's dicts
+    unstamped and a retry claims against the fresh ``next_row_id``.
+    Files flagged ``materialized_lineage`` (compaction outputs carrying
+    ``_row_id`` as a column) keep a null first_row_id and claim nothing."""
+    nxt = state.next_row_id
+    if nxt is None:
+        return None, files
+    out = []
+    for f in files:
+        f = dict(f)
+        if (
+            f.get("content", "DATA") == "DATA"
+            and not f.get("materialized_lineage")
+            and f.get("first_row_id") is None
+        ):
+            rc = f.get("record_count")
+            if rc is None:
+                raise ValueError(
+                    "row-lineage table requires record_count on data files: "
+                    + f["path"]
+                )
+            f["first_row_id"] = nxt
+            nxt += int(rc)
+        out.append(f)
+    return nxt, out
+
+
+def _marked(state: ModelState, mark: tuple[str, int] | None) -> dict | None:
+    """The stream-batch ledger with ``mark`` recorded, or None when there
+    is no mark or the ledger already covers it."""
+    if mark is None:
+        return None
+    name, batch_id = mark
+    if int(batch_id) <= int(state.stream_batches.get(name, -1)):
+        return None
+    return {**state.stream_batches, name: int(batch_id)}
+
 
 
 def evolve_schemas(state: ModelState, mutate) -> tuple[list[dict], int, int]:

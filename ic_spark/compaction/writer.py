@@ -53,6 +53,19 @@ def _partition_values_from_path(path: str, base_dir: str) -> dict[str, str]:
     return out
 
 
+def drop_empty_parts(mfs, entries: list[dict]) -> list[dict]:
+    """The file ``entries`` of one Spark write without the 0-row parts
+    Spark writes for empty tasks, which are unlinked: they hold nothing
+    to read, and each would be one more file every scan opens.  When
+    every part is empty one is kept, so the write still reads as 0
+    rows."""
+    kept = [e for e in entries if e["record_count"]] or entries[:1]
+    for e in entries:
+        if e not in kept:
+            mfs.unlink(e["path"])
+    return kept
+
+
 def _stats_from_footer(
     path: str, base_dir: str, filesystem=None
 ) -> tuple[int, dict, dict]:

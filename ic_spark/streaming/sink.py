@@ -79,7 +79,7 @@ def manifest_append_sink(table: ManifestTable, name: str = "stream"):
         # listing + sizes through the table's metadata seam: plain
         # os.listdir on an object-store dir spelling finds nothing
         from ic_spark.compaction.metafs import table_mfs
-        from ic_spark.compaction.writer import _stats_from_footer
+        from ic_spark.compaction.writer import _stats_from_footer, drop_empty_parts
 
         mfs = table_mfs(table)
         parts = sorted(
@@ -90,32 +90,24 @@ def manifest_append_sink(table: ManifestTable, name: str = "stream"):
         if not parts:  # empty micro-batch
             return
         # The footer's count goes into the manifest (COUNT(*) answers
-        # from it).  A 0-row part, which Spark writes for an empty task,
-        # holds nothing to read and is not committed, unless every part
-        # is empty: one is kept so the batch still reads as 0 rows.
-        counts = {
-            p: _stats_from_footer(mfs.within(p), out_dir, filesystem=mfs.fs)[0]
+        # from it).
+        entries = [
+            {
+                "path": p,
+                "content": "DATA",
+                "record_count": _stats_from_footer(
+                    mfs.within(p), out_dir, filesystem=mfs.fs
+                )[0],
+                "file_size_in_bytes": mfs.size(p),
+            }
             for p in parts
-        }
-        keep = [p for p in parts if counts[p]] or parts[:1]
-        for p in parts:
-            if p not in keep:
-                mfs.unlink(p)
+        ]
+        kept = drop_empty_parts(mfs, entries)
         seq = table.next_sequence_number()
+        for e in kept:
+            e["sequence_number"] = seq
         # The batch id lands in the ledger in the SAME atomic commit.
-        table.append_snapshot(
-            [
-                {
-                    "path": p,
-                    "sequence_number": seq,
-                    "content": "DATA",
-                    "record_count": counts[p],
-                    "file_size_in_bytes": mfs.size(p),
-                }
-                for p in keep
-            ],
-            stream_mark=(name, batch_id),
-        )
+        table.append_snapshot(kept, stream_mark=(name, batch_id))
 
     return write_batch
 

@@ -22,13 +22,14 @@ otherwise the JSON :class:`ManifestTable`.
 
 The table contract.  ``ManifestTable``, ``IcebergTable`` and
 ``SqlCatalogTable`` expose these methods under the same names and
-signatures, so no caller asks which flavor it holds.  Planning
-(``scan_tasks``, ``incremental_tasks``, ``count_rows``), the schema,
-spec and ref reads and the column DDL are written once, on the shared
-table model (:class:`ic_spark.compaction.table_model.TableModel`), over
-each flavor's codec: ``model_state()`` reads the table state once and
-``live_files(snapshot_id=None, state=None, bounds=False,
-deletes_only=False)`` decodes a snapshot into live-file dicts.
+signatures, so no caller asks which flavor they hold.  Planning, the
+schema, spec and ref reads, the column DDL and every commit are written
+once, on the shared table model
+(:class:`ic_spark.compaction.table_model.TableModel`), over each flavor's
+codec: ``model_state()`` reads the table state once, ``live_files(
+snapshot_id=None, state=None, bounds=False, deletes_only=False)`` decodes
+a snapshot into live-file dicts, and ``_apply`` writes one transition
+with compare-and-swap against the state it was computed from.
 
 - ``schema(snapshot_id=None)``, ``name_mapping(snapshot_id=None)`` and
   ``schema_history(snapshot_id=None)``: the spec flavor answers for the
@@ -50,11 +51,17 @@ deletes_only=False)`` decodes a snapshot into live-file dicts.
   entries, one per snapshot.
 - ``ancestor_ids(snapshot_id)`` and ``main_log()``: a snapshot's
   ancestry, and the (snapshot id, operation) list of main's timeline.
-- Planning and commits: ``scan_tasks``, ``incremental_tasks``,
-  ``commit_rewrite``, ``rollback_to_snapshot``, ``fast_forward``,
-  ``expire_snapshots``, ``snapshot_id_as_of``, ``refs``, ``resolve_ref``,
-  ``remove_ref``, and ``set_ref(name, snapshot_id, ref_type="tag")``
-  (a branch commit records its ref as a branch on both flavors).
+- Planning: ``scan_tasks``, ``incremental_tasks``, ``snapshot_id_as_of``,
+  ``refs``, ``resolve_ref``.
+- Commits: ``append_snapshot(files, stage=False, branch=None,
+  operation=None, stream_mark=None)``, ``commit_rewrite``,
+  ``rollback_to_snapshot``, ``fast_forward`` (branches only),
+  ``expire_snapshots``, ``remove_ref`` and ``set_ref(name, snapshot_id,
+  ref_type="tag")`` (a branch commit records its ref as a branch on both
+  flavors).  A commit that loses a race to another writer raises
+  ``CommitConflictError`` on both flavors.
+- ``remove_orphan_files(older_than_s, delete=False)``: the ``.parquet``
+  files under the table root that no retained snapshot references.
 - Layout and evolution: ``default_spec_id``, ``partition_spec``,
   ``update_partition_spec``, ``add_column``, ``rename_column``,
   ``promote_column``, ``drop_column``, ``move_column``, ``make_optional``.
@@ -66,10 +73,9 @@ deletes_only=False)`` decodes a snapshot into live-file dicts.
 - The ``root`` and ``file_io`` attributes.  The metadata-plane IO is
   reached through :func:`ic_spark.compaction.metafs.table_mfs`.
 
-Beyond the contract, ``append_snapshot(stage=True)``,
-``publish_snapshot``, ``register_schema`` and ``vacuum`` are JSON-only,
-and the spec flavor's ``remove_orphan_files`` raises
-NotImplementedError; ``metadata()``, table properties and
+Beyond the contract, ``append_snapshot(stage=True)`` (the spec flavor
+refuses it with ValueError), ``publish_snapshot``, ``register_schema``
+and ``vacuum`` are JSON-only; ``metadata()``, table properties and
 ``update_sort_order`` are spec-only.
 """
 
@@ -198,7 +204,7 @@ class Table:
         first (order + types) — a wider-typed source can't silently
         write files the schema rejects on read."""
         from ic_spark.compaction.metafs import table_mfs
-        from ic_spark.compaction.writer import _stats_from_footer
+        from ic_spark.compaction.writer import _stats_from_footer, drop_empty_parts
 
         import uuid as _uuid
 
@@ -236,13 +242,7 @@ class Table:
                     "file_size_in_bytes": mfs.size(p),
                 }
             )
-        # Spark writes a 0-row part for an empty task.  It holds nothing
-        # to read and is not committed, unless every part is empty: one
-        # is kept so an empty append still reads as 0 rows.
-        kept = [e for e in entries if e["record_count"]] or entries[:1]
-        for e in entries:
-            if e not in kept:
-                mfs.unlink(e["path"])
+        kept = drop_empty_parts(mfs, entries)
         seq = self.inner.next_sequence_number(branch)
         for e in kept:
             e["sequence_number"] = seq

@@ -518,3 +518,25 @@ def test_merge_upsert_is_one_job_and_keys_match_oracle(spark, tmp_path):
         for r in pa.concat_tables([survivors.select(names), arrow_batch]).to_pylist()
     ]
     assert sorted(map(tuple, t.read().collect()), key=repr) == sorted(want, key=repr)
+
+
+def test_merge_upsert_commits_no_empty_parts(spark, tmp_path):
+    """An upsert whose write leaves empty tasks commits (and keeps) only
+    the parts that hold rows, as ``Table.append`` and the append sink
+    do; the table reads the upserted rows."""
+    import pyspark.sql.types as T
+
+    from ic_spark.table import Table
+
+    schema = T.StructType(
+        [T.StructField("k", T.LongType()), T.StructField("v", T.LongType())]
+    )
+    t = Table.create(spark, str(tmp_path / "t"), schema)
+    batch = spark.createDataFrame([(1, 10), (2, 20)], schema).repartition(4)
+    t.upsert(batch, ["k"])
+    data = [f for f in t.inner.live_files() if f["content"] == "DATA"]
+    assert data and all(f["record_count"] for f in data)
+    (part_dir,) = {os.path.dirname(f["path"]) for f in data}
+    on_disk = [n for n in os.listdir(part_dir) if n.endswith(".parquet")]
+    assert len(on_disk) == len(data)
+    assert sorted(t.read().collect()) == [(1, 10), (2, 20)]

@@ -248,17 +248,27 @@ def test_mor_plan_from_spec_metadata(spark, tmp_path):
     assert ids == [0, 1, 2, 4, 5, 6, 8, 9]
 
 
-def test_commit_conflict_on_version_race(tmp_path, simple_schema, spark):
+def test_commit_conflict_on_version_race(tmp_path, simple_schema, spark, monkeypatch):
+    from ic_spark.compaction.metafs import MetaFS
+
     loc = str(tmp_path / "tbl")
     tbl = IcebergTable.create(loc, simple_schema)
     f1 = write_parquet(spark, str(tmp_path / "d1"), [(1, "a")], "id int, name string")
     entry = {"path": f1, "content": "DATA", "record_count": 1,
              "file_size_in_bytes": 1}
     tbl.append_snapshot([entry])
-    # simulate a racer that already created v3
+    # a racer creates v3 after this committer read v2, before its create
     v3 = os.path.join(loc, "metadata", "v3.metadata.json")
-    with open(v3, "w") as f:
-        json.dump(tbl.metadata(), f)
+    racer_meta = tbl.metadata()
+    real_create = MetaFS.create_exclusive
+
+    def racer_first(self, p, data):
+        if p == v3 and not os.path.exists(v3):
+            with open(v3, "w") as f:
+                json.dump(racer_meta, f)
+        return real_create(self, p, data)
+
+    monkeypatch.setattr(MetaFS, "create_exclusive", racer_first)
     with pytest.raises(CommitConflictError):
         tbl.append_snapshot([entry])
 

@@ -164,8 +164,8 @@ def test_create_changelog_view_rejects_unknown_options(spark, proc_table):
 def test_call_remove_orphan_files(spark, proc_table, tmp_path):
     """``older_than_ms`` / ``dry_run`` reach the table as its age in
     seconds and its delete switch: fresh orphans are kept under the
-    default age, listed at age 0, and deleted only with dry_run=False.
-    Spec-metadata tables refuse with NotImplementedError."""
+    default age, listed at age 0, and deleted only with dry_run=False,
+    on both metadata flavors."""
     import pyspark.sql.types as T
 
     from ic_spark.compaction.iceberg_meta import IcebergTable
@@ -188,8 +188,22 @@ def test_call_remove_orphan_files(spark, proc_table, tmp_path):
     )
     assert out["orphan_file_location_count"] == 1
     assert not os.path.exists(stray)
+    # The spec flavor sweeps the same way: a committed file is kept,
+    # the stray one is listed and, with dry_run=False, deleted.
     spec = IcebergTable.create(
         str(tmp_path / "spec"), T.StructType([T.StructField("id", T.LongType())])
     )
-    with pytest.raises(NotImplementedError, match="JSON-manifest"):
-        call(spark, "remove_orphan_files", table=spec, older_than_ms=0)
+    paths = {}
+    for name in ("live", "aborted"):
+        d = os.path.join(spec.root, name)
+        spark.range(3).coalesce(1).write.parquet(d)
+        paths[name] = next(
+            os.path.join(d, n) for n in os.listdir(d) if n.endswith(".parquet")
+        )
+    spec.append_snapshot([{"path": paths["live"], "content": "DATA",
+                           "record_count": 3, "file_size_in_bytes": 1}])
+    out = call(spark, "remove_orphan_files", table=spec, older_than_ms=0)
+    assert out["paths"] == [os.path.abspath(paths["aborted"])]
+    call(spark, "remove_orphan_files", table=spec, older_than_ms=0, dry_run=False)
+    assert not os.path.exists(paths["aborted"])
+    assert os.path.exists(paths["live"])

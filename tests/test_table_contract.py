@@ -30,6 +30,7 @@ CONTRACT = (
     "main_log",
     "scan_tasks",
     "incremental_tasks",
+    "append_snapshot",
     "commit_rewrite",
     "rollback_to_snapshot",
     "fast_forward",
@@ -51,6 +52,7 @@ CONTRACT = (
     "enable_row_lineage",
     "stream_batch_hwm",
     "mark_stream_batch",
+    "remove_orphan_files",
 )
 PROPERTIES = ("row_lineage", "next_row_id")
 SCHEMA = T.StructType([T.StructField("id", T.LongType())])
@@ -303,3 +305,63 @@ def test_parity_metadata_tables(spark, parity, kind, ignored):
     assert js == sp
     if kind == "refs":
         assert js == [("dev", "branch"), ("v1", "tag")]
+
+
+@pytest.mark.parametrize("flavor", ["json", "spec", "sql"])
+def test_equality_delete_on_unknown_column_refused(flavor, tmp_path):
+    """An equality-delete key naming no column of the schema is refused
+    on every flavor: dropping it would narrow the key and delete more
+    rows than asked."""
+    t = _make(flavor, tmp_path)
+    entry = {"path": str(tmp_path / "eq.parquet"), "content": "EQUALITY_DELETES",
+             "equality_ids": ["id", "zz"], "record_count": 1,
+             "file_size_in_bytes": 1, "sequence_number": 1}
+    with pytest.raises(ValueError, match="zz"):
+        t.append_snapshot([entry])
+    assert t.current_snapshot_id() is None
+    t.append_snapshot([{**entry, "equality_ids": ["id"]}])
+    _, _, eq = t.scan_tasks()
+    assert [x.equality_ids for x in eq] == [("id",)]
+
+
+@pytest.mark.parametrize("flavor", ["json", "spec", "sql"])
+def test_deletion_vector_file_decodes_once(flavor, tmp_path):
+    """A puffin holding vectors for two data files is one live file on
+    every flavor, with both vectors and their summed cardinality."""
+    t = _make(flavor, tmp_path)
+    data = [{"path": str(tmp_path / f"d{i}.parquet"), "content": "DATA",
+             "record_count": 5, "file_size_in_bytes": 1, "sequence_number": 1}
+            for i in range(2)]
+    t.append_snapshot(data)
+    dvs = {d["path"]: {"offset": 4 + 10 * i, "length": 10, "cardinality": i + 1}
+           for i, d in enumerate(data)}
+    t.append_snapshot([{"path": str(tmp_path / "dv.puffin"),
+                        "content": "POSITION_DELETES", "file_format": "puffin",
+                        "record_count": 3, "file_size_in_bytes": 40,
+                        "sequence_number": 2, "deletion_vectors": dvs}])
+    files = t.live_files()
+    assert len(files) == 3
+    (dv,) = [f for f in files if f.get("deletion_vectors")]
+    assert dv["deletion_vectors"] == dvs and dv["record_count"] == 3
+    _, pos, _ = t.scan_tasks()
+    assert [x.record_count for x in pos] == [3]
+
+
+@pytest.mark.parametrize("flavor", ["json", "spec", "sql"])
+def test_one_rule_per_commit_decision(flavor, tmp_path):
+    """Partition-spec and fast-forward checks decide alike on every
+    flavor: an identity field may carry its source's name, a derived one
+    may not, an unknown source is refused, and a tag is not a branch."""
+    t = _make(flavor, tmp_path)
+    assert t.update_partition_spec([{"name": "id", "transform": "identity"}]) == 1
+    with pytest.raises(ValueError, match="differ from source"):
+        t.update_partition_spec([{"name": "id", "transform": "bucket", "n": 4}])
+    with pytest.raises(ValueError, match="unknown source column: nope"):
+        t.update_partition_spec([{"name": "p", "source": "nope",
+                                  "transform": "identity"}])
+    sid = t.append_snapshot([{"path": str(tmp_path / "f.parquet"),
+                              "content": "DATA", "record_count": 1,
+                              "file_size_in_bytes": 1, "sequence_number": 1}])
+    t.set_ref("v1", sid)
+    with pytest.raises(ValueError, match="unknown branch"):
+        t.fast_forward("v1")
